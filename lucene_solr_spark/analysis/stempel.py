@@ -49,6 +49,23 @@ REFERENCE_PL_DIR = os.environ.get(
     "org/apache/lucene/analysis/pl",
 )
 
+#: the serialized Egothor multi-trie; data from the reference checkout,
+#: not vendored here, so it may be absent
+STEMMER_TABLE = "stemmer_20000.tbl"
+
+
+def resource_dir() -> str:
+    """SPARK_GRAFT_STEMPEL_DIR as set at call time (it may change after
+    import), else REFERENCE_PL_DIR."""
+    return os.environ.get("SPARK_GRAFT_STEMPEL_DIR", REFERENCE_PL_DIR)
+
+
+def stempel_available() -> bool:
+    """True when the stemmer table is readable. Without it the Polish
+    stemmer cannot run, and callers that can do without it (the
+    stempel_polish gate variant) omit it instead of failing."""
+    return os.path.isfile(os.path.join(resource_dir(), STEMMER_TABLE))
+
 
 class _DataInput:
     """java.io.DataInputStream over bytes: big-endian primitives +
@@ -256,7 +273,7 @@ def diff_apply(word: str, diff: str) -> str:
 def _load_table() -> MultiTrie2 | Trie:
     """StempelStemmer.load: method header containing 'M' -> MultiTrie2
     (stemmer_20000.tbl is '-0ME2'), else plain Trie."""
-    path = os.path.join(REFERENCE_PL_DIR, "stemmer_20000.tbl")
+    path = os.path.join(resource_dir(), STEMMER_TABLE)
     with open(path, "rb") as f:
         din = _DataInput(f.read())
     method = din.read_utf().upper()
@@ -266,7 +283,7 @@ def _load_table() -> MultiTrie2 | Trie:
 @functools.lru_cache(maxsize=1)
 def polish_stop_set() -> frozenset:
     """stopwords.txt through WordlistLoader.getWordSet(reader, "#")."""
-    path = os.path.join(REFERENCE_PL_DIR, "stopwords.txt")
+    path = os.path.join(resource_dir(), "stopwords.txt")
     out = set()
     with open(path, encoding="utf-8") as f:
         for line in f:

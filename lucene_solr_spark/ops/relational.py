@@ -37,6 +37,8 @@ Reference mapping (SURVEY.md §2.3, §2.5-2.7):
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -4586,11 +4588,19 @@ def _snowball_stem_rows() -> list[tuple[str, str, str]]:
     # variant names carry the family prefix directly; the Egothor
     # multi-trie Polish stemmer (analysis/stempel.py, GT-pinned vs the
     # compiled PolishAnalyzer) is not a Snowball machine, so it keeps
-    # its own prefix
-    from ..analysis.stempel import polish_stem
+    # its own prefix; its table is an optional resource, and without it
+    # the variant omits itself from the engine and oracle alike
+    from ..analysis import stempel
 
     named = {f"snowball_{lang}": fn for lang, fn in langs.items()}
-    named["stempel_polish"] = polish_stem
+    if stempel.stempel_available():
+        named["stempel_polish"] = stempel.polish_stem
+    else:
+        warnings.warn(
+            f"stempel_polish variant omitted: no {stempel.STEMMER_TABLE} in "
+            f"{stempel.resource_dir()!r}; point SPARK_GRAFT_STEMPEL_DIR at "
+            "the directory holding the Polish stemmer table to enable it"
+        )
     return [(variant, w, fn(w))
             for variant, fn in sorted(named.items())
             for w in SNOWBALL_DOC_VOCAB]

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bm25 import avgdl_f32, make_term_weight
-from .engine import TOPK_SCHEMA, _decode_group
+from .engine import TOPK_SCHEMA, _decode_group, topk_frame
 
 
 def oracle_topk_span_masked(
@@ -208,7 +208,7 @@ class MultiFieldSearcher:
         any_searcher = self.searchers[fields[0]]
         terms = tuple(any_searcher._analyze(query))
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return topk_frame(self.spark)
 
         # per-(field, term) weights from each field's OWN statistics
         weights: dict[tuple[str, str], tuple] = {}

@@ -1129,10 +1129,10 @@ def spark_topk_tree(searcher, tree, k: int = 10):
     for term-free matches, global merge."""
     from pyspark.sql import functions as F
 
-    from .engine import TOPK_SCHEMA
+    from .engine import topk_frame
 
     if tree is None:
-        return searcher.spark.createDataFrame([], TOPK_SCHEMA)
+        return topk_frame(searcher.spark)
     tree = resolve_tree(tree, searcher)
     terms = sorted(tree_terms(tree))
     weights = searcher.term_weights(terms) if terms else {}
@@ -1170,6 +1170,6 @@ def spark_topk_tree(searcher, tree, k: int = 10):
             )
         )
     if not parts:
-        return searcher.spark.createDataFrame([], TOPK_SCHEMA)
+        return topk_frame(searcher.spark)
     out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     return out.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)

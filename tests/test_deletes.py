@@ -118,3 +118,27 @@ def test_corpus_scale_deletes_cogroup_no_driver_bitset(spark, tmp_root, corpus, 
     # plan shape: tombstones flow through a cogroup, not a collected bitset
     plan = s_big.topk("parse index", k=10, mode="or")._jdf.queryExecution().toString()
     assert "FlatMapCoGroupsInPandas" in plan
+
+
+def test_small_delete_set_driver_plan_matches_distributed(spark, tmp_root, corpus, monkeypatch):
+    """A delete set small enough to ride in the scorer closure is masked
+    the same way on the driver plan as on the distributed plan (forced
+    with DRIVER_SCORE_MAX_BLOCKS = 0)."""
+    from lucene_solr_spark.search import engine as engine_mod
+
+    d = os.path.join(tmp_root, "idx_del_plans")
+    build_index(
+        spark, spark.createDataFrame(corpus), out_dir=d, content_col="content",
+        doc_id_col="doc_id", meta_cols=["repo", "path"], range_size=64,
+        fingerprint="delplans240",
+    )
+    top = _hits(IndexSearcher(spark, d))
+    dead = {top[("parse index", "or")][0][0], top[("hotcommon", "or")][1][0], 70, 71}
+    delete_docs(spark, d, dead)
+    s = IndexSearcher(spark, d)
+    assert s.deleted is not None and s.deleted_df is None
+    driver = _hits(s)
+    monkeypatch.setattr(engine_mod, "DRIVER_SCORE_MAX_BLOCKS", 0)
+    assert _hits(s) == driver
+    for rows in driver.values():
+        assert rows and not {doc for doc, _ in rows} & dead

@@ -48,3 +48,15 @@ def test_bm25_groups_match_duckdb_oracle(spark, name):
     variants_got = {r[0] for r in got}
     expected = {v for v, _fn, _sql in e._bm25_groups()[name]}
     assert variants_got == expected, (variants_got, expected)
+
+
+def test_oracle_sql_renders_without_stempel_table(monkeypatch, tmp_path):
+    """A missing optional resource disables one variant, never the gate:
+    with SPARK_GRAFT_STEMPEL_DIR pointed at an empty directory the
+    stempel_polish variant omits itself with a message naming the
+    variable, and every oracle still renders."""
+    monkeypatch.setenv("SPARK_GRAFT_STEMPEL_DIR", str(tmp_path))
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_STEMPEL_DIR"):
+        oracles = e.oracle_sql()
+    assert "snowball_english" in oracles["terms_component"]
+    assert "stempel_polish" not in oracles["terms_component"]

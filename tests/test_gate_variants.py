@@ -16,6 +16,7 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as e  # noqa: E402
+from lucene_solr_spark.analysis.stempel import stempel_available  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 #: gates whose smallest-sf corpus legitimately starves a leg run at 0.01
@@ -51,7 +52,9 @@ EXPECTED = {
     "suggest": {"blended_infix", "completion", "freetext", "fst_bucket",
                 "fuzzy", "infix", "jaspell", "prefix", "spell",
                 "wordbreak", "wordcombine"},
-    "terms_component": {"dict", "vector", "stempel_polish"} | {
+    # stempel_polish omits itself when its optional stemmer table is absent
+    "terms_component": {"dict", "vector"} | (
+        {"stempel_polish"} if stempel_available() else set()) | {
         "snowball_" + lang for lang in (
             "armenian", "basque", "catalan", "czech_light", "danish",
             "dutch", "english", "finnish", "french", "french_light",

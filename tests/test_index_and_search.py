@@ -9,8 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.corpus import make_corpus
-from lucene_solr_spark.index.builder import build_index
-from lucene_solr_spark.search.engine import IndexSearcher
+from lucene_solr_spark.index.builder import BLOCK_SIZE, build_index
+from lucene_solr_spark.search import engine as E
+from lucene_solr_spark.search.engine import BooleanSpec, IndexSearcher
 from lucene_solr_spark.search.oracle import build_oracle_index, oracle_topk
 
 N_DOCS = 400
@@ -65,9 +66,28 @@ def test_corpus_stats_match_oracle(built):
     assert searcher.avgdl == oidx.avgdl
 
 
-@pytest.mark.parametrize("query,mode", QUERIES, ids=[f"{q}:{m}" for q, m in QUERIES])
-def test_rank_identity(built, query, mode):
+#: scan plans of topk_spec: the default DRIVER_SCORE_MAX_BLOCKS scores these
+#: small scans on the driver; a cap of 0 forces the distributed plan (the
+#: range shuffle into applyInPandas, and WAND when pruning is forced)
+PLANS = [("", E.DRIVER_SCORE_MAX_BLOCKS), (":distributed", 0)]
+
+
+def _rows(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "query,mode,cap",
+    [(q, m, cap) for _s, cap in PLANS for q, m in QUERIES],
+    ids=[f"{q}:{m}{s}" for s, _c in PLANS for q, m in QUERIES],
+)
+def test_rank_identity(built, monkeypatch, query, mode, cap):
     _, searcher, oidx = built
+    monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", cap)
     expected = oracle_topk(oidx, query, k=10, mode=mode)
     got = [(r["doc_id"], r["score"]) for r in searcher.topk(query, k=10, mode=mode).collect()]
     assert len(got) == len(expected)
@@ -76,12 +96,63 @@ def test_rank_identity(built, query, mode):
         assert np.float32(gs) == es, (query, gd, gs, es)
 
 
-def test_prune_does_not_change_results(built):
+def test_prune_does_not_change_results(built, monkeypatch):
+    """prune=True always runs the distributed two-wave WAND plan; the
+    unpruned side runs the driver plan under the default cap and the
+    distributed scorer with the cap forced to 0."""
     _, searcher, oidx = built
-    for q in ["hotcommon", "parse index merge", "hotcommon parse_30"]:
-        pruned = [(r["doc_id"], r["score"]) for r in searcher.topk(q, k=10, prune=True).collect()]
-        full = [(r["doc_id"], r["score"]) for r in searcher.topk(q, k=10, prune=False).collect()]
-        assert pruned == full
+    for _s, cap in PLANS:
+        monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", cap)
+        for q in ["hotcommon", "parse index merge", "hotcommon parse_30"]:
+            pruned = _rows(searcher.topk(q, k=10, prune=True))
+            full = _rows(searcher.topk(q, k=10, prune=False))
+            assert pruned == full, (q, cap)
+
+
+def test_driver_plan_boundary(built, monkeypatch):
+    """A scan whose block bound is over DRIVER_SCORE_MAX_BLOCKS keeps the
+    range shuffle into the Python scorer; at the cap it is scored on the
+    driver and the returned frame holds no Python node. Both plans give
+    the same rows."""
+    _, searcher, _ = built
+    q = "parse index merge"
+    weights = searcher.term_weights(searcher._analyze(q))
+    bound = sum(
+        min(w["df"], -(-w["df"] // BLOCK_SIZE) + searcher._est_ranges())
+        for w in weights.values() if w["df"] > 0
+    )
+    monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", bound - 1)
+    over = searcher.topk(q, k=10)
+    assert "FlatMapGroupsInPandas" in _plan(over)
+    monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", bound)
+    under = searcher.topk(q, k=10)
+    plan = _plan(under)
+    assert "InPandas" not in plan and "Python" not in plan, plan
+    assert _rows(under) == _rows(over)
+    assert len(_rows(under)) == 10
+
+
+def test_driver_plan_matches_distributed_on_restricted_scans(built, monkeypatch):
+    """candidates (rescore pushdown) and range_ids (time-limited slices)
+    restrict the scan; the driver plan scores them exactly as the
+    distributed plan does."""
+    _, searcher, _ = built
+    rng = np.random.default_rng(3)
+    top = [d for d, _s in _rows(searcher.topk("parse index", k=20))]
+    cand = sorted({*top, *(int(c) for c in rng.choice(N_DOCS, size=20, replace=False))})
+    specs = [
+        BooleanSpec(should=("parse", "index", "hotcommon")),
+        BooleanSpec(must=("parse", "index")),
+        BooleanSpec(should=("hotcommon",), must_not=("parse",)),
+    ]
+    for spec in specs:
+        for kw in ({"candidates": cand}, {"range_ids": [0, 2, 5]}, {}):
+            got = {}
+            for s, cap in PLANS:
+                monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", cap)
+                got[s] = _rows(searcher.topk_spec(spec, k=15, **kw))
+            assert got[""] == got[":distributed"], (spec, kw)
+            assert got[""], (spec, kw)
 
 
 def test_index_invariants(built, spark):

@@ -357,3 +357,16 @@ def test_flt_candidate_scan_distributed_and_bounded(spark):
     # end-to-end: selection survives and the query runs
     hits = s.topk_fuzzy_like_this_ref([("merge", 0.5, 1)], k=5)
     assert hits.count() > 0
+
+
+def test_flt_candidate_bound_raises(spark, monkeypatch):
+    """A candidate superset over FLT_DRIVER_MAX is a runtime error that
+    names the bound — a ValueError, never a bare assert that `python -O`
+    would strip."""
+    from lucene_solr_spark.ops.index_access import searcher_for
+    from lucene_solr_spark.search.engine import IndexSearcher
+
+    s = searcher_for(spark, SF)
+    monkeypatch.setattr(IndexSearcher, "FLT_DRIVER_MAX", 0)
+    with pytest.raises(ValueError, match="FLT_DRIVER_MAX=0"):
+        s.topk_fuzzy_like_this_ref([("merge", 0.5, 1)], k=5)

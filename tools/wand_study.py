@@ -8,6 +8,14 @@ pruning must never change the top-k).
 Usage: python3 tools/wand_study.py [--index /tmp/lss_scale_idx_8]
                                    [--cpus 8] [--queries q1,q2,...]
 Prints one JSON line; paste the table into BENCH.md.
+
+prune=True always runs the distributed two-wave plan. prune=False runs
+the driver plan when the query's block bound is at most
+engine.DRIVER_SCORE_MAX_BLOCKS, and the distributed scorer above it;
+each row names the plan each side ran (`plan_prune_on` is always
+`wand`, `plan_prune_off` is `driver` or `distributed`), so a prune-on
+vs prune-off timing says whether it compares WAND with the distributed
+scorer or with the driver plan.
 """
 
 from __future__ import annotations
@@ -76,6 +84,14 @@ def build_skewed_index(spark, n_docs: int, out_dir: str) -> None:
     shutil.rmtree(src_dir)
 
 
+def plan_of(df) -> str:
+    """Which plan an unpruned topk ran: 'distributed' while the returned
+    frame still holds the Python range scorer, 'driver' when topk_spec
+    scored the scan on the driver."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "distributed" if "InPandas" in plan else "driver"
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", default="/tmp/lss_scale_idx_8")
@@ -130,8 +146,8 @@ def main() -> None:
         s.topk(q, k=args.k, prune=False).collect()
 
         t0 = time.time()
-        off = [(r["doc_id"], float(r["score"]))
-               for r in s.topk(q, k=args.k, prune=False).collect()]
+        off_df = s.topk(q, k=args.k, prune=False)
+        off = [(r["doc_id"], float(r["score"])) for r in off_df.collect()]
         t_off = time.time() - t0
 
         t0 = time.time()
@@ -165,6 +181,8 @@ def main() -> None:
             "df": {t: int(weights[t]["df"]) for t in spec_terms},
             "wall_prune_off_s": round(t_off, 3),
             "wall_prune_on_s": round(t_on, 3),
+            "plan_prune_off": plan_of(off_df),
+            "plan_prune_on": "wand",
             "speedup": round(t_off / t_on, 2) if t_on > 0 else None,
             "ranges_total": n_ranges,
             "ranges_with_term": n_term_ranges,
