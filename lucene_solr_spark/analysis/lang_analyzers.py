@@ -99,6 +99,7 @@ def dutch_analyzer_stream(text: str) -> list:
 # tests/test_misc_filters.py.
 # --------------------------------------------------------------------
 
+import functools
 import unicodedata as _ud
 
 
@@ -120,7 +121,9 @@ def _plain_chain(stop_set, stem):
     return stream
 
 
+@functools.cache
 def _make_plain_streams():
+    """The five plain chains, built once per process (not per document)."""
     from . import lang_stops as st
     from .snowball_fi import finnish_stem
     from .snowball_hu import hungarian_stem

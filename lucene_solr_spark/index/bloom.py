@@ -333,7 +333,7 @@ def build_bloom_table(
     sizing = min(int(sizing_docs), BLOOM_MAX_SIZING_DOCS)
     stats = spark.read.parquet(term_stats_path).select("term", "bucket")
 
-    def _one_bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _one_bucket(key, pdf):
         bucket = int(key[0])
         terms = [t.encode("utf-8") for t in pdf["term"]]
         fs = FuzzySet.create_set_based_on_quality(

@@ -168,7 +168,7 @@ def verify_index(
 
         blooms = spark.read.parquet(paths.bloom).select("bucket", "bloom")
 
-        def _probe(key, terms_pdf: _pd.DataFrame, bloom_pdf: _pd.DataFrame) -> _pd.DataFrame:
+        def _probe(key, terms_pdf, bloom_pdf):
             from .bloom import FuzzySet
 
             blob_rows = bloom_pdf["bloom"].dropna() if len(bloom_pdf) else _pd.Series([], dtype=object)

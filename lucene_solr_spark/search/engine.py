@@ -5,9 +5,13 @@ per-leaf scorer -> TopScoreDocCollector -> TopDocs.merge; SURVEY.md §3.1):
 
  1. analyze(query) with the SAME chain as indexing (QueryParser analog).
  2. collect global term stats for the query's terms only (TermContext.build /
-    ExactStatsCache: exact global df, never shard-local).
+    ExactStatsCache: exact global df, never shard-local) — a direct read,
+    in the driver and with no Spark job, of the term_stats files the
+    searcher listed when it opened (search/snapshot.py).
  3. scan posting blocks pruned to (term bucket files) x (term row-group
     min/max) — the terms-dict/FST pruning analog, done by Parquet stats.
+    A small scan (DRIVER_SCORE_MAX_BLOCKS) is a direct read of the same
+    file snapshot, with no Spark job; a larger one is a Spark scan.
  4. groupBy(range_id): each doc-range partition scores like one Lucene
     segment — decode blocks, dense-accumulate per-doc scores in double
     (BooleanScorer's 2048-doc bulk window, scaled to the range), cast to
@@ -48,6 +52,8 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,6 +62,7 @@ from ..analysis.tokenizer import analyze, analyze_with_positions
 from ..index.builder import BLOCK_SCHEMA, BLOCK_SIZE, DEFAULT_TERM_BUCKETS, IndexPaths
 from ..index.codec import delta_decode, vbyte_decode
 from .bm25 import B, K1, avgdl_f32, idf_f32, idf_sum_f32, make_term_weight, norm_cache
+from .snapshot import BucketFiles, index_filesystem
 
 #: SimilarityBase DFR/IB grid cells the engine accepts (bm25.DFR_IB_SCORERS)
 DFR_IB_SIMS = ("dfr_inl2", "ib_ll", "dfr_gb2", "dfr_ifb2", "dfr_ineb2",
@@ -69,6 +76,18 @@ TOPK_SCHEMA = T.StructType(
         T.StructField("score", T.FloatType(), False),
     ]
 )
+
+#: the searcher's explicit read schemas (readable even for a
+#: generation-0 index); the driver's direct reads use the same ones
+POSTINGS_READ_SCHEMA = T.StructType(
+    list(BLOCK_SCHEMA.fields) + [T.StructField("bucket", T.IntegerType(), True)]
+)
+TERM_STATS_READ_SCHEMA = T.StructType([
+    T.StructField("term", T.StringType(), True),
+    T.StructField("df", T.LongType(), True),
+    T.StructField("ttf", T.LongType(), True),
+    T.StructField("bucket", T.IntegerType(), True),
+])
 
 _EMPTY = pd.DataFrame(
     {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float32")}
@@ -94,9 +113,11 @@ FILTER_DRIVER_MAX = 1_000_000
 
 #: driver plan for small top-k scans (IndexSearcher.topk_spec): when the
 #: query's block bound (sum over terms of min(df, ceil(df/BLOCK_SIZE) +
-#: ranges)) is at most this, the pruned scan is collected as Arrow in one
-#: JVM-only job and scored in the driver process, with no shuffle and no
-#: Python-worker stage (a Python task costs ~0.12 s before the UDF runs).
+#: ranges)) is at most this, the pruned scan is read straight from the
+#: searcher's bucket files and scored in the driver process, with no Spark
+#: job (a Python task costs ~0.12 s before the UDF runs). The crossover
+#: below was measured when that scan was still one Spark job collected as
+#: Arrow, so the cap errs low.
 #: Above it the distributed plan scores ranges in parallel and wins; it is
 #: the only plan that runs at corpus scale. Measured on 4 cpus, local[2],
 #: make_corpus indexes, unpruned top-10, driver vs distributed median:
@@ -459,7 +480,11 @@ class IndexSearcher:
         from ..index.compact import recover_postings
 
         recover_postings(self.paths)  # heal a crashed compaction swap
-        row = spark.read.parquet(self.paths.corpus_stats).collect()[0]
+        self._fs = index_filesystem(index_dir)
+        # the one-row corpus stats table, read in the driver (no job)
+        row = pq.read_table(
+            os.path.abspath(self.paths.corpus_stats), filesystem=self._fs
+        ).to_pylist()[0]
         self.doc_count = int(row["doc_count"])
         self.sum_ttf = int(row["sum_ttf"])
         self.avgdl = avgdl_f32(self.sum_ttf, self.doc_count)
@@ -486,13 +511,14 @@ class IndexSearcher:
         # reader-close semantics of the reference cache)
         self.query_cache = FilterCache()
         # explicit schema: readable even for a generation-0 (empty) index
-        postings_schema = T.StructType(
-            list(BLOCK_SCHEMA.fields) + [T.StructField("bucket", T.IntegerType(), True)]
+        self._postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(self.paths.postings)
+        self._term_stats = spark.read.schema(TERM_STATS_READ_SCHEMA).parquet(
+            self.paths.term_stats
         )
-        self._postings = spark.read.schema(postings_schema).parquet(self.paths.postings)
-        self._term_stats = spark.read.schema(
-            "term string, df long, ttf long, bucket int"
-        ).parquet(self.paths.term_stats)
+        # the file snapshot those readers listed: term-stats lookups and
+        # driver-plan scans read these files directly, with no Spark job
+        self._postings_files = BucketFiles(self._fs, self._postings, POSTINGS_READ_SCHEMA)
+        self._stats_files = BucketFiles(self._fs, self._term_stats, TERM_STATS_READ_SCHEMA)
         # per-snapshot term-stats cache (df is immutable for this reader)
         self._tw_cache: dict[str, dict] = {}
         # liveDocs: tombstoned docs are masked at scoring time with STALE
@@ -557,10 +583,12 @@ class IndexSearcher:
 
     def term_weights(self, terms: list[str]) -> dict[str, dict]:
         """Global-exact per-term stats + float32 weightValue (idf*boost*(k1+1)).
-        The stats scan is pruned to the terms' bucket partitions, and
-        results are cached per searcher (the LRUQueryCache/TermContext
-        reuse analog: an index snapshot's df never changes, so repeated
-        or overlapping queries skip the Spark job entirely)."""
+        The stats are a direct read of the searcher's file snapshot in the
+        driver, with no Spark job (TermContext.build reads the terms dict
+        in process too): only the terms' bucket files, row groups pruned
+        on term. Results are cached per searcher (the LRUQueryCache/
+        TermContext reuse analog: an index snapshot's df never changes,
+        so repeated or overlapping queries skip the read)."""
         uniq = sorted(set(terms))
         missing = [t for t in uniq if t not in self._tw_cache]
         if missing and self._bloom_armed:
@@ -578,14 +606,10 @@ class IndexSearcher:
                 }
             missing = present
         if missing:
-            rows = (
-                self._term_stats.filter(
-                    F.col("bucket").isin(self._buckets_of(missing))
-                    & F.col("term").isin(missing)
-                )
-                .select("term", "df", "ttf")
-                .collect()
-            )
+            rows = self._stats_files.read(
+                self._buckets_of(missing), ["term", "df", "ttf"],
+                ds.field("term").isin(missing),
+            ).to_pylist()
             stats = {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
             for t in missing:
                 df_, ttf_ = stats.get(t, (0, 0))
@@ -774,7 +798,7 @@ class IndexSearcher:
         blocks = self._blocks_for(list(set(clauses)))
         deleted = self.deleted
 
-        def _score_impl(key, pdf: pd.DataFrame, deleted_local=None) -> pd.DataFrame:
+        def _score_impl(key, pdf, deleted_local=None):
             if pdf.empty:
                 return _EMPTY
             d_arr = deleted_local if deleted_local is not None else deleted
@@ -828,7 +852,7 @@ class IndexSearcher:
             order = np.lexsort((da, -sa.astype(np.float64)))[:k]
             return pd.DataFrame({"doc_id": da[order], "score": sa[order]})
 
-        def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def score_range(key, pdf):
             return _score_impl(key, pdf)
 
         score_range.cogroup = _cogroup_wrapper(_score_impl)
@@ -1237,8 +1261,7 @@ class IndexSearcher:
         itf = bool(ignore_tf)
         kk = int(k)
 
-        def _score_impl(key, pdf: pd.DataFrame,
-                        deleted_local=None) -> pd.DataFrame:
+        def _score_impl(key, pdf, deleted_local=None):
             if pdf.empty:
                 return _EMPTY
             d_arr = deleted_local if deleted_local is not None else deleted
@@ -1284,7 +1307,7 @@ class IndexSearcher:
             order = np.lexsort((da, -scores.astype(np.float64)))[:kk]
             return pd.DataFrame({"doc_id": da[order], "score": scores[order]})
 
-        def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def score_range(key, pdf):
             return _score_impl(key, pdf)
 
         score_range.cogroup = _cogroup_wrapper(_score_impl)
@@ -1928,7 +1951,7 @@ class IndexSearcher:
             F.levenshtein(F.col("term"), F.lit(word)) <= 2 * max_edits
         )
 
-        def _finalize(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def _finalize(key, pdf):
             cands = sorted(zip(pdf["term"], pdf["df"].astype(int)))
             out = direct_spell_suggest(
                 cands, word, num_sug=n, max_edits=max_edits,
@@ -1991,16 +2014,22 @@ class IndexSearcher:
             score_fn.cogroup, schema=TOPK_SCHEMA
         )
 
-    def _score_on_driver(self, blocks: DataFrame, scan_cols: list, score_fn,
-                         k: int) -> DataFrame:
+    def _score_on_driver(self, terms: list[str], ranges: list[int] | None,
+                         scan_cols: list, score_fn, k: int) -> DataFrame:
         """The driver plan for small scans (DRIVER_SCORE_MAX_BLOCKS): the
-        pruned block scan is one JVM-only job collected as Arrow (bucket
-        and row-group pruning still apply), and each range_id group runs
-        the very scorer closure the distributed plan ships to the Python
-        workers — one in-process shard search, as Lucene scores a shard.
-        The merge keeps the (score DESC, doc_id ASC) order, so the rows
-        equal the distributed plan's bit for bit."""
-        scan = blocks.select(scan_cols).toArrow().to_pandas()
+        block scan is a direct read of the searcher's file snapshot in the
+        driver, with no Spark job — only the terms' bucket files, row
+        groups pruned on term and, when `ranges` is given, on range_id.
+        Each range_id group runs the very scorer closure the distributed
+        plan ships to the Python workers — one in-process shard search,
+        as Lucene scores a shard. The merge keeps the (score DESC, doc_id
+        ASC) order, so the rows equal the distributed plan's bit for bit."""
+        where = ds.field("term").isin(terms)
+        if ranges is not None:
+            where &= ds.field("range_id").isin(pa.array(ranges, pa.int64()))
+        scan = self._postings_files.read(
+            self._buckets_of(terms), scan_cols, where
+        ).to_pandas()
         hits = [score_fn((rid,), g) for rid, g in scan.groupby("range_id", sort=False)]
         merged = pd.concat([_EMPTY, *hits], ignore_index=True)
         docs = merged["doc_id"].to_numpy(np.int64)
@@ -2016,7 +2045,7 @@ class IndexSearcher:
         blocks = self._blocks_for(present)
         deleted = self.deleted
 
-        def _score_impl(key, pdf: pd.DataFrame, deleted_local=None) -> pd.DataFrame:
+        def _score_impl(key, pdf, deleted_local=None):
             if pdf.empty:
                 return _EMPTY
             d_arr = deleted_local if deleted_local is not None else deleted
@@ -2045,7 +2074,7 @@ class IndexSearcher:
                 {"doc_id": docs_out[order].astype(np.int64), "score": sc[order]}
             )
 
-        def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def score_range(key, pdf):
             return _score_impl(key, pdf)
 
         score_range.cogroup = _cogroup_wrapper(_score_impl)
@@ -2112,8 +2141,8 @@ class IndexSearcher:
         The plan is chosen from term stats before any job runs. A scan
         whose block bound (min(df, ceil(df/BLOCK_SIZE) + ranges) summed
         over the query's terms) is at most DRIVER_SCORE_MAX_BLOCKS is
-        scored on the driver: one JVM-only scan job collected as Arrow,
-        the same per-range scorer, no shuffle and no Python worker.
+        scored on the driver: a direct read of the searcher's bucket
+        files and the same per-range scorer, with no Spark job at all.
         prune=True, a corpus-scale delete set (deleted_df) and positional
         clauses keep the distributed plan: the (range_id) shuffle into
         applyInPandas, which is the only plan that runs at corpus scale.
@@ -2294,26 +2323,28 @@ class IndexSearcher:
         if not any(t in present for t in spec.scoring_terms):
             return topk_frame(self.spark)
 
-        blocks = self._blocks_for(present)
         n_ranges = self._est_ranges()
+        # the doc ranges the scan is restricted to (None = all of them)
+        scan_ranges = None
         if range_ids is not None:
             # TimeLimitingCollector slice: score only these doc ranges.
             # Per-doc scores use GLOBAL stats, so a slice's rows are
             # bit-identical to the same docs in an unrestricted run.
-            slice_ids = sorted({int(r) for r in range_ids})
-            blocks = blocks.filter(F.col("range_id").isin(slice_ids))
-            n_ranges = min(n_ranges, len(slice_ids))
+            scan_ranges = {int(r) for r in range_ids}
+            n_ranges = min(n_ranges, len(scan_ranges))
             prune = False
         cand_arr = None
         if candidates is not None:
             cand_arr = np.asarray(sorted({int(c) for c in candidates}), dtype=np.int64)
             if cand_arr.size == 0:
                 return topk_frame(self.spark)
-            cand_ranges = sorted({int(c) // self._range_size for c in cand_arr})
-            blocks = blocks.filter(F.col("range_id").isin(cand_ranges))
+            cand_ranges = {int(c) // self._range_size for c in cand_arr}
             n_ranges = min(n_ranges, len(cand_ranges))
+            scan_ranges = cand_ranges if scan_ranges is None else scan_ranges & cand_ranges
             prune = False
             k = max(k, int(cand_arr.size))
+        if scan_ranges is not None:
+            scan_ranges = sorted(scan_ranges)
         # column-prune the scorer's scan: pos_buf (the widest column) is only
         # read for phrase queries; block metadata the scorer never touches is
         # dropped so the parquet ReadSchema stays minimal
@@ -2334,7 +2365,11 @@ class IndexSearcher:
         if (prune is not True and self.deleted_df is None
                 and not spec.positional_terms
                 and max_blocks <= DRIVER_SCORE_MAX_BLOCKS):
-            return self._score_on_driver(blocks, scan_cols, score_fn, k)
+            return self._score_on_driver(present, scan_ranges, scan_cols, score_fn, k)
+
+        blocks = self._blocks_for(present)
+        if scan_ranges is not None:
+            blocks = blocks.filter(F.col("range_id").isin(scan_ranges))
 
         pure_or = (
             not spec.must and not spec.must_not and not spec.positional_terms
@@ -3082,7 +3117,7 @@ def _cogroup_wrapper(score_fn):
     """Adapt a (key, blocks_pdf, deleted_local=None) range scorer to the
     cogroup applyInPandas signature: the right side is this range's slice
     of the tombstone table (corpus-scale deletes path)."""
-    def cg(key, pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
+    def cg(key, pdf, del_pdf):
         if pdf.empty:
             return _EMPTY
         loc = None
@@ -3326,7 +3361,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
         )
         pos_wv = np.float32(idf_sum * (K1 + np.float32(1.0)))
 
-    def _score_impl(key, pdf: pd.DataFrame, deleted_local=None) -> pd.DataFrame:
+    def _score_impl(key, pdf, deleted_local=None):
         d_arr = deleted_local if deleted_local is not None else deleted
         present = set(pdf["term"])
         if any(t not in present for t in required):
@@ -3804,7 +3839,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
             {"doc_id": docs_out[order].astype(np.int64), "score": sc[order]}
         )
 
-    def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_range(key, pdf):
         return _score_impl(key, pdf)
 
     score_range.cogroup = _cogroup_wrapper(_score_impl)

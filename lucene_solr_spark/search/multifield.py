@@ -243,7 +243,7 @@ class MultiFieldSearcher:
         tie = dismax_tie
         min_match = max(1, msm)
 
-        def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def score_range(key, pdf):
             if pdf.empty:
                 return empty
             decoded = {}
@@ -392,7 +392,7 @@ class MultiFieldSearcher:
             "score": pd.Series([], dtype="float32"),
         })
 
-        def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def score_range(key, pdf):
             from .spans import (
                 span_first_freq,
                 span_ordered_freq,

@@ -73,6 +73,8 @@ content field (numeric elements name a stored numeric column instead).
 
 from __future__ import annotations
 
+import functools
+import re
 import xml.etree.ElementTree as ET
 
 
@@ -125,34 +127,46 @@ def _maybe_boost(node, boost: float):
     return node if boost == 1.0 else ("boosted", float(boost), node)
 
 
-def _java_parse_int(s: str) -> int:
-    """Integer/Long.valueOf grammar: [+-]?digits only — python's int()
-    is laxer (strips whitespace, allows '1_0') and would silently parse
-    input the reference turns into NumberFormatException ->
-    ParserException."""
-    import re
+#: Integer/Long MIN..MAX per PointRangeQuery type attribute
+_JAVA_INT_BITS = {"int": 32, "long": 64}
 
+#: Float/Double.valueOf's decimal grammar after trim(): optional sign, then
+#: NaN or Infinity spelled exactly and unsuffixed, or ASCII digits with an
+#: optional fraction and exponent and one optional f/F/d/D suffix
+_JAVA_FP = re.compile(
+    r"[+-]?(?:NaN|Infinity|(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?[fFdD]?)",
+    re.ASCII,
+)
+
+#: String.trim() strips every char <= ' ' from both ends
+_JAVA_TRIM = "".join(map(chr, range(0x21)))
+
+
+def _java_parse_int(s: str, typ: str) -> int:
+    """Integer/Long.valueOf: [+-]?digits only — python's int() is laxer
+    (strips whitespace, allows '1_0') and would silently parse input the
+    reference turns into NumberFormatException -> ParserException. The
+    value must fit the type: int is 32-bit, long 64-bit."""
     if not re.fullmatch(r"[+-]?\d+", s):
         raise ValueError(s)
-    return int(s)
+    v = int(s)
+    bits = _JAVA_INT_BITS[typ]
+    if not -(1 << (bits - 1)) <= v < 1 << (bits - 1):
+        raise ValueError(f"{s} out of {typ} range")
+    return v
 
 
 def _java_parse_fp(s: str) -> float:
-    """Float/Double.valueOf: no whitespace/underscores, optional f/F/d/D
-    suffix, 'Infinity'/'NaN' spelled exactly (python's lax 'inf'/'nan'
-    shortforms rejected). Residual documented divergence: Java hex-float
-    literals ('0x1.8p1') are not parsed here."""
-    if s != s.strip() or "_" in s or not s:
+    """Float/Double.valueOf: trims chars <= ' ' from both ends first, then
+    takes no underscores, an optional f/F/d/D suffix on numeric literals
+    only, and 'Infinity'/'NaN' spelled exactly (python's lax 'inf'/'nan'
+    shortforms and suffixed 'NaNd'/'Infinityf' rejected). Residual
+    documented divergence: Java hex-float literals ('0x1.8p1') are not
+    parsed here."""
+    t = s.strip(_JAVA_TRIM)
+    if not _JAVA_FP.fullmatch(t):
         raise ValueError(s)
-    body = s[:-1] if s[-1] in "fFdD" else s
-    stripped = body.lstrip("+-")
-    if any(c.isalpha() for c in stripped) and stripped not in (
-            "Infinity", "NaN") and "e" not in stripped.lower():
-        raise ValueError(s)
-    if stripped.lower() in ("inf", "nan", "infinity") and stripped not in (
-            "Infinity", "NaN"):
-        raise ValueError(s)
-    return float(body)
+    return float(t[:-1] if t[-1] in "fFdD" else t)
 
 
 def parse_xml_query(xml_string: str, analyze_fn, content_field: str = "body",
@@ -242,7 +256,8 @@ def _q(e, analyze_fn, content_field: str, inherited_field: str | None,
         if typ not in ("int", "long", "double", "float"):
             raise XmlParserError(
                 "type attribute must be one of: [long, int, double, float]")
-        conv = _java_parse_int if typ in ("int", "long") else _java_parse_fp
+        conv = (functools.partial(_java_parse_int, typ=typ)
+                if typ in ("int", "long") else _java_parse_fp)
         try:
             lo = None if lo_s is None else conv(lo_s)
             hi = None if hi_s is None else conv(hi_s)

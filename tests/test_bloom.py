@@ -77,17 +77,17 @@ def test_term_miss_fast_path_skips_stats_read(spark, bloom_index):
     assert s._bloom_armed
     # an absent word the bloom REJECTS (false positives are legal bloom
     # behavior, so scan candidates for one that probes NO): its stats
-    # come from the bitset alone — poison the stats DataFrame to PROVE
-    # no Spark read happens.
+    # come from the bitset alone — poison the term-stats file reader to
+    # PROVE no stats read happens.
     absent = next(
         w for w in (f"zzzabsent{i}" for i in range(1000))
         if not s._bloom_maybe(w)
     )
-    real_stats = s._term_stats
-    s._term_stats = None
+    real_stats = s._stats_files
+    s._stats_files = None
     tw = s.term_weights([absent])
     assert tw[absent]["df"] == 0
-    s._term_stats = real_stats
+    s._stats_files = real_stats
     # mixed query: present terms still resolve, results identical to a
     # bloom-less searcher on the same index
     s2 = IndexSearcher(spark, out)

@@ -3,6 +3,7 @@ the pure-Python control oracle (BaseDistributedSearchTestCase pattern), index
 invariants (CheckIndex analog), and determinism across parallelism."""
 
 import os
+import warnings
 
 import numpy as np
 import pytest
@@ -153,6 +154,89 @@ def test_driver_plan_matches_distributed_on_restricted_scans(built, monkeypatch)
                 got[s] = _rows(searcher.topk_spec(spec, k=15, **kw))
             assert got[""] == got[":distributed"], (spec, kw)
             assert got[""], (spec, kw)
+
+
+def _spark_stats(searcher) -> dict:
+    return {r["term"]: (r["df"], r["ttf"]) for r in searcher._term_stats.collect()}
+
+
+def _assert_direct_stats_match_spark(searcher, absent=("zzz_missing", "", "parse_")):
+    """term_weights reads the searcher's files directly; it must return the
+    rows a Spark scan of the same term_stats snapshot returns."""
+    want = _spark_stats(searcher)
+    tw = searcher.term_weights([*want, *absent])
+    assert {t: (w["df"], w["ttf"]) for t, w in tw.items() if w["df"]} == want
+    assert all(tw[t]["df"] == tw[t]["ttf"] == 0 for t in absent)
+    return want
+
+
+def test_direct_term_stats_match_spark(built, spark):
+    paths, _, _ = built
+    want = _assert_direct_stats_match_spark(IndexSearcher(spark, paths.root))
+    assert len(want) > 100
+
+
+def test_direct_reads_after_increment_and_on_empty_index(spark, tmp_root, monkeypatch):
+    """A generation-0 index has no bucket files and reads as empty; each
+    reopen after apply_increment sees the increment's inc_* posting files
+    and the rewritten term stats, and the driver plan's direct scan still
+    scores exactly as the distributed plan's Spark scan."""
+    from lucene_solr_spark.streaming.indexer import apply_increment, init_empty_index
+
+    pdf = make_corpus(160, seed=7).reset_index(drop=True)
+    pdf["doc_id"] = pdf.index.astype("int64")
+    # Spark lists the files as percent-encoded URIs
+    d = os.path.join(tmp_root, "idx direct %inc")
+    init_empty_index(spark, d, meta_cols=["repo", "path"], range_size=64)
+    s0 = IndexSearcher(spark, d)
+    assert s0.doc_count == 0
+    assert _assert_direct_stats_match_spark(s0, absent=("parse", "hotcommon")) == {}
+    assert _rows(s0.topk("parse hotcommon", k=10)) == []
+    for lo, hi in [(0, 100), (100, 160)]:
+        batch = spark.createDataFrame(pdf[(pdf.doc_id >= lo) & (pdf.doc_id < hi)])
+        apply_increment(spark, d, batch, content_col="content", doc_id_col="doc_id",
+                        meta_cols=["repo", "path"], batch_id=f"{lo}-{hi}")
+        s = IndexSearcher(spark, d)
+        assert any("/inc_" in f for f in s._postings.inputFiles())
+        _assert_direct_stats_match_spark(s)
+        for spec in [BooleanSpec(should=("parse", "index", "hotcommon")),
+                     BooleanSpec(must=("parse", "index"))]:
+            got = {}
+            for tag, cap in PLANS:
+                monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", cap)
+                got[tag] = _rows(s.topk_spec(spec, k=10))
+            assert got[""] == got[":distributed"] and got[""], (lo, spec)
+
+
+def test_driver_plan_runs_no_spark_job(built, spark):
+    """A fresh searcher answers a driver-plan query with zero Spark jobs:
+    term stats and the block scan are direct reads of its file snapshot."""
+    paths, _, _ = built
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("direct-control", "a Spark job is counted")
+        spark.range(3).count()
+        assert tracker.getJobIdsForGroup("direct-control")
+        s = IndexSearcher(spark, paths.root)
+        sc.setJobGroup("direct-topk", "fresh searcher, driver-plan topk")
+        rows = s.topk("parse index merge", k=10).collect()
+        assert list(tracker.getJobIdsForGroup("direct-topk")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 10
+
+
+def test_distributed_plan_query_warns_nothing(built, monkeypatch):
+    """The scorer closures handed to applyInPandas carry no type hints, so
+    PySpark raises no "Cannot infer the eval type" warning per query."""
+    _, searcher, _ = built
+    monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", 0)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        full = _rows(searcher.topk("parse index merge", k=10))
+        pruned = _rows(searcher.topk("parse index merge", k=10, prune=True))
+    assert len(full) == 10 and pruned == full
 
 
 def test_index_invariants(built, spark):

@@ -355,6 +355,7 @@ def test_numeric_parse_java_parity():
             parse_xml_query(
                 f'<PointRangeQuery fieldName="f" lowerTerm="{bad}"'
                 ' type="long"/>', _ws_analyze)
+    for bad in ("1_0", "inf", "nan", "infinity"):
         with pytest.raises(XmlParserError):
             parse_xml_query(
                 f'<PointRangeQuery fieldName="f" lowerTerm="{bad}"'
@@ -371,3 +372,35 @@ def test_numeric_parse_java_parity():
         '<PointRangeQuery fieldName="f" lowerTerm="-Infinity"'
         ' type="double"/>', _ws_analyze)
     assert t[2] == float("-inf")
+
+
+@pytest.mark.parametrize("typ,lit,want", [
+    # Float/Double.valueOf trim chars <= ' ' first; Integer/Long do not
+    ("double", " 1.5", 1.5),
+    ("double", "2.5\t", 2.5),
+    ("float", " 4e2f ", 400.0),
+    ("double", " -Infinity ", float("-inf")),
+    # the f/d suffix is legal on numeric literals only
+    ("double", "NaNd", None),
+    ("float", "Infinityf", None),
+    ("double", "-Infinityd", None),
+    ("float", "NaNF", None),
+    ("long", " 40", None),
+    # Integer/Long.valueOf range-check per type
+    ("int", "2147483647", 2147483647),
+    ("int", "-2147483648", -2147483648),
+    ("int", "2147483648", None),
+    ("int", "-2147483649", None),
+    ("int", "99999999999", None),
+    ("long", "99999999999", 99999999999),
+    ("long", "9223372036854775807", 9223372036854775807),
+    ("long", "-9223372036854775808", -9223372036854775808),
+    ("long", "9223372036854775808", None),
+])
+def test_numeric_bound_parse_trim_suffix_and_range(typ, lit, want):
+    xml = f'<PointRangeQuery fieldName="f" lowerTerm="{lit}" type="{typ}"/>'
+    if want is None:
+        with pytest.raises(XmlParserError):
+            parse_xml_query(xml, _ws_analyze)
+    else:
+        assert parse_xml_query(xml, _ws_analyze)[2] == want
