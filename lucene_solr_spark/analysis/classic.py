@@ -144,25 +144,6 @@ def _match_company(u, i):
     return 0
 
 
-def _segments(u, i, seps) -> list[tuple[int, int]]:
-    """Maximal alnum segments starting at i separated by single chars
-    from seps; returns [(seg_len, sep_after_or_-1)...]."""
-    out = []
-    j = i
-    while True:
-        n = _run(u, j, _is_alnum)
-        if n == 0:
-            break
-        j += n
-        if j < len(u) and u[j] in seps:
-            out.append((n, j))
-            j += 1
-        else:
-            out.append((n, -1))
-            break
-    return out
-
-
 def _match_email(u, i):
     # ALPHANUM (([.-_]) ALPHANUM)* "@" ALPHANUM (([.-]) ALPHANUM)+
     # local part: greedy alternating; the '@' must follow a segment

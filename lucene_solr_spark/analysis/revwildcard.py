@@ -213,5 +213,5 @@ def leading_wildcard_topk(searcher, pattern: str, k: int = 10, boost: float = 1.
     from ..search.engine import BooleanSpec
 
     terms, _used = expand_leading_wildcard(searcher, _java_lower(pattern))
-    spec = BooleanSpec(const_clauses=(("", boost, tuple(terms)),))
+    spec = BooleanSpec(groups=(("", (("c", boost, tuple(terms)),)),))
     return searcher.topk_spec(spec, k=k)

@@ -208,14 +208,6 @@ class FuzzySet:
 
     # ---- recording / membership ----
 
-    def add_value(self, value: bytes) -> None:
-        pos = int(
-            _positions_from_hashes(
-                np.array([murmurhash2(value)], dtype=np.uint64), self.bloom_size
-            )[0]
-        )
-        self.words[pos >> 6] |= np.uint64(1) << np.uint64(pos & 63)
-
     def add_many(self, values: list[bytes]) -> None:
         if not values:
             return

@@ -883,18 +883,6 @@ SIMHASH_SCHEMA = T.StructType(
 _J = np.arange(64)
 
 
-def _word_bits(word: str, cache: dict) -> np.ndarray:
-    """bit j (j=0..63) = bit (j%4) of hex nibble j//4 of sha256(word)[:16] —
-    the exact convention the SQL oracle reproduces."""
-    b = cache.get(word)
-    if b is None:
-        h16 = hashlib.sha256(word.encode()).hexdigest()[:16]
-        nib = np.frombuffer(h16.encode("ascii"), dtype=np.uint8)
-        vals = np.where(nib >= 97, nib - 87, nib - 48).astype(np.int64)
-        b = cache[word] = (vals[_J // 4] >> (_J % 4)) & 1
-    return b
-
-
 def _simhash_map(iterator):
     """r4 vectorization (same shape as the minhash fold): factorize the
     batch's flat tokens, build the ±1 bit matrix once per DISTINCT word

@@ -61,14 +61,17 @@ from pyspark.sql import types as T
 from ..analysis.tokenizer import analyze, analyze_with_positions
 from ..index.builder import BLOCK_SCHEMA, BLOCK_SIZE, DEFAULT_TERM_BUCKETS, IndexPaths
 from ..index.codec import delta_decode, vbyte_decode
-from .bm25 import B, K1, avgdl_f32, idf_f32, idf_sum_f32, make_term_weight, norm_cache
+from .bm25 import (
+    B, DFR_IB_SCORERS, K1, avgdl_f32, idf_f32, idf_sum_f32, make_term_weight, norm_cache,
+)
 from .snapshot import BucketFiles, index_filesystem
 
-#: SimilarityBase DFR/IB grid cells the engine accepts (bm25.DFR_IB_SCORERS)
-DFR_IB_SIMS = ("dfr_inl2", "ib_ll", "dfr_gb2", "dfr_ifb2", "dfr_ineb2",
-               "ib_spl_ttf", "dfr_inl1", "dfr_inl3", "dfr_inlz",
-               "dfr_beb2", "dfr_bel2", "dfr_pb2", "dfr_pl2",
-               "dfr_db2", "dfr_dl2")
+#: BooleanSpec.similarity names topk_spec accepts: these plus the
+#: SimilarityBase DFR/IB grid cells, bm25.DFR_IB_SCORERS' keys
+SIMILARITIES = (
+    "bm25", "classic", "sweetspot", "lm_dirichlet", "lm_jelinek_mercer",
+    "multi_bm25_classic", "dfi_chi_squared", "dfi_standardized", "dfi_saturated",
+)
 
 TOPK_SCHEMA = T.StructType(
     [
@@ -194,12 +197,28 @@ class BooleanSpec:
     # BoostQuery per-term multiplicative boosts ((term, boost), ...):
     # weightValue = idf * boost * (k1+1) (search/BoostQuery.java)
     boosts: tuple[tuple[str, float], ...] = ()
-    # one-level nested boolean groups ((occur, (term, ...)), ...) with
-    # occur in {'', '+', '-'} — a parenthesized SHOULD-only BooleanQuery
-    # clause from the classic QueryParser: it matches when >=1 member
-    # matches and scores as the sum of matching members' BM25 scores
-    # (BooleanQuery.Builder nested clause; BooleanWeight sums sub-scorers)
-    groups: tuple[tuple[str, tuple[str, ...]], ...] = ()
+    # one-level nested BooleanQuery clauses ((occur, (member, ...)), ...)
+    # with occur in {'', '+', '-'} — the classic QueryParser's paren
+    # groups and its multi-term clauses. A member is one of
+    #   term                        — scored SHOULD TermQuery (a bare
+    #                                 string, as in `span`)
+    #   ("c", boost, (term, ...))   — CONSTANT_SCORE multi-term rewrite
+    #                                 (MultiTermQueryConstantScoreWrapper:
+    #                                 wildcard/prefix/regexp/range; the
+    #                                 member scores float32(boost) when
+    #                                 any of its terms matches)
+    #   ("w", ((term, wv), ...))    — blended fuzzy members, each scored
+    #                                 BM25 with its OWN weightValue
+    #                                 (FuzzyQuery's TopTermsBlendedFreq
+    #                                 ScoringRewrite, BlendedTermQuery.
+    #                                 BOOLEAN_REWRITE); their double sum
+    #                                 casts to float32 as one sub-score
+    # Group hit = any live member matches; group score = float32(double
+    # sum of matching members' sub-scores) — one clause for msm and the
+    # required check. A '+' group with no live member matches nothing
+    # (MatchNoDocsQuery); the parser writes ("+", ()) for a required
+    # clause that expanded to no index term.
+    groups: tuple[tuple[str, tuple], ...] = ()
     # BoostQuery wrapping the phrase clause ('"..."^2'): multiplies the
     # phrase weightValue (search/BoostQuery.java over PhraseQuery)
     phrase_boost: float = 1.0
@@ -225,30 +244,6 @@ class BooleanSpec:
     # accept reached via ANY does not count, and state multisets are NOT
     # deduplicated, both reproduced exactly).
     term_automaton: tuple[tuple, tuple] | None = None
-    # MultiTermQuery.CONSTANT_SCORE_REWRITE (MultiTermQueryConstantScore
-    # Wrapper — the classic QueryParser's DEFAULT rewrite for wildcard /
-    # prefix / regexp / range clauses, QueryParserBase.java:67):
-    # ((occur, boost, (term, ...)), ...) — the clause matches any doc
-    # containing >=1 member term and contributes a CONSTANT score =
-    # float32(boost); tf/norms/idf never enter.
-    const_clauses: tuple[tuple[str, float, tuple[str, ...]], ...] = ()
-    # Nested BooleanQuery clauses whose members carry EXPLICIT per-term
-    # BM25 weightValues ((occur, ((term, weight_value), ...)), ...) —
-    # the rewritten form of FuzzyQuery's TopTermsBlendedFreqScoringRewrite
-    # (MultiTermQuery.java:190, BlendedTermQuery.BOOLEAN_REWRITE): each
-    # member is a BoostQuery(TermQuery) with df adjusted to the max df
-    # across the blend, so its weightValue differs from the global one.
-    weighted_groups: tuple[tuple[str, tuple[tuple[str, float], ...]], ...] = ()
-    # Paren groups with HETEROGENEOUS members (the parser's nested
-    # BooleanQuery when a group contains multi-term clauses):
-    # ((occur, (member, ...)), ...) with member one of
-    #   ("t", term)                 — scored SHOULD TermQuery
-    #   ("c", boost, (term, ...))   — CONSTANT_SCORE multi-term rewrite
-    #                                 (wildcard/range inside the parens)
-    #   ("w", ((term, wv), ...))    — blended fuzzy members
-    # Group hit = any member matches; group score = float32(double sum of
-    # matching members' sub-scores) — one clause for msm/required.
-    mixed_groups: tuple[tuple[str, tuple[tuple, ...]], ...] = ()
 
     @property
     def phrase_clauses(self) -> tuple[tuple, ...]:
@@ -283,35 +278,17 @@ class BooleanSpec:
     @property
     def scoring_terms(self) -> tuple[str, ...]:
         out = tuple(self.should) + tuple(self.must) + self.positional_terms
-        for occ, ts in self.groups:
+        for occ, members in self.groups:
             if occ != "-":
-                out += tuple(ts)
-        for occ, _b, ts in self.const_clauses:
-            if occ != "-":
-                out += tuple(ts)
-        for occ, members in self.weighted_groups:
-            if occ != "-":
-                out += tuple(t for t, _wv in members)
-        for occ, members in self.mixed_groups:
-            if occ != "-":
-                out += _mixed_member_terms(members)
+                out += _member_terms(members)
         return out
 
     @property
     def all_terms(self) -> tuple[str, ...]:
         out = self.scoring_terms + tuple(self.must_not)
-        for occ, ts in self.groups:
+        for occ, members in self.groups:
             if occ == "-":
-                out += tuple(ts)
-        for occ, _b, ts in self.const_clauses:
-            if occ == "-":
-                out += tuple(ts)
-        for occ, members in self.weighted_groups:
-            if occ == "-":
-                out += tuple(t for t, _wv in members)
-        for occ, members in self.mixed_groups:
-            if occ == "-":
-                out += _mixed_member_terms(members)
+                out += _member_terms(members)
         return out
 
 
@@ -321,12 +298,12 @@ def _span_alts(clause) -> tuple[str, ...]:
     return (clause,) if isinstance(clause, str) else tuple(clause)
 
 
-def _mixed_member_terms(members) -> tuple[str, ...]:
-    """Every term a mixed-group member list touches."""
+def _member_terms(members) -> tuple[str, ...]:
+    """Every term a group's member list touches (BooleanSpec.groups)."""
     out: tuple[str, ...] = ()
     for m in members:
-        if m[0] == "t":
-            out += (m[1],)
+        if isinstance(m, str):
+            out += (m,)
         elif m[0] == "c":
             out += tuple(m[2])
         else:  # "w"
@@ -720,7 +697,9 @@ class IndexSearcher:
         terms = tuple(self._analyze(query))
         weights = self.term_weights(list(terms))
         cutoff = math.ceil(max_term_frequency * self.doc_count)
-        low = tuple(t for t in terms if weights[t]["df"] <= cutoff)
+        # the low-freq group's members are distinct: a repeated query
+        # term scores once inside it
+        low = tuple(sorted({t for t in terms if weights[t]["df"] <= cutoff}))
         high = tuple(t for t in terms if weights[t]["df"] > cutoff)
         if not low:
             spec = BooleanSpec(must=high)
@@ -2157,6 +2136,14 @@ class IndexSearcher:
         pruned to the candidates' doc ranges and the scorer masks to the
         exact set — per-doc BM25 is independent of other docs, so scores
         are identical to an unrestricted run."""
+        if spec.similarity not in SIMILARITIES and spec.similarity not in DFR_IB_SCORERS:
+            raise ValueError(
+                f"unknown similarity {spec.similarity!r}; accepted: "
+                + ", ".join(SIMILARITIES + tuple(DFR_IB_SCORERS))
+            )
+        if spec.dismax and spec.groups:
+            # DisjunctionMax is scored over `should` term clauses only
+            raise ValueError("a dismax spec cannot hold groups")
         if not spec.scoring_terms:
             return topk_frame(self.spark)
         # index-time/search-time similarity agreement (Lucene requires the
@@ -2244,7 +2231,7 @@ class IndexSearcher:
             for t in weights:
                 weights[t]["sum_ttf"] = int(self.sum_ttf)
                 weights[t]["boost"] = float(boost_map.get(t, 1.0))
-        elif spec.similarity in DFR_IB_SIMS:
+        elif spec.similarity in DFR_IB_SCORERS:
             # SimilarityBase DFR/IB models (DFRSimilarity.java /
             # IBSimilarity.java — the full BasicModel/AfterEffect/
             # Distribution/Lambda grid cells in bm25.DFR_IB_SCORERS):
@@ -2298,24 +2285,8 @@ class IndexSearcher:
             return topk_frame(self.spark)
         # a required (+) group needs at least one live member
         if any(
-            occ == "+" and all(weights[t]["df"] == 0 for t in ts)
-            for occ, ts in spec.groups
-        ):
-            return topk_frame(self.spark)
-        if any(
-            occ == "+" and all(weights[t]["df"] == 0 for t in ts)
-            for occ, _b, ts in spec.const_clauses
-        ):
-            return topk_frame(self.spark)
-        if any(
-            occ == "+" and all(weights[t]["df"] == 0 for t, _wv in ms)
-            for occ, ms in spec.weighted_groups
-        ):
-            return topk_frame(self.spark)
-        if any(
-            occ == "+"
-            and all(weights[t]["df"] == 0 for t in _mixed_member_terms(ms))
-            for occ, ms in spec.mixed_groups
+            occ == "+" and all(weights[t]["df"] == 0 for t in _member_terms(ms))
+            for occ, ms in spec.groups
         ):
             return topk_frame(self.spark)
         # absent SHOULD/NOT terms are dropped (rewrite-to-fixpoint analog)
@@ -2375,8 +2346,6 @@ class IndexSearcher:
             not spec.must and not spec.must_not and not spec.positional_terms
             and not spec.dismax and spec.min_should_match <= 1
             and not spec.groups and spec.similarity == "bm25"
-            and not spec.const_clauses and not spec.weighted_groups
-            and not spec.mixed_groups
         )
         # WAND's two-wave plan costs two extra driver round trips; it only
         # pays when there are enough doc ranges to prune. Estimate from
@@ -3173,38 +3142,16 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
         | {c for c in span if isinstance(c, str)}
         | ({span_posrange[0]} if span_posrange is not None else set())
     )
-    # nested groups with dead members dropped; '' / '-' groups with no
-    # live members vanish ('+' all-dead was rejected in topk_spec)
-    bool_groups = [
-        (occ, tuple(sorted({t for t in ts if weights[t]["df"] > 0})))
-        for occ, ts in spec.groups
-    ]
-    bool_groups = [(occ, ts) for occ, ts in bool_groups if ts]
-    # constant-score clauses (MultiTermQueryConstantScoreWrapper): dead
-    # members dropped; ''/'-' clauses with no live members vanish ('+'
-    # all-dead was rejected in topk_spec but keep the empty tuple so the
-    # scorer returns no rows)
-    const_list = [
-        (occ, np.float32(boost),
-         tuple(sorted({t for t in ts if weights[t]["df"] > 0})))
-        for occ, boost, ts in spec.const_clauses
-    ]
-    const_list = [(occ, b, ts) for occ, b, ts in const_list if ts or occ == "+"]
-    # blended-weight nested groups (per-member explicit weightValue)
-    w_groups = [
-        (occ, tuple((t, np.float32(wv)) for t, wv in members
-                    if weights[t]["df"] > 0))
-        for occ, members in spec.weighted_groups
-    ]
-    w_groups = [(occ, ms) for occ, ms in w_groups if ms or occ == "+"]
-    # mixed groups: drop dead members per type; a member survives if any
-    # of its terms is live ('c' wrappers keep partial term sets)
-    mx_groups = []
-    for occ, members in spec.mixed_groups:
+    # nested groups: drop dead members per type (a member survives if any
+    # of its terms is live; 'c' members keep partial term sets); '' / '-'
+    # groups with no live member vanish, a '+' one stays so the scorer
+    # returns no rows
+    group_clauses = []
+    for occ, members in spec.groups:
         live = []
         for m in members:
-            if m[0] == "t":
-                if weights[m[1]]["df"] > 0:
+            if isinstance(m, str):
+                if weights[m]["df"] > 0:
                     live.append(m)
             elif m[0] == "c":
                 ts = tuple(sorted({t for t in m[2] if weights[t]["df"] > 0}))
@@ -3217,13 +3164,8 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
                 if ws:
                     live.append(("w", ws))
         if live or occ == "+":
-            mx_groups.append((occ, tuple(live)))
-    n_plus_groups = (
-        sum(1 for occ, _ts in bool_groups if occ == "+")
-        + sum(1 for occ, _b, _ts in const_list if occ == "+")
-        + sum(1 for occ, _ms in w_groups if occ == "+")
-        + sum(1 for occ, _ms in mx_groups if occ == "+")
-    )
+            group_clauses.append((occ, tuple(live), _member_terms(live)))
+    n_plus_groups = sum(1 for occ, _ms, _ts in group_clauses if occ == "+")
     msm = max(
         spec.min_should_match,
         0 if (must_terms or required_positional or n_plus_groups) else 1,
@@ -3247,10 +3189,8 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
         lm_fn = lm_dirichlet_scores if lm == "lm_dirichlet" else lm_jelinek_mercer_scores
         lm_ps = {t: np.float32(weights[t]["lm_p"]) for t in weights if "lm_p" in weights[t]}
         lm_boosts = {t: weights[t].get("boost", 1.0) for t in weights}
-    dfr = spec.similarity if spec.similarity in DFR_IB_SIMS else None
+    dfr = spec.similarity if spec.similarity in DFR_IB_SCORERS else None
     if dfr:
-        from .bm25 import DFR_IB_SCORERS
-
         dfr_fn, dfr_mode = DFR_IB_SCORERS[dfr]
         dfr_av = np.float32(
             next(w["simbase_avgdl"] for w in weights.values() if "simbase_avgdl" in w)
@@ -3376,44 +3316,12 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
             return _EMPTY
         if any(
             occ == "+" and not any(t in present for t in ts)
-            for occ, ts in bool_groups
+            for occ, _ms, ts in group_clauses
         ):
             return _EMPTY
-        if any(
-            occ == "+" and not any(t in present for t in ts)
-            for occ, _b, ts in const_list
-        ):
-            return _EMPTY
-        if any(
-            occ == "+" and not any(t in present for t, _wv in ms)
-            for occ, ms in w_groups
-        ):
-            return _EMPTY
-        if any(
-            occ == "+"
-            and not any(t in present for t in _mixed_member_terms(ms))
-            for occ, ms in mx_groups
-        ):
-            return _EMPTY
-        scoring_present = (
-            any(t in present for t in should_terms)
-            or any(
-                occ != "-" and any(t in present for t in ts)
-                for occ, ts in bool_groups
-            )
-            or any(
-                occ != "-" and any(t in present for t in ts)
-                for occ, _b, ts in const_list
-            )
-            or any(
-                occ != "-" and any(t in present for t, _wv in ms)
-                for occ, ms in w_groups
-            )
-            or any(
-                occ != "-"
-                and any(t in present for t in _mixed_member_terms(ms))
-                for occ, ms in mx_groups
-            )
+        scoring_present = any(t in present for t in should_terms) or any(
+            occ != "-" and any(t in present for t in ts)
+            for occ, _ms, ts in group_clauses
         )
         # an optional phrase can be the only scoring clause in the range
         opt_phrase_possible = any(
@@ -3523,106 +3431,26 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
             if t in must_count:
                 must_hits[idxs] += 1
 
-        # nested groups: hit = any live member matched; score = sum of
-        # matching members (BooleanWeight over the inner SHOULD clauses)
+        # nested groups (BooleanWeight over the inner SHOULD clauses): hit
+        # = any live member matched. Scored terms use the GLOBAL weight,
+        # 'c' members contribute the constant boost when any of their
+        # terms match (MultiTermQueryConstantScoreWrapper's score() ==
+        # boost), 'w' members are blended sub-sums cast f32 at their own
+        # scorer boundary. The group is a nested BooleanQuery sub-scorer:
+        # its double member sum is cast to FLOAT32 before the outer sum
+        # sees it (Scorer.score() returns float; pinned vs the compiled
+        # reference in tests/test_lucene_ground_truth.py)
         gmust_hits = np.zeros(width, dtype=np.int32) if n_plus_groups else None
-        for occ, ts in bool_groups:
-            ghit = np.zeros(width, dtype=bool)
-            gsc = np.zeros(width, dtype=np.float64)
-            for t in ts:
-                if t not in per_term:
-                    continue
-                d, tf, nb, _pos = per_term[t]
-                idxs = d - base
-                freq = tf.astype(np.float32)
-                s = _term_score(t, freq, nb)
-                gsc[idxs] += s.astype(np.float64)
-                ghit[idxs] = True
-            if occ == "-":
-                excluded |= ghit
-                continue
-            # the group is a nested BooleanQuery sub-scorer: its double
-            # clause sum is cast to FLOAT32 before the outer sum sees it
-            # (Scorer.score() returns float; pinned vs the compiled
-            # reference in tests/test_lucene_ground_truth.py)
-            g32 = np.where(ghit, gsc.astype(np.float32).astype(np.float64), 0.0)
-            if occ == "+" and acc_req is not None:
-                acc_req += g32
-            else:
-                acc += g32
-            if occ == "+":
-                gmust_hits += ghit
-            else:
-                should_hits += ghit
-
-        # constant-score clauses: hit = any member matches, score = the
-        # clause boost as one float32 sub-score (MultiTermQueryConstant
-        # ScoreWrapper's scorer returns score() == boost)
-        for occ, boost32, ts in const_list:
-            chit = np.zeros(width, dtype=bool)
-            for t in ts:
-                if t in per_term:
-                    chit[per_term[t][0] - base] = True
-            if occ == "-":
-                excluded |= chit
-                continue
-            c64 = np.where(chit, np.float64(boost32), 0.0)
-            if occ == "+" and acc_req is not None:
-                acc_req += c64
-            elif mx is not None:
-                acc[:] = (acc + c64.astype(np.float32)).astype(np.float32)
-                np.maximum.at(mx, np.flatnonzero(chit), boost32)
-            else:
-                acc += c64
-            if occ == "+":
-                gmust_hits += chit
-            else:
-                should_hits += chit
-
-        # blended-weight groups: like bool_groups but each member scores
-        # BM25 with its OWN weightValue (FuzzyQuery's blended rewrite —
-        # df adjusted to the blend max, per-term fuzzy boost)
-        for occ, ms in w_groups:
-            ghit = np.zeros(width, dtype=bool)
-            gsc = np.zeros(width, dtype=np.float64)
-            for t, wv in ms:
-                if t not in per_term:
-                    continue
-                d, tf, nb, _pos = per_term[t]
-                idxs = d - base
-                freq = tf.astype(np.float32)
-                s = (wv * freq / (freq + cache[nb])).astype(np.float32)
-                gsc[idxs] += s.astype(np.float64)
-                ghit[idxs] = True
-            if occ == "-":
-                excluded |= ghit
-                continue
-            g32 = np.where(ghit, gsc.astype(np.float32).astype(np.float64), 0.0)
-            if occ == "+" and acc_req is not None:
-                acc_req += g32
-            else:
-                acc += g32
-            if occ == "+":
-                gmust_hits += ghit
-            else:
-                should_hits += ghit
-
-        # mixed groups (nested BooleanQuery with heterogeneous members):
-        # scored terms use the GLOBAL weight, 'c' members contribute the
-        # constant boost when any of their terms match, 'w' members are
-        # blended sub-sums cast f32 at their own scorer boundary; the
-        # group's double sum casts to f32 before the outer sum sees it
-        for occ, ms in mx_groups:
+        for occ, ms, _ts in group_clauses:
             ghit = np.zeros(width, dtype=bool)
             gsc = np.zeros(width, dtype=np.float64)
             for m in ms:
-                if m[0] == "t":
-                    t = m[1]
-                    if t not in per_term:
+                if isinstance(m, str):
+                    if m not in per_term:
                         continue
-                    d, tf, nb, _pos = per_term[t]
+                    d, tf, nb, _pos = per_term[m]
                     idxs = d - base
-                    s = _term_score(t, tf.astype(np.float32), nb)
+                    s = _term_score(m, tf.astype(np.float32), nb)
                     gsc[idxs] += s.astype(np.float64)
                     ghit[idxs] = True
                 elif m[0] == "c":
@@ -3652,13 +3480,12 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
                 excluded |= ghit
                 continue
             g32 = np.where(ghit, gsc.astype(np.float32).astype(np.float64), 0.0)
-            if occ == "+" and acc_req is not None:
-                acc_req += g32
-            else:
-                acc += g32
+            # dismax specs hold no groups (topk_spec), so acc_req exists
             if occ == "+":
+                acc_req += g32
                 gmust_hits += ghit
             else:
+                acc += g32
                 should_hits += ghit
 
         # hard constraints (MUST / MUST_NOT / required groups); the msm

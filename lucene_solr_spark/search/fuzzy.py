@@ -48,47 +48,6 @@ def osa_distance(a: str, b: str) -> int:
     return prev[lb]
 
 
-def dl_distance(a: str, b: str) -> int:
-    """True (unrestricted) Damerau-Levenshtein distance, Lowrance-Wagner
-    DP — transposed characters may drift apart via later edits
-    ("ca" -> "abc" is 2: transpose + insert). Kept for diagnostics; the
-    reference automaton is STRICTER (osa_distance above)."""
-    la, lb = len(a), len(b)
-    if la == 0:
-        return lb
-    if lb == 0:
-        return la
-    inf = la + lb
-    # da[ch] = last row index where ch appeared in a
-    da: dict[str, int] = {}
-    d = [[inf] * (lb + 2) for _ in range(la + 2)]
-    d[0][0] = inf
-    for i in range(la + 1):
-        d[i + 1][1] = i
-        d[i + 1][0] = inf
-    for j in range(lb + 1):
-        d[1][j + 1] = j
-        d[0][j + 1] = inf
-    for i in range(1, la + 1):
-        db = 0  # last column where b[j] == a[i] in this row
-        for j in range(1, lb + 1):
-            i1 = da.get(b[j - 1], 0)
-            j1 = db
-            if a[i - 1] == b[j - 1]:
-                cost = 0
-                db = j
-            else:
-                cost = 1
-            d[i + 1][j + 1] = min(
-                d[i][j] + cost,  # substitution / match
-                d[i + 1][j] + 1,  # insertion
-                d[i][j + 1] + 1,  # deletion
-                d[i1][j1] + (i - i1 - 1) + 1 + (j - j1 - 1),  # transposition
-            )
-        da[a[i - 1]] = i
-    return d[la + 1][lb + 1]
-
-
 def fuzzy_accept(query: str, cand: str, max_edits: int) -> tuple[bool, int]:
     """(accepted, edit distance) under FuzzyTermsEnum's rules."""
     ed = osa_distance(query, cand)

@@ -313,46 +313,41 @@ def oracle_term_automaton_topk(
     return scored[:k]
 
 
+def _group_terms(members) -> tuple[str, ...]:
+    """Every term a group's live member list touches."""
+    out: tuple[str, ...] = ()
+    for m in members:
+        if isinstance(m, str):
+            out += (m,)
+        elif m[0] == "c":
+            out += tuple(m[2])
+        else:
+            out += tuple(t for t, _wv in m[1])
+    return out
+
+
 def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.float32]]:
     """Control for BooleanSpec queries (engine.BooleanSpec): MUST/SHOULD/
     MUST_NOT/minShouldMatch, DisjunctionMax, exact/sloppy PhraseQuery,
-    MultiPhraseQuery, SpanNear (ordered/unordered), SpanFirst."""
+    MultiPhraseQuery, SpanNear (ordered/unordered), SpanFirst, and
+    nested groups ((occur, (member, ...)), ...) whose members are a bare
+    term (scored with the global weight), ("c", boost, (term, ...)) (a
+    constant-score multi-term member scoring float32(boost)) or
+    ("w", ((term, weightValue), ...)) (blended fuzzy members, their
+    double sum cast to float32)."""
     should = [t for t in spec.should if t in idx.postings]
     must = list(spec.must)
     # 0..N PhraseQuery clauses [(pairs, slop, occur, boost)]
     phrase_clauses = [tuple(pc) for pc in (getattr(spec, "phrase_clauses", ()) or ())]
-    groups = [
-        (occ, tuple(t for t in ts if t in idx.postings))
-        for occ, ts in (getattr(spec, "groups", ()) or ())
-    ]
-    if any(occ == "+" and not ts for occ, ts in groups):
-        return []
-    groups = [(occ, ts) for occ, ts in groups if ts]
-    # constant-score clauses (MultiTermQueryConstantScoreWrapper) and
-    # blended-weight groups (FuzzyQuery's TopTermsBlendedFreqScoring
-    # Rewrite) — same shapes as engine.BooleanSpec
-    const_clauses = [
-        (occ, np.float32(b), tuple(t for t in ts if t in idx.postings))
-        for occ, b, ts in (getattr(spec, "const_clauses", ()) or ())
-    ]
-    if any(occ == "+" and not ts for occ, _b, ts in const_clauses):
-        return []
-    const_clauses = [(o, b, ts) for o, b, ts in const_clauses if ts]
-    weighted_groups = [
-        (occ, tuple((t, np.float32(wv)) for t, wv in ms if t in idx.postings))
-        for occ, ms in (getattr(spec, "weighted_groups", ()) or ())
-    ]
-    if any(occ == "+" and not ms for occ, ms in weighted_groups):
-        return []
-    weighted_groups = [(o, ms) for o, ms in weighted_groups if ms]
-    # mixed groups (typed members: scored term / const wrapper / blended)
-    mixed_groups = []
-    mx_dead_plus = False
-    for occ, members in (getattr(spec, "mixed_groups", ()) or ()):
+    # nested groups (typed members: scored term / const wrapper /
+    # blended); dead members drop, a '+' group with no live member
+    # matches nothing
+    groups = []
+    for occ, members in (getattr(spec, "groups", ()) or ()):
         live = []
         for m in members:
-            if m[0] == "t":
-                if m[1] in idx.postings:
+            if isinstance(m, str):
+                if m in idx.postings:
                     live.append(m)
             elif m[0] == "c":
                 ts = tuple(t for t in m[2] if t in idx.postings)
@@ -363,22 +358,9 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
                 if ws:
                     live.append(("w", ws))
         if occ == "+" and not live:
-            mx_dead_plus = True
+            return []
         if live:
-            mixed_groups.append((occ, tuple(live)))
-    if mx_dead_plus:
-        return []
-
-    def _mx_terms(members):
-        out = []
-        for m in members:
-            if m[0] == "t":
-                out.append(m[1])
-            elif m[0] == "c":
-                out.extend(m[2])
-            else:
-                out.extend(t for t, _wv in m[1])
-        return out
+            groups.append((occ, tuple(live), _group_terms(live)))
     all_phrase_terms = {t for pairs, _s, _o, _b in phrase_clauses for t, _ in pairs}
     req_pc_terms = {
         t for pairs, _s, occ, _b in phrase_clauses if occ == "+" for t, _ in pairs
@@ -408,10 +390,7 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
     pos_terms = all_phrase_terms | set(span) | (
         {span_first[0]} if span_first else set()
     ) | {t for _off, alts in multi_phrase for t in alts}
-    group_terms = {t for _occ, ts in groups for t in ts}
-    group_terms |= {
-        m[1] for _occ, ms in mixed_groups for m in ms if m[0] == "t"
-    }
+    group_terms = {m for _occ, ms, _ts in groups for m in ms if isinstance(m, str)}
     boost_map = dict(getattr(spec, "boosts", ()) or ())
     weights = {
         t: make_term_weight(
@@ -425,16 +404,7 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
         return set.union(*[set(idx.postings.get(t, {})) for t in ts]) if ts else set()
 
     # candidates
-    pos_group_docs = [_gdocs(ts) for occ, ts in groups if occ != "-"]
-    pos_group_docs += [
-        _gdocs(ts) for occ, _b, ts in const_clauses if occ != "-"
-    ]
-    pos_group_docs += [
-        _gdocs([t for t, _wv in ms]) for occ, ms in weighted_groups if occ != "-"
-    ]
-    pos_group_docs += [
-        _gdocs(_mx_terms(ms)) for occ, ms in mixed_groups if occ != "-"
-    ]
+    pos_group_docs = [_gdocs(ts) for occ, _ms, ts in groups if occ != "-"]
     alt_span = [c for c in span_clauses if len(c) > 1]
     if required:
         cand = set.intersection(*[set(idx.postings[t]) for t in required])
@@ -464,34 +434,14 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
     if alt_span and (required or multi_phrase):
         for c in alt_span:
             cand &= set.union(*[set(idx.postings.get(t, {})) for t in c])
-    for occ, ts in groups:
+    for occ, _ms, ts in groups:
         if occ == "+":
             cand &= _gdocs(ts)
         elif occ == "-":
             cand -= _gdocs(ts)
-    for occ, _b, ts in const_clauses:
-        if occ == "+":
-            cand &= _gdocs(ts)
-        elif occ == "-":
-            cand -= _gdocs(ts)
-    for occ, ms in weighted_groups:
-        if occ == "+":
-            cand &= _gdocs([t for t, _wv in ms])
-        elif occ == "-":
-            cand -= _gdocs([t for t, _wv in ms])
-    for occ, ms in mixed_groups:
-        if occ == "+":
-            cand &= _gdocs(_mx_terms(ms))
-        elif occ == "-":
-            cand -= _gdocs(_mx_terms(ms))
     for t in set(spec.must_not):
         cand -= set(idx.postings.get(t, {}))
-    n_plus_groups = (
-        sum(1 for occ, _ts in groups if occ == "+")
-        + sum(1 for occ, _b, _ts in const_clauses if occ == "+")
-        + sum(1 for occ, _ms in weighted_groups if occ == "+")
-        + sum(1 for occ, _ms in mixed_groups if occ == "+")
-    )
+    n_plus_groups = sum(1 for occ, _ms, _ts in groups if occ == "+")
     required_positional = (
         bool(multi_phrase or span or span_first) or bool(req_pc_terms)
     )
@@ -665,22 +615,8 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
         def _should_hits(d):
             h = sum(1 for t in set(should) if d in idx.postings.get(t, {}))
             h += sum(
-                1 for occ, ts in groups
+                1 for occ, _ms, ts in groups
                 if occ == "" and any(d in idx.postings.get(t, {}) for t in ts)
-            )
-            h += sum(
-                1 for occ, _b, ts in const_clauses
-                if occ == "" and any(d in idx.postings.get(t, {}) for t in ts)
-            )
-            h += sum(
-                1 for occ, ms in weighted_groups
-                if occ == ""
-                and any(d in idx.postings.get(t, {}) for t, _wv in ms)
-            )
-            h += sum(
-                1 for occ, ms in mixed_groups
-                if occ == ""
-                and any(d in idx.postings.get(t, {}) for t in _mx_terms(ms))
             )
             for pc, m in zip(phrase_clauses, pc_maps):
                 if pc[2] == "" and d in m:
@@ -705,63 +641,24 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
         s = weights[t].score(tf, norm)
         s[tf == 0] = np.float32(0.0)
         (req_clause if is_must else per_clause).append(s)
-    for occ, ts in groups:
+    for occ, ms, _ts in groups:
         if occ == "-":
             continue
-        # nested BooleanQuery: members double-sum, CAST TO FLOAT32, and
-        # the outer sum sees one float sub-score (Scorer.score contract)
-        gacc = np.zeros(docs.size, dtype=np.float64)
-        for t in ts:
-            post = idx.postings.get(t, {})
-            tf = np.array([post.get(int(d), 0) for d in docs], dtype=np.float32)
-            s = weights[t].score(tf, norm)
-            s[tf == 0] = np.float32(0.0)
-            gacc += s.astype(np.float64)
-        (req_clause if occ == "+" else per_clause).append(gacc.astype(np.float32))
-    for occ, b32, ts in const_clauses:
-        if occ == "-":
-            continue
-        # constant-score clause: one float32 sub-score == the boost for
-        # any doc matching >=1 member (MultiTermQueryConstantScoreWrapper)
-        hit = np.array(
-            [any(int(d) in idx.postings.get(t, {}) for t in ts) for d in docs]
-        )
-        arr = np.where(hit, b32, np.float32(0.0)).astype(np.float32)
-        (req_clause if occ == "+" else per_clause).append(arr)
-    for occ, ms in weighted_groups:
-        if occ == "-":
-            continue
-        # blended group: members score BM25 with their OWN weightValue
-        # (df adjusted to the blend max x fuzzy boost); double-sum then
-        # one float32 sub-score (BlendedTermQuery.BOOLEAN_REWRITE)
-        from .bm25 import norm_cache
-
-        cache = norm_cache(idx.avgdl)
-        gacc = np.zeros(docs.size, dtype=np.float64)
-        for t, wv in ms:
-            post = idx.postings.get(t, {})
-            tf = np.array([post.get(int(d), 0) for d in docs], dtype=np.float32)
-            s = (np.float32(wv) * tf / (tf + cache[norm])).astype(np.float32)
-            s[tf == 0] = np.float32(0.0)
-            gacc += s.astype(np.float64)
-        (req_clause if occ == "+" else per_clause).append(gacc.astype(np.float32))
-    for occ, ms in mixed_groups:
-        if occ == "-":
-            continue
-        # mixed nested BooleanQuery: scored terms use the GLOBAL weight,
-        # 'c' members add their constant boost when any member term hits,
-        # 'w' members are blended sub-sums cast f32 at their boundary;
-        # the group double sum casts to f32 before the outer sum
+        # nested BooleanQuery: scored terms use the GLOBAL weight, 'c'
+        # members add their constant boost when any member term hits
+        # (MultiTermQueryConstantScoreWrapper), 'w' members are blended
+        # sub-sums cast f32 at their boundary (BlendedTermQuery.BOOLEAN_
+        # REWRITE); the group double sum casts to FLOAT32 and the outer
+        # sum sees one float sub-score (Scorer.score contract)
         from .bm25 import norm_cache
 
         cache = norm_cache(idx.avgdl)
         gacc = np.zeros(docs.size, dtype=np.float64)
         for m in ms:
-            if m[0] == "t":
-                t = m[1]
-                post = idx.postings.get(t, {})
+            if isinstance(m, str):
+                post = idx.postings.get(m, {})
                 tf = np.array([post.get(int(d), 0) for d in docs], dtype=np.float32)
-                s = weights[t].score(tf, norm)
+                s = weights[m].score(tf, norm)
                 s[tf == 0] = np.float32(0.0)
                 gacc += s.astype(np.float64)
             elif m[0] == "c":

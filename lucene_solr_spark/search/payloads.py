@@ -117,29 +117,6 @@ def span_match_positions(plists, slop: int, ordered: bool):
             return
 
 
-def payload_fold(factors, function: str) -> tuple[np.float32, int]:
-    """Fold non-null payload factors (already float32) through a
-    PayloadFunction in collection order: (payloadScore, numPayloadsSeen).
-    factors may contain NaN entries — null payloads — which are skipped
-    WITHOUT advancing numPayloadsSeen (collectLeaf returns early)."""
-    acc = np.float32(0.0)
-    seen = 0
-    for f in factors:
-        if np.isnan(f):
-            continue
-        f = np.float32(f)
-        if function == "avg":
-            acc = np.float32(f + acc)
-        elif function == "min":
-            acc = f if seen == 0 else np.float32(min(f, acc))
-        elif function == "max":
-            acc = f if seen == 0 else np.float32(max(f, acc))
-        else:
-            raise ValueError(f"unknown payload function {function!r}")
-        seen += 1
-    return acc, seen
-
-
 def payload_doc_score(acc: np.float32, seen: int, function: str) -> np.float32:
     """PayloadFunction.docScore: 1.0 with no payloads; avg divides by the
     count (float32), min/max return the fold."""

@@ -378,10 +378,12 @@ def to_spec(
     should = list(parsed.should)
     must = list(parsed.must)
     must_not = list(parsed.must_not)
-    groups: list[tuple[str, tuple[str, ...]]] = []
-    const_clauses: list[tuple[str, float, tuple[str, ...]]] = []
-    weighted_groups: list[tuple[str, tuple]] = []
-    mixed_groups: list[tuple[str, tuple]] = []
+    # nested clauses (BooleanSpec.groups): (occur, members) with members
+    # bare scored terms, ("c", boost, terms) constant-score wrappers and
+    # ("w", ((term, wv), ...)) blended fuzzy expansions. A REQUIRED clause
+    # whose members all expanded to zero index terms rewrites to
+    # MatchNoDocsQuery: a '+' group with no members.
+    groups: list[tuple[str, tuple]] = []
     for occ, g_terms, g_exp in parsed.groups:
         if rewrite == "constant_score" and g_exp:
             # a paren group with multi-term members is a nested
@@ -391,7 +393,7 @@ def to_spec(
             # regardless of nesting (QueryParserBase.newRangeQuery /
             # newWildcardQuery); pinned vs the compiled binary in
             # tests/test_lucene_ground_truth.py
-            members: list[tuple] = [("t", t) for t in g_terms]
+            members = list(g_terms)
             for kind, payload, _occ, b in g_exp:
                 if kind == "fuzzy":
                     ws = _blended_members(payload, b)
@@ -401,48 +403,35 @@ def to_spec(
                 ts = tuple(sorted(set(_expand(kind, payload))))
                 if ts:
                     members.append(("c", float(b), ts))
-            if members:
-                mixed_groups.append((occ, tuple(members)))
-            elif occ == "+":
-                groups.append(("+", ("\x00<no-term>",)))
-            continue
-        terms = list(g_terms)
-        for kind, payload, _occ, _b in g_exp:
-            # top_terms mode: every expansion becomes scoring SHOULD
-            # members of the nested BooleanQuery
-            terms.extend(sorted(set(_expand(kind, payload))))
-        if terms:
-            groups.append((occ, tuple(terms)))
-        elif occ == "+":
-            # a REQUIRED group whose members all expanded to zero index
-            # terms rewrites to MatchNoDocsQuery (same sentinel as the
-            # bare required expansion below)
-            groups.append(("+", ("\x00<no-term>",)))
+        else:
+            terms = list(g_terms)
+            for kind, payload, _occ, _b in g_exp:
+                # top_terms mode: every expansion becomes scoring SHOULD
+                # members of the nested BooleanQuery
+                terms.extend(sorted(set(_expand(kind, payload))))
+            # scored members are distinct: a term named twice scores once
+            members = sorted(set(terms))
+        if members or occ == "+":
+            groups.append((occ, tuple(members)))
     for kind, payload, occur, boost in parsed.expansions:
-        if rewrite == "constant_score" and kind == "fuzzy":
-            members = _blended_members(payload, boost)
-            if members:
-                weighted_groups.append((occur, members))
-            elif occur == "+":
-                const_clauses.append(("+", 1.0, ("\x00<no-term>",)))
-            continue
         if rewrite == "constant_score":
-            terms = tuple(sorted(set(_expand(kind, payload))))
-            if terms:
-                const_clauses.append((occur, float(boost), terms))
-            elif occur == "+":
-                const_clauses.append(("+", float(boost), ("\x00<no-term>",)))
+            # one clause: a one-member group (constant-score wrapper or
+            # the blended fuzzy expansion)
+            if kind == "fuzzy":
+                ws = _blended_members(payload, boost)
+                members = (("w", ws),) if ws else ()
+            else:
+                ts = tuple(sorted(set(_expand(kind, payload))))
+                members = (("c", float(boost), ts),) if ts else ()
+            if members or occur == "+":
+                groups.append((occur, members))
             continue
         terms = sorted(set(_expand(kind, payload)))
         if occur == "-":
             must_not.extend(terms)
         elif occur == "+":
             # required multi-term clause: >=1 expanded term must match
-            if terms:
-                groups.append(("+", tuple(terms)))
-            else:
-                # required expansion with zero index terms matches nothing
-                groups.append(("+", ("\x00<no-term>",)))
+            groups.append(("+", tuple(terms)))
         else:
             should.extend(terms)
     return BooleanSpec(
@@ -456,9 +445,6 @@ def to_spec(
         phrases=tuple(parsed.phrases),
         boosts=tuple(sorted(parsed.boosts.items())),
         groups=tuple(groups),
-        const_clauses=tuple(const_clauses),
-        weighted_groups=tuple(weighted_groups),
-        mixed_groups=tuple(mixed_groups),
     )
 
 

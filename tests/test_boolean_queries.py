@@ -50,12 +50,17 @@ BOOL_CASES = [
 ]
 
 
-@pytest.mark.parametrize("spec", BOOL_CASES, ids=[str(i) for i in range(len(BOOL_CASES))])
-def test_boolean_rank_identity(built, spec):
+def _assert_spec_identity(built, spec):
+    """topk_spec == control oracle, rank AND float32 score."""
     searcher, oidx = built
     expected = oracle_topk_spec(oidx, spec, k=10)
     got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
     _assert_identical(got, expected, spec)
+
+
+@pytest.mark.parametrize("spec", BOOL_CASES, ids=[str(i) for i in range(len(BOOL_CASES))])
+def test_boolean_rank_identity(built, spec):
+    _assert_spec_identity(built, spec)
 
 
 @pytest.mark.parametrize("tiebreak", [0.0, 0.3])
@@ -104,30 +109,143 @@ def test_phrase_with_filter(built):
     _assert_identical(got, expected, "phrase+not")
 
 
-GROUP_CASES = [
-    # (a OR b) AND c
-    BooleanSpec(must=("parse",), groups=(("+", ("index", "merge")),)),
-    # should-group + should term, msm via either
-    BooleanSpec(should=("token",), groups=(("", ("parse", "merge")),)),
-    # negative group
-    BooleanSpec(should=("parse",), groups=(("-", ("hotcommon",)),)),
-    # two groups, one required one optional
-    BooleanSpec(groups=(("+", ("parse", "index")), ("", ("merge", "token")))),
-    # group with an absent member
-    BooleanSpec(groups=(("+", ("parse", "zzz_missing")),)),
-    # required group entirely absent -> empty
-    BooleanSpec(should=("parse",), groups=(("+", ("zzz_missing",)),)),
-]
+# ------------------------------------------------------- nested groups
+# BooleanSpec.groups members: a bare term (scored SHOULD TermQuery),
+# ("c", boost, terms) (constant-score multi-term rewrite — the classic
+# parser's default for wildcard/range, MultiTermQueryConstantScore
+# Wrapper) or ("w", ((term, weightValue), ...)) (FuzzyQuery's
+# TopTermsBlendedFreqScoringRewrite members). The case families below
+# are the shapes the parser writes, pinned vs the compiled reference in
+# tests/test_lucene_ground_truth.py.
 
 
-@pytest.mark.parametrize("spec", GROUP_CASES, ids=[str(i) for i in range(len(GROUP_CASES))])
+def _const(occ, boost, terms):
+    """A constant-score clause: a one-member 'c' group."""
+    return (occ, (("c", boost, terms),))
+
+
+def _blend(occ, members):
+    """A blended fuzzy clause: a one-member 'w' group."""
+    return (occ, (("w", members),))
+
+
+WG_MEMBERS = (("parse", 3.25), ("index", 1.5), ("merge_0", 0.75))
+
+GROUP_CASES = {
+    # parenthesized SHOULD-only groups of scored terms
+    "group": [
+        # (a OR b) AND c
+        BooleanSpec(must=("parse",), groups=(("+", ("index", "merge")),)),
+        # should-group + should term, msm via either
+        BooleanSpec(should=("token",), groups=(("", ("parse", "merge")),)),
+        # negative group
+        BooleanSpec(should=("parse",), groups=(("-", ("hotcommon",)),)),
+        # two groups, one required one optional
+        BooleanSpec(groups=(("+", ("parse", "index")), ("", ("merge", "token")))),
+        # group with an absent member
+        BooleanSpec(groups=(("+", ("parse", "zzz_missing")),)),
+        # required group entirely absent -> empty
+        BooleanSpec(should=("parse",), groups=(("+", ("zzz_missing",)),)),
+        # required group with no members (the parser's MatchNoDocs
+        # clause for an expansion to no index term) -> empty
+        BooleanSpec(should=("parse",), groups=(("+", ()),)),
+    ],
+    # constant-score clauses
+    "const": [
+        # optional const clause + scored term (ReqOpt over DisjunctionSum)
+        BooleanSpec(should=("merge",), groups=(_const("", 1.0, ("parse", "index")),)),
+        # pure const query (BooleanQuery rewrites to the wrapper itself)
+        BooleanSpec(groups=(_const("", 2.5, ("parse", "index")),)),
+        # required const clause (ConjunctionScorer includes the constant)
+        BooleanSpec(should=("merge",), groups=(_const("+", 1.0, ("parse",)),)),
+        # prohibited const clause (pure exclusion)
+        BooleanSpec(should=("merge",), groups=(_const("-", 1.0, ("parse", "index")),)),
+        # dead member mixed with a live one; MUST term alongside
+        BooleanSpec(must=("merge",), groups=(_const("", 0.3, ("zzz_missing", "parse")),)),
+        # two const clauses + minShouldMatch counting them as SHOULD hits
+        BooleanSpec(
+            groups=(_const("", 1.0, ("parse",)), _const("", 2.0, ("index", "merge"))),
+            min_should_match=2,
+        ),
+        # all-dead required const clause -> MatchNoDocs
+        BooleanSpec(should=("merge",), groups=(_const("+", 1.0, ("zzz_missing",)),)),
+    ],
+    # blended-weight clauses (per-member explicit weightValue)
+    "wg": [
+        BooleanSpec(groups=(_blend("", WG_MEMBERS),)),
+        BooleanSpec(should=("token",), groups=(_blend("", WG_MEMBERS),)),
+        BooleanSpec(must=("token",), groups=(_blend("", WG_MEMBERS),)),
+        BooleanSpec(groups=(_blend("+", WG_MEMBERS),), should=("token",)),
+        BooleanSpec(groups=(_blend("-", WG_MEMBERS),), should=("token", "merge")),
+        BooleanSpec(
+            groups=(_blend("", (("zzz_missing", 2.0), ("parse", 1.25))),),
+            should=("token",),
+        ),
+    ],
+    # heterogeneous members in one nested BooleanQuery (the parser's
+    # paren group holding multi-term clauses)
+    "mixed": [
+        # scored term + const wildcard member inside one group
+        BooleanSpec(groups=(("", ("merge", ("c", 1.0, ("parse", "index")))),),
+                    should=("token",)),
+        # required mixed group + outer must
+        BooleanSpec(groups=(("+", ("merge", ("c", 2.5, ("parse",)))),),
+                    must=("token",)),
+        # prohibited mixed group
+        BooleanSpec(groups=(("-", ("merge", ("c", 1.0, ("parse",)))),),
+                    should=("token", "index")),
+        # const-only group (pure wildcard parens)
+        BooleanSpec(groups=(("", (("c", 1.5, ("parse", "index")),)),),
+                    should=("merge",)),
+        # blended member next to a scored term
+        BooleanSpec(groups=(
+            ("", ("token", ("w", (("parse", 3.25), ("index", 1.5))))),)),
+        # dead members mixed with live ones
+        BooleanSpec(groups=(
+            ("+", ("zzz_missing", ("c", 0.5, ("zzz_also", "merge")))),),
+            should=("token",)),
+        # two mixed groups, msm counts each as one SHOULD clause
+        BooleanSpec(groups=(
+            ("", ("merge", ("c", 1.0, ("parse",)))),
+            ("", (("c", 2.0, ("index", "token")),)),
+        ), min_should_match=2),
+    ],
+}
+
+
+def _group_cases(family):
+    cases = GROUP_CASES[family]
+    return pytest.mark.parametrize("spec", cases, ids=[str(i) for i in range(len(cases))])
+
+
+@_group_cases("group")
 def test_group_rank_identity(built, spec):
-    """Nested SHOULD-group clauses (classic parser parens): engine ==
-    control oracle rank+score."""
-    searcher, oidx = built
-    expected = oracle_topk_spec(oidx, spec, k=10)
-    got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
-    _assert_identical(got, expected, ("group", spec))
+    _assert_spec_identity(built, spec)
+
+
+@_group_cases("const")
+def test_const_clause_rank_identity(built, spec):
+    _assert_spec_identity(built, spec)
+
+
+@_group_cases("wg")
+def test_weighted_group_rank_identity(built, spec):
+    _assert_spec_identity(built, spec)
+
+
+@_group_cases("mixed")
+def test_mixed_group_rank_identity(built, spec):
+    _assert_spec_identity(built, spec)
+
+
+def test_dismax_with_groups_raises(built):
+    """DisjunctionMax scores `should` term clauses only: a dismax spec
+    holding a group is refused, not scored as a sum."""
+    searcher, _oidx = built
+    spec = BooleanSpec(should=("parse",), dismax=True,
+                       groups=(("", (("c", 1.0, ("index",)),)),))
+    with pytest.raises(ValueError, match="dismax"):
+        searcher.topk_spec(spec, k=10)
 
 
 OPTIONAL_PHRASE_CASES = [
@@ -329,69 +447,6 @@ def test_lm_dirichlet_clamps_at_zero():
     assert s2[0] > np.float32(0.0)
 
 
-# ------------------------------------------------------- constant score
-
-CONST_CASES = [
-    # optional const clause + scored term (ReqOpt over DisjunctionSum)
-    BooleanSpec(should=("merge",), const_clauses=(("", 1.0, ("parse", "index")),)),
-    # pure const query (BooleanQuery rewrites to the wrapper itself)
-    BooleanSpec(const_clauses=(("", 2.5, ("parse", "index")),)),
-    # required const clause (ConjunctionScorer includes the constant)
-    BooleanSpec(should=("merge",), const_clauses=(("+", 1.0, ("parse",)),)),
-    # prohibited const clause (pure exclusion)
-    BooleanSpec(should=("merge",), const_clauses=(("-", 1.0, ("parse", "index")),)),
-    # dead member mixed with a live one; MUST term alongside
-    BooleanSpec(must=("merge",), const_clauses=(("", 0.3, ("zzz_missing", "parse")),)),
-    # two const clauses + minShouldMatch counting them as SHOULD hits
-    BooleanSpec(
-        const_clauses=(("", 1.0, ("parse",)), ("", 2.0, ("index", "merge"))),
-        min_should_match=2,
-    ),
-    # all-dead required const clause -> MatchNoDocs
-    BooleanSpec(should=("merge",), const_clauses=(("+", 1.0, ("zzz_missing",)),)),
-]
-
-
-@pytest.mark.parametrize(
-    "spec", CONST_CASES, ids=[str(i) for i in range(len(CONST_CASES))]
-)
-def test_const_clause_rank_identity(built, spec):
-    """MultiTermQueryConstantScoreWrapper clauses (the classic parser's
-    default wildcard/range rewrite — pinned vs the compiled reference in
-    tests/test_lucene_ground_truth.py): engine == control oracle,
-    rank AND float32 score."""
-    searcher, oidx = built
-    expected = oracle_topk_spec(oidx, spec, k=10)
-    got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
-    _assert_identical(got, expected, spec)
-
-
-WG_MEMBERS = (("parse", 3.25), ("index", 1.5), ("merge_0", 0.75))
-
-WG_CASES = [
-    BooleanSpec(weighted_groups=(("", WG_MEMBERS),)),
-    BooleanSpec(should=("token",), weighted_groups=(("", WG_MEMBERS),)),
-    BooleanSpec(must=("token",), weighted_groups=(("", WG_MEMBERS),)),
-    BooleanSpec(weighted_groups=(("+", WG_MEMBERS),), should=("token",)),
-    BooleanSpec(weighted_groups=(("-", WG_MEMBERS),), should=("token", "merge")),
-    BooleanSpec(
-        weighted_groups=(("", (("zzz_missing", 2.0), ("parse", 1.25))),),
-        should=("token",),
-    ),
-]
-
-
-@pytest.mark.parametrize("spec", WG_CASES, ids=[str(i) for i in range(len(WG_CASES))])
-def test_weighted_group_rank_identity(built, spec):
-    """Blended-weight nested groups (FuzzyQuery's TopTermsBlendedFreq
-    ScoringRewrite shape — per-member explicit weightValue): engine ==
-    control oracle, rank AND float32 score."""
-    searcher, oidx = built
-    expected = oracle_topk_spec(oidx, spec, k=10)
-    got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
-    _assert_identical(got, expected, spec)
-
-
 PARSER_EXPANSION_QUERIES = [
     "par*",
     "par* merge",
@@ -423,53 +478,6 @@ def test_parser_expansion_engine_oracle_identity(built, q):
         for r in parse_and_search(searcher, q, k=10).collect()
     ]
     _assert_identical(got, expected, q)
-
-
-# -------------------------------------------------------- mixed groups
-
-MX = lambda *ms: tuple(ms)  # noqa: E731
-
-MIXED_CASES = [
-    # scored term + const wildcard member inside one group
-    BooleanSpec(mixed_groups=(("", (("t", "merge"), ("c", 1.0, ("parse", "index")))),),
-                should=("token",)),
-    # required mixed group + outer must
-    BooleanSpec(mixed_groups=(("+", (("t", "merge"), ("c", 2.5, ("parse",)))),),
-                must=("token",)),
-    # prohibited mixed group
-    BooleanSpec(mixed_groups=(("-", (("t", "merge"), ("c", 1.0, ("parse",)))),),
-                should=("token", "index")),
-    # const-only group (pure wildcard parens)
-    BooleanSpec(mixed_groups=(("", (("c", 1.5, ("parse", "index")),)),),
-                should=("merge",)),
-    # blended member next to a scored term
-    BooleanSpec(mixed_groups=(
-        ("", (("t", "token"), ("w", (("parse", 3.25), ("index", 1.5))))),)),
-    # dead members mixed with live ones
-    BooleanSpec(mixed_groups=(
-        ("+", (("t", "zzz_missing"), ("c", 0.5, ("zzz_also", "merge")))),),
-        should=("token",)),
-    # two mixed groups, msm counts each as one SHOULD clause
-    BooleanSpec(mixed_groups=(
-        ("", (("t", "merge"), ("c", 1.0, ("parse",)))),
-        ("", (("c", 2.0, ("index", "token")),)),
-    ), min_should_match=2),
-]
-
-
-@pytest.mark.parametrize(
-    "spec", MIXED_CASES, ids=[str(i) for i in range(len(MIXED_CASES))]
-)
-def test_mixed_group_rank_identity(built, spec):
-    """Mixed paren groups (scored terms + constant-score multi-term
-    members + blended fuzzy members in one nested BooleanQuery — the
-    classic parser's group shape, pinned vs the compiled reference in
-    tests/test_lucene_ground_truth.py): engine == control oracle, rank
-    AND float32 score."""
-    searcher, oidx = built
-    expected = oracle_topk_spec(oidx, spec, k=10)
-    got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
-    _assert_identical(got, expected, spec)
 
 
 def test_join_util_engine_matches_control(built):

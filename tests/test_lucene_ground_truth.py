@@ -574,7 +574,7 @@ def test_parser_expansions_match_compiled_reference():
         # multi-term clauses INSIDE paren groups: the rewrite rides the
         # MultiTermQuery, so the nested BooleanQuery holds constant-score
         # wildcard/range members and blended fuzzy members next to
-        # scored terms (BooleanSpec.mixed_groups)
+        # scored terms (typed BooleanSpec.groups members)
         "(ab* xyz) AND xya",
         "(ab* xya) xyz",
         "xyz AND (abc ab*)",
@@ -944,7 +944,7 @@ def test_syn_blend_const_span_family_match_compiled_reference():
                         idx,
                         BooleanSpec(
                             should=tuple(sts),
-                            const_clauses=(("", boost, tuple(cts)),),
+                            groups=(("", (("c", boost, tuple(cts)),)),),
                         ), k=10),
                     False,
                 ))

@@ -94,3 +94,23 @@ def test_norm_similarity_mismatch_raises(spark):
         default.topk_spec(
             BooleanSpec(should=terms, similarity="sweetspot"), k=5
         )
+
+
+def test_unknown_similarity_raises(spark, monkeypatch):
+    """topk_spec rejects a similarity name it has no scorer for, before
+    it reads any term stats: a misspelt name must not score BM25 quietly
+    or fail later inside the range scorer."""
+    from lucene_solr_spark.analysis.tokenizer import analyze
+    from lucene_solr_spark.ops.index_access import searcher_for
+    from lucene_solr_spark.search.engine import BooleanSpec
+
+    terms = tuple(analyze("spark merge"))
+    s = searcher_for(spark, SF)
+
+    def no_read(_terms):
+        raise AssertionError("term stats read for an unknown similarity")
+
+    monkeypatch.setattr(s, "term_weights", no_read)
+    for name in ("bm52", "lm_dirchlet", "dfi_", "dfr_inl9"):
+        with pytest.raises(ValueError, match=r"unknown similarity .*accepted: bm25, "):
+            s.topk_spec(BooleanSpec(should=terms, similarity=name), k=5)
