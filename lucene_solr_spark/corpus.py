@@ -80,7 +80,3 @@ def make_corpus(n_docs: int = 200, seed: int = 42, vocab_size: int = 500) -> pd.
         rows.append((repo, path, commit, lang, content))
     df = pd.DataFrame(rows, columns=["repo", "path", "commit", "lang", "content"])
     return df.sort_values(["repo", "path", "commit"], kind="mergesort").reset_index(drop=True)
-
-
-def corpus_spark_df(spark, n_docs: int = 200, seed: int = 42):
-    return spark.createDataFrame(make_corpus(n_docs, seed))

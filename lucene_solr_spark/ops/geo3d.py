@@ -283,10 +283,6 @@ MINIMUM_RESOLUTION_SQUARED = MINIMUM_RESOLUTION * MINIMUM_RESOLUTION
 MIN_MAGNITUDE = min(AB, C)  # PlanetModel.getMinimumMagnitude
 
 
-def _sided_from_normal(normal, d, inside):
-    return _SidedPlane(normal, d, inside)
-
-
 def _sided_from_cross(inside, a, b):
     """SidedPlane(p, A, B): plane = normalized cross(A, B) through the
     origin (D = 0), sided by p."""

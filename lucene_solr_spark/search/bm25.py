@@ -15,7 +15,9 @@ coord == 1 for BM25).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 
@@ -241,7 +243,18 @@ def simbase_avgdl_f32(sum_ttf: int, doc_count: int) -> np.float32:
     return np.float32(np.float32(sum_ttf) / np.float32(doc_count))
 
 
-def _tfn_h2(freq: np.ndarray, norm_byte: np.ndarray, avgdl32: np.float32) -> np.ndarray:
+# --- SimilarityBase normalizations: tfn(freq, norm_byte, ttf, sum_ttf, avgdl32)
+
+def _tfn_h1(freq, norm_byte, ttf, sum_ttf, avgdl32):
+    """NormalizationH1.tfn, c=1 (NormalizationH1.java:44-46):
+    tf * c * avgFieldLength / len — float32 at every step."""
+    dl = SIMBASE_DECODE[np.asarray(norm_byte, dtype=np.uint8)]
+    f = np.asarray(freq, dtype=np.float32)
+    return (((f * np.float32(1.0)) * np.float32(avgdl32)) / dl).astype(
+        np.float32)
+
+
+def _tfn_h2(freq, norm_byte, ttf, sum_ttf, avgdl32):
     """NormalizationH2.tfn with the default c=1 (NormalizationH2.java:47-53):
     (float)(tf * log2(1 + c * avgFieldLength / docLen)). The inner
     1 + c*avg/len is all-float32 arithmetic; log2 and the tf product run
@@ -254,169 +267,7 @@ def _tfn_h2(freq: np.ndarray, norm_byte: np.ndarray, avgdl32: np.float32) -> np.
     return t.astype(np.float32)
 
 
-def dfr_inl2_scores(
-    freq: np.ndarray,
-    norm_byte: np.ndarray,
-    df: int,
-    doc_count: int,
-    avgdl32: np.float32,
-    boost: float = 1.0,
-) -> np.ndarray:
-    """DFRSimilarity(BasicModelIn, AfterEffectL, NormalizationH2()) —
-    the classic InL2 model. DFRSimilarity.score: boost * basicModel *
-    afterEffect; BasicModelIn.java:36: tfn * (float)log2((N+1)/(n+0.5));
-    AfterEffectL.java:33: 1/(tfn+1)."""
-    tfn = _tfn_h2(freq, norm_byte, avgdl32)
-    bmlog = np.float32(
-        np.log((np.float64(doc_count) + 1.0) / (np.float64(df) + 0.5)) / _LN2
-    )
-    bm = (tfn * bmlog).astype(np.float32)
-    ae = (np.float32(1.0) / (tfn + np.float32(1.0))).astype(np.float32)
-    return ((np.float32(boost) * bm) * ae).astype(np.float32)
-
-
-def ib_ll_scores(
-    freq: np.ndarray,
-    norm_byte: np.ndarray,
-    df: int,
-    doc_count: int,
-    avgdl32: np.float32,
-    boost: float = 1.0,
-) -> np.ndarray:
-    """IBSimilarity(DistributionLL, LambdaDF, NormalizationH2()).
-    IBSimilarity.score: boost * distribution(tfn, lambda);
-    LambdaDF.java:32: (docFreq+1F)/(numberOfDocuments+1F), float32;
-    DistributionLL.java:34: (float)-Math.log(lambda/(tfn+lambda)) — the
-    ratio is float32 division, the log is natural and double."""
-    tfn = _tfn_h2(freq, norm_byte, avgdl32)
-    lam = np.float32(
-        (np.float32(df) + np.float32(1.0)) / (np.float32(doc_count) + np.float32(1.0))
-    )
-    ratio = (lam / (tfn + lam)).astype(np.float32)
-    dist = (-np.log(ratio.astype(np.float64))).astype(np.float32)
-    return (np.float32(boost) * dist).astype(np.float32)
-
-
-def dfr_gb2_scores(
-    freq: np.ndarray,
-    norm_byte: np.ndarray,
-    df: int,
-    ttf: int,
-    doc_count: int,
-    avgdl32: np.float32,
-    boost: float = 1.0,
-) -> np.ndarray:
-    """DFRSimilarity(BasicModelG, AfterEffectB, NormalizationH2()) — GB2.
-    BasicModelG.java:38-43: lambda = (F+1)/(N+(F+1)) in DOUBLE, score =
-    (float)(log2(lambda+1) + tfn*log2((1+lambda)/lambda)) (tfn promoted
-    to double inside, ONE cast to float). AfterEffectB.java:33-36:
-    (F+1+1)/((df+1)*(tfn+1)) — the longs promote to float32, so the
-    multiply and divide are float32 ops."""
-    tfn = _tfn_h2(freq, norm_byte, avgdl32)
-    big_f = np.float64(ttf) + 1.0
-    lam = big_f / (np.float64(doc_count) + big_f)
-    bm = (
-        np.log(lam + 1.0) / _LN2
-        + tfn.astype(np.float64) * (np.log((1.0 + lam) / lam) / _LN2)
-    ).astype(np.float32)
-    ae = (
-        np.float32(ttf + 2)
-        / (np.float32(df + 1) * (tfn + np.float32(1.0)))
-    ).astype(np.float32)
-    return ((np.float32(boost) * bm) * ae).astype(np.float32)
-
-
-def dfr_ifb2_scores(
-    freq: np.ndarray,
-    norm_byte: np.ndarray,
-    df: int,
-    ttf: int,
-    doc_count: int,
-    avgdl32: np.float32,
-    boost: float = 1.0,
-) -> np.ndarray:
-    """DFRSimilarity(BasicModelIF, AfterEffectB, NormalizationH2()) —
-    IFB2. BasicModelIF.java:35-37: tfn * (float)log2(1 + (N+1)/(F+0.5))
-    — the inner ratio is all-double ((N+1) long promoted over the
-    double F+0.5), one cast, then a float32 multiply with tfn."""
-    tfn = _tfn_h2(freq, norm_byte, avgdl32)
-    bmlog = np.float32(
-        np.log(1.0 + (np.float64(doc_count) + 1.0) / (np.float64(ttf) + 0.5))
-        / _LN2
-    )
-    bm = (tfn * bmlog).astype(np.float32)
-    ae = (
-        np.float32(ttf + 2)
-        / (np.float32(df + 1) * (tfn + np.float32(1.0)))
-    ).astype(np.float32)
-    return ((np.float32(boost) * bm) * ae).astype(np.float32)
-
-
-def dfr_ineb2_scores(
-    freq: np.ndarray,
-    norm_byte: np.ndarray,
-    df: int,
-    ttf: int,
-    doc_count: int,
-    avgdl32: np.float32,
-    boost: float = 1.0,
-) -> np.ndarray:
-    """DFRSimilarity(BasicModelIne, AfterEffectB, NormalizationH2()) —
-    IneB2. BasicModelIne.java:35-39: ne = N*(1 - ((N-1)/N)^F) in double,
-    score = tfn * (float)log2((N+1)/(ne+0.5))."""
-    tfn = _tfn_h2(freq, norm_byte, avgdl32)
-    n64 = np.float64(doc_count)
-    ne = n64 * (1.0 - np.power((n64 - 1.0) / n64, np.float64(ttf)))
-    bmlog = np.float32(np.log((n64 + 1.0) / (ne + 0.5)) / _LN2)
-    bm = (tfn * bmlog).astype(np.float32)
-    ae = (
-        np.float32(ttf + 2)
-        / (np.float32(df + 1) * (tfn + np.float32(1.0)))
-    ).astype(np.float32)
-    return ((np.float32(boost) * bm) * ae).astype(np.float32)
-
-
-def ib_spl_ttf_scores(
-    freq: np.ndarray,
-    norm_byte: np.ndarray,
-    df: int,
-    ttf: int,
-    doc_count: int,
-    avgdl32: np.float32,
-    boost: float = 1.0,
-) -> np.ndarray:
-    """IBSimilarity(DistributionSPL, LambdaTTF, NormalizationH2()).
-    LambdaTTF.java:31: (totalTermFreq+1F)/(N+1F) in float32;
-    DistributionSPL.java:34-39: lambda==1f -> 0.99f, then
-    (float)-log((lambda^(tfn/(tfn+1)) - lambda)/(1-lambda)) — the
-    exponent tfn/(tfn+1) is a float32 division, everything after
-    promotes to double for pow/log, one cast back."""
-    tfn = _tfn_h2(freq, norm_byte, avgdl32)
-    lam = np.float32(
-        (np.float32(ttf) + np.float32(1.0))
-        / (np.float32(doc_count) + np.float32(1.0))
-    )
-    if lam == np.float32(1.0):
-        lam = np.float32(0.99)
-    expo = (tfn / (tfn + np.float32(1.0))).astype(np.float32)
-    lam64 = np.float64(lam)
-    inner = (np.power(lam64, expo.astype(np.float64)) - lam64) / (1.0 - lam64)
-    dist = (-np.log(inner)).astype(np.float32)
-    return (np.float32(boost) * dist).astype(np.float32)
-
-
-def _tfn_h1(freq: np.ndarray, norm_byte: np.ndarray,
-            avgdl32: np.float32) -> np.ndarray:
-    """NormalizationH1.tfn, c=1 (NormalizationH1.java:44-46):
-    tf * c * avgFieldLength / len — float32 at every step."""
-    dl = SIMBASE_DECODE[np.asarray(norm_byte, dtype=np.uint8)]
-    f = np.asarray(freq, dtype=np.float32)
-    return (((f * np.float32(1.0)) * np.float32(avgdl32)) / dl).astype(
-        np.float32)
-
-
-def _tfn_h3(freq: np.ndarray, norm_byte: np.ndarray, ttf: int,
-            sum_ttf: int, mu: float = 800.0) -> np.ndarray:
+def _tfn_h3(freq, norm_byte, ttf, sum_ttf, avgdl32, mu: float = 800.0):
     """NormalizationH3.tfn, mu=800 (NormalizationH3.java:51-53):
     (tf + mu*((ttf+1F)/(sumttf+1F))) / (len + mu) * mu — float32."""
     dl = SIMBASE_DECODE[np.asarray(norm_byte, dtype=np.uint8)]
@@ -428,8 +279,7 @@ def _tfn_h3(freq: np.ndarray, norm_byte: np.ndarray, ttf: int,
     return (((f + prior) / (dl + mu32)) * mu32).astype(np.float32)
 
 
-def _tfn_z(freq: np.ndarray, norm_byte: np.ndarray,
-           avgdl32: np.float32, z: float = 0.30) -> np.ndarray:
+def _tfn_z(freq, norm_byte, ttf, sum_ttf, avgdl32, z: float = 0.30):
     """NormalizationZ.tfn, z=0.30 (NormalizationZ.java:46-48):
     (float)(tf * pow(avgFieldLength/len, z)) — the ratio is a float32
     division, pow/multiply run in double, one cast back."""
@@ -439,37 +289,6 @@ def _tfn_z(freq: np.ndarray, norm_byte: np.ndarray,
     return (f.astype(np.float64)
             * np.power(ratio.astype(np.float64),
                        np.float64(np.float32(z)))).astype(np.float32)
-
-
-def _inl_from_tfn(tfn: np.ndarray, df: int, doc_count: int,
-                  boost: float) -> np.ndarray:
-    """BasicModelIn + AfterEffectL over a precomputed tfn (the shared
-    half of every dfr_inl* cell)."""
-    bmlog = np.float32(
-        np.log((np.float64(doc_count) + 1.0) / (np.float64(df) + 0.5))
-        / _LN2)
-    bm = (tfn * bmlog).astype(np.float32)
-    ae = (np.float32(1.0) / (tfn + np.float32(1.0))).astype(np.float32)
-    return ((np.float32(boost) * bm) * ae).astype(np.float32)
-
-
-def dfr_inl1_scores(freq, norm_byte, df, doc_count, avgdl32, boost=1.0):
-    """DFRSimilarity(BasicModelIn, AfterEffectL, NormalizationH1())."""
-    return _inl_from_tfn(
-        _tfn_h1(freq, norm_byte, avgdl32), df, doc_count, boost)
-
-
-def dfr_inl3_scores(freq, norm_byte, df, ttf, sum_ttf, doc_count,
-                    avgdl32, boost=1.0):
-    """DFRSimilarity(BasicModelIn, AfterEffectL, NormalizationH3())."""
-    return _inl_from_tfn(
-        _tfn_h3(freq, norm_byte, ttf, sum_ttf), df, doc_count, boost)
-
-
-def dfr_inlz_scores(freq, norm_byte, df, doc_count, avgdl32, boost=1.0):
-    """DFRSimilarity(BasicModelIn, AfterEffectL, NormalizationZ())."""
-    return _inl_from_tfn(
-        _tfn_z(freq, norm_byte, avgdl32), df, doc_count, boost)
 
 
 def _jlog(x: np.ndarray) -> np.ndarray:
@@ -488,21 +307,49 @@ def _jlog(x: np.ndarray) -> np.ndarray:
     return out.reshape(np.shape(x))
 
 
-def _ae_b(tfn: np.ndarray, df: int, ttf: int) -> np.ndarray:
-    """AfterEffectB.score (AfterEffectB.java:32-36): F=ttf+1, n=df+1
-    longs; (F+1)/(n*(tfn+1)) — the long operands promote to float32, so
-    the multiply and divide are float32 ops."""
-    return (np.float32(ttf + 2)
-            / (np.float32(df + 1) * (tfn + np.float32(1.0)))
-            ).astype(np.float32)
+# --- DFR basic models: score(tfn, df, ttf, doc_count) -> float32
+
+def _bm_in(tfn, df, ttf, doc_count):
+    """BasicModelIn.java:36: tfn * (float)log2((N+1)/(n+0.5))."""
+    bmlog = np.float32(
+        np.log((np.float64(doc_count) + 1.0) / (np.float64(df) + 0.5))
+        / _LN2)
+    return (tfn * bmlog).astype(np.float32)
 
 
-def _ae_l(tfn: np.ndarray) -> np.ndarray:
-    """AfterEffectL.score (AfterEffectL.java:32-34): 1/(tfn+1), float32."""
-    return (np.float32(1.0) / (tfn + np.float32(1.0))).astype(np.float32)
+def _bm_g(tfn, df, ttf, doc_count):
+    """BasicModelG.java:38-43: lambda = (F+1)/(N+(F+1)) in DOUBLE, score =
+    (float)(log2(lambda+1) + tfn*log2((1+lambda)/lambda)) (tfn promoted
+    to double inside, ONE cast to float)."""
+    big_f = np.float64(ttf) + 1.0
+    lam = big_f / (np.float64(doc_count) + big_f)
+    return (
+        np.log(lam + 1.0) / _LN2
+        + tfn.astype(np.float64) * (np.log((1.0 + lam) / lam) / _LN2)
+    ).astype(np.float32)
 
 
-def _bm_be(tfn: np.ndarray, ttf: int, doc_count: int) -> np.ndarray:
+def _bm_if(tfn, df, ttf, doc_count):
+    """BasicModelIF.java:35-37: tfn * (float)log2(1 + (N+1)/(F+0.5))
+    — the inner ratio is all-double ((N+1) long promoted over the
+    double F+0.5), one cast, then a float32 multiply with tfn."""
+    bmlog = np.float32(
+        np.log(1.0 + (np.float64(doc_count) + 1.0) / (np.float64(ttf) + 0.5))
+        / _LN2
+    )
+    return (tfn * bmlog).astype(np.float32)
+
+
+def _bm_ine(tfn, df, ttf, doc_count):
+    """BasicModelIne.java:35-39: ne = N*(1 - ((N-1)/N)^F) in double,
+    score = tfn * (float)log2((N+1)/(ne+0.5))."""
+    n64 = np.float64(doc_count)
+    ne = n64 * (1.0 - np.power((n64 - 1.0) / n64, np.float64(ttf)))
+    bmlog = np.float32(np.log((n64 + 1.0) / (ne + 0.5)) / _LN2)
+    return (tfn * bmlog).astype(np.float32)
+
+
+def _bm_be(tfn, df, ttf, doc_count):
     """BasicModelBE.score (BasicModelBE.java:37-48): F = ttf+1+tfn and
     N = F + numberOfDocuments in DOUBLE; -log2((N-1)e) + f(N+F-1,
     N+F-tfn-2) - f(F, F-tfn) with f(n,m) = (m+0.5)log2(n/m) +
@@ -522,7 +369,7 @@ def _bm_be(tfn: np.ndarray, ttf: int, doc_count: int) -> np.ndarray:
     return val.astype(np.float32)
 
 
-def _bm_p(tfn: np.ndarray, ttf: int, doc_count: int) -> np.ndarray:
+def _bm_p(tfn, df, ttf, doc_count):
     """BasicModelP.score (BasicModelP.java:38-43): lambda =
     (float)(F+1)/(N+1) — float32 division; tfn/lambda is ALSO a float32
     division before the double log2; (lambda + 1/(12 tfn) - tfn) chains
@@ -539,7 +386,7 @@ def _bm_p(tfn: np.ndarray, ttf: int, doc_count: int) -> np.ndarray:
     return val.astype(np.float32)
 
 
-def _bm_d(tfn: np.ndarray, ttf: int, doc_count: int) -> np.ndarray:
+def _bm_d(tfn, df, ttf, doc_count):
     """BasicModelD.score (BasicModelD.java:39-51): F = ttf+1+tfn, phi =
     tfn/F, p = 1/(N+1), D = phi log2(phi/p) + (1-phi) log2((1-phi)/(1-p));
     (float)(D*F + 0.5 log2(1 + 2 pi tfn (1-phi))) — all double, one cast."""
@@ -555,48 +402,107 @@ def _bm_d(tfn: np.ndarray, ttf: int, doc_count: int) -> np.ndarray:
     return val.astype(np.float32)
 
 
-def _dfr_cell(bm_fn, ae):
+# --- DFR after effects: score(tfn, df, ttf) -> float32
+
+def _ae_b(tfn, df, ttf):
+    """AfterEffectB.score (AfterEffectB.java:32-36): F=ttf+1, n=df+1
+    longs; (F+1)/(n*(tfn+1)) — the long operands promote to float32, so
+    the multiply and divide are float32 ops."""
+    return (np.float32(ttf + 2)
+            / (np.float32(df + 1) * (tfn + np.float32(1.0)))
+            ).astype(np.float32)
+
+
+def _ae_l(tfn, df, ttf):
+    """AfterEffectL.score (AfterEffectL.java:32-34): 1/(tfn+1), float32."""
+    return (np.float32(1.0) / (tfn + np.float32(1.0))).astype(np.float32)
+
+
+# --- IB lambdas: lambda(df, ttf, doc_count) -> float32, and distributions
+
+def _lambda_df(df, ttf, doc_count):
+    """LambdaDF.java:32: (docFreq+1F)/(numberOfDocuments+1F), float32."""
+    return np.float32(
+        (np.float32(df) + np.float32(1.0)) / (np.float32(doc_count) + np.float32(1.0))
+    )
+
+
+def _lambda_ttf(df, ttf, doc_count):
+    """LambdaTTF.java:31: (totalTermFreq+1F)/(N+1F), float32."""
+    return np.float32(
+        (np.float32(ttf) + np.float32(1.0))
+        / (np.float32(doc_count) + np.float32(1.0))
+    )
+
+
+def _dist_ll(tfn, lam):
+    """DistributionLL.java:34: (float)-Math.log(lambda/(tfn+lambda)) — the
+    ratio is float32 division, the log is natural and double."""
+    ratio = (lam / (tfn + lam)).astype(np.float32)
+    return (-np.log(ratio.astype(np.float64))).astype(np.float32)
+
+
+def _dist_spl(tfn, lam):
+    """DistributionSPL.java:34-39: lambda==1f -> 0.99f, then
+    (float)-log((lambda^(tfn/(tfn+1)) - lambda)/(1-lambda)) — the
+    exponent tfn/(tfn+1) is a float32 division, everything after
+    promotes to double for pow/log, one cast back."""
+    if lam == np.float32(1.0):
+        lam = np.float32(0.99)
+    expo = (tfn / (tfn + np.float32(1.0))).astype(np.float32)
+    lam64 = np.float64(lam)
+    inner = (np.power(lam64, expo.astype(np.float64)) - lam64) / (1.0 - lam64)
+    return (-np.log(inner)).astype(np.float32)
+
+
+def _dfr_cell(basic_model, after_effect, normalization):
     """DFRSimilarity.score (DFRSimilarity.java:84-87): boost *
     basicModel * afterEffect, each product a float32 op, over the
-    shared NormalizationH2 tfn."""
+    normalization's tfn."""
 
-    def scorer(freq, norm_byte, df, ttf, doc_count, avgdl32, boost=1.0):
-        tfn = _tfn_h2(freq, norm_byte, avgdl32)
-        bm = bm_fn(tfn, ttf, doc_count)
-        a = _ae_b(tfn, df, ttf) if ae == "b" else _ae_l(tfn)
-        return ((np.float32(boost) * bm) * a).astype(np.float32)
+    def scorer(freq, norm_byte, df, ttf, sum_ttf, doc_count, avgdl32,
+               boost=1.0):
+        tfn = normalization(freq, norm_byte, ttf, sum_ttf, avgdl32)
+        bm = basic_model(tfn, df, ttf, doc_count)
+        ae = after_effect(tfn, df, ttf)
+        return ((np.float32(boost) * bm) * ae).astype(np.float32)
 
     return scorer
 
 
-dfr_beb2_scores = _dfr_cell(_bm_be, "b")
-dfr_bel2_scores = _dfr_cell(_bm_be, "l")
-dfr_pb2_scores = _dfr_cell(_bm_p, "b")
-dfr_pl2_scores = _dfr_cell(_bm_p, "l")
-dfr_db2_scores = _dfr_cell(_bm_d, "b")
-dfr_dl2_scores = _dfr_cell(_bm_d, "l")
+def _ib_cell(distribution, lambda_):
+    """IBSimilarity.score: boost * distribution(tfn, lambda) over the
+    NormalizationH2 tfn."""
+
+    def scorer(freq, norm_byte, df, ttf, sum_ttf, doc_count, avgdl32,
+               boost=1.0):
+        tfn = _tfn_h2(freq, norm_byte, ttf, sum_ttf, avgdl32)
+        dist = distribution(tfn, lambda_(df, ttf, doc_count))
+        return (np.float32(boost) * dist).astype(np.float32)
+
+    return scorer
 
 
-#: SimilarityBase DFR/IB plug-point registry: name -> (scorer, mode).
-#: mode: 'basic' = (freq, nb, df, N, avgdl); 'ttf' adds per-term ttf;
-#: 'ttf_sum' adds ttf AND the collection token count (H3's prior).
+#: SimilarityBase DFR/IB grid cells: name -> scorer. Every cell takes
+#: (freq, norm_byte, df, ttf, sum_ttf, doc_count, avgdl32, boost).
+#: DFR names spell BasicModel, AfterEffect, Normalization: inl2 =
+#: In x L x H2 (the classic InL2), beb2 = BE x B x H2, inlz = In x L x Z.
 DFR_IB_SCORERS = {
-    "dfr_inl2": (dfr_inl2_scores, "basic"),
-    "ib_ll": (ib_ll_scores, "basic"),
-    "dfr_gb2": (dfr_gb2_scores, "ttf"),
-    "dfr_ifb2": (dfr_ifb2_scores, "ttf"),
-    "dfr_ineb2": (dfr_ineb2_scores, "ttf"),
-    "ib_spl_ttf": (ib_spl_ttf_scores, "ttf"),
-    "dfr_inl1": (dfr_inl1_scores, "basic"),
-    "dfr_inl3": (dfr_inl3_scores, "ttf_sum"),
-    "dfr_inlz": (dfr_inlz_scores, "basic"),
-    # r5: BasicModel BE/P/D x AfterEffect B/L over H2 (incl. PL2)
-    "dfr_beb2": (dfr_beb2_scores, "ttf"),
-    "dfr_bel2": (dfr_bel2_scores, "ttf"),
-    "dfr_pb2": (dfr_pb2_scores, "ttf"),
-    "dfr_pl2": (dfr_pl2_scores, "ttf"),
-    "dfr_db2": (dfr_db2_scores, "ttf"),
-    "dfr_dl2": (dfr_dl2_scores, "ttf"),
+    "dfr_inl2": _dfr_cell(_bm_in, _ae_l, _tfn_h2),
+    "ib_ll": _ib_cell(_dist_ll, _lambda_df),
+    "dfr_gb2": _dfr_cell(_bm_g, _ae_b, _tfn_h2),
+    "dfr_ifb2": _dfr_cell(_bm_if, _ae_b, _tfn_h2),
+    "dfr_ineb2": _dfr_cell(_bm_ine, _ae_b, _tfn_h2),
+    "ib_spl_ttf": _ib_cell(_dist_spl, _lambda_ttf),
+    "dfr_inl1": _dfr_cell(_bm_in, _ae_l, _tfn_h1),
+    "dfr_inl3": _dfr_cell(_bm_in, _ae_l, _tfn_h3),
+    "dfr_inlz": _dfr_cell(_bm_in, _ae_l, _tfn_z),
+    "dfr_beb2": _dfr_cell(_bm_be, _ae_b, _tfn_h2),
+    "dfr_bel2": _dfr_cell(_bm_be, _ae_l, _tfn_h2),
+    "dfr_pb2": _dfr_cell(_bm_p, _ae_b, _tfn_h2),
+    "dfr_pl2": _dfr_cell(_bm_p, _ae_l, _tfn_h2),
+    "dfr_db2": _dfr_cell(_bm_d, _ae_b, _tfn_h2),
+    "dfr_dl2": _dfr_cell(_bm_d, _ae_l, _tfn_h2),
 }
 
 
@@ -663,3 +569,148 @@ def dfi_scores(
         ).astype(np.float32)
     s = (np.float32(boost) * s).astype(np.float32)
     return np.where(f <= expected, np.float32(0.0), s).astype(np.float32)
+
+
+# ------------------------------------------------- the similarity table
+
+#: one term's SimScorer: score(freq float32[], norm_byte uint8[]) -> float32[]
+Scorer = Callable[[np.ndarray, np.ndarray], np.ndarray]
+
+
+@dataclass(frozen=True)
+class Similarity:
+    """One IndexSearcher.setSimilarity plug point. `prepare` is the
+    query's Weight (Similarity.computeWeight), run once per query:
+    prepare(weights, doc_count, sum_ttf, avgdl, boosts, clauses) ->
+    {term: Scorer}, where weights maps term -> {df, ttf, weight_value},
+    boosts maps term -> BoostQuery boost, and clauses are the scoring
+    term clauses in query order, duplicates kept."""
+
+    norm: str  # the index-time norm encoder it reads: 'bm25' or 'sweetspot'
+    coord: bool  # BooleanWeight coord(overlap, maxOverlap): the classic family
+    prepare: Callable[..., dict[str, Scorer]]
+
+
+def bm25_scorers(weights: dict, avgdl: np.float32) -> dict[str, Scorer]:
+    """BM25 scorers over each term's weight_value as it stands."""
+    cache = norm_cache(np.float32(avgdl))
+    return {
+        t: TermWeight(t, w["df"], np.float32(w["weight_value"]), cache).score
+        for t, w in weights.items()
+    }
+
+
+def _prepare_bm25(weights, doc_count, sum_ttf, avgdl, boosts, clauses):
+    """BM25Stats.normalize: weight = (float)(idf * boost), then
+    BM25DocScorer: weightValue = (float)(weight * (k1+1)) -- boost
+    multiplies BEFORE (k1+1), all in float32 (pinned vs the compiled
+    reference in tests/test_lucene_ground_truth.py). The boosted
+    weightValue is written back: the WAND block bound reads it."""
+    for t, b in boosts.items():
+        if t in weights:
+            w = np.float32(idf_f32(weights[t]["df"], doc_count) * np.float32(b))
+            weights[t]["weight_value"] = float(np.float32(w * (K1 + np.float32(1.0))))
+    return bm25_scorers(weights, avgdl)
+
+
+def classic_scores(freq, norm_byte, weight_value, tf=np.sqrt):
+    """TFIDFSimilarity.TFIDFSimScorer.score: tf(freq) * weightValue *
+    decodedLengthNorm. ClassicSimilarity's tf is sqrt(freq);
+    SweetSpotSimilarity's is baselineTf."""
+    return (tf(freq) * weight_value * CLASSIC_DECODE[norm_byte]).astype(np.float32)
+
+
+def _prepare_classic(tf):
+    def prepare(weights, doc_count, sum_ttf, avgdl, boosts, clauses):
+        """weightValue = queryNorm * boost * idf^2. This reference still
+        applies queryNorm (createNormalizedWeight predates its upstream
+        removal): a per-query constant 1/sqrt(sum of squared clause
+        weights) -- rank-neutral, score-visible."""
+        qn = float(classic_query_norm(
+            (classic_idf_f32(weights[t]["df"], doc_count), boosts.get(t, 1.0))
+            for t in clauses if t in weights
+        ))
+        return {
+            t: partial(classic_scores, tf=tf, weight_value=classic_weight_value(
+                w["df"], doc_count, boosts.get(t, 1.0), query_norm=qn))
+            for t, w in weights.items()
+        }
+
+    return prepare
+
+
+def _multi_scores(bm25_score, classic_wv, freq, norm_byte):
+    """MultiSimScorer.score: float sum accumulated in sims order."""
+    return (bm25_score(freq, norm_byte)
+            + classic_scores(freq, norm_byte, classic_wv)).astype(np.float32)
+
+
+def _prepare_multi(weights, doc_count, sum_ttf, avgdl, boosts, clauses):
+    """MultiSimilarity (similarities/MultiSimilarity.java -- CombSUM, Shaw
+    & Fox 1993) over [BM25, Classic]: norms come from sims[0] (BM25's
+    byte), queryNorm = 1 (MultiSimilarity inherits Similarity.queryNorm)
+    and coord = 1 (only ClassicSimilarity AS THE SEARCHER similarity
+    enables it)."""
+    bm25 = _prepare_bm25(weights, doc_count, sum_ttf, avgdl, boosts, clauses)
+    return {
+        t: partial(_multi_scores, bm25[t], classic_weight_value(
+            w["df"], doc_count, boosts.get(t, 1.0), query_norm=1.0))
+        for t, w in weights.items()
+    }
+
+
+def _prepare_lm(fn):
+    def prepare(weights, doc_count, sum_ttf, avgdl, boosts, clauses):
+        """Per-term collection probability p(w|C) from the global stats."""
+        return {
+            t: partial(fn, p=collection_probability_f32(w["ttf"], sum_ttf),
+                       boost=boosts.get(t, 1.0))
+            for t, w in weights.items()
+        }
+
+    return prepare
+
+
+def _prepare_dfi(measure):
+    def prepare(weights, doc_count, sum_ttf, avgdl, boosts, clauses):
+        return {
+            t: partial(dfi_scores, ttf=w["ttf"], sum_ttf=sum_ttf,
+                       boost=boosts.get(t, 1.0), measure=measure)
+            for t, w in weights.items()
+        }
+
+    return prepare
+
+
+def _prepare_dfr_ib(fn):
+    def prepare(weights, doc_count, sum_ttf, avgdl, boosts, clauses):
+        """SimilarityBase's own float32 avgFieldLength, then the cell."""
+        av = simbase_avgdl_f32(sum_ttf, doc_count)
+        return {
+            t: partial(fn, df=w["df"], ttf=w["ttf"], sum_ttf=sum_ttf,
+                       doc_count=doc_count, avgdl32=av, boost=boosts.get(t, 1.0))
+            for t, w in weights.items()
+        }
+
+    return prepare
+
+
+#: the names BooleanSpec.similarity accepts, 'bm25' (the default) first
+SIMILARITIES: dict[str, Similarity] = {
+    "bm25": Similarity("bm25", False, _prepare_bm25),
+    # SweetSpotSimilarity extends ClassicSimilarity: same weights, decode
+    # table and coord; only the tf function and the index-time norm differ
+    "classic": Similarity("bm25", True, _prepare_classic(np.sqrt)),
+    "sweetspot": Similarity("sweetspot", True, _prepare_classic(sweetspot_baseline_tf)),
+    "lm_dirichlet": Similarity("bm25", False, _prepare_lm(lm_dirichlet_scores)),
+    "lm_jelinek_mercer": Similarity("bm25", False, _prepare_lm(lm_jelinek_mercer_scores)),
+    "multi_bm25_classic": Similarity("bm25", False, _prepare_multi),
+    **{
+        f"dfi_{m}": Similarity("bm25", False, _prepare_dfi(m))
+        for m in ("chi_squared", "standardized", "saturated")
+    },
+    **{
+        name: Similarity("bm25", False, _prepare_dfr_ib(fn))
+        for name, fn in DFR_IB_SCORERS.items()
+    },
+}

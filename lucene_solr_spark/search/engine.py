@@ -62,16 +62,10 @@ from ..analysis.tokenizer import analyze, analyze_with_positions
 from ..index.builder import BLOCK_SCHEMA, BLOCK_SIZE, DEFAULT_TERM_BUCKETS, IndexPaths
 from ..index.codec import delta_decode, vbyte_decode
 from .bm25 import (
-    B, DFR_IB_SCORERS, K1, avgdl_f32, idf_f32, idf_sum_f32, make_term_weight, norm_cache,
+    B, K1, SIMILARITIES, avgdl_f32, bm25_scorers, idf_f32, idf_sum_f32, make_term_weight,
+    norm_cache,
 )
 from .snapshot import BucketFiles, index_filesystem
-
-#: BooleanSpec.similarity names topk_spec accepts: these plus the
-#: SimilarityBase DFR/IB grid cells, bm25.DFR_IB_SCORERS' keys
-SIMILARITIES = (
-    "bm25", "classic", "sweetspot", "lm_dirichlet", "lm_jelinek_mercer",
-    "multi_bm25_classic", "dfi_chi_squared", "dfi_standardized", "dfi_saturated",
-)
 
 TOPK_SCHEMA = T.StructType(
     [
@@ -222,10 +216,9 @@ class BooleanSpec:
     # BoostQuery wrapping the phrase clause ('"..."^2'): multiplies the
     # phrase weightValue (search/BoostQuery.java over PhraseQuery)
     phrase_boost: float = 1.0
-    # Similarity plug point (§2.10; IndexSearcher.setSimilarity):
-    # 'bm25' (default) or 'classic' (TF-IDF, ClassicSimilarity.java —
-    # sqrt(tf) * idf^2 * decodedLengthNorm per term clause). Classic
-    # covers boolean TERM clauses; positional clauses stay BM25-only.
+    # Similarity plug point (§2.10; IndexSearcher.setSimilarity): a name
+    # in bm25.SIMILARITIES, 'bm25' by default. Every similarity scores
+    # the term clauses; positional clauses are BM25-only.
     similarity: str = "bm25"
     # ADDITIONAL PhraseQuery clauses beyond the primary phrase fields:
     # ((pairs, slop, occur, boost), ...) with pairs = ((term, offset), ...)
@@ -1876,7 +1869,8 @@ class IndexSearcher:
             "docs_buf", "tfs_buf", "norms_buf",
         ]
         score_fn = _make_range_scorer(
-            spec, weights, float(self.avgdl), self.doc_count, k, deleted=self.deleted
+            spec, weights, bm25_scorers(weights, self.avgdl), False,
+            float(self.avgdl), self.doc_count, k, deleted=self.deleted,
         )
         return (
             self._apply_range_scorer(blocks, scan_cols, score_fn)
@@ -1969,7 +1963,8 @@ class IndexSearcher:
             "docs_buf", "tfs_buf", "norms_buf",
         ]
         score_fn = _make_range_scorer(
-            spec, weights, float(self.avgdl), self.doc_count, k, deleted=self.deleted
+            spec, weights, bm25_scorers(weights, self.avgdl), False,
+            float(self.avgdl), self.doc_count, k, deleted=self.deleted,
         )
         return (
             self._apply_range_scorer(blocks, scan_cols, score_fn)
@@ -2136,10 +2131,18 @@ class IndexSearcher:
         pruned to the candidates' doc ranges and the scorer masks to the
         exact set — per-doc BM25 is independent of other docs, so scores
         are identical to an unrestricted run."""
-        if spec.similarity not in SIMILARITIES and spec.similarity not in DFR_IB_SCORERS:
+        sim = SIMILARITIES.get(spec.similarity)
+        if sim is None:
             raise ValueError(
                 f"unknown similarity {spec.similarity!r}; accepted: "
-                + ", ".join(SIMILARITIES + tuple(DFR_IB_SCORERS))
+                + ", ".join(SIMILARITIES)
+            )
+        if spec.similarity != "bm25" and spec.positional_terms:
+            # phrase, span and automaton clauses are scored with BM25's
+            # weight and norm cache only
+            raise ValueError(
+                f"similarity {spec.similarity!r} covers term clauses only; "
+                "positional clauses are BM25-only"
             )
         if spec.dismax and spec.groups:
             # DisjunctionMax is scored over `should` term clauses only
@@ -2150,115 +2153,12 @@ class IndexSearcher:
         # SAME Similarity at IndexWriterConfig and IndexSearcher): an index
         # whose norm bytes encode SweetSpot's plateau cannot be scored by a
         # 1/sqrt(len) model, and vice versa — fail loudly, never mis-score
-        want = "sweetspot" if spec.similarity == "sweetspot" else "bm25"
-        if self.norm != want:
+        if self.norm != sim.norm:
             raise ValueError(
                 f"index norms were written with norm='{self.norm}' but the "
-                f"query similarity '{spec.similarity}' expects '{want}'"
+                f"query similarity '{spec.similarity}' expects '{sim.norm}'"
             )
         weights = self.term_weights(list(spec.all_terms))
-        if spec.similarity in ("classic", "sweetspot"):
-            # Similarity plug point: swap the per-term weightValue for
-            # ClassicSimilarity's queryNorm * boost * idf^2 (same stats,
-            # same scorer). This reference still applies queryNorm
-            # (createNormalizedWeight predates its upstream removal):
-            # a per-query constant 1/sqrt(sum of squared clause weights)
-            # — rank-neutral, score-visible
-            if spec.positional_terms:
-                raise ValueError("classic similarity covers term clauses only")
-            from .bm25 import classic_idf_f32, classic_query_norm, classic_weight_value
-
-            boost_map = dict(spec.boosts)
-            clause_terms = list(spec.should) + list(spec.must)
-            qn = classic_query_norm(
-                (classic_idf_f32(weights[t]["df"], self.doc_count),
-                 boost_map.get(t, 1.0))
-                for t in clause_terms
-                if t in weights
-            )
-            for t in weights:
-                weights[t]["weight_value"] = float(
-                    classic_weight_value(
-                        weights[t]["df"], self.doc_count,
-                        boost_map.get(t, 1.0), query_norm=float(qn),
-                    )
-                )
-        elif spec.similarity in ("lm_dirichlet", "lm_jelinek_mercer"):
-            # SimilarityBase LM models (LMDirichletSimilarity.java /
-            # LMJelinekMercerSimilarity.java): per-term collection
-            # probability p(w|C) from the same global-exact stats
-            if spec.positional_terms:
-                raise ValueError("LM similarities cover term clauses only")
-            from .bm25 import collection_probability_f32
-
-            boost_map = dict(spec.boosts)
-            for t in weights:
-                weights[t]["lm_p"] = float(
-                    collection_probability_f32(weights[t]["ttf"], self.sum_ttf)
-                )
-                weights[t]["boost"] = float(boost_map.get(t, 1.0))
-        elif spec.similarity == "multi_bm25_classic":
-            # MultiSimilarity (similarities/MultiSimilarity.java — CombSUM,
-            # Shaw & Fox 1993) over [BM25, Classic]: norms come from
-            # sims[0] (BM25's byte — this index's default), the score is a
-            # float32 running SUM of sub-scores, queryNorm = 1
-            # (MultiSimilarity inherits Similarity.queryNorm) and coord = 1
-            # (only ClassicSimilarity AS THE SEARCHER similarity enables it)
-            if spec.positional_terms:
-                raise ValueError("multi similarity covers term clauses only")
-            from .bm25 import classic_weight_value
-
-            boost_map = dict(spec.boosts)
-            for t in weights:
-                b = float(boost_map.get(t, 1.0))
-                if b != 1.0:
-                    idf = idf_f32(weights[t]["df"], self.doc_count)
-                    w = np.float32(idf * np.float32(b))
-                    weights[t]["weight_value"] = float(
-                        np.float32(w * (K1 + np.float32(1.0)))
-                    )
-                weights[t]["classic_wv"] = float(
-                    classic_weight_value(
-                        weights[t]["df"], self.doc_count, b, query_norm=1.0
-                    )
-                )
-        elif spec.similarity.startswith("dfi_"):
-            # DFISimilarity (DFISimilarity.java): needs per-term ttf (already
-            # in the weights) plus numberOfFieldTokens = global sum_ttf
-            if spec.positional_terms:
-                raise ValueError("DFI similarities cover term clauses only")
-            boost_map = dict(spec.boosts)
-            for t in weights:
-                weights[t]["sum_ttf"] = int(self.sum_ttf)
-                weights[t]["boost"] = float(boost_map.get(t, 1.0))
-        elif spec.similarity in DFR_IB_SCORERS:
-            # SimilarityBase DFR/IB models (DFRSimilarity.java /
-            # IBSimilarity.java — the full BasicModel/AfterEffect/
-            # Distribution/Lambda grid cells in bm25.DFR_IB_SCORERS):
-            # need SimilarityBase's own float32 avgFieldLength cast
-            # order plus the per-term df/ttf already in the weights
-            if spec.positional_terms:
-                raise ValueError("DFR/IB similarities cover term clauses only")
-            from .bm25 import simbase_avgdl_f32
-
-            boost_map = dict(spec.boosts)
-            av = float(simbase_avgdl_f32(self.sum_ttf, self.doc_count))
-            for t in weights:
-                weights[t]["simbase_avgdl"] = av
-                weights[t]["sum_ttf"] = int(self.sum_ttf)
-                weights[t]["boost"] = float(boost_map.get(t, 1.0))
-        else:
-            # BM25Stats.normalize: weight = (float)(idf * boost), then
-            # BM25DocScorer: weightValue = (float)(weight * (k1+1)) --
-            # boost multiplies BEFORE (k1+1), all in float32 (pinned vs
-            # the compiled reference in tests/test_lucene_ground_truth.py)
-            for t, b in spec.boosts:
-                if t in weights:
-                    idf = idf_f32(weights[t]["df"], self.doc_count)
-                    w = np.float32(idf * np.float32(b))
-                    weights[t]["weight_value"] = float(
-                        np.float32(w * (K1 + np.float32(1.0)))
-                    )
         required = set(spec.must) | {
             c for c in spec.span if isinstance(c, str)
         }
@@ -2323,9 +2223,13 @@ class IndexSearcher:
             "term", "range_id", "first_doc", "last_doc",
             "docs_buf", "tfs_buf", "norms_buf",
         ] + (["pos_buf"] if spec.positional_terms else [])
+        scorers = sim.prepare(
+            weights, self.doc_count, self.sum_ttf, self.avgdl,
+            dict(spec.boosts), tuple(spec.should) + tuple(spec.must),
+        )
         score_fn = _make_range_scorer(
-            spec, weights, float(self.avgdl), self.doc_count, k,
-            candidates=cand_arr, deleted=self.deleted,
+            spec, weights, scorers, sim.coord, float(self.avgdl), self.doc_count,
+            k, candidates=cand_arr, deleted=self.deleted,
         )
         # a term's blocks tile each range it occurs in by BLOCK_SIZE docs,
         # so it has at most ceil(df/BLOCK_SIZE) + n_ranges of them, and
@@ -3097,10 +3001,14 @@ def _cogroup_wrapper(score_fn):
     return cg
 
 
-def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count: int,
-                       k: int, candidates: np.ndarray | None = None,
+def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: bool,
+                       avgdl: float, doc_count: int, k: int,
+                       candidates: np.ndarray | None = None,
                        deleted: np.ndarray | None = None):
     """Per-(doc-range) scorer for applyInPandas. One group == one 'segment'.
+    scorers: the similarity's prepared per-term score(freq, norm_byte)
+    for the term clauses; coord: apply ClassicSimilarity's coord.
+    Positional clauses, blended members and phrases score BM25.
     candidates: sorted doc ids to restrict scoring to (rescore pushdown).
     deleted: sorted tombstoned doc ids masked out (liveDocs)."""
     should_terms = sorted({t for t in spec.should if weights[t]["df"] > 0})
@@ -3171,91 +3079,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
         0 if (must_terms or required_positional or n_plus_groups) else 1,
     )
     dfs = {t: weights[t]["df"] for t in weights}
-    wvs = {t: np.float32(weights[t]["weight_value"]) for t in weights}
     cache = norm_cache(np.float32(avgdl))  # identical to the global 256-float cache
-    # SweetSpotSimilarity extends ClassicSimilarity: same weights
-    # (queryNorm * boost * idf^2), same decode table, same coord — only
-    # the tf function (baselineTf) and the INDEX-TIME norm byte differ
-    classic = spec.similarity in ("classic", "sweetspot")
-    sweetspot = spec.similarity == "sweetspot"
-    if classic:
-        from .bm25 import CLASSIC_DECODE
-    if sweetspot:
-        from .bm25 import sweetspot_baseline_tf
-    lm = spec.similarity if spec.similarity.startswith("lm_") else None
-    if lm:
-        from .bm25 import lm_dirichlet_scores, lm_jelinek_mercer_scores
-
-        lm_fn = lm_dirichlet_scores if lm == "lm_dirichlet" else lm_jelinek_mercer_scores
-        lm_ps = {t: np.float32(weights[t]["lm_p"]) for t in weights if "lm_p" in weights[t]}
-        lm_boosts = {t: weights[t].get("boost", 1.0) for t in weights}
-    dfr = spec.similarity if spec.similarity in DFR_IB_SCORERS else None
-    if dfr:
-        dfr_fn, dfr_mode = DFR_IB_SCORERS[dfr]
-        dfr_av = np.float32(
-            next(w["simbase_avgdl"] for w in weights.values() if "simbase_avgdl" in w)
-        )
-        dfr_boosts = {t: weights[t].get("boost", 1.0) for t in weights}
-        dfr_ttfs = {t: int(weights[t]["ttf"]) for t in weights}
-        dfr_sum_ttf = int(
-            next(w["sum_ttf"] for w in weights.values() if "sum_ttf" in w)
-        ) if dfr_mode == "ttf_sum" else 0
-    multi = spec.similarity == "multi_bm25_classic"
-    if multi:
-        from .bm25 import CLASSIC_DECODE as _MULTI_DECODE
-
-        multi_cwvs = {
-            t: np.float32(weights[t]["classic_wv"])
-            for t in weights
-            if "classic_wv" in weights[t]
-        }
-    dfi = spec.similarity[len("dfi_"):] if spec.similarity.startswith("dfi_") else None
-    if dfi:
-        from .bm25 import dfi_scores
-
-        dfi_ttfs = {t: int(weights[t]["ttf"]) for t in weights}
-        dfi_sum_ttf = int(
-            next(w["sum_ttf"] for w in weights.values() if "sum_ttf" in w)
-        )
-        dfi_boosts = {t: weights[t].get("boost", 1.0) for t in weights}
-
-    def _term_score(t: str, freq: np.ndarray, nb: np.ndarray) -> np.ndarray:
-        """Per-clause Similarity (the setSimilarity plug point): BM25's
-        saturating tf, ClassicSimilarity's sqrt(tf) * idf^2 *
-        decodedLengthNorm (TFIDFSimilarity.TFIDFSimScorer.score), or a
-        SimilarityBase LM model (LMDirichlet / LMJelinekMercer)."""
-        if classic:
-            tf_vals = sweetspot_baseline_tf(freq) if sweetspot else np.sqrt(freq)
-            return (tf_vals * wvs[t] * CLASSIC_DECODE[nb]).astype(np.float32)
-        if lm:
-            return lm_fn(freq, nb, lm_ps[t], boost=lm_boosts[t])
-        if dfr:
-            if dfr_mode == "ttf":
-                return dfr_fn(
-                    freq, nb, dfs[t], dfr_ttfs[t], doc_count, dfr_av,
-                    boost=dfr_boosts[t]
-                )
-            if dfr_mode == "ttf_sum":
-                return dfr_fn(
-                    freq, nb, dfs[t], dfr_ttfs[t], dfr_sum_ttf,
-                    doc_count, dfr_av, boost=dfr_boosts[t]
-                )
-            return dfr_fn(
-                freq, nb, dfs[t], doc_count, dfr_av, boost=dfr_boosts[t]
-            )
-        if dfi:
-            return dfi_scores(
-                freq, nb, dfi_ttfs[t], dfi_sum_ttf,
-                boost=dfi_boosts[t], measure=dfi,
-            )
-        if multi:
-            # MultiSimScorer.score: float sum accumulated in sims order
-            s1 = (wvs[t] * freq / (freq + cache[nb])).astype(np.float32)
-            s2 = (
-                np.sqrt(freq) * multi_cwvs[t] * _MULTI_DECODE[nb]
-            ).astype(np.float32)
-            return (s1 + s2).astype(np.float32)
-        return (wvs[t] * freq / (freq + cache[nb])).astype(np.float32)
     # PhraseWeight per clause: idfs summed over clause OCCURRENCES —
     # PhraseQuery.PhraseWeight builds one TermStatistics per terms[i], so
     # a repeated term contributes its idf once per repeat ("cc cc" weighs
@@ -3387,7 +3211,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
         # (BQ rewrites itself away). BM25/SimilarityBase coord == 1.
         coord_max = len(spec.should) + len(spec.must)
         coord_hits = (
-            np.zeros(width, dtype=np.int32) if classic and coord_max > 1 else None
+            np.zeros(width, dtype=np.int32) if coord and coord_max > 1 else None
         )
 
         # iterate in clause order (spec.should then spec.must, first
@@ -3410,7 +3234,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
             n_clauses = should_count.get(t, 0) + must_count.get(t, 0)
             if n_clauses > 0:
                 freq = tf.astype(np.float32)
-                s = _term_score(t, freq, nb)
+                s = scorers[t](freq, nb)
                 sd = s.astype(acc_dtype)
                 if mx is not None:
                     # duplicate clauses add sequentially in float32
@@ -3450,7 +3274,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, avgdl: float, doc_count
                         continue
                     d, tf, nb, _pos = per_term[m]
                     idxs = d - base
-                    s = _term_score(m, tf.astype(np.float32), nb)
+                    s = scorers[m](tf.astype(np.float32), nb)
                     gsc[idxs] += s.astype(np.float64)
                     ghit[idxs] = True
                 elif m[0] == "c":

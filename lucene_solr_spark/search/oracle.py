@@ -122,22 +122,20 @@ def oracle_lm_topk(
     if not cand:
         return []
     docs = np.array(sorted(cand), dtype=np.int64)
-    norm = np.array([idx.norm_bytes[d] for d in docs], dtype=np.uint8)
+    norm_all = np.array([idx.norm_bytes[d] for d in docs], dtype=np.uint8)
     av32 = simbase_avgdl_f32(idx.sum_ttf, idx.doc_count)
     per_term = []
     for t in terms:  # duplicates = duplicate clauses
         post = idx.postings.get(t, {})
-        tf = np.array([post.get(int(d), 0) for d in docs], dtype=np.float32)
+        tf_all = np.array([post.get(int(d), 0) for d in docs], dtype=np.float32)
+        # a clause scores only the docs holding its term (a zero lane
+        # stays 0; the models are undefined at tf = 0)
+        live = tf_all > 0
+        tf, norm = tf_all[live], norm_all[live]
         if similarity in DFR_IB_SCORERS:
-            fn, mode = DFR_IB_SCORERS[similarity]
-            if mode == "ttf":
-                s = fn(tf, norm, len(post), sum(post.values()),
-                       idx.doc_count, av32)
-            elif mode == "ttf_sum":
-                s = fn(tf, norm, len(post), sum(post.values()),
-                       idx.sum_ttf, idx.doc_count, av32)
-            else:
-                s = fn(tf, norm, len(post), idx.doc_count, av32)
+            s = DFR_IB_SCORERS[similarity](
+                tf, norm, len(post), sum(post.values()), idx.sum_ttf,
+                idx.doc_count, av32)
         elif similarity == "multi_bm25_classic":
             # MultiSimilarity CombSUM: float32 running sum of BM25 and
             # Classic(queryNorm=1) sub-scores, BM25 norms (sims[0])
@@ -167,8 +165,9 @@ def oracle_lm_topk(
             ttf = sum(post.values())
             p = collection_probability_f32(ttf, idx.sum_ttf)
             s = lm_fn(tf, norm, p)
-        s[tf == 0] = np.float32(0.0)
-        per_term.append(s)
+        s_all = np.zeros(docs.size, dtype=np.float32)
+        s_all[live] = s
+        per_term.append(s_all)
     scores = combine_scores(per_term)
     order = np.lexsort((docs, -scores.astype(np.float64)))
     top = order[:k]

@@ -447,6 +447,25 @@ def test_lm_dirichlet_clamps_at_zero():
     assert s2[0] > np.float32(0.0)
 
 
+def test_paren_group_duplicate_term_scores_once(built):
+    """`(merge merge parse)` through the classic parser scores `merge`
+    once: to_spec keeps a paren group's scored members distinct, so the
+    spec, the engine rows and the control oracle all equal those of
+    `(merge parse)`. A top-level `merge merge parse` keeps both clauses.
+
+    Open question: Lucene's BooleanQuery keeps a duplicate SHOULD clause,
+    nested or not, which would score `merge` twice here. This test pins
+    today's behaviour; settle it against the compiled reference with
+    tools/lucene_ground_truth.py and change it if Lucene disagrees."""
+    from lucene_solr_spark.search.queryparser import parse, to_spec
+
+    searcher, _oidx = built
+    spec = to_spec(searcher, parse("(merge merge parse)"))
+    assert spec.groups == (("", ("merge", "parse")),)
+    assert spec == to_spec(searcher, parse("(merge parse)"))
+    _assert_spec_identity(built, spec)
+
+
 PARSER_EXPANSION_QUERIES = [
     "par*",
     "par* merge",

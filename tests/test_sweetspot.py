@@ -10,6 +10,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from lucene_solr_spark.search.bm25 import SIMILARITIES
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -114,3 +116,25 @@ def test_unknown_similarity_raises(spark, monkeypatch):
     for name in ("bm52", "lm_dirchlet", "dfi_", "dfr_inl9"):
         with pytest.raises(ValueError, match=r"unknown similarity .*accepted: bm25, "):
             s.topk_spec(BooleanSpec(should=terms, similarity=name), k=5)
+
+
+@pytest.mark.parametrize("name", [n for n in SIMILARITIES if n != "bm25"])
+def test_positional_clauses_are_bm25_only(spark, monkeypatch, name):
+    """Phrase, span and automaton clauses score with BM25's weight and
+    norm cache only, so every other similarity rejects a positional
+    spec, before it reads any term stats."""
+    import dataclasses
+
+    from lucene_solr_spark.ops.index_access import searcher_for
+    from lucene_solr_spark.search.engine import phrase_spec
+
+    s = searcher_for(spark, SF)
+
+    def no_read(_terms):
+        raise AssertionError("term stats read for a rejected spec")
+
+    monkeypatch.setattr(s, "term_weights", no_read)
+    spec = dataclasses.replace(phrase_spec("spark merge"), similarity=name)
+    assert spec.positional_terms
+    with pytest.raises(ValueError, match="positional clauses are BM25-only"):
+        s.topk_spec(spec, k=5)

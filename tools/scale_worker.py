@@ -16,6 +16,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def driver_memory() -> str:
+    """Half the host's physical memory, in whole GiB (at least 1g): in
+    local mode the driver JVM also runs every task."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, required=True)
@@ -30,7 +37,7 @@ def main() -> None:
         .appName(f"lss-scale-{args.cpus}")
         .config("spark.sql.shuffle.partitions", str(max(4 * args.cpus, 16)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_memory())
         # small splits -> ~4 task waves at every parallelism level, so
         # straggler skew costs the same fraction of wall at N and 4N
         .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
