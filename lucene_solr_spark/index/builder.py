@@ -433,7 +433,7 @@ def _merge_fragments_stream_fn(drop_docs: np.ndarray | None = None):
     drop_docs (sorted doc ids): postings of these docs are PURGED during
     the merge — the merge-reclaims-deletes path (compact_index with
     tombstones); None keeps the normal path untouched."""
-    from .codec import block_encode_batch, vbyte_decode_batch
+    from .codec import block_decode_flat, block_encode_batch, decode_doc_blocks
 
     def merge(iterator):
         parts = list(iterator)  # whole shuffle partition (bounded by n_shuffle)
@@ -445,25 +445,15 @@ def _merge_fragments_stream_fn(drop_docs: np.ndarray | None = None):
         pdf = pdf.sort_values(["term", "range_id", "first_doc"], kind="mergesort")
         n_frag = len(pdf)
 
-        docs_list = vbyte_decode_batch(pdf["docs_buf"].tolist())
-        frag_sizes = np.fromiter((a.size for a in docs_list), dtype=np.int64, count=n_frag)
+        D, frag_sizes = decode_doc_blocks(pdf["docs_buf"].tolist(), pdf["first_doc"].to_numpy())
         frag_starts = np.concatenate(([0], np.cumsum(frag_sizes)))[:-1]
         total = int(frag_sizes.sum())
 
-        # vectorized delta-decode across fragments: first delta of each
-        # fragment is 0 in the codec; substitute the absolute first_doc and
-        # cumsum with per-fragment reset
-        deltas = np.concatenate(docs_list)
-        deltas[frag_starts] = pdf["first_doc"].to_numpy(np.uint64)
-        g = np.cumsum(deltas)
-        corr = np.repeat(g[frag_starts] - deltas[frag_starts], frag_sizes)
-        D = (g - corr).astype(np.int64)
-
-        TF = np.concatenate(vbyte_decode_batch(pdf["tfs_buf"].tolist())).astype(np.int64)
+        TF = block_decode_flat(pdf["tfs_buf"].tolist())[0].astype(np.int64)
         NB = np.concatenate(
             [np.frombuffer(b, dtype=np.uint8) for b in pdf["norms_buf"]]
         )
-        POS = np.concatenate(vbyte_decode_batch(pdf["pos_buf"].tolist()))
+        POS = block_decode_flat(pdf["pos_buf"].tolist())[0]
         # payload stream: fixed 4-byte rows aligned 1:1 with POS; a
         # payload-less field carries b"" bufs and PAY stays None
         pay_raw = pdf["pay_buf"].tolist()

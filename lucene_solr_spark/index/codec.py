@@ -255,29 +255,6 @@ def vbyte_encode_batch(values: np.ndarray, bounds: np.ndarray) -> list[bytes]:
     return out
 
 
-def vbyte_decode_batch(bufs) -> list[np.ndarray]:
-    """Decode many vbyte bufs in one vectorized pass over the concatenated
-    PLAIN payloads (ALLEQ bufs expand individually — they are 3-6 bytes)."""
-    arrs = [np.frombuffer(b, dtype=np.uint8) for b in bufs]
-    plain_ids = [i for i, a in enumerate(arrs) if a.size and a[0] == _HDR_PLAIN and a.size > 1]
-    out: list[np.ndarray | None] = [None] * len(arrs)
-    if plain_ids:
-        payloads = [arrs[i][1:] for i in plain_ids]
-        lens = np.fromiter((p.size for p in payloads), dtype=np.int64, count=len(payloads))
-        cat = np.concatenate(payloads)
-        vals = _vbyte_decode_raw(cat)
-        is_end_cum = np.concatenate(([0], np.cumsum(cat < 128)))
-        span = np.concatenate(([0], np.cumsum(lens)))
-        counts = is_end_cum[span[1:]] - is_end_cum[span[:-1]]
-        val_bounds = np.concatenate(([0], np.cumsum(counts)))
-        for j, i in enumerate(plain_ids):
-            out[i] = vals[val_bounds[j] : val_bounds[j + 1]]
-    for i, a in enumerate(arrs):
-        if out[i] is None:
-            out[i] = vbyte_decode(bytes(a))
-    return out
-
-
 def delta_encode(doc_ids: np.ndarray) -> np.ndarray:
     """Ascending docIDs -> deltas; first element is kept absolute relative to
     0 is wasteful, so it is the gap from first_doc (stored in block metadata),
@@ -384,50 +361,75 @@ def block_encode_batch(values: np.ndarray, bounds: np.ndarray,
     return out
 
 
-def block_decode_batch(bufs) -> list[np.ndarray]:
-    """Decode a mixed PLAIN/ALLEQ/FOR buffer list. PLAIN payloads decode in
-    one concatenated pass (vbyte_decode_batch); FOR buffers vectorize per
-    (width, count, size) class with one unpackbits per class."""
-    arrs = [np.frombuffer(b, dtype=np.uint8) for b in bufs]
-    out: list = vbyte_decode_batch_arrs(arrs)
+def block_decode_flat(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a mixed PLAIN/ALLEQ/FOR/PFOR buffer list in one pass ->
+    (values, counts): every buffer's values concatenated in list order,
+    and each buffer's value count. The PLAIN and ALLEQ payloads decode in
+    one VByte pass over the joined bytes; FOR buffers vectorize per
+    (width, count, size) class with one unpackbits per class; PFOR
+    buffers (a few outlier blocks) decode one by one."""
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    n = lens.size
+    data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    starts = np.cumsum(lens) - lens
+    filled = np.flatnonzero(lens)
+    hdr = np.full(n, _HDR_PLAIN, dtype=np.uint8)
+    hdr[filled] = data[starts[filled]]
+    vb = (lens > 0) & (hdr <= _HDR_ALLEQ)
+    # one VByte pass over every PLAIN/ALLEQ payload byte (headers masked out)
+    blk = np.repeat(np.arange(n), lens)
+    in_vb = vb[blk]
+    in_vb[starts[filled]] = False
+    payload = data[in_vb]
+    vals = _vbyte_decode_raw(payload)
+    vcounts = np.bincount(blk[in_vb][payload < 128], minlength=n)
+    vstart = np.cumsum(vcounts) - vcounts
+    alleq = vb & (hdr == _HDR_ALLEQ)
+    plain = vb & ~alleq
+    counts = np.where(plain, vcounts, 0)
+    counts[alleq] = vals[vstart[alleq]]  # ALLEQ payload: (count, value)
+    packed: dict = {}
     classes: dict = {}
-    for i, a in enumerate(arrs):
-        if out[i] is None:  # FOR buffers are left for us by the vbyte pass
-            w = int(a[1])
+    for i in np.flatnonzero((lens > 0) & (hdr > _HDR_ALLEQ)).tolist():
+        a = data[starts[i] : starts[i] + lens[i]]
+        if hdr[i] == _HDR_PFOR:
+            packed[i] = _pfor_decode(a)
+        else:
             cnt, start = _read_vbyte_at(a, 2)
-            classes.setdefault((w, cnt, a.size, start), []).append(i)
+            classes.setdefault((int(a[1]), cnt, a.size, start), []).append(i)
     for (w, cnt, size, start), ids in classes.items():
-        stack = np.stack([arrs[i][start:] for i in ids])
+        stack = np.stack([data[starts[i] + start : starts[i] + size] for i in ids])
         bits = np.unpackbits(stack, axis=1, bitorder="little")[:, : cnt * w]
         bits = bits.reshape(len(ids), cnt, w).astype(np.uint64)
-        vals = (bits << np.arange(w, dtype=np.uint64)[None, None, :]).sum(
+        dec = (bits << np.arange(w, dtype=np.uint64)[None, None, :]).sum(
             axis=2, dtype=np.uint64
         )
-        for j, i in enumerate(ids):
-            out[i] = vals[j]
-    return out
+        packed.update(zip(ids, dec))
+    for i, v in packed.items():
+        counts[i] = v.size
+    ostart = np.cumsum(counts) - counts
+    out = np.empty(int(counts.sum()), dtype=np.uint64)
+    sel = np.repeat(plain, vcounts)
+    out[(np.arange(vals.size) + np.repeat(ostart - vstart, vcounts))[sel]] = vals[sel]
+    eq = np.flatnonzero(alleq)
+    if eq.size:
+        eq_n = counts[eq]
+        out[np.repeat(ostart[eq], eq_n) + _grouped_arange(eq_n)] = np.repeat(
+            vals[vstart[eq] + 1], eq_n
+        )
+    for i, v in packed.items():
+        out[ostart[i] : ostart[i] + v.size] = v
+    return out, counts
 
 
-def vbyte_decode_batch_arrs(arrs) -> list:
-    """vbyte_decode_batch's core over pre-parsed uint8 arrays; FOR buffers
-    come back as None for the caller's vectorized class pass."""
-    plain_ids = [i for i, a in enumerate(arrs) if a.size and a[0] == _HDR_PLAIN and a.size > 1]
-    out: list = [None] * len(arrs)
-    if plain_ids:
-        payloads = [arrs[i][1:] for i in plain_ids]
-        lens = np.fromiter((p.size for p in payloads), dtype=np.int64, count=len(payloads))
-        cat = np.concatenate(payloads)
-        vals = _vbyte_decode_raw(cat)
-        is_end_cum = np.concatenate(([0], np.cumsum(cat < 128)))
-        span = np.concatenate(([0], np.cumsum(lens)))
-        counts = is_end_cum[span[1:]] - is_end_cum[span[:-1]]
-        val_bounds = np.concatenate(([0], np.cumsum(counts)))
-        for j, i in enumerate(plain_ids):
-            out[i] = vals[val_bounds[j] : val_bounds[j + 1]]
-    for i, a in enumerate(arrs):
-        if out[i] is None and not (a.size > 1 and a[0] == _HDR_FOR):
-            out[i] = vbyte_decode(bytes(a))
-    return out
+def block_decode_batch(bufs) -> list[np.ndarray]:
+    """block_decode_flat, split back into one array per buffer."""
+    vals, counts = block_decode_flat(bufs)
+    return np.split(vals, np.cumsum(counts)[:-1]) if counts.size else []
+
+
+#: the same decoder: every header decodes through it (the name predates FOR)
+vbyte_decode_batch = block_decode_batch
 
 
 def encode_doc_block(doc_ids: np.ndarray) -> bytes:
@@ -436,3 +438,17 @@ def encode_doc_block(doc_ids: np.ndarray) -> bytes:
 
 def decode_doc_block(buf: bytes, first_doc: int) -> np.ndarray:
     return delta_decode(vbyte_decode(buf), first_doc)
+
+
+def decode_doc_blocks(bufs, first_doc) -> tuple[np.ndarray, np.ndarray]:
+    """decode_doc_block over many blocks in one block_decode_flat pass ->
+    (int64 doc ids, per-block doc count); each block's deltas restart at
+    its own first_doc."""
+    doc, n = block_decode_flat(bufs)
+    doc = doc.astype(np.int64)
+    live = n > 0
+    start = (np.cumsum(n) - n)[live]
+    doc[start] = 0
+    doc = np.cumsum(doc)
+    doc += np.repeat(np.asarray(first_doc, dtype=np.int64)[live] - doc[start], n[live])
+    return doc, n

@@ -13,10 +13,12 @@ per-leaf scorer -> TopScoreDocCollector -> TopDocs.merge; SURVEY.md §3.1):
     A small scan (DRIVER_SCORE_MAX_BLOCKS) is a direct read of the same
     file snapshot, with no Spark job; a larger one is a Spark scan.
  4. groupBy(range_id): each doc-range partition scores like one Lucene
-    segment — decode blocks, dense-accumulate per-doc scores in double
-    (BooleanScorer's 2048-doc bulk window, scaled to the range), cast to
-    float32, local bounded top-k. A small scan (DRIVER_SCORE_MAX_BLOCKS)
-    runs the same per-range scorer in the driver process instead.
+    segment — decode its blocks in one pass per column (search/postings.py),
+    dense-accumulate per-doc scores in double (BooleanScorer's 2048-doc
+    bulk window, scaled to the range) from numpy arrays, cast to float32,
+    local bounded top-k. A small scan (DRIVER_SCORE_MAX_BLOCKS) is decoded
+    once in the driver process and the same per-range scorer runs on each
+    range's slice of it.
  5. global merge: ORDER BY score DESC, doc_id ASC LIMIT k (TopDocs.merge
     tie-break; docIDs are globally dense so partition order == docID order).
 
@@ -34,9 +36,10 @@ ReqExclScorer/MinShouldMatchSumScorer):
     with all TermStatistics).
 
 Block-max pruning (our extension; results MUST be identical):
-  * MUST/phrase: a range lacking any required term short-circuits to empty;
-    within a range, blocks outside the rarest required term's doc span are
-    skipped before decode (ConjunctionDISI cost-ordered leapfrog analog).
+  * MUST/phrase: a range lacking the rarest required term is never
+    decoded; within a range, blocks outside that term's doc span are
+    skipped on block metadata before decode (ConjunctionDISI cost-ordered
+    leapfrog analog).
   * pure-OR: per-range upper bound = sum of best block bounds; a first wave
     over the best-bounded ranges establishes threshold theta; ranges
     bounded <= theta are never scored (block-max WAND at range granularity).
@@ -60,11 +63,12 @@ from pyspark.sql import types as T
 
 from ..analysis.tokenizer import analyze, analyze_with_positions
 from ..index.builder import BLOCK_SCHEMA, BLOCK_SIZE, DEFAULT_TERM_BUCKETS, IndexPaths
-from ..index.codec import delta_decode, vbyte_decode
+from ..index.codec import decode_doc_blocks
 from .bm25 import (
     B, K1, SIMILARITIES, avgdl_f32, bm25_scorers, idf_f32, idf_sum_f32, make_term_weight,
     norm_cache,
 )
+from .postings import decode_postings, range_slices
 from .snapshot import BucketFiles, index_filesystem
 
 TOPK_SCHEMA = T.StructType(
@@ -89,6 +93,20 @@ TERM_STATS_READ_SCHEMA = T.StructType([
 _EMPTY = pd.DataFrame(
     {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float32")}
 )
+_NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32))
+
+
+def _top_hits(docs: np.ndarray, scores: np.ndarray, k: int):
+    """The k best (doc_id, score) arrays, ordered score DESC, doc_id ASC
+    (the HitQueue / TopDocs.merge tie-break)."""
+    order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
+    return docs[order].astype(np.int64), scores[order]
+
+
+def _hits_frame(docs: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
+    """A range scorer's hits as the TOPK_SCHEMA pandas frame applyInPandas
+    returns; only the distributed plan builds one."""
+    return pd.DataFrame({"doc_id": docs, "score": scores}) if docs.size else _EMPTY
 
 
 def topk_frame(spark: SparkSession, doc_ids=(), scores=()) -> DataFrame:
@@ -111,18 +129,21 @@ FILTER_DRIVER_MAX = 1_000_000
 #: driver plan for small top-k scans (IndexSearcher.topk_spec): when the
 #: query's block bound (sum over terms of min(df, ceil(df/BLOCK_SIZE) +
 #: ranges)) is at most this, the pruned scan is read straight from the
-#: searcher's bucket files and scored in the driver process, with no Spark
-#: job (a Python task costs ~0.12 s before the UDF runs). The crossover
-#: below was measured when that scan was still one Spark job collected as
-#: Arrow, so the cap errs low.
-#: Above it the distributed plan scores ranges in parallel and wins; it is
-#: the only plan that runs at corpus scale. Measured on 4 cpus, local[2],
-#: make_corpus indexes, unpruned top-10, driver vs distributed median:
-#: 48k docs / 47 ranges: bound 4.7k 1.16 vs 1.44 s, 10.9k 2.02 vs 2.87 s,
-#: 16.5k 3.60 vs 2.06 s; 24k docs / 188 ranges: bound 16.2k 2.72 vs
-#: 3.43 s, 29.7k 7.76 vs 4.89 s. The crossover lies at 11k-19k; the cap
-#: sits below it.
-DRIVER_SCORE_MAX_BLOCKS = 8_192
+#: searcher's bucket files, decoded once and scored in the driver process,
+#: with no Spark job (a Python task costs ~0.12 s before the UDF runs).
+#: Above it the distributed plan scores ranges in parallel; it is the only
+#: plan that runs at corpus scale, and the one whose memory is not the
+#: driver's. Measured with `tools/wand_study.py --crossover` (4 cpus,
+#: local[2], make_corpus indexes, unpruned top-10 OR over the N most
+#: frequent terms, median of 3 alternating runs), driver vs distributed s:
+#: 24k docs / 188 ranges: bound 732 0.05 vs 1.29, 7.0k 0.18 vs 1.35,
+#: 22.7k 0.57 vs 1.40, 42.0k 1.31 vs 2.64, 79.3k 1.84 vs 3.05, 118.5k
+#: 3.01 vs 3.74; 48k docs / 47 ranges: bound 805 0.05 vs 0.47, 9.1k 0.40
+#: vs 1.00, 20.7k 0.70 vs 1.18, 32.1k 1.10 vs 1.76, 43.4k 1.19 vs 2.30.
+#: The driver won every row; its margin narrows from 2x at 42k to 1.2x
+#: at 118k, so the crossover lies above 118k on two task slots (and lower
+#: with more). The cap sits where the driver still wins by 1.6x or more.
+DRIVER_SCORE_MAX_BLOCKS = 65_536
 
 #: WAND two-wave: up to this many doc ranges the per-range block-max
 #: bounds are collected to the driver once and reused for both wave-1
@@ -777,10 +798,7 @@ class IndexSearcher:
             present = set(pdf["term"])
             if any(t not in present for t in clauses):
                 return _EMPTY
-            per_term = {
-                t: _decode_group_pay(g.sort_values("first_doc", kind="mergesort"))
-                for t, g in pdf.groupby("term", sort=False)
-            }
+            per_term = decode_postings(pdf, pay=True)
             abs_data = {}
             for t in set(clauses):
                 d, tf, nb, pos, pay = per_term[t]
@@ -819,10 +837,10 @@ class IndexSearcher:
                     out_scores.append(np.float32(score))
             if not out_docs:
                 return _EMPTY
-            da = np.asarray(out_docs, dtype=np.int64)
-            sa = np.asarray(out_scores, dtype=np.float32)
-            order = np.lexsort((da, -sa.astype(np.float64)))[:k]
-            return pd.DataFrame({"doc_id": da[order], "score": sa[order]})
+            return _hits_frame(*_top_hits(
+                np.asarray(out_docs, dtype=np.int64),
+                np.asarray(out_scores, dtype=np.float32), k,
+            ))
 
         def score_range(key, pdf):
             return _score_impl(key, pdf)
@@ -1237,11 +1255,7 @@ class IndexSearcher:
             if pdf.empty:
                 return _EMPTY
             d_arr = deleted_local if deleted_local is not None else deleted
-            per_term = {
-                t: _decode_group(
-                    g.sort_values("first_doc", kind="mergesort"), False)
-                for t, g in pdf.groupby("term", sort=False)
-            }
+            per_term = decode_postings(pdf)
             base = min(int(v[0][0]) for v in per_term.values())
             top = max(int(v[0][-1]) for v in per_term.values())
             width = top - base + 1
@@ -1274,10 +1288,7 @@ class IndexSearcher:
             idx = np.flatnonzero(matched)
             if idx.size == 0:
                 return _EMPTY
-            scores = total[idx].astype(np.float32)
-            da = (idx + base).astype(np.int64)
-            order = np.lexsort((da, -scores.astype(np.float64)))[:kk]
-            return pd.DataFrame({"doc_id": da[order], "score": scores[order]})
+            return _hits_frame(*_top_hits(idx + base, total[idx].astype(np.float32), kk))
 
         def score_range(key, pdf):
             return _score_impl(key, pdf)
@@ -1735,10 +1746,7 @@ class IndexSearcher:
         )
         tfs: dict[str, int] = {}
         nb = 0
-        for t, g in pdf.groupby("term", sort=False):
-            d, tf, nbs, _pos = _decode_group(
-                g.sort_values("first_doc", kind="mergesort"), False
-            )
+        for t, (d, tf, nbs, _pos) in decode_postings(pdf).items():
             hit = np.searchsorted(d, doc_id)
             if hit < len(d) and d[hit] == doc_id:
                 if self.deleted is not None and np.isin(doc_id, self.deleted):
@@ -1945,32 +1953,11 @@ class IndexSearcher:
 
     def topk_boosted(self, boosts: dict[str, float], k: int = 10) -> DataFrame:
         """BoostQuery (search/BoostQuery.java): per-clause multiplicative
-        boost — weightValue = idf * boost * (k1+1); terms given as
-        {analyzed_term: boost}."""
-        terms = tuple(sorted(boosts))
-        spec = BooleanSpec(should=terms)
-        if not terms:
-            return topk_frame(self.spark)
-        weights = self.term_weights(list(terms))
-        for t, b in boosts.items():
-            weights[t]["weight_value"] = float(weights[t]["weight_value"]) * float(b)
-        present = [t for t in terms if weights[t]["df"] > 0]
-        if not present:
-            return topk_frame(self.spark)
-        blocks = self._blocks_for(present)
-        scan_cols = [
-            "term", "range_id", "first_doc", "last_doc",
-            "docs_buf", "tfs_buf", "norms_buf",
-        ]
-        score_fn = _make_range_scorer(
-            spec, weights, bm25_scorers(weights, self.avgdl), False,
-            float(self.avgdl), self.doc_count, k, deleted=self.deleted,
-        )
-        return (
-            self._apply_range_scorer(blocks, scan_cols, score_fn)
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
+        boost, terms given as {analyzed_term: boost}. A SHOULD disjunction
+        through topk_spec's boosts: weight = (float)(idf * boost), then
+        weightValue = weight * (k1+1) in float32 (BM25Stats order)."""
+        spec = BooleanSpec(should=tuple(sorted(boosts)), boosts=tuple(sorted(boosts.items())))
+        return self.topk_spec(spec, k=k)
 
     def _apply_range_scorer(self, blocks: DataFrame, scan_cols: list, score_fn) -> DataFrame:
         """Run a per-range scorer over the pruned block scan. With a
@@ -1994,22 +1981,22 @@ class IndexSearcher:
         block scan is a direct read of the searcher's file snapshot in the
         driver, with no Spark job — only the terms' bucket files, row
         groups pruned on term and, when `ranges` is given, on range_id.
-        Each range_id group runs the very scorer closure the distributed
-        plan ships to the Python workers — one in-process shard search,
-        as Lucene scores a shard. The merge keeps the (score DESC, doc_id
-        ASC) order, so the rows equal the distributed plan's bit for bit."""
+        The scan is decoded once (decode_postings, no pandas), and each
+        doc range's slice runs the very scorer the distributed plan ships
+        to the Python workers — one in-process shard search, as Lucene
+        scores a shard. The merge keeps the (score DESC, doc_id ASC)
+        order, so the rows equal the distributed plan's bit for bit."""
         where = ds.field("term").isin(terms)
         if ranges is not None:
             where &= ds.field("range_id").isin(pa.array(ranges, pa.int64()))
-        scan = self._postings_files.read(
-            self._buckets_of(terms), scan_cols, where
-        ).to_pandas()
-        hits = [score_fn((rid,), g) for rid, g in scan.groupby("range_id", sort=False)]
-        merged = pd.concat([_EMPTY, *hits], ignore_index=True)
-        docs = merged["doc_id"].to_numpy(np.int64)
-        scores = merged["score"].to_numpy(np.float32)
-        order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
-        return topk_frame(self.spark, docs[order], scores[order])
+        scan = self._postings_files.read(self._buckets_of(terms), scan_cols, where)
+        hits = [
+            score_fn.score(part)
+            for _rid, part in range_slices(score_fn.decode(scan), self._range_size)
+        ]
+        docs = np.concatenate([_NO_HITS[0], *(d for d, _s in hits)])
+        scores = np.concatenate([_NO_HITS[1], *(s for _d, s in hits)])
+        return topk_frame(self.spark, *_top_hits(docs, scores, k))
 
     def _topk_sum_tf(self, present: list[str], wv: np.float32, k: int) -> DataFrame:
         """Shared scorer for 'union of term occurrences as one pseudo-term'
@@ -2023,10 +2010,7 @@ class IndexSearcher:
             if pdf.empty:
                 return _EMPTY
             d_arr = deleted_local if deleted_local is not None else deleted
-            per_term = {
-                t: _decode_group(g.sort_values("first_doc", kind="mergesort"), False)
-                for t, g in pdf.groupby("term", sort=False)
-            }
+            per_term = decode_postings(pdf)
             base = min(int(v[0][0]) for v in per_term.values())
             top = max(int(v[0][-1]) for v in per_term.values())
             width = top - base + 1
@@ -2042,11 +2026,7 @@ class IndexSearcher:
             idx = np.flatnonzero(tf_acc)
             freq = tf_acc[idx].astype(np.float32)
             sc = (wv * freq / (freq + cache[nb_acc[idx]])).astype(np.float32)
-            docs_out = idx + base
-            order = np.lexsort((docs_out, -sc.astype(np.float64)))[:k]
-            return pd.DataFrame(
-                {"doc_id": docs_out[order].astype(np.int64), "score": sc[order]}
-            )
+            return _hits_frame(*_top_hits(idx + base, sc, k))
 
         def score_range(key, pdf):
             return _score_impl(key, pdf)
@@ -2293,17 +2273,9 @@ class IndexSearcher:
         )
 
         def decode(it):
-            from ..index.codec import delta_decode, vbyte_decode
-
             for pdf in it:
-                outs = []
-                for term, fd, db in zip(pdf["term"], pdf["first_doc"], pdf["docs_buf"]):
-                    docs = delta_decode(vbyte_decode(db), int(fd))
-                    outs.append(
-                        pd.DataFrame({"term": term, "doc_id": docs.astype("int64")})
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                doc, n = decode_doc_blocks(pdf["docs_buf"].to_numpy(), pdf["first_doc"].to_numpy())
+                yield pd.DataFrame({"term": np.repeat(pdf["term"].to_numpy(), n), "doc_id": doc})
 
         return blocks.mapInPandas(decode, "term string, doc_id long")
 
@@ -2599,50 +2571,6 @@ class IndexSearcher:
             .applyInPandas(score_fn, schema=TOPK_SCHEMA)
         )
         return wave1_df.unionByName(wave2)
-
-
-def _decode_group(g: pd.DataFrame, need_pos: bool):
-    """Decode one term's blocks within a range, in ascending doc order.
-    Sorted by first_doc (not block_no): appended segment generations reuse
-    block numbers but always cover higher doc ids."""
-    docs_l, tf_l, nb_l, pos_l = [], [], [], []
-    for _, row in g.iterrows():
-        docs_l.append(delta_decode(vbyte_decode(row["docs_buf"]), int(row["first_doc"])))
-        tf_l.append(vbyte_decode(row["tfs_buf"]))
-        nb_l.append(np.frombuffer(row["norms_buf"], dtype=np.uint8))
-        if need_pos:
-            pos_l.append(vbyte_decode(row["pos_buf"]))
-    d = np.concatenate(docs_l).astype(np.int64)
-    tf = np.concatenate(tf_l).astype(np.int64)
-    nb = np.concatenate(nb_l)
-    pos = np.concatenate(pos_l) if need_pos else None
-    return d, tf, nb, pos
-
-
-def _decode_group_pay(g: pd.DataFrame):
-    """_decode_group + the payload stream: (d, tf, nb, pos, pay) with pay
-    a float32 array aligned 1:1 with the decoded position stream (NaN =
-    null payload; all-NaN when the field was indexed without payloads so
-    payload queries on a plain field degrade to 'no payloads seen')."""
-    docs_l, tf_l, nb_l, pos_l, pay_l = [], [], [], [], []
-    for _, row in g.iterrows():
-        docs_l.append(delta_decode(vbyte_decode(row["docs_buf"]), int(row["first_doc"])))
-        tf_l.append(vbyte_decode(row["tfs_buf"]))
-        nb_l.append(np.frombuffer(row["norms_buf"], dtype=np.uint8))
-        pos = vbyte_decode(row["pos_buf"])
-        pos_l.append(pos)
-        buf = row["pay_buf"]
-        if buf:
-            pay_l.append(np.frombuffer(buf, dtype=">f4").astype(np.float32))
-        else:
-            pay_l.append(np.full(pos.size, np.nan, dtype=np.float32))
-    return (
-        np.concatenate(docs_l).astype(np.int64),
-        np.concatenate(tf_l).astype(np.int64),
-        np.concatenate(nb_l),
-        np.concatenate(pos_l),
-        np.concatenate(pay_l),
-    )
 
 
 _POS_SHIFT = np.int64(1) << np.int64(22)  # > max field position (builder
@@ -2986,6 +2914,30 @@ def _span_posrange_freqs(per_term, span_posrange: tuple[str, int, int], cand: np
     return freqs
 
 
+def _lead_span_keep(scan, lead: str, pos_terms) -> np.ndarray:
+    """The conjunction's block skip (ConjunctionDISI's cost-ordered
+    leapfrog at block granularity), on block metadata before any decode:
+    in each doc range, a block lying wholly outside the span of the lead
+    term's blocks holds no doc that can match, and a range without the
+    lead holds none at all. Positional terms keep every block of the
+    ranges that hold the lead: their position streams must stay
+    doc-aligned. -> the row mask of the blocks to decode."""
+    terms = scan["term"].to_numpy()
+    first = scan["first_doc"].to_numpy()
+    last = scan["last_doc"].to_numpy()
+    ranges, inv = np.unique(scan["range_id"].to_numpy(), return_inverse=True)
+    is_lead = terms == lead
+    lo = np.full(ranges.size, np.iinfo(np.int64).max)
+    hi = np.full(ranges.size, -1, dtype=np.int64)
+    np.minimum.at(lo, inv[is_lead], first[is_lead])
+    np.maximum.at(hi, inv[is_lead], last[is_lead])
+    keep = (last >= lo[inv]) & (first <= hi[inv])
+    if pos_terms:
+        pos_terms = set(pos_terms)
+        keep |= (hi[inv] >= 0) & np.array([t in pos_terms for t in terms], dtype=bool)
+    return keep
+
+
 def _cogroup_wrapper(score_fn):
     """Adapt a (key, blocks_pdf, deleted_local=None) range scorer to the
     cogroup applyInPandas signature: the right side is this range's slice
@@ -3006,6 +2958,10 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
                        candidates: np.ndarray | None = None,
                        deleted: np.ndarray | None = None):
     """Per-(doc-range) scorer for applyInPandas. One group == one 'segment'.
+    The returned function also carries the two steps it runs on a group,
+    for the driver plan: .decode(scan) -> decoded postings (lead-span
+    block skip applied) and .score(postings of one range) -> (doc_id,
+    score) arrays; only the applyInPandas entry builds a DataFrame.
     scorers: the similarity's prepared per-term score(freq, norm_byte)
     for the term clauses; coord: apply ClassicSimilarity's coord.
     Positional clauses, blended members and phrases score BM25.
@@ -3125,65 +3081,46 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         )
         pos_wv = np.float32(idf_sum * (K1 + np.float32(1.0)))
 
-    def _score_impl(key, pdf, deleted_local=None):
+    # the conjunction's block skip leads on the rarest required term
+    lead = min(required, key=lambda t: dfs[t]) if required else None
+
+    def decode(scan) -> dict:
+        """The scan's postings, blocks the lead's span rules out skipped."""
+        keep = None if lead is None else _lead_span_keep(scan, lead, pos_terms)
+        return decode_postings(scan, pos_terms=pos_terms, keep=keep)
+
+    def score(per_term: dict, deleted_local=None):
+        """One doc range's k best (doc_id, score) arrays, ordered score
+        DESC, doc_id ASC, from its decoded postings."""
         d_arr = deleted_local if deleted_local is not None else deleted
-        present = set(pdf["term"])
-        if any(t not in present for t in required):
-            return _EMPTY
+        if not per_term or any(t not in per_term for t in required):
+            return _NO_HITS
         if any(
-            not any(t in present for t in alts) for _off, alts in multi_phrase
+            not any(t in per_term for t in alts) for _off, alts in multi_phrase
         ):
-            return _EMPTY
+            return _NO_HITS
         if any(
-            not any(t in present for t in _span_alts(c)) for c in span
+            not any(t in per_term for t in _span_alts(c)) for c in span
         ):
-            return _EMPTY
+            return _NO_HITS
         if any(
-            occ == "+" and not any(t in present for t in ts)
+            occ == "+" and not any(t in per_term for t in ts)
             for occ, _ms, ts in group_clauses
         ):
-            return _EMPTY
-        scoring_present = any(t in present for t in should_terms) or any(
-            occ != "-" and any(t in present for t in ts)
+            return _NO_HITS
+        scoring_present = any(t in per_term for t in should_terms) or any(
+            occ != "-" and any(t in per_term for t in ts)
             for occ, _ms, ts in group_clauses
         )
         # an optional phrase can be the only scoring clause in the range
         opt_phrase_possible = any(
-            occ == "" and all(t in present for t, _ in pairs)
+            occ == "" and all(t in per_term for t, _ in pairs)
             for pairs, _s, occ, _b in phrase_clauses
         )
         if (not scoring_present and not required and not multi_phrase
                 and not span  # all-SpanOr clause lists have no required term
                 and not opt_phrase_possible and term_automaton is None):
-            return _EMPTY
-
-        groups = {t: g for t, g in pdf.groupby("term", sort=False)}
-
-        lead_span = None
-        if required:
-            lead = min(required, key=lambda t: dfs[t])
-            g = groups[lead]
-            lead_span = (int(g["first_doc"].min()), int(g["last_doc"].max()))
-
-        per_term = {}
-        for t in sorted(present):
-            g = groups[t].sort_values("first_doc", kind="mergesort")
-            if lead_span is not None and t not in pos_terms:
-                # block skip outside the lead's span (positional terms keep
-                # all blocks: position streams must stay doc-aligned)
-                m = (g["last_doc"] >= lead_span[0]) & (g["first_doc"] <= lead_span[1])
-                g = g[m]
-                if g.empty:
-                    if t in required:
-                        return _EMPTY
-                    continue
-            per_term[t] = _decode_group(g, need_pos=t in pos_terms)
-
-        if not per_term:
-            return _EMPTY
-        for t in required:
-            if t not in per_term:
-                return _EMPTY
+            return _NO_HITS
 
         base = min(int(v[0][0]) for v in per_term.values())
         top = max(int(v[0][-1]) for v in per_term.values())
@@ -3333,7 +3270,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
                 pterms = sorted({t for t, _ in pairs})
                 if any(t not in per_term for t in pterms):
                     if occ == "+":
-                        return _EMPTY
+                        return _NO_HITS
                     continue  # optional phrase can't match in this range
                 cand_set = set.intersection(
                     *[set(per_term[t][0].tolist()) for t in pterms]
@@ -3367,7 +3304,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
                         m[cand - base] = True
                     req_ok &= m
                     if not req_ok.any():
-                        return _EMPTY
+                        return _NO_HITS
                 elif cand.size:
                     should_hits[cand - base] += 1
             if req_ok is not None:
@@ -3411,7 +3348,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
             pre = mask & cand_mask
             cand = np.flatnonzero(pre) + base
             if cand.size == 0:
-                return _EMPTY
+                return _NO_HITS
             if term_automaton is not None:
                 pf = _term_automaton_freqs(per_term, term_automaton, cand)
             elif multi_phrase:
@@ -3435,7 +3372,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
             keep = pf > 0
             cand, pf = cand[keep], pf[keep]
             if cand.size == 0:
-                return _EMPTY
+                return _NO_HITS
             # norms for matched docs from any positional stream
             nb_map2: dict = {}
             for t in pos_terms:
@@ -3464,7 +3401,7 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
 
         idx = np.flatnonzero(mask)
         if idx.size == 0:
-            return _EMPTY
+            return _NO_HITS
         if mx is not None:
             # scoreMax + (scoreSum - scoreMax) * tie, each op in float32
             tb = np.float32(spec.tiebreak)
@@ -3484,14 +3421,16 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
                     / np.float32(coord_max)
                 ).astype(np.float32)
                 sc = (sc * coords[coord_hits[idx]]).astype(np.float32)
-        docs_out = idx + base
-        order = np.lexsort((docs_out, -sc.astype(np.float64)))[:k]
-        return pd.DataFrame(
-            {"doc_id": docs_out[order].astype(np.int64), "score": sc[order]}
-        )
+        return _top_hits(idx + base, sc, k)
+
+    def _score_group(key, pdf, deleted_local=None):
+        return _hits_frame(*score(decode(pdf), deleted_local))
 
     def score_range(key, pdf):
-        return _score_impl(key, pdf)
+        return _score_group(key, pdf)
 
-    score_range.cogroup = _cogroup_wrapper(_score_impl)
+    score_range.cogroup = _cogroup_wrapper(_score_group)
+    # the driver plan decodes its whole scan once and scores range slices
+    score_range.decode = decode
+    score_range.score = score
     return score_range

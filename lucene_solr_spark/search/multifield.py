@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bm25 import avgdl_f32, make_term_weight
-from .engine import TOPK_SCHEMA, _decode_group, topk_frame
+from .engine import TOPK_SCHEMA, topk_frame
+from .postings import decode_postings
 
 
 def oracle_topk_span_masked(
@@ -246,11 +247,11 @@ class MultiFieldSearcher:
         def score_range(key, pdf):
             if pdf.empty:
                 return empty
-            decoded = {}
-            for (f, t), g in pdf.groupby(["field", "term"], sort=False):
-                d, tf, nb, _pos = _decode_group(
-                    g.sort_values("first_doc", kind="mergesort"), False)
-                decoded[(f, t)] = (d, tf, nb)
+            decoded = {
+                (f, t): p[:3]
+                for f, g in pdf.groupby("field", sort=False)
+                for t, p in decode_postings(g).items()
+            }
             all_docs = np.unique(np.concatenate(
                 [v[0] for v in decoded.values()]))
             outer = np.zeros(all_docs.size, dtype=np.float64)
@@ -335,7 +336,7 @@ class MultiFieldSearcher:
         shuffle-free groupBy(range_id) Arrow stage walks the spans —
         the same bounded-heap cogroup as every other query."""
         from .bm25 import K1, idf_f32, idf_sum_f32, norm_cache
-        from .engine import _abs_positions, _decode_group
+        from .engine import _abs_positions
 
         mask_to = mask_to or clauses[0][0]
         if mask_to not in self.searchers:
@@ -401,10 +402,11 @@ class MultiFieldSearcher:
 
             if pdf.empty:
                 return empty
-            per_term = {}
-            for (f, t), g in pdf.groupby(["field", "term"], sort=False):
-                per_term[(f, t)] = _decode_group(
-                    g.sort_values("first_doc", kind="mergesort"), True)
+            per_term = {
+                (f, t): p
+                for f, g in pdf.groupby("field", sort=False)
+                for t, p in decode_postings(g, pos_terms=set(g["term"])).items()
+            }
             if any(ft not in per_term for ft in parsed_l):
                 return empty
             abs_pos = {ft: _abs_positions(per_term, ft)

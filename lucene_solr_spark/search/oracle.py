@@ -175,13 +175,14 @@ def oracle_lm_topk(
 
 
 def oracle_sweetspot_topk(
-    idx: OracleIndex, query: str, k: int = 10
+    idx: OracleIndex, query: str, k: int = 10, tf_fn=None
 ) -> list[tuple[int, np.float32]]:
     """Control for SweetSpotSimilarity (lucene/misc/SweetSpotSimilarity.java):
     ClassicSimilarity scoring — queryNorm * boost * idf^2 weights, coord —
     with baselineTf in place of sqrt(tf) and norm bytes that were WRITTEN
     by the sweetspot plateau lengthNorm (build_oracle_index(norm=
-    'sweetspot')); duplicate query terms = duplicate clauses."""
+    'sweetspot')); duplicate query terms = duplicate clauses.
+    tf_fn=np.sqrt over a BM25-norm index is ClassicSimilarity itself."""
     from .bm25 import (
         CLASSIC_DECODE,
         classic_idf_f32,
@@ -210,7 +211,7 @@ def oracle_sweetspot_topk(
         wv = classic_weight_value(
             len(post), idx.doc_count, query_norm=float(qn)
         )
-        s = (sweetspot_baseline_tf(tf) * wv * CLASSIC_DECODE[nb]).astype(np.float32)
+        s = ((tf_fn or sweetspot_baseline_tf)(tf) * wv * CLASSIC_DECODE[nb]).astype(np.float32)
         s[tf == 0] = np.float32(0.0)
         overlap += (tf > 0).astype(np.int32)
         per_clause.append(s)

@@ -951,7 +951,7 @@ def _analyzer_with_positions(analyzer_name: str):
 
 class _RangeCtx:
     """eval_tree ctx over one doc-range's decoded postings (per_term from
-    engine._decode_group; docs = the union of posting docs — a doc with
+    postings.decode_postings; docs = the union of posting docs — a doc with
     NO query term never reaches here; the complement pass covers it)."""
 
     def __init__(self, per_term: dict, docs: np.ndarray, nb: np.ndarray,
@@ -1073,13 +1073,11 @@ def _make_simple_tree_scorer(tree, weights: dict, avgdl: float,
     def _score_impl(key, pdf, deleted_local=None):
         import pandas as pd
 
-        from .engine import _EMPTY, _decode_group
+        from .engine import _EMPTY
+        from .postings import decode_postings
 
         d_arr = deleted_local if deleted_local is not None else deleted
-        per_term = {}
-        for t, g in pdf.groupby("term", sort=False):
-            g = g.sort_values("first_doc", kind="mergesort")
-            per_term[t] = _decode_group(g, need_pos=t in pos_terms)
+        per_term = decode_postings(pdf, pos_terms=pos_terms)
         if not per_term:
             return _EMPTY
         docs = np.unique(np.concatenate([v[0] for v in per_term.values()]))

@@ -4,7 +4,7 @@ Lucene analog: each increment is a new write-once segment published by a
 commit (IndexWriter.commit -> new segments_N generation, SegmentInfos.java:
 54-66). Appended posting blocks reuse block numbers but always cover HIGHER
 doc ids than every prior generation, so the query engine just orders blocks
-by first_doc (SURVEY.md §2.2 SegmentMerger; engine._decode_group).
+by first_doc (SURVEY.md §2.2 SegmentMerger; postings.decode_postings).
 
 Two consumption styles:
   * apply_increment(): batch append of new docs — idempotent per batch_id

@@ -447,6 +447,20 @@ def test_lm_dirichlet_clamps_at_zero():
     assert s2[0] > np.float32(0.0)
 
 
+@pytest.mark.parametrize("b", [1.3, 2.5])
+def test_topk_boosted_is_the_spec_boosts_path(built, b):
+    """topk_boosted scores through topk_spec's boosts: weight =
+    (float)(idf * boost), then * (k1+1) in float32 (BM25Stats order).
+    Boosting after (k1+1) in double put these boosts 1 ulp off."""
+    searcher, oidx = built
+    boosts = {"parse": b, "merge": 1.0, "token": b}
+    spec = BooleanSpec(should=("merge", "parse", "token"),
+                       boosts=tuple(sorted(boosts.items())))
+    got = [(r["doc_id"], r["score"]) for r in searcher.topk_boosted(boosts, k=10).collect()]
+    assert got == [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
+    _assert_identical(got, oracle_topk_spec(oidx, spec, k=10), ("boosted", b))
+
+
 def test_paren_group_duplicate_term_scores_once(built):
     """`(merge merge parse)` through the classic parser scores `merge`
     once: to_spec keeps a paren group's scored members distinct, so the

@@ -188,11 +188,13 @@ def test_suggest_wordbreak_semantics_and_plan(spark):
     assert not any(t.startswith("spark") or t == "a part" for t in breaks)
 
 
-def test_fuzzy_like_this_expansion_is_metadata_only(spark):
+def test_fuzzy_like_this_expansion_is_metadata_only(spark, monkeypatch):
     """FuzzyLikeThisQuery's expansion never scans the corpus: the variant
     lookup is a term_stats metadata query; only the final boosted scorer
-    touches postings."""
+    touches postings (read in the driver under DRIVER_SCORE_MAX_BLOCKS,
+    by a Spark scan above it)."""
     from lucene_solr_spark.ops.index_access import searcher_for
+    from lucene_solr_spark.search import engine as E
 
     s = searcher_for(spark, SF)
     exp = (
@@ -204,7 +206,9 @@ def test_fuzzy_like_this_expansion_is_metadata_only(spark):
     assert "term_stats" in plan and "documents" not in plan
     hits = s.topk_fuzzy_like_this("sprk merg", k=10)
     assert hits.count() > 0
-    plan2 = _plan(hits)
+    assert "documents" not in _plan(hits)
+    monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", 0)
+    plan2 = _plan(s.topk_fuzzy_like_this("sprk merg", k=10))
     assert "postings" in plan2 and "documents" not in plan2
 
 

@@ -7,7 +7,14 @@ pruning must never change the top-k).
 
 Usage: python3 tools/wand_study.py [--index /tmp/lss_scale_idx_8]
                                    [--cpus 8] [--queries q1,q2,...]
+       python3 tools/wand_study.py --crossover [--cpus 2]
 Prints one JSON line; paste the table into BENCH.md.
+
+--crossover times the driver plan against the distributed plan for
+unpruned top-k OR queries over the N most frequent terms, at several
+block bounds, on two make_corpus indexes (24k docs in 128-doc ranges,
+48k docs in 1024-doc ranges), and asserts equal rows on every run: the
+table that sets engine.DRIVER_SCORE_MAX_BLOCKS.
 
 prune=True always runs the distributed two-wave plan. prune=False runs
 the driver plan when the query's block bound is at most
@@ -84,6 +91,62 @@ def build_skewed_index(spark, n_docs: int, out_dir: str) -> None:
     shutil.rmtree(src_dir)
 
 
+#: --crossover indexes: (docs, range_size)
+CROSSOVER_INDEXES = ((24_000, 128), (48_000, 1024))
+
+
+def crossover(spark, args) -> dict:
+    """Driver plan vs distributed plan, median wall time of alternating
+    runs, per (index, query size); every run's rows must be equal."""
+    import statistics
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from lucene_solr_spark.corpus import make_corpus
+    from lucene_solr_spark.index.builder import BLOCK_SIZE, build_index
+    from lucene_solr_spark.search import engine
+    from lucene_solr_spark.search.engine import BooleanSpec, IndexSearcher
+
+    caps = {"driver": 10**9, "distributed": 0}
+    out = []
+    for n_docs, range_size in CROSSOVER_INDEXES:
+        d = os.path.join(tempfile.gettempdir(), f"lss_crossover_{n_docs}_{range_size}")
+        if not os.path.exists(os.path.join(d, "_manifest")):
+            build_index(spark, spark.createDataFrame(make_corpus(n_docs, seed=5)),
+                        out_dir=d, content_col="content",
+                        order_cols=["repo", "path", "commit"],
+                        meta_cols=["repo", "path", "lang"], range_size=range_size,
+                        fingerprint=f"crossover-{n_docs}-{range_size}")
+        s = IndexSearcher(spark, d)
+        n_ranges = s._est_ranges()
+        by_df = [(r["term"], r["df"]) for r in
+                 s._term_stats.orderBy(F.col("df").desc(), F.col("term")).collect()]
+        for n_terms in [int(x) for x in args.crossover_terms.split(",")]:
+            terms = by_df[:n_terms]
+            bound = sum(min(df, -(-df // BLOCK_SIZE) + n_ranges) for _t, df in terms)
+            spec = BooleanSpec(should=tuple(t for t, _df in terms))
+            times = {p: [] for p in caps}
+            want = None
+            for rep in range(args.reps + 1):  # the first round warms both plans
+                for plan, cap in caps.items():
+                    engine.DRIVER_SCORE_MAX_BLOCKS = cap
+                    t0 = time.perf_counter()
+                    hits = s.topk_spec(spec, k=args.k, prune=False)
+                    rows = [(r["doc_id"], r["score"]) for r in hits.collect()]
+                    if rep:
+                        times[plan].append(time.perf_counter() - t0)
+                    assert plan_of(hits) == plan, (plan, n_terms)
+                    want = rows if want is None else want
+                    assert rows == want, (n_docs, n_terms, plan)
+            row = {"docs": n_docs, "ranges": n_ranges, "terms": len(terms),
+                   "block_bound": bound, "identical": True,
+                   **{f"{p}_s": round(statistics.median(t), 3) for p, t in times.items()}}
+            print(json.dumps(row), file=sys.stderr, flush=True)
+            out.append(row)
+    return {"k": args.k, "cpus": args.cpus, "reps": args.reps, "rows": out}
+
+
 def plan_of(df) -> str:
     """Which plan an unpruned topk ran: 'distributed' while the returned
     frame still holds the Python range scorer, 'driver' when topk_spec
@@ -102,6 +165,12 @@ def main() -> None:
     ap.add_argument("--skewed", type=int, default=0, metavar="N_DOCS",
                     help="build an N-doc range-skewed corpus instead and "
                          "query 'skewterm common'")
+    ap.add_argument("--crossover", action="store_true",
+                    help="time the driver plan against the distributed plan "
+                         "instead (see the module docstring)")
+    ap.add_argument("--crossover-terms", default="2,8,24,48,96,192,384,768",
+                    help="comma list of query sizes (most frequent terms)")
+    ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -111,11 +180,16 @@ def main() -> None:
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("lss-wand-study")
         .config("spark.sql.shuffle.partitions", str(4 * args.cpus))
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", "2g" if args.crossover else "24g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+
+    if args.crossover:
+        print(json.dumps(crossover(spark, args)))
+        spark.stop()
+        return
 
     from lucene_solr_spark.search.engine import IndexSearcher
 
