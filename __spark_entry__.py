@@ -289,13 +289,13 @@ PARSER_QUERIES = {
         should=["merge"], groups=[("-", ["dup", "vector"])], k=10)),
     # '"World Bank"^2 AND Nigeria' shape (ReutersQueryMaker.java:47)
     "parser_phrase_boost_and": ('"fast sort"^2 AND spark', lambda: bm25_compound_sql(
-        must=["spark"], phrase="fast sort", phrase_boost=2.0, k=10)),
+        must=["spark"], phrases=[("fast sort", 0, 2.0, True)], k=10)),
     # optional SHOULD phrase ('"World Bank" Nigeria' default-OR shape)
     "parser_optional_phrase": ('"fast sort" spark', lambda: bm25_compound_sql(
-        should=["spark"], phrase="fast sort", phrase_required=False, k=10)),
+        should=["spark"], phrases=[("fast sort", 0, 1.0, False)], k=10)),
     # '"World Bank" -Nigeria' shape (ReutersQueryMaker.java:48)
     "parser_phrase_not": ('"fast sort" -spark', lambda: bm25_compound_sql(
-        phrase="fast sort", phrase_required=False, must_not=["spark"], k=10)),
+        phrases=[("fast sort", 0, 1.0, False)], must_not=["spark"], k=10)),
     # CONSTANT_SCORE_REWRITE family (the reference parser's default for
     # range/wildcard — QueryParserBase.java:67; score == boost for any
     # doc with >=1 matching dictionary term, pinned vs the compiled
@@ -316,12 +316,12 @@ PARSER_QUERIES = {
         should=["spark"], mixed_groups=[("-", ["dup"], [(1.0, "wind%")])], k=10)),
     # multiple phrase clauses in one BooleanQuery (both AND-promoted)
     "parser_two_phrases": ('"fast sort" AND "merge sort" spark', lambda: bm25_compound_sql(
-        phrase="fast sort", phrases=[("merge sort", 0, 1.0, True)],
+        phrases=[("fast sort", 0, 1.0, True), ("merge sort", 0, 1.0, True)],
         should=["spark"], k=10)),
     # two OPTIONAL phrases (one sloppy+boosted) + a should term
     "parser_opt_phrases": ('"fast sort" "merge sort"~2^2 spark', lambda: bm25_compound_sql(
-        phrase="fast sort", phrase_required=False,
-        phrases=[("merge sort", 2, 2.0, False)], should=["spark"], k=10)),
+        phrases=[("fast sort", 0, 1.0, False), ("merge sort", 2, 2.0, False)],
+        should=["spark"], k=10)),
 }
 # query strings through SimpleQueryParser (queryparser/simple — the
 # never-erroring human syntax; GT round 28 pins parse + scoring to the
@@ -562,12 +562,12 @@ def _ngram_phrase_query_fn(query: str, n: int):
         from lucene_solr_spark.search.engine import (
             BooleanSpec,
             ngram_phrase_rewrite,
-            phrase_spec,
+            phrase_pairs,
         )
 
         s = _searcher(spark, sf_dir)
-        pairs = ngram_phrase_rewrite(phrase_spec(query).phrase, n)
-        return _ranked(s.topk_spec(BooleanSpec(phrase=pairs), k=10))
+        pairs = ngram_phrase_rewrite(phrase_pairs(query), n)
+        return _ranked(s.topk_spec(BooleanSpec(phrases=((pairs, 0, "+", 1.0),)), k=10))
 
     return run
 
@@ -1009,9 +1009,9 @@ def _bm25_groups() -> dict[str, list]:
         ))
     for name, (q, n) in NGRAM_PHRASE_QUERIES.items():
         from lucene_solr_spark.ops.bm25_sql import bm25_phrase_pairs_sql
-        from lucene_solr_spark.search.engine import ngram_phrase_rewrite, phrase_spec
+        from lucene_solr_spark.search.engine import ngram_phrase_rewrite, phrase_pairs
 
-        pairs = ngram_phrase_rewrite(phrase_spec(q).phrase, n)
+        pairs = ngram_phrase_rewrite(phrase_pairs(q), n)
         positional.append(
             (name, _ngram_phrase_query_fn(q, n), bm25_phrase_pairs_sql(pairs, k=10))
         )

@@ -463,9 +463,9 @@ def bm25_phrase_sql(query: str, k: int = 10, slop: int = 0) -> str:
     upper emits 1/(u - max(other <= u) + 1) when within slop.
     weight = (sum of term idfs) * (k1+1) (PhraseWeight);
     score = weight * pf / (pf + k1*((1-b)+b*dl/avgdl))."""
-    from ..search.engine import phrase_spec
+    from ..search.engine import phrase_pairs
 
-    phrase = phrase_spec(query).phrase
+    phrase = phrase_pairs(query)
     if not phrase:
         return "SELECT CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS INTEGER) AS rank WHERE 1=0"
     pf_sql = _phrase_pf_cte(phrase, slop)
@@ -1598,10 +1598,6 @@ def bm25_compound_sql(
     must_not: list[str] | tuple = (),
     term_boosts: dict[str, float] | None = None,
     groups: list[tuple[str, list[str]]] | tuple = (),
-    phrase: str | None = None,
-    phrase_slop: int = 0,
-    phrase_boost: float = 1.0,
-    phrase_required: bool = True,
     phrases: list[tuple] | tuple = (),
     term_range: tuple[str, str, bool, bool] | None = None,
     range_occur: str = "",
@@ -1614,9 +1610,8 @@ def bm25_compound_sql(
     """General BooleanQuery oracle: any mix of MUST/SHOULD/MUST_NOT term
     clauses (with BoostQuery boosts), one-level nested SHOULD-only groups
     ((occur, [analyzed terms]) — the classic parser's paren groups), any
-    number of PhraseQuery clauses (the phrase_* kwargs describe the
-    first; `phrases` = [(text, slop, boost, required), ...] the rest —
-    each required or an optional SHOULD), and a
+    number of PhraseQuery clauses (`phrases` = [(text, slop, boost,
+    required), ...] — each required or an optional SHOULD), and a
     TermRangeQuery dictionary expansion added as SHOULD clauses
     (term_range = (lo, hi, include_lo, include_hi, max_terms)).
 
@@ -1649,13 +1644,11 @@ def bm25_compound_sql(
     groups = [(occ, list(ts)) for occ, ts in groups]
     # normalize 0..N phrase clauses to [(pairs, slop, boost, required)]
     phrase_clauses = []
-    raw_phrases = ([(phrase, phrase_slop, phrase_boost, phrase_required)]
-                   if phrase is not None else []) + [tuple(pc) for pc in phrases]
-    if raw_phrases:
-        from ..search.engine import phrase_spec
+    if phrases:
+        from ..search.engine import phrase_pairs
 
-        for text, slop_i, boost_i, req_i in raw_phrases:
-            pairs = phrase_spec(text).phrase
+        for text, slop_i, boost_i, req_i in phrases:
+            pairs = phrase_pairs(text)
             if pairs:
                 phrase_clauses.append((pairs, int(slop_i), float(boost_i), bool(req_i)))
 

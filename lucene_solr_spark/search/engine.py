@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..analysis.tokenizer import analyze, analyze_with_positions
+from ..analysis.tokenizer import analyze, analyze_with_positions_as
 from ..index.builder import BLOCK_SCHEMA, BLOCK_SIZE, DEFAULT_TERM_BUCKETS, IndexPaths
 from ..index.codec import decode_doc_blocks
 from .bm25 import (
@@ -164,22 +164,6 @@ class BooleanSpec:
     min_should_match: int = 0
     dismax: bool = False  # score SHOULD clauses as DisjunctionMax
     tiebreak: float = 0.0
-    phrase: tuple[tuple[str, int], ...] = ()  # [(term, position offset)]
-    # '+' = the phrase is a required clause (the only form r2 supported);
-    # '' = optional SHOULD clause: docs may match via other clauses and
-    # the phrase adds score + counts toward minShouldMatch when present
-    # (BooleanQuery with a SHOULD PhraseQuery clause)
-    phrase_occur: str = "+"
-    slop: int = 0  # 0 = exact phrase (ExactPhraseScorer); >0 = Lucene-exact
-    # sloppy scoring: weighted phrase freq Σ 1/(matchLength+1) over
-    # SloppyPhraseScorer's minimal match windows (see search/sloppy.py)
-    # MultiPhraseQuery (search/MultiPhraseQuery.java:49): per-position
-    # alternative terms [(offset, (t1, t2, ...))]; multi_phrase_slop=0 is
-    # exact alignment, >0 runs SloppyPhraseScorer over per-position UNION
-    # postings — including the multi-term-repeats path (hasMultiTermRpts,
-    # overlapping alternative sets; see search/sloppy.py)
-    multi_phrase: tuple[tuple[int, tuple[str, ...]], ...] = ()
-    multi_phrase_slop: int = 0
     # SpanNearQuery clauses in query order (spans/SpanNearQuery.java);
     # scored via search/spans.py walks with Σ 1/(width+1). A clause is a
     # term OR a tuple of alternative terms — a SpanOr of term spans
@@ -234,18 +218,26 @@ class BooleanSpec:
     # (MatchNoDocsQuery); the parser writes ("+", ()) for a required
     # clause that expanded to no index term.
     groups: tuple[tuple[str, tuple], ...] = ()
-    # BoostQuery wrapping the phrase clause ('"..."^2'): multiplies the
-    # phrase weightValue (search/BoostQuery.java over PhraseQuery)
-    phrase_boost: float = 1.0
     # Similarity plug point (§2.10; IndexSearcher.setSimilarity): a name
     # in bm25.SIMILARITIES, 'bm25' by default. Every similarity scores
     # the term clauses; positional clauses are BM25-only.
     similarity: str = "bm25"
-    # ADDITIONAL PhraseQuery clauses beyond the primary phrase fields:
-    # ((pairs, slop, occur, boost), ...) with pairs = ((term, offset), ...)
-    # and occur in {'+', ''} — a BooleanQuery may hold any number of
-    # phrase clauses; the primary phrase/slop/phrase_occur/phrase_boost
-    # fields describe clause 0 and these describe clauses 1..N.
+    # PhraseQuery / MultiPhraseQuery clauses, any number of them (a
+    # BooleanQuery holds any mix): ((positions, slop, occur, boost), ...)
+    #   positions = ((term | (alt, ...), offset), ...) in query order; a
+    #               bare term is one alternative, a tuple is a
+    #               MultiPhraseQuery position matching any of its terms
+    #               (UnionPostingsEnum; normalized by _span_alts)
+    #   slop      = 0: exact alignment (ExactPhraseScorer); > 0: the
+    #               Lucene-exact SloppyPhraseScorer weighted freq
+    #               Σ 1/(matchLength+1) over per-position union postings,
+    #               repeats and multi-term repeats included (search/sloppy.py)
+    #   occur     = '+' required clause; '' optional SHOULD clause (adds
+    #               score and counts toward minShouldMatch when it matches)
+    #   boost     = BoostQuery around the clause ('"..."^2'): multiplies
+    #               the idf sum before (k1+1) (search/BoostQuery.java)
+    # weight = float32 sum of idf over every alternative at every
+    # position, df=0 alternatives included (TermContext.build)
     phrases: tuple[tuple, ...] = ()
     # TermAutomatonQuery (lucene/sandbox/src/java/org/apache/lucene/
     # search/TermAutomatonQuery.java): a determinized automaton whose
@@ -260,33 +252,41 @@ class BooleanSpec:
     term_automaton: tuple[tuple, tuple] | None = None
 
     @property
-    def phrase_clauses(self) -> tuple[tuple, ...]:
-        """All phrase clauses normalized to (pairs, slop, occur, boost) —
-        the primary phrase fields first, then `phrases`."""
-        out = ()
-        if self.phrase:
-            out += ((tuple(self.phrase), self.slop, self.phrase_occur, self.phrase_boost),)
-        out += tuple(tuple(pc) for pc in self.phrases)
-        return out
-
-    @property
     def positional_terms(self) -> tuple[str, ...]:
         out = (
-            tuple(t for t, _ in self.phrase)
-            + tuple(t for c in self.span for t in _span_alts(c))
+            tuple(t for c in self.span for t in _span_alts(c))
             + tuple(t for c in self.span_not_near for t in _span_alts(c))
             + tuple(self.span_not) + tuple(self.span_contain) + tuple(self.span_within)
         )
-        for pairs, _slop, _occ, _b in self.phrases:
-            out += tuple(t for t, _ in pairs)
-        for _off, alts in self.multi_phrase:
-            out += tuple(alts)
+        for positions, _slop, _occ, _b in self.phrases:
+            out += tuple(t for c, _off in positions for t in _span_alts(c))
         if self.span_first is not None:
             out += (self.span_first[0],)
         if self.span_position_range is not None:
             out += (self.span_position_range[0],)
         if self.term_automaton is not None:
             out += tuple(lab for _f, lab, _t in self.term_automaton[0] if lab)
+        return out
+
+    @property
+    def required_sets(self) -> tuple[tuple[str, ...], ...]:
+        """Every clause a hit must match, as its alternative terms: a doc
+        needs one term of each set, so a set with no live term matches
+        nothing. Covers `must` terms, span clauses, each position of a
+        '+' phrase, the span-first / position-range term and '+' groups
+        (whose empty member list matches nothing)."""
+        out = tuple((t,) for t in self.must)
+        out += tuple(_span_alts(c) for c in self.span)
+        for positions, _slop, occ, _b in self.phrases:
+            if occ == "+":
+                out += tuple(_span_alts(c) for c, _off in positions)
+        if self.span_first is not None:
+            out += ((self.span_first[0],),)
+        if self.span_position_range is not None:
+            out += ((self.span_position_range[0],),)
+        out += tuple(
+            _member_terms(members) for occ, members in self.groups if occ == "+"
+        )
         return out
 
     @property
@@ -450,18 +450,22 @@ def _segment_heads_fn(sort_cols: list[str], n: int, deleted):
     return heads
 
 
-def phrase_spec(query: str, slop: int = 0) -> BooleanSpec:
-    """Analyze a phrase query preserving position gaps left by the stop
-    filter (QueryParser builds PhraseQuery with analysis positions)."""
-    pos_map, _ = analyze_with_positions(query)
-    pairs = sorted(
-        ((term, p) for term, plist in pos_map.items() for p in plist),
-        key=lambda x: x[1],
-    )
+def phrase_pairs(query: str, analyzer: str = "standard") -> tuple[tuple[str, int], ...]:
+    """A phrase query's (term, offset) pairs, rebased to the first term:
+    positions come from the index's own analysis chain, so stop-filter
+    gaps, stacked tokens and POSINC chains line up with the postings
+    (QueryParser builds PhraseQuery with analysis positions)."""
+    pairs = analyze_with_positions_as(analyzer, query)
     if not pairs:
-        return BooleanSpec()
+        return ()
     base = pairs[0][1]
-    return BooleanSpec(phrase=tuple((t, p - base) for t, p in pairs), slop=slop)
+    return tuple((t, p - base) for t, p in pairs)
+
+
+def phrase_spec(query: str, slop: int = 0) -> BooleanSpec:
+    """One required PhraseQuery clause over the analyzed query."""
+    pairs = phrase_pairs(query)
+    return BooleanSpec(phrases=((pairs, slop, "+", 1.0),) if pairs else ())
 
 
 class IndexSearcher:
@@ -728,21 +732,12 @@ class IndexSearcher:
         return self.topk_spec(spec, k=k, prune=False)
 
     def topk_phrase(self, query: str, k: int = 10, slop: int = 0) -> DataFrame:
-        if self.analyzer == "standard":
-            return self.topk_spec(phrase_spec(query, slop=slop), k=k)
-        # non-standard chains: phrase positions must come from the
-        # index's OWN analyzer (the WDF 'code' chain splits identifiers
-        # with its own posInc gaps; 'english' stems; stop gaps differ)
-        from ..analysis.tokenizer import analyze_with_positions_as
-
-        pairs = analyze_with_positions_as(self.analyzer, query)
-        if not pairs:
-            return self.topk_spec(BooleanSpec(), k=k)
-        base = pairs[0][1]
-        spec = BooleanSpec(
-            phrase=tuple((t, p - base) for t, p in pairs), slop=slop
-        )
-        return self.topk_spec(spec, k=k)
+        # phrase positions come from the index's OWN analyzer (the WDF
+        # 'code' chain splits identifiers with its own posInc gaps;
+        # 'english' stems; stop gaps differ). No pairs leaves the spec
+        # with no scoring term, which topk_spec answers with no rows.
+        pairs = phrase_pairs(query, self.analyzer)
+        return self.topk_spec(BooleanSpec(phrases=((pairs, slop, "+", 1.0),)), k=k)
 
     def topk_span_near(
         self, terms: list[str], slop: int = 0, in_order: bool = True, k: int = 10
@@ -970,14 +965,12 @@ class IndexSearcher:
         path when alternative sets overlap (setSlop on
         MultiPhraseQuery.Builder)."""
         mp = tuple(
-            (i, tuple(sorted({t for alt in alts for t in self._analyze(alt)})))
+            (tuple(sorted({t for alt in alts for t in self._analyze(alt)})), i)
             for i, alts in enumerate(positions)
         )
-        if any(not alts for _i, alts in mp):
+        if any(not alts for alts, _i in mp):
             return topk_frame(self.spark)
-        return self.topk_spec(
-            BooleanSpec(multi_phrase=mp, multi_phrase_slop=slop), k=k
-        )
+        return self.topk_spec(BooleanSpec(phrases=((mp, slop, "+", 1.0),)), k=k)
 
     def auto_stop_words(
         self, max_percent: float = 0.4, max_doc_freq: int | None = None,
@@ -2127,6 +2120,11 @@ class IndexSearcher:
         if spec.dismax and spec.groups:
             # DisjunctionMax is scored over `should` term clauses only
             raise ValueError("a dismax spec cannot hold groups")
+        if spec.phrases and (spec.span or spec.span_first or spec.span_position_range
+                             or spec.term_automaton):
+            raise ValueError(
+                "phrase clauses cannot mix with span/position-range/automaton specs"
+            )
         if not spec.scoring_terms:
             return topk_frame(self.spark)
         # index-time/search-time similarity agreement (Lucene requires the
@@ -2139,34 +2137,9 @@ class IndexSearcher:
                 f"query similarity '{spec.similarity}' expects '{sim.norm}'"
             )
         weights = self.term_weights(list(spec.all_terms))
-        required = set(spec.must) | {
-            c for c in spec.span if isinstance(c, str)
-        }
-        for pairs, _slop, occ, _b in spec.phrase_clauses:
-            if occ == "+":
-                required |= {t for t, _ in pairs}
-        if spec.span_first is not None:
-            required.add(spec.span_first[0])
-        if spec.span_position_range is not None:
-            required.add(spec.span_position_range[0])
-        if any(weights[t]["df"] == 0 for t in required):
-            return topk_frame(self.spark)
-        # SpanOr clause (alternative tuple): needs >=1 live member
+        # a required clause with no live term matches nothing
         if any(
-            all(weights[t]["df"] == 0 for t in _span_alts(c))
-            for c in spec.span
-        ):
-            return topk_frame(self.spark)
-        # MultiPhraseQuery: each position needs at least one live alternative
-        if any(
-            all(weights[t]["df"] == 0 for t in alts)
-            for _off, alts in spec.multi_phrase
-        ):
-            return topk_frame(self.spark)
-        # a required (+) group needs at least one live member
-        if any(
-            occ == "+" and all(weights[t]["df"] == 0 for t in _member_terms(ms))
-            for occ, ms in spec.groups
+            all(weights[t]["df"] == 0 for t in alts) for alts in spec.required_sets
         ):
             return topk_frame(self.spark)
         # absent SHOULD/NOT terms are dropped (rewrite-to-fixpoint analog)
@@ -2595,86 +2568,27 @@ def _occurrence_keys(per_term, t: str) -> np.ndarray:
     return np.repeat(d, tf) * _POS_SHIFT + pos_abs
 
 
-def _phrase_freqs(
-    per_term, phrase: tuple[tuple[str, int], ...], cand: np.ndarray
-) -> np.ndarray:
-    """EXACT phrase frequency per candidate doc (ExactPhraseScorer analog),
-    fully vectorized over composite (doc, position) keys:
-    pf = |{p in pos0 : p + off_i in pos_i ∀i}|."""
-    (t0, off0) = phrase[0]
-    keys0 = _occurrence_keys(per_term, t0) - off0  # lead anchors
-    cand_set_keys = np.asarray(sorted(cand), dtype=np.int64)
-    # restrict lead occurrences to candidate docs
-    lead_docs = keys0 // _POS_SHIFT
-    keep = np.isin(lead_docs, cand_set_keys)
-    keys0 = keys0[keep]
-    for t, off in phrase[1:]:
-        ki = _occurrence_keys(per_term, t) - off
-        keys0 = keys0[np.isin(keys0, ki)]
-        if keys0.size == 0:
-            break
-    counts = np.zeros(cand.size, dtype=np.int64)
-    if keys0.size:
-        match_docs = keys0 // _POS_SHIFT
-        order = np.argsort(cand, kind="mergesort")
-        sorted_cand = cand[order]
-        idx = np.searchsorted(sorted_cand, match_docs)
-        np.add.at(counts, order[idx], 1)
-    return counts
-
-
-def _sloppy_phrase_freqs(
-    per_term, phrase: tuple[tuple[str, int], ...], cand: np.ndarray, slop: int
-) -> np.ndarray:
+def _sloppy_phrase_pf(per_term, positions, cand: np.ndarray, slop: int) -> np.ndarray:
     """Lucene-exact weighted sloppy phrase freq per candidate doc
-    (SloppyPhraseScorer.phraseFreq + BM25Similarity.sloppyFreq 1/(d+1);
-    see search/sloppy.py, including the repeated-term initComplex/
-    advanceRpts path). Per-doc sequential walk — the same cost model as
-    Lucene's own scorer, run distributed per doc range."""
+    (SloppyPhraseScorer.phraseFreq + BM25Similarity.sloppyFreq 1/(d+1)).
+    positions: ((term | (alt, ...), offset), ...); each position's cursor
+    walks the UNION of its alternatives' occurrences (MultiPhraseQuery
+    UnionPostingsEnum), through the repeats path when a term recurs and
+    the multi-term-repeats path (hasMultiTermRpts) when alternative sets
+    overlap (see search/sloppy.py). Per-doc sequential walk — the same
+    cost model as Lucene's own scorer, run per doc range."""
     from .sloppy import sloppy_freq
 
-    terms = [t for t, _ in phrase]
-    abs_cache = {t: _abs_positions(per_term, t) for t in set(terms)}
-    clause_data = [(*abs_cache[t], off) for t, off in phrase]
-    freqs = np.zeros(cand.size, dtype=np.float32)
-    for ci, c in enumerate(cand):
-        plists, offs = [], []
-        ok = True
-        for d, tf, run_starts, pos_abs, off in clause_data:
-            j = int(np.searchsorted(d, c))
-            if j >= d.size or d[j] != c:
-                ok = False
-                break
-            s = int(run_starts[j])
-            plists.append(pos_abs[s : s + int(tf[j])].tolist())
-            offs.append(off)
-        if ok:
-            freqs[ci] = sloppy_freq(plists, offs, slop, terms=terms)
-    return freqs
-
-
-def _sloppy_multi_phrase_freqs(
-    per_term, mphrase: tuple[tuple[int, tuple[str, ...]], ...],
-    cand: np.ndarray, slop: int,
-) -> np.ndarray:
-    """Sloppy MultiPhraseQuery freq per candidate doc: each position's
-    cursor walks the UNION of its alternatives' occurrences
-    (MultiPhraseQuery.java UnionPostingsEnum) through the Lucene-exact
-    SloppyPhraseScorer machine — including multi-term repeats
-    (hasMultiTermRpts) when alternative sets overlap across positions
-    (see search/sloppy.py _sloppy_freq_multiterm)."""
-    from .sloppy import sloppy_freq
-
-    all_terms = sorted({t for _off, alts in mphrase for t in alts})
+    term_sets = [_span_alts(c) for c, _off in positions]
+    offsets = [off for _c, off in positions]
     abs_cache = {
-        t: _abs_positions(per_term, t) for t in all_terms if t in per_term
+        t: _abs_positions(per_term, t)
+        for t in sorted({t for ts in term_sets for t in ts}) if t in per_term
     }
-    term_sets = [tuple(alts) for _off, alts in mphrase]
     freqs = np.zeros(cand.size, dtype=np.float32)
     for ci, c in enumerate(cand):
-        plists, offs = [], []
-        ok = True
-        for off, alts in mphrase:
+        plists = []
+        for alts in term_sets:
             merged: list[int] = []
             for t in alts:
                 if t not in abs_cache:
@@ -2685,13 +2599,11 @@ def _sloppy_multi_phrase_freqs(
                     s = int(run_starts[j])
                     merged.extend(pos_abs[s : s + int(tf[j])].tolist())
             if not merged:
-                ok = False
                 break
             merged.sort()
             plists.append(merged)
-            offs.append(off)
-        if ok:
-            freqs[ci] = sloppy_freq(plists, offs, slop, terms=term_sets)
+        else:
+            freqs[ci] = sloppy_freq(plists, offsets, slop, terms=term_sets)
     return freqs
 
 
@@ -2756,18 +2668,18 @@ def _term_automaton_freqs(per_term, auto, cand: np.ndarray) -> np.ndarray:
     return freqs
 
 
-def _multi_phrase_freqs(
-    per_term, mphrase: tuple[tuple[int, tuple[str, ...]], ...], cand: np.ndarray
-) -> np.ndarray:
-    """MultiPhraseQuery exact alignment (search/MultiPhraseQuery.java:49,
-    UnionPostingsEnum): each position's occurrence set is the UNION of its
-    alternatives' occurrences; pf = count of lead positions aligning
-    through every position."""
+def _exact_phrase_pf(per_term, positions, cand: np.ndarray) -> np.ndarray:
+    """EXACT phrase frequency per candidate doc (ExactPhraseScorer),
+    vectorized over composite (doc, position) keys. positions: ((term |
+    (alt, ...), offset), ...); a position's occurrence set is the UNION
+    of its alternatives' occurrences (MultiPhraseQuery UnionPostingsEnum);
+    pf = count of lead occurrences aligning through every position."""
     cand_sorted = np.asarray(sorted(cand), dtype=np.int64)
     keys = None
-    for idx, (off, alts) in enumerate(mphrase):
+    for idx, (c, off) in enumerate(positions):
         parts = [
-            _occurrence_keys(per_term, t) - off for t in alts if t in per_term
+            _occurrence_keys(per_term, t) - off
+            for t in _span_alts(c) if t in per_term
         ]
         ki = (
             np.concatenate(parts)
@@ -2972,9 +2884,12 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
     must_terms = sorted(set(spec.must))
     must_count = {t: spec.must.count(t) for t in must_terms}
     not_terms = sorted({t for t in spec.must_not if weights[t]["df"] > 0})
-    # 0..N PhraseQuery clauses: [(pairs, slop, occur, boost)]
-    phrase_clauses = list(spec.phrase_clauses)
-    multi_phrase = spec.multi_phrase
+    # 0..N phrase clauses, each position as its alternative set:
+    # [(positions, slop, occur, boost)], positions = ((alts, offset), ...)
+    phrase_clauses = [
+        (tuple((_span_alts(c), off) for c, off in positions), slop, occ, boost)
+        for positions, slop, occ, boost in spec.phrases
+    ]
     span = spec.span
     span_first = spec.span_first
     # SpanFirst is SpanPositionRange(lo=0) (SpanFirstQuery.java:34)
@@ -2982,30 +2897,21 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         (span_first[0], 0, span_first[1]) if span_first is not None else None
     )
     term_automaton = spec.term_automaton
-    if phrase_clauses and (multi_phrase or span or span_posrange or term_automaton):
-        raise ValueError("phrase clauses cannot mix with span/multi-phrase specs")
-    # span/multi-phrase/posrange/automaton: the single-positional machinery
-    positional = bool(multi_phrase or span or span_posrange or term_automaton)
+    # span/posrange/automaton: the single-positional machinery (topk_spec
+    # refuses to mix it with phrase clauses)
+    positional = bool(span or span_posrange or term_automaton)
     auto_terms = (
         sorted({lab for _f, lab, _t in term_automaton[0] if lab})
         if term_automaton is not None else []
     )
-    # positional terms that exist in the index (dead multi-phrase
-    # alternatives are skipped at decode; dead required terms were
-    # rejected in topk_spec)
+    # positional terms that exist in the index (dead alternatives are
+    # skipped at decode; dead required clauses were rejected in topk_spec)
     pos_terms = sorted({t for t in spec.positional_terms if weights[t]["df"] > 0})
-    req_phrase_terms = {
-        t for pairs, _s, occ, _b in phrase_clauses if occ == "+" for t, _ in pairs
-    }
     has_opt_phrase = any(occ == "" for _p, _s, occ, _b in phrase_clauses)
-    # an optional phrase is a SHOULD clause, not a match requirement
-    required_positional = positional or bool(req_phrase_terms)
-    required = sorted(
-        set(must_terms)
-        | req_phrase_terms
-        | {c for c in span if isinstance(c, str)}
-        | ({span_posrange[0]} if span_posrange is not None else set())
-    )
+    has_req_phrase = any(occ == "+" for _p, _s, occ, _b in phrase_clauses)
+    # every clause a hit must match, as its alternative set: a range
+    # holding no term of some set has no hits
+    required_sets = spec.required_sets
     # nested groups: drop dead members per type (a member survives if any
     # of its terms is live; 'c' members keep partial term sets); '' / '-'
     # groups with no live member vanish, a '+' one stays so the scorer
@@ -3030,9 +2936,11 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         if live or occ == "+":
             group_clauses.append((occ, tuple(live), _member_terms(live)))
     n_plus_groups = sum(1 for occ, _ms, _ts in group_clauses if occ == "+")
+    # with no required clause (an optional phrase is a SHOULD clause, the
+    # automaton a disjunction) at least one SHOULD clause must match
     msm = max(
         spec.min_should_match,
-        0 if (must_terms or required_positional or n_plus_groups) else 1,
+        0 if (required_sets or term_automaton is not None) else 1,
     )
     dfs = {t: weights[t]["df"] for t in weights}
     cache = norm_cache(np.float32(avgdl))  # identical to the global 256-float cache
@@ -3040,23 +2948,20 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
     # PhraseQuery.PhraseWeight builds one TermStatistics per terms[i], so
     # a repeated term contributes its idf once per repeat ("cc cc" weighs
     # idf(cc) twice; pinned vs the compiled reference in
-    # tests/test_lucene_ground_truth.py). BoostQuery wrapping multiplies
+    # tests/test_lucene_ground_truth.py); a MultiPhraseQuery position
+    # adds every alternative's idf (df=0 alternatives still contribute
+    # idf(0), as TermContext.build does). BoostQuery wrapping multiplies
     # the weightValue (BoostQuery.java)
     pc_wvs = []
-    for pairs, _s, _occ, boost in phrase_clauses:
-        idf_sum = idf_sum_f32(idf_f32(dfs[t], doc_count) for t, _ in pairs)
+    for positions, _s, _occ, boost in phrase_clauses:
+        idf_sum = idf_sum_f32(
+            idf_f32(dfs[t], doc_count) for alts, _off in positions for t in alts
+        )
         # BoostQuery -> normalize(norm, boost): weight = (float)(idf*boost),
         # then weightValue = (float)(weight * (k1+1)) -- boost BEFORE (k1+1)
         w = np.float32(idf_sum * np.float32(boost))
         pc_wvs.append(np.float32(w * (K1 + np.float32(1.0))))
-    if multi_phrase:
-        # MultiPhraseQuery weight: every alternative's idf summed (df=0
-        # alternatives still contribute idf(0), as TermContext.build does)
-        idf_sum = idf_sum_f32(
-            idf_f32(dfs[t], doc_count) for _off, alts in multi_phrase for t in alts
-        )
-        pos_wv = np.float32(idf_sum * (K1 + np.float32(1.0)))
-    elif span:
+    if span:
         # SpanWeight.buildSimWeight: term->context MAP, so DISTINCT terms
         # (SpanOr alternatives all contribute their contexts);
         # SpanNot/Containing/Within maps include BOTH sides' contexts
@@ -3081,8 +2986,9 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         )
         pos_wv = np.float32(idf_sum * (K1 + np.float32(1.0)))
 
-    # the conjunction's block skip leads on the rarest required term
-    lead = min(required, key=lambda t: dfs[t]) if required else None
+    # the conjunction's block skip leads on the rarest one-term set
+    lead_terms = sorted({alts[0] for alts in required_sets if len(alts) == 1})
+    lead = min(lead_terms, key=lambda t: dfs[t]) if lead_terms else None
 
     def decode(scan) -> dict:
         """The scan's postings, blocks the lead's span rules out skipped."""
@@ -3093,19 +2999,8 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         """One doc range's k best (doc_id, score) arrays, ordered score
         DESC, doc_id ASC, from its decoded postings."""
         d_arr = deleted_local if deleted_local is not None else deleted
-        if not per_term or any(t not in per_term for t in required):
-            return _NO_HITS
-        if any(
-            not any(t in per_term for t in alts) for _off, alts in multi_phrase
-        ):
-            return _NO_HITS
-        if any(
-            not any(t in per_term for t in _span_alts(c)) for c in span
-        ):
-            return _NO_HITS
-        if any(
-            occ == "+" and not any(t in per_term for t in ts)
-            for occ, _ms, ts in group_clauses
+        if not per_term or any(
+            not any(t in per_term for t in alts) for alts in required_sets
         ):
             return _NO_HITS
         scoring_present = any(t in per_term for t in should_terms) or any(
@@ -3114,12 +3009,13 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         )
         # an optional phrase can be the only scoring clause in the range
         opt_phrase_possible = any(
-            occ == "" and all(t in per_term for t, _ in pairs)
-            for pairs, _s, occ, _b in phrase_clauses
+            occ == "" and all(
+                any(t in per_term for t in alts) for alts, _off in positions
+            )
+            for positions, _s, occ, _b in phrase_clauses
         )
-        if (not scoring_present and not required and not multi_phrase
-                and not span  # all-SpanOr clause lists have no required term
-                and not opt_phrase_possible and term_automaton is None):
+        if not (scoring_present or required_sets or opt_phrase_possible
+                or term_automaton is not None):
             return _NO_HITS
 
         base = min(int(v[0][0]) for v in per_term.values())
@@ -3263,32 +3159,36 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
             mask &= should_hits >= msm
 
         if phrase_clauses:
-            # 1..N PhraseQuery clauses: per clause, conjunction on docs
-            # first (two-phase), then position verify on survivors
-            req_ok = np.ones(width, dtype=bool) if req_phrase_terms else None
-            for (pairs, slop, occ, _boost), wv in zip(phrase_clauses, pc_wvs):
-                pterms = sorted({t for t, _ in pairs})
-                if any(t not in per_term for t in pterms):
+            # 1..N phrase clauses: per clause, conjunction of the
+            # positions' union postings on docs first (two-phase), then
+            # position verify on survivors
+            req_ok = np.ones(width, dtype=bool) if has_req_phrase else None
+            for (positions, slop, occ, _boost), wv in zip(phrase_clauses, pc_wvs):
+                live = [
+                    [t for t in alts if t in per_term] for alts, _off in positions
+                ]
+                if not all(live):
                     if occ == "+":
                         return _NO_HITS
                     continue  # optional phrase can't match in this range
-                cand_set = set.intersection(
-                    *[set(per_term[t][0].tolist()) for t in pterms]
-                )
+                cand_set = set.intersection(*[
+                    set().union(*(per_term[t][0].tolist() for t in ts))
+                    for ts in live
+                ])
                 cand_mask = np.zeros(width, dtype=bool)
                 if cand_set:
                     cand_mask[np.fromiter(cand_set, dtype=np.int64) - base] = True
                 cand = np.flatnonzero(mask & cand_mask) + base
                 if cand.size:
                     if slop > 0:
-                        pf = _sloppy_phrase_freqs(per_term, pairs, cand, slop)
+                        pf = _sloppy_phrase_pf(per_term, positions, cand, slop)
                     else:
-                        pf = _phrase_freqs(per_term, pairs, cand)
+                        pf = _exact_phrase_pf(per_term, positions, cand)
                     keep = pf > 0
                     cand, pf = cand[keep], pf[keep]
                 if cand.size:
                     nb_map: dict = {}
-                    for t in pterms:
+                    for t in sorted({t for ts in live for t in ts}):
                         d0, _tf0, nb0, _ = per_term[t]
                         nb_map.update(zip(d0.tolist(), nb0.tolist()))
                     nbv = np.array([nb_map[int(c)] for c in cand], dtype=np.uint8)
@@ -3322,14 +3222,6 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
                     if t in per_term:
                         ua |= set(per_term[t][0].tolist())
                 cand_sets = [ua]
-            elif multi_phrase:
-                cand_sets = []
-                for _off, alts in multi_phrase:
-                    u: set = set()
-                    for t in alts:
-                        if t in per_term:
-                            u |= set(per_term[t][0].tolist())
-                    cand_sets.append(u)
             elif span:
                 cand_sets = []
                 for c in span:
@@ -3351,13 +3243,6 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
                 return _NO_HITS
             if term_automaton is not None:
                 pf = _term_automaton_freqs(per_term, term_automaton, cand)
-            elif multi_phrase:
-                if spec.multi_phrase_slop > 0:
-                    pf = _sloppy_multi_phrase_freqs(
-                        per_term, multi_phrase, cand, spec.multi_phrase_slop
-                    )
-                else:
-                    pf = _multi_phrase_freqs(per_term, multi_phrase, cand)
             elif span:
                 pf = _span_near_freqs(
                     per_term, span, spec.span_slop, spec.span_ordered, cand,

@@ -328,17 +328,28 @@ def _group_terms(members) -> tuple[str, ...]:
 
 def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.float32]]:
     """Control for BooleanSpec queries (engine.BooleanSpec): MUST/SHOULD/
-    MUST_NOT/minShouldMatch, DisjunctionMax, exact/sloppy PhraseQuery,
-    MultiPhraseQuery, SpanNear (ordered/unordered), SpanFirst, and
+    MUST_NOT/minShouldMatch, DisjunctionMax, SpanNear (ordered/
+    unordered), SpanFirst, any number of required or optional, boosted
+    phrase clauses ((positions, slop, occur, boost), ...) whose positions
+    ((term | (alt, ...), offset), ...) match the union of their
+    alternatives (PhraseQuery and MultiPhraseQuery, exact or sloppy), and
     nested groups ((occur, (member, ...)), ...) whose members are a bare
     term (scored with the global weight), ("c", boost, (term, ...)) (a
     constant-score multi-term member scoring float32(boost)) or
     ("w", ((term, weightValue), ...)) (blended fuzzy members, their
-    double sum cast to float32)."""
+    double sum cast to float32). Plain dicts and sets throughout: the
+    reference the engine's numpy scorer is checked against."""
     should = [t for t in spec.should if t in idx.postings]
     must = list(spec.must)
-    # 0..N PhraseQuery clauses [(pairs, slop, occur, boost)]
-    phrase_clauses = [tuple(pc) for pc in (getattr(spec, "phrase_clauses", ()) or ())]
+    # 0..N phrase clauses [(positions, slop, occur, boost)], each position
+    # as (alternative set, offset)
+    phrase_clauses = [
+        (
+            tuple(((c,) if isinstance(c, str) else tuple(c), off) for c, off in positions),
+            slop, occ, boost,
+        )
+        for positions, slop, occ, boost in (getattr(spec, "phrases", ()) or ())
+    ]
     # nested groups (typed members: scored term / const wrapper /
     # blended); dead members drop, a '+' group with no live member
     # matches nothing
@@ -361,12 +372,11 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
             return []
         if live:
             groups.append((occ, tuple(live), _group_terms(live)))
-    all_phrase_terms = {t for pairs, _s, _o, _b in phrase_clauses for t, _ in pairs}
-    req_pc_terms = {
-        t for pairs, _s, occ, _b in phrase_clauses if occ == "+" for t, _ in pairs
+    all_phrase_terms = {
+        t for positions, _s, _o, _b in phrase_clauses for alts, _off in positions
+        for t in alts
     }
     opt_pc = [pc for pc in phrase_clauses if pc[2] == ""]
-    multi_phrase = list(getattr(spec, "multi_phrase", ()) or ())
     raw_span = tuple(getattr(spec, "span", ()) or ())
     # span clauses may be alternative TUPLES (SpanOr of term spans —
     # ComplexPhraseQueryParser elements); normalize for the walks
@@ -375,21 +385,21 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
     )
     span = tuple(t for c in span_clauses for t in c)
     span_first = getattr(spec, "span_first", None)
-    positional = bool(phrase_clauses or multi_phrase or span or span_first)
-    required = sorted(set(must)
-                      | req_pc_terms
-                      | {c[0] for c in span_clauses if len(c) == 1}
-                      | ({span_first[0]} if span_first else set()))
-    if any(t not in idx.postings for t in required):
-        return []
-    if any(all(t not in idx.postings for t in alts) for _off, alts in multi_phrase):
-        return []
-    # a SpanOr clause needs >= 1 live alternative
-    if any(all(t not in idx.postings for t in c) for c in span_clauses):
+    # every clause a hit must match, as its alternative set: must terms,
+    # span clauses (a SpanOr needs one live alternative), each position
+    # of a required phrase, the SpanFirst term
+    required = (
+        [(t,) for t in must]
+        + list(span_clauses)
+        + [alts for positions, _s, occ, _b in phrase_clauses if occ == "+"
+           for alts, _off in positions]
+        + ([(span_first[0],)] if span_first else [])
+    )
+    if any(all(t not in idx.postings for t in alts) for alts in required):
         return []
     pos_terms = all_phrase_terms | set(span) | (
         {span_first[0]} if span_first else set()
-    ) | {t for _off, alts in multi_phrase for t in alts}
+    )
     group_terms = {m for _occ, ms, _ts in groups for m in ms if isinstance(m, str)}
     boost_map = dict(getattr(spec, "boosts", ()) or ())
     weights = {
@@ -404,36 +414,17 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
         return set.union(*[set(idx.postings.get(t, {})) for t in ts]) if ts else set()
 
     # candidates
-    pos_group_docs = [_gdocs(ts) for occ, _ms, ts in groups if occ != "-"]
-    alt_span = [c for c in span_clauses if len(c) > 1]
     if required:
-        cand = set.intersection(*[set(idx.postings[t]) for t in required])
-    elif alt_span:
-        cand = set.intersection(*[
-            set.union(*[set(idx.postings.get(t, {})) for t in c])
-            for c in alt_span
-        ])
-    elif multi_phrase:
-        cand = set.intersection(*[
-            set.union(*[set(idx.postings.get(t, {})) for t in alts])
-            for _off, alts in multi_phrase
-        ])
+        cand = set.intersection(*[_gdocs(alts) for alts in required])
     else:
         cand = set()
         if should:
             cand |= set.union(*[set(idx.postings[t]) for t in set(should)])
-        for gd in pos_group_docs:
-            cand |= gd
-        for pairs, _s, _occ, _b in opt_pc:
-            pt = sorted({t for t, _ in pairs})
-            if pt and all(t in idx.postings for t in pt):
-                cand |= set.intersection(*[set(idx.postings[t]) for t in pt])
-    if multi_phrase and required:
-        for _off, alts in multi_phrase:
-            cand &= set.union(*[set(idx.postings.get(t, {})) for t in alts])
-    if alt_span and (required or multi_phrase):
-        for c in alt_span:
-            cand &= set.union(*[set(idx.postings.get(t, {})) for t in c])
+        for occ, _ms, ts in groups:
+            if occ != "-":
+                cand |= _gdocs(ts)
+        for positions, _s, _occ, _b in opt_pc:
+            cand |= set.intersection(*[_gdocs(alts) for alts, _off in positions])
     for occ, _ms, ts in groups:
         if occ == "+":
             cand &= _gdocs(ts)
@@ -442,98 +433,43 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
     for t in set(spec.must_not):
         cand -= set(idx.postings.get(t, {}))
     n_plus_groups = sum(1 for occ, _ms, _ts in groups if occ == "+")
-    required_positional = (
-        bool(multi_phrase or span or span_first) or bool(req_pc_terms)
-    )
-    msm = max(spec.min_should_match,
-              0 if (required or required_positional or n_plus_groups) else 1)
+    msm = max(spec.min_should_match, 0 if (required or n_plus_groups) else 1)
 
-    def _phrase_pf(pairs, slop, docs):
-        """pf per doc for one PhraseQuery clause over `docs`."""
-        pterms = sorted({t for t, _ in pairs})
+    def _phrase_pf(positions, slop, docs):
+        """pf per doc for one phrase clause over `docs`: a position's
+        occurrences are the union of its alternatives' (UnionPostingsEnum);
+        slop > 0 is Lucene-exact SloppyPhraseScorer (search/sloppy.py)."""
+        from .sloppy import sloppy_freq
+
         out: dict = {}
-        if any(t not in idx.positions for t in pterms):
-            return out
-        if slop > 0:
-            # Lucene-exact SloppyPhraseScorer semantics (search/sloppy.py)
-            from .sloppy import sloppy_freq
-
-            for d in sorted(docs):
-                plists = [idx.positions[t].get(d, []) for t, _ in pairs]
-                if any(not p for p in plists):
-                    continue
+        for d in sorted(docs):
+            plists = [
+                sorted(p for t in alts for p in idx.positions.get(t, {}).get(d, []))
+                for alts, _off in positions
+            ]
+            if any(not p for p in plists):
+                continue
+            if slop > 0:
                 f = sloppy_freq(
-                    plists, [off for _, off in pairs], slop,
-                    terms=[t for t, _ in pairs],
+                    plists, [off for _alts, off in positions], slop,
+                    terms=[alts for alts, _off in positions],
                 )
-                if f > 0:
-                    out[d] = f
-        else:
-            for d in sorted(docs):
-                base_t, base_off = pairs[0]
-                match = [p - base_off for p in idx.positions[base_t].get(d, [])]
-                for t, off in pairs[1:]:
-                    pset = {p - off for p in idx.positions[t].get(d, [])}
-                    match = [p for p in match if p in pset]
-                    if not match:
-                        break
-                if match:
-                    out[d] = len(match)
+            else:
+                match = {p - positions[0][1] for p in plists[0]}
+                for pl, (_alts, off) in zip(plists[1:], positions[1:]):
+                    match &= {p - off for p in pl}
+                f = len(match)
+            if f > 0:
+                out[d] = f
         return out
 
     pc_maps = []
-    if phrase_clauses:
-        for pairs, slop, occ, _b in phrase_clauses:
-            m = _phrase_pf(pairs, slop, cand)
-            pc_maps.append(m)
-            if occ == "+":
-                cand = set(m)
-    if multi_phrase:
-        mp_slop = int(getattr(spec, "multi_phrase_slop", 0) or 0)
-        pf_map = {}
-        if mp_slop > 0:
-            # SloppyPhraseScorer over per-position union postings,
-            # incl. multi-term repeats (search/sloppy.py)
-            from .sloppy import sloppy_freq
-
-            term_sets = [tuple(alts) for _off, alts in multi_phrase]
-            for d in sorted(cand):
-                plists, offs = [], []
-                ok = True
-                for off, alts in multi_phrase:
-                    merged = sorted(
-                        p
-                        for t in alts
-                        for p in idx.positions.get(t, {}).get(d, [])
-                    )
-                    if not merged:
-                        ok = False
-                        break
-                    plists.append(merged)
-                    offs.append(off)
-                if ok:
-                    fq = sloppy_freq(plists, offs, mp_slop, terms=term_sets)
-                    if fq > 0:
-                        pf_map[d] = fq
-        else:
-            for d in sorted(cand):
-                base_off = multi_phrase[0][0]
-                match = {
-                    p - base_off
-                    for t in multi_phrase[0][1]
-                    for p in idx.positions.get(t, {}).get(d, [])
-                }
-                for off, alts in multi_phrase[1:]:
-                    pset = {
-                        p - off for t in alts for p in idx.positions.get(t, {}).get(d, [])
-                    }
-                    match &= pset
-                    if not match:
-                        break
-                if match:
-                    pf_map[d] = len(match)
-        cand = set(pf_map)
-    elif span:
+    for positions, slop, occ, _b in phrase_clauses:
+        m = _phrase_pf(positions, slop, cand)
+        pc_maps.append(m)
+        if occ == "+":
+            cand = set(m)
+    if span:
         from .spans import (
             span_containing_freq,
             span_not_freq,
@@ -682,13 +618,15 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
     # _make_range_scorer: wv = f32(f32(idf_sum*(k1+1)) * f32(boost)))
     if phrase_clauses and (pos_terms & set(idx.postings)):
         cache = weights[sorted(pos_terms & set(idx.postings))[0]].cache
-        for (pairs, _s, _occ, boost), m in zip(phrase_clauses, pc_maps):
-            pterms = sorted({t for t, _ in pairs})
-            if any(t not in idx.postings for t in pterms):
+        for (positions, _s, _occ, boost), m in zip(phrase_clauses, pc_maps):
+            if any(all(t not in idx.postings for t in alts) for alts, _off in positions):
                 continue
-            # PhraseWeight: one idf per clause occurrence (repeats again)
+            # PhraseWeight: one idf per clause occurrence (repeats again);
+            # a MultiPhraseQuery position adds every alternative's idf,
+            # df=0 ones included (TermContext.build)
             idf_sum = idf_sum_f32(
-                idf_f32(len(idx.postings[t]), idx.doc_count) for t, _ in pairs
+                idf_f32(len(idx.postings.get(t, {})), idx.doc_count)
+                for alts, _off in positions for t in alts
             )
             # boost multiplies the idf sum BEFORE (k1+1) (BM25Stats.normalize)
             w = np.float32(idf_sum * np.float32(boost))
@@ -697,14 +635,8 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
             ps = (wv * pf / (pf + cache[norm])).astype(np.float32)
             ps[pf == 0] = np.float32(0.0)
             (req_clause if _occ == "+" else per_clause).append(ps)
-    if positional and not phrase_clauses and (pos_terms & set(idx.postings)):
-        if multi_phrase:
-            idf_sum = idf_sum_f32(
-                idf_f32(len(idx.postings.get(t, {})), idx.doc_count)
-                for _off, alts in multi_phrase
-                for t in alts
-            )
-        elif span:
+    if (span or span_first) and (pos_terms & set(idx.postings)):
+        if span:
             # SpanNot/Containing/Within maps include both sides' contexts
             sn = (
                 set(getattr(spec, "span_not", ()) or ())

@@ -52,7 +52,7 @@ import re
 from dataclasses import dataclass, field
 
 from ..analysis.tokenizer import analyze
-from .engine import BooleanSpec, IndexSearcher, phrase_spec
+from .engine import BooleanSpec, IndexSearcher, phrase_pairs
 
 _LEXER = re.compile(
     r"""
@@ -78,14 +78,9 @@ class ParsedQuery:
     should: list[str] = field(default_factory=list)
     must: list[str] = field(default_factory=list)
     must_not: list[str] = field(default_factory=list)
-    phrase: tuple = ()  # ((term, offset), ...) from the phrase clause
-    slop: int = 0
-    phrase_boost: float = 1.0
-    # '' = optional SHOULD phrase clause, '+' = required (see
-    # BooleanSpec.phrase_occur)
-    phrase_occur: str = "+"
-    # additional phrase clauses beyond the first:
-    # [(pairs, slop, occur, boost)] (BooleanSpec.phrases)
+    # phrase clauses in query order: [(pairs, slop, occur, boost)] with
+    # pairs = ((term, offset), ...) and occur '+' (required) or ''
+    # (optional SHOULD) (BooleanSpec.phrases)
     phrases: list = field(default_factory=list)
     boosts: dict[str, float] = field(default_factory=dict)
     # unexpanded multi-term clauses: [(kind, payload, occur, boost)];
@@ -273,19 +268,13 @@ def parse(query: str, default_operator: str = "or") -> ParsedQuery:
             continue
         kind = val["kind"]
         if kind == "phrase":
-            spec = phrase_spec(val["text"], slop=val["slop"])
-            if not spec.phrase:
+            pairs = phrase_pairs(val["text"])
+            if not pairs:
                 continue
             if occur == "-":
                 raise ValueError("prohibited (-) phrase clause is not supported")
             boost = val["boost"] if val["boost"] is not None else 1.0
-            if out.phrase:
-                # 2nd..Nth phrase clause (BooleanQuery holds any number)
-                out.phrases.append((spec.phrase, spec.slop, occur, float(boost)))
-                continue
-            out.phrase, out.slop = spec.phrase, spec.slop
-            out.phrase_boost = float(boost)
-            out.phrase_occur = occur
+            out.phrases.append((pairs, val["slop"], occur, float(boost)))
             continue
         if kind == "range":
             out.expansions.append(
@@ -438,10 +427,6 @@ def to_spec(
         should=tuple(should),
         must=tuple(must),
         must_not=tuple(must_not),
-        phrase=parsed.phrase,
-        phrase_occur=parsed.phrase_occur,
-        slop=parsed.slop,
-        phrase_boost=parsed.phrase_boost,
         phrases=tuple(parsed.phrases),
         boosts=tuple(sorted(parsed.boosts.items())),
         groups=tuple(groups),

@@ -985,14 +985,14 @@ class _RangeCtx:
         return np.float32(self.weights[t]["weight_value"])
 
     def phrase_freq(self, pairs, slop: int) -> np.ndarray:
-        from .engine import _phrase_freqs, _sloppy_phrase_freqs
+        from .engine import _exact_phrase_pf, _sloppy_phrase_pf
 
         if any(t not in self.per_term for t, _off in pairs):
             return np.zeros(self.n, dtype=np.float32)
         if slop > 0:
-            pf = _sloppy_phrase_freqs(self.per_term, tuple(pairs), self.docs, slop)
+            pf = _sloppy_phrase_pf(self.per_term, tuple(pairs), self.docs, slop)
         else:
-            pf = _phrase_freqs(self.per_term, tuple(pairs), self.docs)
+            pf = _exact_phrase_pf(self.per_term, tuple(pairs), self.docs)
         return pf.astype(np.float32)
 
     def span_freq(self, kind: str, clauses, slop: int, extra) -> np.ndarray:

@@ -552,12 +552,6 @@ def classic_parsed_to_tree(parsed):
             clauses.append(("+", term_node(t)))
         for t in parsed.must_not:
             clauses.append(("-", ("term", t)))
-    if parsed.phrase:
-        clauses.append((
-            parsed.phrase_occur,
-            _maybe_boost(("phrase", tuple(parsed.phrase), parsed.slop),
-                         float(parsed.phrase_boost)),
-        ))
     for pairs, slop, occ, b in parsed.phrases:
         clauses.append((occ, _maybe_boost(("phrase", tuple(pairs), slop),
                                           float(b))))

@@ -8,7 +8,12 @@ import pytest
 
 from lucene_solr_spark.corpus import make_corpus
 from lucene_solr_spark.index.builder import build_index
-from lucene_solr_spark.search.engine import BooleanSpec, IndexSearcher, phrase_spec
+from lucene_solr_spark.search.engine import (
+    BooleanSpec,
+    IndexSearcher,
+    phrase_pairs,
+    phrase_spec,
+)
 from lucene_solr_spark.search.oracle import build_oracle_index, oracle_topk_spec
 
 N_DOCS = 300
@@ -102,8 +107,7 @@ def test_sloppy_phrase_rank_identity(built, slop):
 def test_phrase_with_filter(built):
     """Mixed spec: phrase + MUST_NOT (two-phase + exclusion compose)."""
     searcher, oidx = built
-    spec = phrase_spec("parse index")
-    spec = BooleanSpec(phrase=spec.phrase, must_not=("hotcommon",))
+    spec = BooleanSpec(phrases=phrase_spec("parse index").phrases, must_not=("hotcommon",))
     expected = oracle_topk_spec(oidx, spec, k=10)
     got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
     _assert_identical(got, expected, "phrase+not")
@@ -260,19 +264,16 @@ OPTIONAL_PHRASE_CASES = [
 
 @pytest.mark.parametrize("q,slop,boost,should", OPTIONAL_PHRASE_CASES)
 def test_optional_phrase_rank_identity(built, q, slop, boost, should):
-    """phrase_occur='': the phrase is one SHOULD clause among others
+    """occur '': the phrase is one SHOULD clause among others
     (BooleanQuery default-OR), not a filter."""
     searcher, oidx = built
-    base = phrase_spec(q, slop=slop)
-    spec = BooleanSpec(
-        phrase=base.phrase, slop=base.slop, phrase_occur="",
-        phrase_boost=boost, should=should,
-    )
+    pairs = phrase_pairs(q)
+    spec = BooleanSpec(phrases=((pairs, slop, "", boost),), should=should)
     expected = oracle_topk_spec(oidx, spec, k=10)
     got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
     _assert_identical(got, expected, ("opt-phrase", q, slop, boost))
     # the optional phrase must be a strict superset of the required one
-    req = BooleanSpec(phrase=base.phrase, slop=base.slop, should=should)
+    req = BooleanSpec(phrases=((pairs, slop, "+", 1.0),), should=should)
     req_docs = {d for d, _ in oracle_topk_spec(oidx, req, k=1000)}
     opt_docs = {d for d, _ in oracle_topk_spec(oidx, spec, k=1000)}
     assert req_docs <= opt_docs
@@ -282,8 +283,7 @@ def test_phrase_boost_rank_identity(built):
     """'"..."^2' (BoostQuery around PhraseQuery): boosted weightValue,
     float32-identical to the control oracle."""
     searcher, oidx = built
-    base = phrase_spec("parse index")
-    spec = BooleanSpec(phrase=base.phrase, phrase_boost=2.0)
+    spec = BooleanSpec(phrases=((phrase_pairs("parse index"), 0, "+", 2.0),))
     expected = oracle_topk_spec(oidx, spec, k=10)
     got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
     _assert_identical(got, expected, "phrase-boost")
@@ -314,15 +314,19 @@ def test_ngram_phrase_rewrite_superset(built):
     set must contain every original match (equal on true n-gram fields)."""
     from lucene_solr_spark.search.engine import ngram_phrase_rewrite
 
-    full = phrase_spec("parse index merge").phrase
+    full = phrase_pairs("parse index merge")
     if len(full) < 3:
         return
     red = ngram_phrase_rewrite(full, 2)
     searcher, oidx = built
-    full_docs = {d for d, _ in oracle_topk_spec(oidx, BooleanSpec(phrase=full), k=1000)}
+    full_docs = {
+        d for d, _ in oracle_topk_spec(
+            oidx, BooleanSpec(phrases=((full, 0, "+", 1.0),)), k=1000)
+    }
     got = {
         r["doc_id"]
-        for r in searcher.topk_spec(BooleanSpec(phrase=red), k=1000).collect()
+        for r in searcher.topk_spec(
+            BooleanSpec(phrases=((red, 0, "+", 1.0),)), k=1000).collect()
     }
     assert full_docs <= got
 
@@ -361,6 +365,8 @@ def test_blended_term_rank_identity(built):
     _assert_identical(got, rows[:10], "blended")
 
 
+# a clause's positions are a phrase string, or ((term | (alt, ...),
+# offset), ...) for a MultiPhraseQuery clause
 MULTI_CLAUSE_PHRASES = [
     # two required phrases
     ((("parse index", 0, "+", 1.0), ("index merge", 0, "+", 1.0)), ()),
@@ -368,22 +374,26 @@ MULTI_CLAUSE_PHRASES = [
     ((("parse index", 0, "+", 1.0), ("parse merge", 2, "", 2.0)), ()),
     # two optional phrases + a should term (msm via any clause)
     ((("parse index", 0, "", 1.0), ("index merge", 0, "", 1.0)), ("token",)),
+    # an optional, boosted multi-alternative clause + a should term
+    (((((("parse", "merge"), 0), (("index", "token"), 1)), 0, "", 2.5),), ("hotcommon",)),
+    # a plain phrase + a required, sloppy multi-alternative clause
+    ((("parse index", 0, "+", 1.0),
+      (((("merge", "token"), 0), ("parse", 1)), 2, "+", 1.0)), ()),
 ]
+
+
+def _phrase_clause(text, slop, occ, boost):
+    positions = phrase_pairs(text) if isinstance(text, str) else text
+    return (positions, slop, occ, boost)
 
 
 @pytest.mark.parametrize("pcs,should", MULTI_CLAUSE_PHRASES)
 def test_multi_phrase_clauses_rank_identity(built, pcs, should):
-    """A BooleanQuery with SEVERAL PhraseQuery clauses: engine == control
+    """A BooleanQuery with SEVERAL phrase clauses: engine == control
     oracle rank+score (each clause keeps its own slop/boost/occur)."""
     searcher, oidx = built
-    first_text, first_slop, first_occ, first_boost = pcs[0]
-    base = phrase_spec(first_text, slop=first_slop)
-    extra = tuple(
-        (phrase_spec(t, slop=s).phrase, s, occ, b) for t, s, occ, b in pcs[1:]
-    )
     spec = BooleanSpec(
-        phrase=base.phrase, slop=base.slop, phrase_occur=first_occ,
-        phrase_boost=first_boost, phrases=extra, should=should,
+        phrases=tuple(_phrase_clause(*pc) for pc in pcs), should=should,
     )
     expected = oracle_topk_spec(oidx, spec, k=10)
     got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
@@ -392,10 +402,9 @@ def test_multi_phrase_clauses_rank_identity(built, pcs, should):
     if all(occ == "+" for _t, _s, occ, _b in pcs) and not should:
         singles = []
         for t, s, _occ, b in pcs:
-            ps = phrase_spec(t, slop=s)
             singles.append({
                 d for d, _ in oracle_topk_spec(
-                    oidx, BooleanSpec(phrase=ps.phrase, slop=ps.slop, phrase_boost=b), k=1000)
+                    oidx, BooleanSpec(phrases=(_phrase_clause(t, s, "+", b),)), k=1000)
             })
         assert {d for d, _ in oracle_topk_spec(oidx, spec, k=1000)} == set.intersection(*singles)
 

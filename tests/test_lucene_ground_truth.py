@@ -173,20 +173,21 @@ def test_topk_matches_compiled_reference():
                 pairs = tuple((t, i) for i, t in enumerate(ts))
                 queries.append((f"PHRASE {slop} {' '.join(ts)}",
                                 lambda pairs=pairs, slop=slop: oracle_topk_spec(
-                                    idx, BooleanSpec(phrase=pairs, slop=slop), k=10)))
+                                    idx, BooleanSpec(phrases=((pairs, slop, "+", 1.0),)),
+                                    k=10)))
             else:
                 n_pos = rng.randint(2, 3)
                 mp, off = [], 0
                 for _ in range(n_pos):
                     alts = tuple(sorted(rng.sample(VOCAB, rng.randint(1, 2))))
-                    mp.append((off, alts))
+                    mp.append((alts, off))
                     off += 1
                 slop = rng.randint(0, 4)
-                spec_str = " ".join(f"{o}:{','.join(a)}" for o, a in mp)
+                spec_str = " ".join(f"{o}:{','.join(a)}" for a, o in mp)
                 queries.append((f"MPHRASE {slop} {spec_str}",
                                 lambda mp=mp, slop=slop: oracle_topk_spec(
-                                    idx, BooleanSpec(multi_phrase=tuple(mp),
-                                                     multi_phrase_slop=slop), k=10)))
+                                    idx, BooleanSpec(phrases=((tuple(mp), slop, "+", 1.0),)),
+                                    k=10)))
 
         expected = gt.run_topk(docs, [q for q, _fn in queries])
         assert len(expected) == len(queries)
@@ -442,8 +443,7 @@ def test_boosts_match_compiled_reference():
                 pairs = tuple((t, i) for i, t in enumerate(ts))
                 fns.append(lambda pairs=pairs, slop=slop, boost=boost:
                            oracle_topk_spec(idx, BooleanSpec(
-                               phrase=pairs, slop=slop,
-                               phrase_boost=boost), k=10))
+                               phrases=((pairs, slop, "+", boost),)), k=10))
         expected = gt.run_topk(docs, queries)
         assert len(expected) == len(queries)
         for qline, fn, exp in zip(queries, fns, expected):
@@ -1023,10 +1023,9 @@ def test_query_rescorer_matches_compiled_reference():
                 slop = rng.randint(0, 3)
                 qline = (f"RESCORE {weight} {first_n} {top_n} {len(q1)} "
                          f"{' '.join(q1)} PHRASE {slop} {' '.join(p_terms)}")
-                spec2 = BooleanSpec(
-                    phrase=tuple((t, i) for i, t in enumerate(p_terms)),
-                    slop=slop,
-                )
+                spec2 = BooleanSpec(phrases=(
+                    (tuple((t, i) for i, t in enumerate(p_terms)), slop, "+", 1.0),
+                ))
             cases.append((qline, q1, weight, first_n, top_n, spec2))
 
         expected = gt.run_topk(docs, [c[0] for c in cases])
@@ -1609,9 +1608,9 @@ def test_memory_index_matches_compiled_reference():
         else:
             ts = [rng.choice(VOCAB) for _ in range(rng.randint(2, 3))]
             slop = rng.randint(0, 3)
-            spec = BooleanSpec(
-                phrase=tuple((t, i) for i, t in enumerate(ts)), slop=slop
-            )
+            spec = BooleanSpec(phrases=(
+                (tuple((t, i) for i, t in enumerate(ts)), slop, "+", 1.0),
+            ))
             cases.append((
                 f"PHRASE {slop} {' '.join(ts)}#{doc}",
                 lambda mi=mi, spec=spec: mi.score(spec),

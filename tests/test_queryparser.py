@@ -19,14 +19,16 @@ def test_must_and_not():
 
 def test_phrase_with_slop():
     p = parse('"fast sort"~3 spark')
-    assert p.slop == 3
-    assert [t for t, _ in p.phrase] == ["fast", "sort"]
+    [(pairs, slop, _occ, _boost)] = p.phrases
+    assert slop == 3
+    assert [t for t, _ in pairs] == ["fast", "sort"]
     assert p.should == ["spark"]
 
 
 def test_phrase_keeps_stop_gap():
     p = parse('"merge the sort"')
-    assert p.phrase == (("merge", 0), ("sort", 2))  # stop word leaves a gap
+    # stop word leaves a gap
+    assert p.phrases[0][0] == (("merge", 0), ("sort", 2))
 
 
 def test_boost():
@@ -199,14 +201,15 @@ def test_term_range_open_ended():
 
 def test_phrase_boost_and_occur():
     p = parse('"fast sort"^2 AND spark')
-    assert p.phrase_boost == 2.0
-    assert p.phrase_occur == "+"  # AND-promoted
+    [(_pairs, _slop, occ, boost)] = p.phrases
+    assert boost == 2.0
+    assert occ == "+"  # AND-promoted
     assert p.must == ["spark"]
 
 
 def test_optional_phrase_occur():
     p = parse('"fast sort" spark')
-    assert p.phrase_occur == ""
+    assert p.phrases[0][2] == ""
     assert p.should == ["spark"]
 
 
@@ -238,16 +241,18 @@ def test_reuters_query_set_parses():
 
 def test_reuters_world_bank_and():
     p = parse('"World Bank"^2 AND Nigeria')
-    assert [t for t, _ in p.phrase] == ["world", "bank"]
-    assert p.phrase_boost == 2.0
-    assert p.phrase_occur == "+"
+    [(pairs, _slop, occ, boost)] = p.phrases
+    assert [t for t, _ in pairs] == ["world", "bank"]
+    assert boost == 2.0
+    assert occ == "+"
     assert p.must == ["nigeria"]
 
 
 def test_reuters_world_bank_minus():
     p = parse('"World Bank" -Nigeria')
-    assert [t for t, _ in p.phrase] == ["world", "bank"]
-    assert p.phrase_occur == ""
+    [(pairs, _slop, occ, _boost)] = p.phrases
+    assert [t for t, _ in pairs] == ["world", "bank"]
+    assert occ == ""
     assert p.must_not == ["nigeria"]
 
 
@@ -262,10 +267,11 @@ def test_reuters_gatt_long_query():
 
 def test_multiple_phrase_clauses():
     p = parse('"fast sort" AND "merge sort"~2^3 spark')
-    assert [t for t, _ in p.phrase] == ["fast", "sort"]
-    assert p.phrase_occur == "+"  # AND-promoted
-    assert len(p.phrases) == 1
+    assert len(p.phrases) == 2
     pairs, slop, occ, boost = p.phrases[0]
+    assert [t for t, _ in pairs] == ["fast", "sort"]
+    assert (slop, occ, boost) == (0, "+", 1.0)  # AND-promoted
+    pairs, slop, occ, boost = p.phrases[1]
     assert [t for t, _ in pairs] == ["merge", "sort"]
     assert (slop, occ, boost) == (2, "+", 3.0)
     assert p.should == ["spark"]

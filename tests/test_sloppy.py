@@ -190,7 +190,7 @@ def test_engine_repeated_sloppy_end_to_end(spark, tmp_root):
         ((("alpha", 0), ("beta", 1), ("alpha", 2)), 3),
         ((("alpha", 0), ("alpha", 1), ("alpha", 2)), 4),
     ]:
-        spec = BooleanSpec(phrase=phrase, slop=slop)
+        spec = BooleanSpec(phrases=((phrase, slop, "+", 1.0),))
         expected = oracle_topk_spec(oidx, spec, k=10)
         got = [(r["doc_id"], r["score"]) for r in s.topk_spec(spec, k=10).collect()]
         assert len(got) == len(expected), (phrase, slop, got, expected)
@@ -617,16 +617,16 @@ def test_engine_multiterm_sloppy_end_to_end(spark, tmp_root):
     oidx = build_oracle_index(list(zip(pdf.doc_id, pdf.content)))
     cases = [
         # hidden collision: P0={alpha,beta}, P1={beta,gamma}
-        (((0, ("alpha", "beta")), (1, ("beta", "gamma"))), 2),
+        (((("alpha", "beta"), 0), (("beta", "gamma"), 1)), 2),
         # shared term both positions: P0={alpha,beta}, P1={alpha,gamma}
-        (((0, ("alpha", "beta")), (1, ("alpha", "gamma"))), 3),
+        (((("alpha", "beta"), 0), (("alpha", "gamma"), 1)), 3),
         # no repeats (simple union path)
-        (((0, ("alpha", "delta")), (1, ("beta",))), 1),
+        (((("alpha", "delta"), 0), ("beta", 1)), 1),
         # 3 positions, chained overlap
-        (((0, ("alpha", "beta")), (1, ("beta", "gamma")), (2, ("gamma", "delta"))), 4),
+        (((("alpha", "beta"), 0), (("beta", "gamma"), 1), (("gamma", "delta"), 2)), 4),
     ]
     for mp, slop in cases:
-        spec = BooleanSpec(multi_phrase=mp, multi_phrase_slop=slop)
+        spec = BooleanSpec(phrases=((mp, slop, "+", 1.0),))
         expected = oracle_topk_spec(oidx, spec, k=10)
         got = [(r["doc_id"], r["score"]) for r in s.topk_spec(spec, k=10).collect()]
         assert len(got) == len(expected), (mp, slop, got, expected)

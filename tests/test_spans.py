@@ -230,8 +230,10 @@ SPAN_SPECS = [
                 span_contain=("merge",)),
     BooleanSpec(span=("parse", "index"), span_slop=5, span_ordered=True,
                 span_within=("merge",)),
-    BooleanSpec(multi_phrase=((0, ("parse", "merge")), (1, ("index", "token")))),
-    BooleanSpec(multi_phrase=((0, ("parse",)), (1, ("index", "zzz_missing")))),
+    BooleanSpec(phrases=(((
+        (("parse", "merge"), 0), (("index", "token"), 1)), 0, "+", 1.0),)),
+    BooleanSpec(phrases=(((
+        ("parse", 0), (("index", "zzz_missing"), 1)), 0, "+", 1.0),)),
     # SpanOr-of-terms clauses inside SpanNear (ComplexPhraseQueryParser
     # elements; pinned vs the compiled binary in ground-truth round 23)
     BooleanSpec(span=(("parse", "merge"), "index"), span_slop=1,
@@ -261,6 +263,28 @@ def test_span_rank_identity(built, spec):
     assert len(got) == len(expected), (spec, got, expected)
     for (gd, gs), (ed, es) in zip(got, expected):
         assert gd == ed and np.float32(gs) == es, (spec, got, expected)
+
+
+@pytest.mark.parametrize("mix", [
+    {"span": ("parse", "index")},
+    {"span_first": ("parse", 8)},
+    {"span_position_range": ("parse", 0, 8)},
+    {"term_automaton": (((0, "parse", 1),), (1,))},
+], ids=["span", "span_first", "span_position_range", "term_automaton"])
+def test_phrase_mixed_with_positional_clause_rejected_before_read(built, monkeypatch, mix):
+    """Phrase clauses do not mix with span, position-range or automaton
+    clauses; topk_spec refuses such a spec before it reads term stats."""
+    from lucene_solr_spark.search.engine import phrase_spec
+
+    searcher, _oidx = built
+
+    def no_read(_terms):
+        raise AssertionError("term stats read for a rejected spec")
+
+    monkeypatch.setattr(searcher, "term_weights", no_read)
+    spec = BooleanSpec(phrases=phrase_spec("parse index").phrases, **mix)
+    with pytest.raises(ValueError, match="phrase clauses cannot mix"):
+        searcher.topk_spec(spec, k=5)
 
 
 def test_complex_phrase_api(built):
