@@ -51,6 +51,7 @@ import json
 import math
 import os
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -69,6 +70,7 @@ from .bm25 import (
     norm_cache,
 )
 from .postings import decode_postings, range_slices
+from .spans import span_alts, span_freq, span_sets, span_shape_error, span_terms
 from .snapshot import BucketFiles, index_filesystem
 
 TOPK_SCHEMA = T.StructType(
@@ -145,6 +147,24 @@ FILTER_DRIVER_MAX = 1_000_000
 #: with more). The cap sits where the driver still wins by 1.6x or more.
 DRIVER_SCORE_MAX_BLOCKS = 65_536
 
+#: the driver plan's cap for a spec with positional clauses (phrase, span,
+#: term automaton), never above DRIVER_SCORE_MAX_BLOCKS: their scorer
+#: verifies positions doc by doc in Python, which the driver runs serially
+#: and the distributed plan spreads over task slots, so they cross over
+#: far below term queries. Measured with `tools/wand_study.py --crossover
+#: --crossover-kinds sloppy,span,automaton` (same hosts and indexes as
+#: above; a slop-3 MultiPhraseQuery, an unordered slop-3 SpanNear and a
+#: two-step automaton over two halves of the N most frequent terms),
+#: driver vs distributed s at the bound, sloppy / span / automaton:
+#: 48k docs / 47 ranges: 805 0.74 vs 1.24 / 1.38 vs 1.63 / 0.80 vs 1.45;
+#: 2.8k 2.77 vs 2.94 / 3.61 vs 4.37 / 2.80 vs 3.08; 6.1k 4.83 vs 3.29 /
+#: 6.04 vs 3.91 / 7.38 vs 5.71; 24k docs / 188 ranges: 2.7k 1.21 vs 2.17
+#: / 1.78 vs 2.80 / 1.71 vs 3.27; 12.5k 4.47 vs 4.27 / 4.42 vs 3.40 /
+#: 6.95 vs 5.43. The driver won every row up to 2.8k blocks and lost
+#: every row from 6.1k on the 48k index (12.5k on the 24k one); the cap
+#: sits below the lowest crossover.
+DRIVER_POSITIONAL_MAX_BLOCKS = 2_048
+
 #: WAND two-wave: up to this many doc ranges the per-range block-max
 #: bounds are collected to the driver once and reused for both wave-1
 #: selection and the wave-2 survivor filter (16 bytes per range — the
@@ -164,35 +184,37 @@ class BooleanSpec:
     min_should_match: int = 0
     dismax: bool = False  # score SHOULD clauses as DisjunctionMax
     tiebreak: float = 0.0
-    # SpanNearQuery clauses in query order (spans/SpanNearQuery.java);
-    # scored via search/spans.py walks with Σ 1/(width+1). A clause is a
-    # term OR a tuple of alternative terms — a SpanOr of term spans
-    # (width-1 sub-spans union positions), the shape
-    # ComplexPhraseQueryParser's rewrite emits for wildcard/fuzzy/paren
-    # elements inside a quoted phrase
-    span: tuple = ()
-    span_slop: int = 0
-    span_ordered: bool = True
-    # SpanNotQuery excludes: drop ordered-near spans overlapping any of
-    # these terms' occurrences (spans/SpanNotQuery.java, pre=post=0)
-    span_not: tuple[str, ...] = ()
-    # SpanNot over TWO ordered SpanNears — ComplexPhraseQueryParser's
-    # in-phrase negation (rewrite:318-345): `span` holds the POSITIVE
-    # clauses at slop = slopFactor + numNegatives; span_not_near holds
-    # ALL clauses in phrase order, matched at span_not_near_slop =
-    # slopFactor; include spans overlapping an exclude span are dropped
-    span_not_near: tuple = ()
-    span_not_near_slop: int = 0
-    # SpanContainingQuery: keep only big (ordered-near) spans containing
-    # one of these terms' occurrences (spans/SpanContainingQuery.java)
-    span_contain: tuple[str, ...] = ()
-    # SpanWithinQuery: score these terms' occurrences lying WITHIN some
-    # big span (width 0 each; spans/SpanWithinQuery.java)
-    span_within: tuple[str, ...] = ()
-    # SpanFirstQuery: (term, end) — occurrences with pos+1 <= end
-    span_first: tuple[str, int] | None = None
-    # SpanPositionRangeQuery: (term, lo, hi) — lo <= pos and pos+1 <= hi
-    span_position_range: tuple[str, int, int] | None = None
+    # Span clauses, each a REQUIRED (MUST) clause, in query order:
+    # (node, ...). A node is one of Lucene's span queries (lucene/core/
+    # .../search/spans/):
+    #   ("near", clauses, slop, ordered)  SpanNearQuery; a clause is a
+    #                                     term or a tuple of alternative
+    #                                     terms — a SpanOr of term spans
+    #                                     (union of positions; normalized
+    #                                     by span_alts), the shape
+    #                                     ComplexPhraseQueryParser emits
+    #                                     for wildcard/fuzzy/paren elements
+    #   ("not", near, exclude)            SpanNotQuery, pre = post = 0:
+    #                                     near spans overlapping an exclude
+    #                                     occurrence drop; exclude is a
+    #                                     tuple of terms or a "near" node
+    #                                     (ComplexPhraseQueryParser's
+    #                                     in-phrase negation, rewrite:
+    #                                     318-345)
+    #   ("containing", near, terms)       SpanContainingQuery: near spans
+    #                                     holding one of the terms
+    #   ("within", near, terms)           SpanWithinQuery: the terms'
+    #                                     occurrences inside a near span
+    #                                     (width 0 each)
+    #   ("range", term, lo, hi)           SpanPositionRangeQuery: lo <= pos
+    #                                     and pos+1 <= hi; SpanFirstQuery
+    #                                     is lo = 0 (SpanFirstQuery.java:34)
+    # The near under not/containing/within is ordered when the other side
+    # is terms (the walks are ordered), and a near exclude shares the
+    # include's in-order flag. freq = Σ 1/(width+1) (search/spans.py);
+    # weight = float32 sum of idf over the node's DISTINCT terms, both
+    # sides included (SpanWeight's term->context map)
+    spans: tuple = ()
     # BoostQuery per-term multiplicative boosts ((term, boost), ...):
     # weightValue = idf * boost * (k1+1) (search/BoostQuery.java)
     boosts: tuple[tuple[str, float], ...] = ()
@@ -200,7 +222,7 @@ class BooleanSpec:
     # with occur in {'', '+', '-'} — the classic QueryParser's paren
     # groups and its multi-term clauses. A member is one of
     #   term                        — scored SHOULD TermQuery (a bare
-    #                                 string, as in `span`)
+    #                                 string)
     #   ("c", boost, (term, ...))   — CONSTANT_SCORE multi-term rewrite
     #                                 (MultiTermQueryConstantScoreWrapper:
     #                                 wildcard/prefix/regexp/range; the
@@ -227,7 +249,7 @@ class BooleanSpec:
     #   positions = ((term | (alt, ...), offset), ...) in query order; a
     #               bare term is one alternative, a tuple is a
     #               MultiPhraseQuery position matching any of its terms
-    #               (UnionPostingsEnum; normalized by _span_alts)
+    #               (UnionPostingsEnum; normalized by span_alts)
     #   slop      = 0: exact alignment (ExactPhraseScorer); > 0: the
     #               Lucene-exact SloppyPhraseScorer weighted freq
     #               Σ 1/(matchLength+1) over per-position union postings,
@@ -251,39 +273,43 @@ class BooleanSpec:
     # deduplicated, both reproduced exactly).
     term_automaton: tuple[tuple, tuple] | None = None
 
+    def __post_init__(self):
+        # every scoring path (topk_spec, oracle_topk_spec, MemoryIndex)
+        # sees the spec, so a shape the walks cannot score is refused here
+        for node in self.spans:
+            err = span_shape_error(node)
+            if err:
+                raise ValueError(f"span clause {node!r}: {err} is not supported")
+
     @property
     def positional_terms(self) -> tuple[str, ...]:
-        out = (
-            tuple(t for c in self.span for t in _span_alts(c))
-            + tuple(t for c in self.span_not_near for t in _span_alts(c))
-            + tuple(self.span_not) + tuple(self.span_contain) + tuple(self.span_within)
-        )
+        out = tuple(t for node in self.spans for t in span_terms(node))
         for positions, _slop, _occ, _b in self.phrases:
-            out += tuple(t for c, _off in positions for t in _span_alts(c))
-        if self.span_first is not None:
-            out += (self.span_first[0],)
-        if self.span_position_range is not None:
-            out += (self.span_position_range[0],)
-        if self.term_automaton is not None:
-            out += tuple(lab for _f, lab, _t in self.term_automaton[0] if lab)
-        return out
+            out += tuple(t for c, _off in positions for t in span_alts(c))
+        return out + self._automaton_labels
+
+    @property
+    def _automaton_labels(self) -> tuple[str, ...]:
+        """The term automaton's distinct labels, sorted: its one set."""
+        if self.term_automaton is None:
+            return ()
+        return tuple(sorted({lab for _f, lab, _t in self.term_automaton[0] if lab}))
 
     @property
     def required_sets(self) -> tuple[tuple[str, ...], ...]:
         """Every clause a hit must match, as its alternative terms: a doc
         needs one term of each set, so a set with no live term matches
-        nothing. Covers `must` terms, span clauses, each position of a
-        '+' phrase, the span-first / position-range term and '+' groups
-        (whose empty member list matches nothing)."""
+        nothing. Covers `must` terms, each span node's sets, each
+        position of a '+' phrase, the term automaton (one set of all its
+        labels) and '+' groups (whose empty member list matches
+        nothing)."""
         out = tuple((t,) for t in self.must)
-        out += tuple(_span_alts(c) for c in self.span)
+        out += tuple(alts for node in self.spans for alts in span_sets(node))
         for positions, _slop, occ, _b in self.phrases:
             if occ == "+":
-                out += tuple(_span_alts(c) for c, _off in positions)
-        if self.span_first is not None:
-            out += ((self.span_first[0],),)
-        if self.span_position_range is not None:
-            out += ((self.span_position_range[0],),)
+                out += tuple(span_alts(c) for c, _off in positions)
+        if self.term_automaton is not None:
+            out += (self._automaton_labels,)
         out += tuple(
             _member_terms(members) for occ, members in self.groups if occ == "+"
         )
@@ -304,12 +330,6 @@ class BooleanSpec:
             if occ == "-":
                 out += _member_terms(members)
         return out
-
-
-def _span_alts(clause) -> tuple[str, ...]:
-    """Normalize a span clause to its alternative set: a bare term is a
-    1-tuple; a tuple is a SpanOr of term spans (union of positions)."""
-    return (clause,) if isinstance(clause, str) else tuple(clause)
 
 
 def _member_terms(members) -> tuple[str, ...]:
@@ -746,7 +766,7 @@ class IndexSearcher:
         ordered or unordered proximity with slop, scored Σ 1/(width+1)."""
         clauses = tuple(self._analyze(" ".join(terms)))
         return self.topk_spec(
-            BooleanSpec(span=clauses, span_slop=slop, span_ordered=in_order), k=k
+            BooleanSpec(spans=(("near", clauses, slop, in_order),)), k=k
         )
 
     def topk_span_first(self, term: str, end: int, k: int = 10) -> DataFrame:
@@ -755,7 +775,7 @@ class IndexSearcher:
         toks = self._analyze(term)
         if not toks:
             return topk_frame(self.spark)
-        return self.topk_spec(BooleanSpec(span_first=(toks[0], end)), k=k)
+        return self.topk_spec(BooleanSpec(spans=(("range", toks[0], 0, end),)), k=k)
 
     def _topk_payload_walk(self, terms: list[str], slop: int, ordered: bool,
                            k: int, per_doc_fn, boost: float = 1.0) -> DataFrame:
@@ -1389,22 +1409,14 @@ class IndexSearcher:
             positives = [c for c, neg in zip(clauses, negatives) if not neg]
             if not positives:
                 return topk_frame(self.spark)
-            return self.topk_spec(
-                BooleanSpec(
-                    span=tuple(positives),
-                    span_slop=slop + n_neg,
-                    span_ordered=in_order,
-                    span_not_near=tuple(clauses),
-                    span_not_near_slop=slop,
-                ),
-                k=k,
+            node = (
+                "not",
+                ("near", tuple(positives), slop + n_neg, in_order),
+                ("near", tuple(clauses), slop, in_order),
             )
-        return self.topk_spec(
-            BooleanSpec(
-                span=tuple(clauses), span_slop=slop, span_ordered=in_order
-            ),
-            k=k,
-        )
+        else:
+            node = ("near", tuple(clauses), slop, in_order)
+        return self.topk_spec(BooleanSpec(spans=(node,)), k=k)
 
     def topk_simple(self, query: str, k: int = 10,
                     default_operator: str = "", flags: int = -1) -> DataFrame:
@@ -1818,9 +1830,7 @@ class IndexSearcher:
         toks = self._analyze(term)
         if not toks:
             return topk_frame(self.spark)
-        return self.topk_spec(
-            BooleanSpec(span_position_range=(toks[0], lo, hi)), k=k
-        )
+        return self.topk_spec(BooleanSpec(spans=(("range", toks[0], lo, hi),)), k=k)
 
     def topk_span_containing(
         self, big: list[str], little: str, slop: int = 0, k: int = 10
@@ -1830,7 +1840,7 @@ class IndexSearcher:
         inc = tuple(self._analyze(" ".join(big)))
         lit = tuple(self._analyze(little))
         return self.topk_spec(
-            BooleanSpec(span=inc, span_slop=slop, span_ordered=True, span_contain=lit), k=k
+            BooleanSpec(spans=(("containing", ("near", inc, slop, True), lit),)), k=k
         )
 
     def topk_span_within(
@@ -1841,7 +1851,7 @@ class IndexSearcher:
         inc = tuple(self._analyze(" ".join(big)))
         lit = tuple(self._analyze(little))
         return self.topk_spec(
-            BooleanSpec(span=inc, span_slop=slop, span_ordered=True, span_within=lit), k=k
+            BooleanSpec(spans=(("within", ("near", inc, slop, True), lit),)), k=k
         )
 
     def topk_blended(self, query: str, k: int = 10, tiebreak: float = 0.01) -> DataFrame:
@@ -2075,7 +2085,7 @@ class IndexSearcher:
         inc = tuple(self._analyze(" ".join(include)))
         exc = tuple(self._analyze(exclude))
         return self.topk_spec(
-            BooleanSpec(span=inc, span_slop=slop, span_ordered=True, span_not=exc), k=k
+            BooleanSpec(spans=(("not", ("near", inc, slop, True), exc),)), k=k
         )
 
     def topk_spec(self, spec: BooleanSpec, k: int = 10, prune: bool | None = None,
@@ -2090,10 +2100,13 @@ class IndexSearcher:
         over the query's terms) is at most DRIVER_SCORE_MAX_BLOCKS is
         scored on the driver: a direct read of the searcher's bucket
         files and the same per-range scorer, with no Spark job at all.
-        prune=True, a corpus-scale delete set (deleted_df) and positional
-        clauses keep the distributed plan: the (range_id) shuffle into
-        applyInPandas, which is the only plan that runs at corpus scale.
-        Both plans return the same rows bit for bit.
+        Phrase, span and automaton clauses take it too, up to the lower
+        DRIVER_POSITIONAL_MAX_BLOCKS (their per-doc position verify runs
+        serially on the driver): the decoded scan carries their position
+        streams. prune=True and a corpus-scale
+        delete set (deleted_df) keep the distributed plan: the (range_id)
+        shuffle into applyInPandas, which is the only plan that runs at
+        corpus scale. Both plans return the same rows bit for bit.
 
         prune: None = auto (WAND only when the range count justifies two
         extra driver round trips), True = force the distributed two-wave
@@ -2120,10 +2133,11 @@ class IndexSearcher:
         if spec.dismax and spec.groups:
             # DisjunctionMax is scored over `should` term clauses only
             raise ValueError("a dismax spec cannot hold groups")
-        if spec.phrases and (spec.span or spec.span_first or spec.span_position_range
-                             or spec.term_automaton):
+        if spec.term_automaton is not None and (spec.phrases or spec.spans):
+            # the automaton's own reference (oracle_term_automaton_topk)
+            # scores it alone, so no reference scores such a mix
             raise ValueError(
-                "phrase clauses cannot mix with span/position-range/automaton specs"
+                "a term automaton does not mix with phrase or span clauses"
             )
         if not spec.scoring_terms:
             return topk_frame(self.spark)
@@ -2169,9 +2183,10 @@ class IndexSearcher:
             k = max(k, int(cand_arr.size))
         if scan_ranges is not None:
             scan_ranges = sorted(scan_ranges)
-        # column-prune the scorer's scan: pos_buf (the widest column) is only
-        # read for phrase queries; block metadata the scorer never touches is
-        # dropped so the parquet ReadSchema stays minimal
+        # column-prune the scorer's scan, on either plan: pos_buf (the
+        # widest column) is only read for positional clauses (phrase, span,
+        # automaton); block metadata the scorer never touches is dropped so
+        # the parquet ReadSchema stays minimal
         scan_cols = [
             "term", "range_id", "first_doc", "last_doc",
             "docs_buf", "tfs_buf", "norms_buf",
@@ -2190,9 +2205,11 @@ class IndexSearcher:
         # known before any job runs
         dfs = [int(weights[t]["df"]) for t in present]
         max_blocks = sum(min(df, -(-df // BLOCK_SIZE) + n_ranges) for df in dfs)
+        cap = DRIVER_SCORE_MAX_BLOCKS
+        if spec.positional_terms:
+            cap = min(cap, DRIVER_POSITIONAL_MAX_BLOCKS)
         if (prune is not True and self.deleted_df is None
-                and not spec.positional_terms
-                and max_blocks <= DRIVER_SCORE_MAX_BLOCKS):
+                and max_blocks <= cap):
             return self._score_on_driver(present, scan_ranges, scan_cols, score_fn, k)
 
         blocks = self._blocks_for(present)
@@ -2579,7 +2596,7 @@ def _sloppy_phrase_pf(per_term, positions, cand: np.ndarray, slop: int) -> np.nd
     cost model as Lucene's own scorer, run per doc range."""
     from .sloppy import sloppy_freq
 
-    term_sets = [_span_alts(c) for c, _off in positions]
+    term_sets = [span_alts(c) for c, _off in positions]
     offsets = [off for _c, off in positions]
     abs_cache = {
         t: _abs_positions(per_term, t)
@@ -2587,24 +2604,25 @@ def _sloppy_phrase_pf(per_term, positions, cand: np.ndarray, slop: int) -> np.nd
     }
     freqs = np.zeros(cand.size, dtype=np.float32)
     for ci, c in enumerate(cand):
-        plists = []
-        for alts in term_sets:
-            merged: list[int] = []
-            for t in alts:
-                if t not in abs_cache:
-                    continue
-                d, tf, run_starts, pos_abs = abs_cache[t]
-                j = int(np.searchsorted(d, c))
-                if j < d.size and d[j] == c:
-                    s = int(run_starts[j])
-                    merged.extend(pos_abs[s : s + int(tf[j])].tolist())
-            if not merged:
-                break
-            merged.sort()
-            plists.append(merged)
-        else:
+        plists = [_doc_positions(abs_cache, alts, c) for alts in term_sets]
+        if all(plists):
             freqs[ci] = sloppy_freq(plists, offsets, slop, terms=term_sets)
     return freqs
+
+
+def _doc_positions(abs_cache, alts, c) -> list[int]:
+    """Doc c's ascending positions of the union of the alternatives (a
+    SpanOr clause, a MultiPhraseQuery position), from _abs_positions
+    entries; a term missing from abs_cache contributes none."""
+    merged: list[int] = []
+    for t in alts:
+        if t in abs_cache:
+            d, tf, run_starts, pos_abs = abs_cache[t]
+            j = int(np.searchsorted(d, c))
+            if j < d.size and d[j] == c:
+                s = int(run_starts[j])
+                merged.extend(pos_abs[s : s + int(tf[j])].tolist())
+    return sorted(merged) if len(alts) > 1 else merged
 
 
 def _term_automaton_freqs(per_term, auto, cand: np.ndarray) -> np.ndarray:
@@ -2679,7 +2697,7 @@ def _exact_phrase_pf(per_term, positions, cand: np.ndarray) -> np.ndarray:
     for idx, (c, off) in enumerate(positions):
         parts = [
             _occurrence_keys(per_term, t) - off
-            for t in _span_alts(c) if t in per_term
+            for t in span_alts(c) if t in per_term
         ]
         ki = (
             np.concatenate(parts)
@@ -2703,116 +2721,25 @@ def _exact_phrase_pf(per_term, positions, cand: np.ndarray) -> np.ndarray:
     return counts
 
 
-def _span_near_freqs(
-    per_term, span: tuple[str, ...], slop: int, ordered: bool, cand: np.ndarray,
-    exclude_terms: tuple[str, ...] = (),
-    contain_terms: tuple[str, ...] = (),
-    within_terms: tuple[str, ...] = (),
-    exclude_near: tuple = (),
-    exclude_near_slop: int = 0,
-) -> np.ndarray:
+def _span_near_freqs(per_term, node, cand: np.ndarray) -> np.ndarray:
     """SpanNear / SpanNot / SpanContaining / SpanWithin freq per candidate
-    doc via the reference walks (search/spans.py); per-doc sequential
-    like Lucene's own spans. exclude/contain/within terms filter or
-    re-anchor the ordered big spans."""
-    from .spans import (
-        span_containing_freq,
-        span_not_freq,
-        span_ordered_freq,
-        span_unordered_freq,
-        span_within_freq,
-    )
-
-    aux_terms = set(exclude_terms) | set(contain_terms) | set(within_terms)
-    data = {
-        t: _abs_positions(per_term, t)
-        for c in tuple(span) + tuple(exclude_near)
-        for t in _span_alts(c) if t in per_term
+    doc of one span node (BooleanSpec.spans) via the reference walks
+    (search/spans.py span_freq); per-doc sequential like Lucene's own
+    spans."""
+    abs_cache = {
+        t: _abs_positions(per_term, t) for t in set(span_terms(node)) if t in per_term
     }
-    aux_data = {t: _abs_positions(per_term, t) for t in aux_terms if t in per_term}
-
-    def _doc_slice(entry, c):
-        d, tf, run_starts, pos_abs = entry
-        j = int(np.searchsorted(d, c))
-        if j >= d.size or d[j] != c:
-            return None
-        s = int(run_starts[j])
-        return pos_abs[s : s + int(tf[j])].tolist()
-
-    def _aux_positions(terms, c):
-        out: list[int] = []
-        for t in terms:
-            if t in aux_data:
-                sl = _doc_slice(aux_data[t], c)
-                if sl:
-                    out.extend(sl)
-        return sorted(out)
-
     freqs = np.zeros(cand.size, dtype=np.float32)
     for ci, c in enumerate(cand):
-        plists = []
-        ok = True
-        for cl in span:  # query order; repeated terms reuse the same list
-            alts = _span_alts(cl)
-            merged: list[int] = []
-            for t in alts:
-                if t in data:
-                    sl = _doc_slice(data[t], c)
-                    if sl:
-                        merged.extend(sl)
-            if not merged:
-                ok = False
-                break
-            # SpanOr of term spans: sub-span positions union, sorted —
-            # one token per position, so no duplicates to dedup
-            plists.append(sorted(merged) if len(alts) > 1 else merged)
-        if not ok:
-            continue
-        if exclude_near:
-            from .spans import span_not_span_freq
-
-            exc_plists = []
-            dead = False
-            for cl in exclude_near:
-                merged2: list[int] = []
-                for t in _span_alts(cl):
-                    if t in data:
-                        sl2 = _doc_slice(data[t], c)
-                        if sl2:
-                            merged2.extend(sl2)
-                if not merged2:
-                    dead = True  # exclude can't match: keep all includes
-                    break
-                exc_plists.append(sorted(merged2))
-            if dead:
-                freqs[ci] = (
-                    span_ordered_freq(plists, slop)
-                    if ordered
-                    else span_unordered_freq(plists, slop)
-                )
-            else:
-                freqs[ci] = span_not_span_freq(
-                    plists, slop, exc_plists, exclude_near_slop,
-                    ordered=ordered,
-                )
-        elif exclude_terms:
-            freqs[ci] = span_not_freq(plists, slop, _aux_positions(exclude_terms, c))
-        elif contain_terms:
-            freqs[ci] = span_containing_freq(plists, slop, _aux_positions(contain_terms, c))
-        elif within_terms:
-            freqs[ci] = span_within_freq(plists, slop, _aux_positions(within_terms, c))
-        elif ordered:
-            freqs[ci] = span_ordered_freq(plists, slop)
-        else:
-            freqs[ci] = span_unordered_freq(plists, slop)
+        freqs[ci] = span_freq(node, lambda alts: _doc_positions(abs_cache, alts, c))
     return freqs
 
 
-def _span_posrange_freqs(per_term, span_posrange: tuple[str, int, int], cand: np.ndarray) -> np.ndarray:
-    """SpanPositionRangeQuery freq (SpanFirst = lo 0): occurrences with
-    lo <= pos and pos+1 <= hi, vectorized (one reduceat over the term's
-    position runs)."""
-    t, lo_b, hi_b = span_posrange
+def _span_posrange_freqs(per_term, node, cand: np.ndarray) -> np.ndarray:
+    """SpanPositionRangeQuery freq of a ("range", term, lo, hi) node
+    (SpanFirst = lo 0): occurrences with lo <= pos and pos+1 <= hi,
+    vectorized (one reduceat over the term's position runs)."""
+    _kind, t, lo_b, hi_b = node
     d, _tf, run_starts, pos_abs = _abs_positions(per_term, t)
     if pos_abs.size == 0:
         return np.zeros(cand.size, dtype=np.float32)
@@ -2884,31 +2811,9 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
     must_terms = sorted(set(spec.must))
     must_count = {t: spec.must.count(t) for t in must_terms}
     not_terms = sorted({t for t in spec.must_not if weights[t]["df"] > 0})
-    # 0..N phrase clauses, each position as its alternative set:
-    # [(positions, slop, occur, boost)], positions = ((alts, offset), ...)
-    phrase_clauses = [
-        (tuple((_span_alts(c), off) for c, off in positions), slop, occ, boost)
-        for positions, slop, occ, boost in spec.phrases
-    ]
-    span = spec.span
-    span_first = spec.span_first
-    # SpanFirst is SpanPositionRange(lo=0) (SpanFirstQuery.java:34)
-    span_posrange = spec.span_position_range or (
-        (span_first[0], 0, span_first[1]) if span_first is not None else None
-    )
-    term_automaton = spec.term_automaton
-    # span/posrange/automaton: the single-positional machinery (topk_spec
-    # refuses to mix it with phrase clauses)
-    positional = bool(span or span_posrange or term_automaton)
-    auto_terms = (
-        sorted({lab for _f, lab, _t in term_automaton[0] if lab})
-        if term_automaton is not None else []
-    )
     # positional terms that exist in the index (dead alternatives are
     # skipped at decode; dead required clauses were rejected in topk_spec)
     pos_terms = sorted({t for t in spec.positional_terms if weights[t]["df"] > 0})
-    has_opt_phrase = any(occ == "" for _p, _s, occ, _b in phrase_clauses)
-    has_req_phrase = any(occ == "+" for _p, _s, occ, _b in phrase_clauses)
     # every clause a hit must match, as its alternative set: a range
     # holding no term of some set has no hits
     required_sets = spec.required_sets
@@ -2936,55 +2841,55 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         if live or occ == "+":
             group_clauses.append((occ, tuple(live), _member_terms(live)))
     n_plus_groups = sum(1 for occ, _ms, _ts in group_clauses if occ == "+")
-    # with no required clause (an optional phrase is a SHOULD clause, the
-    # automaton a disjunction) at least one SHOULD clause must match
-    msm = max(
-        spec.min_should_match,
-        0 if (required_sets or term_automaton is not None) else 1,
-    )
+    # with no required clause (an optional phrase is a SHOULD clause) at
+    # least one SHOULD clause must match
+    msm = max(spec.min_should_match, 0 if required_sets else 1)
     dfs = {t: weights[t]["df"] for t in weights}
     cache = norm_cache(np.float32(avgdl))  # identical to the global 256-float cache
-    # PhraseWeight per clause: idfs summed over clause OCCURRENCES —
-    # PhraseQuery.PhraseWeight builds one TermStatistics per terms[i], so
-    # a repeated term contributes its idf once per repeat ("cc cc" weighs
-    # idf(cc) twice; pinned vs the compiled reference in
-    # tests/test_lucene_ground_truth.py); a MultiPhraseQuery position
-    # adds every alternative's idf (df=0 alternatives still contribute
-    # idf(0), as TermContext.build does). BoostQuery wrapping multiplies
-    # the weightValue (BoostQuery.java)
-    pc_wvs = []
-    for positions, _s, _occ, boost in phrase_clauses:
-        idf_sum = idf_sum_f32(
-            idf_f32(dfs[t], doc_count) for alts, _off in positions for t in alts
-        )
+
+    def weight_value(idfs, boost=1.0) -> np.float32:
         # BoostQuery -> normalize(norm, boost): weight = (float)(idf*boost),
         # then weightValue = (float)(weight * (k1+1)) -- boost BEFORE (k1+1)
+        idf_sum = idf_sum_f32(idf_f32(dfs[t], doc_count) for t in idfs)
         w = np.float32(idf_sum * np.float32(boost))
-        pc_wvs.append(np.float32(w * (K1 + np.float32(1.0))))
-    if span:
-        # SpanWeight.buildSimWeight: term->context MAP, so DISTINCT terms
-        # (SpanOr alternatives all contribute their contexts);
-        # SpanNot/Containing/Within maps include BOTH sides' contexts
-        # (getTermContexts(bigWeight, littleWeight))
-        aux = set(spec.span_not) | set(spec.span_contain) | set(spec.span_within)
-        aux |= {t for c in spec.span_not_near for t in _span_alts(c)}
-        span_terms = {t for c in span for t in _span_alts(c)}
-        idf_sum = idf_sum_f32(
-            idf_f32(dfs[t], doc_count) for t in sorted(span_terms | aux)
-        )
-        pos_wv = np.float32(idf_sum * (K1 + np.float32(1.0)))
-    elif span_posrange is not None:
-        pos_wv = np.float32(
-            idf_f32(dfs[span_posrange[0]], doc_count) * (K1 + np.float32(1.0))
-        )
-    elif term_automaton is not None:
-        # TermAutomatonWeight gathers every automaton term's stats
-        # (TermContext.build — df=0 labels still contribute idf(0),
-        # the MultiPhraseQuery convention)
-        idf_sum = idf_sum_f32(
-            idf_f32(dfs[t], doc_count) for t in auto_terms
-        )
-        pos_wv = np.float32(idf_sum * (K1 + np.float32(1.0)))
+        return np.float32(w * (K1 + np.float32(1.0)))
+
+    # every positional clause — each phrase, each span node, the term
+    # automaton — as (alternative sets, pf, arg, weightValue, occur): a
+    # doc is a candidate when it holds one term of every set, and
+    # pf(per_term, arg, cand) verifies positions on the candidates
+    pos_clauses = []
+    for positions, slop, occ, boost in spec.phrases:
+        positions = tuple((span_alts(c), off) for c, off in positions)
+        # PhraseWeight: idfs summed over clause OCCURRENCES — one
+        # TermStatistics per terms[i], so a repeated term contributes its
+        # idf once per repeat ("cc cc" weighs idf(cc) twice; pinned vs the
+        # compiled reference in tests/test_lucene_ground_truth.py); a
+        # MultiPhraseQuery position adds every alternative's idf (df=0
+        # alternatives still contribute idf(0), as TermContext.build does)
+        wv = weight_value([t for alts, _off in positions for t in alts], boost)
+        pf = partial(_sloppy_phrase_pf, slop=slop) if slop > 0 else _exact_phrase_pf
+        pos_clauses.append((tuple(alts for alts, _off in positions), pf, positions, wv, occ))
+    for node in spec.spans:
+        # SpanWeight.buildSimWeight: a term->context MAP, so DISTINCT terms
+        # (SpanOr alternatives all contribute their contexts; SpanNot/
+        # Containing/Within maps include BOTH sides' contexts —
+        # getTermContexts(bigWeight, littleWeight))
+        wv = weight_value(sorted(set(span_terms(node))))
+        pf = _span_posrange_freqs if node[0] == "range" else _span_near_freqs
+        pos_clauses.append((span_sets(node), pf, node, wv, "+"))
+    if spec.term_automaton is not None:
+        # one set of every label: any doc holding ANY automaton term is a
+        # candidate (TermAutomatonScorer's DocIDQueue union);
+        # TermAutomatonWeight gathers every label's stats (TermContext.build
+        # — df=0 labels still contribute idf(0))
+        labels = spec._automaton_labels
+        pos_clauses.append((
+            (labels,), _term_automaton_freqs, spec.term_automaton,
+            weight_value(labels), "+",
+        ))
+    has_opt_pos = any(c[-1] == "" for c in pos_clauses)
+    has_req_pos = any(c[-1] == "+" for c in pos_clauses)
 
     # the conjunction's block skip leads on the rarest one-term set
     lead_terms = sorted({alts[0] for alts in required_sets if len(alts) == 1})
@@ -3009,13 +2914,10 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         )
         # an optional phrase can be the only scoring clause in the range
         opt_phrase_possible = any(
-            occ == "" and all(
-                any(t in per_term for t in alts) for alts, _off in positions
-            )
-            for positions, _s, occ, _b in phrase_clauses
+            occ == "" and all(any(t in per_term for t in alts) for alts in sets)
+            for sets, _pf, _arg, _wv, occ in pos_clauses
         )
-        if not (scoring_present or required_sets or opt_phrase_possible
-                or term_automaton is not None):
+        if not (scoring_present or required_sets or opt_phrase_possible):
             return _NO_HITS
 
         base = min(int(v[0][0]) for v in per_term.values())
@@ -3155,18 +3057,16 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
             mask &= gmust_hits >= n_plus_groups
         # the msm cut is deferred while optional phrase clauses can
         # still add their SHOULD hits
-        if msm > 0 and not has_opt_phrase:
+        if msm > 0 and not has_opt_pos:
             mask &= should_hits >= msm
 
-        if phrase_clauses:
-            # 1..N phrase clauses: per clause, conjunction of the
-            # positions' union postings on docs first (two-phase), then
-            # position verify on survivors
-            req_ok = np.ones(width, dtype=bool) if has_req_phrase else None
-            for (positions, slop, occ, _boost), wv in zip(phrase_clauses, pc_wvs):
-                live = [
-                    [t for t in alts if t in per_term] for alts, _off in positions
-                ]
+        if pos_clauses:
+            # per clause: conjunction of its sets' union postings on docs
+            # first (two-phase: cheap approximation), then position verify
+            # (expensive) on the survivors only
+            req_ok = np.ones(width, dtype=bool) if has_req_pos else None
+            for sets, pf_fn, arg, wv, occ in pos_clauses:
+                live = [[t for t in alts if t in per_term] for alts in sets]
                 if not all(live):
                     if occ == "+":
                         return _NO_HITS
@@ -3178,12 +3078,11 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
                 cand_mask = np.zeros(width, dtype=bool)
                 if cand_set:
                     cand_mask[np.fromiter(cand_set, dtype=np.int64) - base] = True
-                cand = np.flatnonzero(mask & cand_mask) + base
+                # docs an earlier '+' clause rejected are never verified
+                cand_mask &= mask if req_ok is None else mask & req_ok
+                cand = np.flatnonzero(cand_mask) + base
                 if cand.size:
-                    if slop > 0:
-                        pf = _sloppy_phrase_pf(per_term, positions, cand, slop)
-                    else:
-                        pf = _exact_phrase_pf(per_term, positions, cand)
+                    pf = pf_fn(per_term, arg, cand)
                     keep = pf > 0
                     cand, pf = cand[keep], pf[keep]
                 if cand.size:
@@ -3209,69 +3108,8 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
                     should_hits[cand - base] += 1
             if req_ok is not None:
                 mask &= req_ok
-            if msm > 0 and has_opt_phrase:
+            if msm > 0 and has_opt_pos:
                 mask &= should_hits >= msm
-        elif positional:
-            # conjunction on docs first (two-phase: cheap approximation),
-            # then position verify (expensive) on survivors only
-            if term_automaton is not None:
-                # disjunction: any doc holding ANY automaton term is a
-                # candidate (TermAutomatonScorer's DocIDQueue union)
-                ua: set = set()
-                for t in auto_terms:
-                    if t in per_term:
-                        ua |= set(per_term[t][0].tolist())
-                cand_sets = [ua]
-            elif span:
-                cand_sets = []
-                for c in span:
-                    u: set = set()
-                    for t in _span_alts(c):
-                        if t in per_term:
-                            u |= set(per_term[t][0].tolist())
-                    cand_sets.append(u)
-            else:
-                cand_sets = [set(per_term[span_posrange[0]][0].tolist())]
-            cand_set = set.intersection(*cand_sets) if cand_sets else set()
-            cand_mask = np.zeros(width, dtype=bool)
-            if cand_set:
-                cidx = np.fromiter(cand_set, dtype=np.int64) - base
-                cand_mask[cidx] = True
-            pre = mask & cand_mask
-            cand = np.flatnonzero(pre) + base
-            if cand.size == 0:
-                return _NO_HITS
-            if term_automaton is not None:
-                pf = _term_automaton_freqs(per_term, term_automaton, cand)
-            elif span:
-                pf = _span_near_freqs(
-                    per_term, span, spec.span_slop, spec.span_ordered, cand,
-                    exclude_terms=spec.span_not,
-                    contain_terms=spec.span_contain,
-                    within_terms=spec.span_within,
-                    exclude_near=spec.span_not_near,
-                    exclude_near_slop=spec.span_not_near_slop,
-                )
-            else:
-                pf = _span_posrange_freqs(per_term, span_posrange, cand)
-            keep = pf > 0
-            cand, pf = cand[keep], pf[keep]
-            if cand.size == 0:
-                return _NO_HITS
-            # norms for matched docs from any positional stream
-            nb_map2: dict = {}
-            for t in pos_terms:
-                if t in per_term:
-                    d0, _tf0, nb0, _ = per_term[t]
-                    nb_map2.update(zip(d0.tolist(), nb0.tolist()))
-            nbv = np.array([nb_map2[int(c)] for c in cand], dtype=np.uint8)
-            freq = pf.astype(np.float32)
-            ps = (pos_wv * freq / (freq + cache[nbv])).astype(np.float32)
-            (acc if acc_req is None else acc_req)[cand - base] += ps.astype(
-                np.float64
-            )
-            mask = np.zeros(width, dtype=bool)
-            mask[cand - base] = True
 
         if candidates is not None:
             lo = np.searchsorted(candidates, base)

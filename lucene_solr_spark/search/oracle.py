@@ -20,7 +20,10 @@ import numpy as np
 
 from ..analysis.smallfloat import encode_norm
 from ..analysis.tokenizer import analyze, analyze_to_counts, analyze_with_positions
-from .bm25 import K1, avgdl_f32, combine_scores, idf_f32, idf_sum_f32, make_term_weight
+from .bm25 import (
+    K1, avgdl_f32, combine_scores, idf_f32, idf_sum_f32, make_term_weight, norm_cache,
+)
+from .spans import span_alts, span_freq, span_sets, span_terms
 
 
 @dataclass
@@ -139,7 +142,7 @@ def oracle_lm_topk(
         elif similarity == "multi_bm25_classic":
             # MultiSimilarity CombSUM: float32 running sum of BM25 and
             # Classic(queryNorm=1) sub-scores, BM25 norms (sims[0])
-            from .bm25 import CLASSIC_DECODE, classic_weight_value, norm_cache
+            from .bm25 import CLASSIC_DECODE, classic_weight_value
 
             tw = make_term_weight(t, len(post), idx.doc_count, idx.avgdl)
             cache = norm_cache(np.float32(idx.avgdl))
@@ -283,7 +286,6 @@ def oracle_term_automaton_topk(
     (TermAutomatonWeight gathers TermContext per term; absent terms
     contribute idf(df=0))."""
     from .automaton import expand_determinize
-    from .bm25 import norm_cache
 
     dfa_trans, dfa_accepts = expand_determinize(transitions, accepts)
     labels = sorted({lab for _f, lab, _t in transitions if lab})
@@ -328,33 +330,34 @@ def _group_terms(members) -> tuple[str, ...]:
 
 def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.float32]]:
     """Control for BooleanSpec queries (engine.BooleanSpec): MUST/SHOULD/
-    MUST_NOT/minShouldMatch, DisjunctionMax, SpanNear (ordered/
-    unordered), SpanFirst, any number of required or optional, boosted
-    phrase clauses ((positions, slop, occur, boost), ...) whose positions
-    ((term | (alt, ...), offset), ...) match the union of their
-    alternatives (PhraseQuery and MultiPhraseQuery, exact or sloppy), and
-    nested groups ((occur, (member, ...)), ...) whose members are a bare
-    term (scored with the global weight), ("c", boost, (term, ...)) (a
-    constant-score multi-term member scoring float32(boost)) or
-    ("w", ((term, weightValue), ...)) (blended fuzzy members, their
-    double sum cast to float32). Plain dicts and sets throughout: the
-    reference the engine's numpy scorer is checked against."""
+    MUST_NOT/minShouldMatch, DisjunctionMax, any number of required or
+    optional, boosted phrase clauses ((positions, slop, occur, boost), ...)
+    whose positions ((term | (alt, ...), offset), ...) match the union of
+    their alternatives (PhraseQuery and MultiPhraseQuery, exact or
+    sloppy), any number of required span clauses (the node grammar on
+    BooleanSpec.spans: SpanNear ordered/unordered, SpanNot, SpanContaining,
+    SpanWithin, SpanPositionRange; each scored with its own pf map through
+    the search/spans.py walks), and nested groups ((occur, (member, ...)),
+    ...) whose members are a bare term (scored with the global weight),
+    ("c", boost, (term, ...)) (a constant-score multi-term member scoring
+    float32(boost)) or ("w", ((term, weightValue), ...)) (blended fuzzy
+    members, their double sum cast to float32). The term automaton has
+    its own control (oracle_term_automaton_topk). Plain dicts and sets
+    throughout: the reference the engine's numpy scorer is checked
+    against."""
     should = [t for t in spec.should if t in idx.postings]
     must = list(spec.must)
     # 0..N phrase clauses [(positions, slop, occur, boost)], each position
     # as (alternative set, offset)
     phrase_clauses = [
-        (
-            tuple(((c,) if isinstance(c, str) else tuple(c), off) for c, off in positions),
-            slop, occ, boost,
-        )
-        for positions, slop, occ, boost in (getattr(spec, "phrases", ()) or ())
+        (tuple((span_alts(c), off) for c, off in positions), slop, occ, boost)
+        for positions, slop, occ, boost in spec.phrases
     ]
     # nested groups (typed members: scored term / const wrapper /
     # blended); dead members drop, a '+' group with no live member
     # matches nothing
     groups = []
-    for occ, members in (getattr(spec, "groups", ()) or ()):
+    for occ, members in spec.groups:
         live = []
         for m in members:
             if isinstance(m, str):
@@ -372,42 +375,26 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
             return []
         if live:
             groups.append((occ, tuple(live), _group_terms(live)))
-    all_phrase_terms = {
-        t for positions, _s, _o, _b in phrase_clauses for alts, _off in positions
-        for t in alts
-    }
     opt_pc = [pc for pc in phrase_clauses if pc[2] == ""]
-    raw_span = tuple(getattr(spec, "span", ()) or ())
-    # span clauses may be alternative TUPLES (SpanOr of term spans —
-    # ComplexPhraseQueryParser elements); normalize for the walks
-    span_clauses = tuple(
-        (c,) if isinstance(c, str) else tuple(c) for c in raw_span
-    )
-    span = tuple(t for c in span_clauses for t in c)
-    span_first = getattr(spec, "span_first", None)
     # every clause a hit must match, as its alternative set: must terms,
-    # span clauses (a SpanOr needs one live alternative), each position
-    # of a required phrase, the SpanFirst term
+    # each position of a required phrase, each span node's sets (a SpanOr
+    # needs one live alternative)
     required = (
         [(t,) for t in must]
-        + list(span_clauses)
         + [alts for positions, _s, occ, _b in phrase_clauses if occ == "+"
            for alts, _off in positions]
-        + ([(span_first[0],)] if span_first else [])
+        + [alts for node in spec.spans for alts in span_sets(node)]
     )
     if any(all(t not in idx.postings for t in alts) for alts in required):
         return []
-    pos_terms = all_phrase_terms | set(span) | (
-        {span_first[0]} if span_first else set()
-    )
     group_terms = {m for _occ, ms, _ts in groups for m in ms if isinstance(m, str)}
-    boost_map = dict(getattr(spec, "boosts", ()) or ())
+    boost_map = dict(spec.boosts)
     weights = {
         t: make_term_weight(
             t, len(idx.postings.get(t, {})), idx.doc_count, idx.avgdl,
             boost=float(boost_map.get(t, 1.0)),
         )
-        for t in set(should) | set(must) | pos_terms | group_terms
+        for t in set(should) | set(must) | group_terms
     }
 
     def _gdocs(ts):
@@ -435,118 +422,52 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
     n_plus_groups = sum(1 for occ, _ms, _ts in groups if occ == "+")
     msm = max(spec.min_should_match, 0 if (required or n_plus_groups) else 1)
 
-    def _phrase_pf(positions, slop, docs):
-        """pf per doc for one phrase clause over `docs`: a position's
-        occurrences are the union of its alternatives' (UnionPostingsEnum);
-        slop > 0 is Lucene-exact SloppyPhraseScorer (search/sloppy.py)."""
+    def _plist(alts, d):
+        return sorted(p for t in alts for p in idx.positions.get(t, {}).get(d, []))
+
+    def _phrase_pf(positions, slop, d):
+        """One doc's pf for a phrase clause: a position's occurrences are
+        the union of its alternatives' (UnionPostingsEnum); slop > 0 is
+        Lucene-exact SloppyPhraseScorer (search/sloppy.py)."""
         from .sloppy import sloppy_freq
 
-        out: dict = {}
-        for d in sorted(docs):
-            plists = [
-                sorted(p for t in alts for p in idx.positions.get(t, {}).get(d, []))
-                for alts, _off in positions
-            ]
-            if any(not p for p in plists):
-                continue
-            if slop > 0:
-                f = sloppy_freq(
-                    plists, [off for _alts, off in positions], slop,
-                    terms=[alts for alts, _off in positions],
-                )
-            else:
-                match = {p - positions[0][1] for p in plists[0]}
-                for pl, (_alts, off) in zip(plists[1:], positions[1:]):
-                    match &= {p - off for p in pl}
-                f = len(match)
-            if f > 0:
-                out[d] = f
-        return out
+        plists = [_plist(alts, d) for alts, _off in positions]
+        if any(not p for p in plists):
+            return 0
+        if slop > 0:
+            return sloppy_freq(
+                plists, [off for _alts, off in positions], slop,
+                terms=[alts for alts, _off in positions],
+            )
+        match = {p - positions[0][1] for p in plists[0]}
+        for pl, (_alts, off) in zip(plists[1:], positions[1:]):
+            match &= {p - off for p in pl}
+        return len(match)
 
-    pc_maps = []
-    for positions, slop, occ, _b in phrase_clauses:
-        m = _phrase_pf(positions, slop, cand)
-        pc_maps.append(m)
+    # every positional clause as (pf_fn(d), idf terms, boost, occur):
+    # PhraseWeight sums one idf per clause occurrence (repeats again; a
+    # MultiPhraseQuery position adds every alternative's idf, df=0 ones
+    # included — TermContext.build); SpanWeight sums the node's DISTINCT
+    # terms, both sides of not/containing/within included
+    pos_clauses = [
+        (
+            lambda d, p=positions, sl=slop: _phrase_pf(p, sl, d),
+            [t for alts, _off in positions for t in alts], boost, occ,
+        )
+        for positions, slop, occ, boost in phrase_clauses
+    ] + [
+        (
+            lambda d, n=node: span_freq(n, lambda alts: _plist(alts, d)),
+            sorted(set(span_terms(node))), 1.0, "+",
+        )
+        for node in spec.spans
+    ]
+    pf_maps = []
+    for pf_fn, _ts, _b, occ in pos_clauses:
+        m = {d: f for d in sorted(cand) if (f := pf_fn(d)) > 0}
+        pf_maps.append(m)
         if occ == "+":
             cand = set(m)
-    if span:
-        from .spans import (
-            span_containing_freq,
-            span_not_freq,
-            span_ordered_freq,
-            span_unordered_freq,
-            span_within_freq,
-        )
-
-        span_not = tuple(getattr(spec, "span_not", ()) or ())
-        span_contain = tuple(getattr(spec, "span_contain", ()) or ())
-        span_within = tuple(getattr(spec, "span_within", ()) or ())
-        not_near = tuple(
-            (c,) if isinstance(c, str) else tuple(c)
-            for c in (getattr(spec, "span_not_near", ()) or ())
-        )
-        not_near_slop = int(getattr(spec, "span_not_near_slop", 0) or 0)
-        slop = getattr(spec, "span_slop", 0)
-        ordered = getattr(spec, "span_ordered", True)
-
-        def _aux(terms, d):
-            return sorted(
-                p for t in set(terms) for p in idx.positions.get(t, {}).get(d, [])
-            )
-
-        pf_map = {}
-        for d in sorted(cand):
-            plists = [
-                sorted(
-                    p for t in c for p in idx.positions.get(t, {}).get(d, [])
-                )
-                for c in span_clauses
-            ]
-            if any(not pl for pl in plists):
-                continue
-            if not_near:
-                from .spans import span_not_span_freq
-
-                exc_plists = [
-                    sorted(
-                        p for t in c for p in idx.positions.get(t, {}).get(d, [])
-                    )
-                    for c in not_near
-                ]
-                if any(not pl for pl in exc_plists):
-                    f = (
-                        span_ordered_freq(plists, slop)
-                        if ordered
-                        else span_unordered_freq(plists, slop)
-                    )
-                else:
-                    f = span_not_span_freq(
-                        plists, slop, exc_plists, not_near_slop,
-                        ordered=ordered,
-                    )
-            elif span_not:
-                f = span_not_freq(plists, slop, _aux(span_not, d))
-            elif span_contain:
-                f = span_containing_freq(plists, slop, _aux(span_contain, d))
-            elif span_within:
-                f = span_within_freq(plists, slop, _aux(span_within, d))
-            elif ordered:
-                f = span_ordered_freq(plists, slop)
-            else:
-                f = span_unordered_freq(plists, slop)
-            if f > 0:
-                pf_map[d] = f
-        cand = set(pf_map)
-    elif span_first:
-        from .spans import span_first_freq
-
-        t0, end0 = span_first
-        pf_map = {}
-        for d in sorted(cand):
-            f = span_first_freq(idx.positions[t0].get(d, []), end0)
-            if f > 0:
-                pf_map[d] = f
-        cand = set(pf_map)
     if msm > 0:
         def _should_hits(d):
             h = sum(1 for t in set(should) if d in idx.postings.get(t, {}))
@@ -554,9 +475,9 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
                 1 for occ, _ms, ts in groups
                 if occ == "" and any(d in idx.postings.get(t, {}) for t in ts)
             )
-            for pc, m in zip(phrase_clauses, pc_maps):
-                if pc[2] == "" and d in m:
-                    h += 1
+            h += sum(
+                1 for pc, m in zip(pos_clauses, pf_maps) if pc[3] == "" and d in m
+            )
             return h
         cand = {d for d in cand if _should_hits(d) >= msm}
     if not cand:
@@ -569,6 +490,7 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
     # float32 sub-scores in FLOAT (pinned vs the compiled reference)
     per_clause = []   # optional side
     req_clause = []   # required side
+    cache = norm_cache(idx.avgdl)
     for is_must, t in [(False, t) for t in spec.should] + [(True, t) for t in spec.must]:
         if t not in weights:
             continue
@@ -586,9 +508,6 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
         # sub-sums cast f32 at their boundary (BlendedTermQuery.BOOLEAN_
         # REWRITE); the group double sum casts to FLOAT32 and the outer
         # sum sees one float sub-score (Scorer.score contract)
-        from .bm25 import norm_cache
-
-        cache = norm_cache(idx.avgdl)
         gacc = np.zeros(docs.size, dtype=np.float64)
         for m in ms:
             if isinstance(m, str):
@@ -614,52 +533,20 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
                     wacc += s.astype(np.float64)
                 gacc += wacc.astype(np.float32).astype(np.float64)
         (req_clause if occ == "+" else per_clause).append(gacc.astype(np.float32))
-    # phrase clauses: one score array each (float32 order identical to
-    # _make_range_scorer: wv = f32(f32(idf_sum*(k1+1)) * f32(boost)))
-    if phrase_clauses and (pos_terms & set(idx.postings)):
-        cache = weights[sorted(pos_terms & set(idx.postings))[0]].cache
-        for (positions, _s, _occ, boost), m in zip(phrase_clauses, pc_maps):
-            if any(all(t not in idx.postings for t in alts) for alts, _off in positions):
-                continue
-            # PhraseWeight: one idf per clause occurrence (repeats again);
-            # a MultiPhraseQuery position adds every alternative's idf,
-            # df=0 ones included (TermContext.build)
-            idf_sum = idf_sum_f32(
-                idf_f32(len(idx.postings.get(t, {})), idx.doc_count)
-                for alts, _off in positions for t in alts
-            )
-            # boost multiplies the idf sum BEFORE (k1+1) (BM25Stats.normalize)
-            w = np.float32(idf_sum * np.float32(boost))
-            wv = np.float32(w * (K1 + np.float32(1.0)))
-            pf = np.array([m.get(int(d), 0) for d in docs], dtype=np.float32)
-            ps = (wv * pf / (pf + cache[norm])).astype(np.float32)
-            ps[pf == 0] = np.float32(0.0)
-            (req_clause if _occ == "+" else per_clause).append(ps)
-    if (span or span_first) and (pos_terms & set(idx.postings)):
-        if span:
-            # SpanNot/Containing/Within maps include both sides' contexts
-            sn = (
-                set(getattr(spec, "span_not", ()) or ())
-                | set(getattr(spec, "span_contain", ()) or ())
-                | set(getattr(spec, "span_within", ()) or ())
-                | {
-                    t
-                    for c in (getattr(spec, "span_not_near", ()) or ())
-                    for t in ((c,) if isinstance(c, str) else tuple(c))
-                }
-            )
-            idf_sum = idf_sum_f32(
-                idf_f32(len(idx.postings.get(t, {})), idx.doc_count)
-                for t in sorted(set(span) | sn)
-            )
-        else:
-            idf_sum = np.float32(idf_f32(len(idx.postings[span_first[0]]), idx.doc_count))
-        wv = np.float32(idf_sum * (K1 + np.float32(1.0)))
-        cache = weights[sorted(pos_terms & set(idx.postings))[0]].cache
-        pf = np.array([pf_map.get(int(d), 0) for d in docs], dtype=np.float32)
+    # positional clauses: one score array each (float32 order identical
+    # to _make_range_scorer: wv = f32(f32(idf_sum * boost) * (k1+1)))
+    for (_pf, ts, boost, occ), m in zip(pos_clauses, pf_maps):
+        if not m:
+            continue
+        idf_sum = idf_sum_f32(
+            idf_f32(len(idx.postings.get(t, {})), idx.doc_count) for t in ts
+        )
+        w = np.float32(idf_sum * np.float32(boost))
+        wv = np.float32(w * (K1 + np.float32(1.0)))
+        pf = np.array([m.get(int(d), 0) for d in docs], dtype=np.float32)
         ps = (wv * pf / (pf + cache[norm])).astype(np.float32)
         ps[pf == 0] = np.float32(0.0)
-        req_clause.append(ps)
+        (req_clause if occ == "+" else per_clause).append(ps)
     if not per_clause and not req_clause:
         return []
     if spec.dismax:

@@ -1,5 +1,7 @@
-"""Span queries over term clauses: SpanNearQuery (ordered / unordered)
-and SpanFirstQuery.
+"""Span queries over term clauses: SpanNearQuery (ordered / unordered),
+SpanNotQuery, SpanContainingQuery, SpanWithinQuery and
+SpanPositionRangeQuery (SpanFirstQuery is its lo = 0 case), plus the
+span clause nodes of BooleanSpec.spans that name them.
 
 Reference semantics (lucene/core/src/java/org/apache/lucene/search/spans/):
 
@@ -23,9 +25,14 @@ Reference semantics (lucene/core/src/java/org/apache/lucene/search/spans/):
   the pairs (x in A, y in B) with nextA(x) > y and nextB(y) > x (the
   classic merge-walk frontier), giving `span_unordered_freq_2` —
   property-tested against the queue walks.
-* SpanFirstQuery.java:30-44 — accept spans with endPosition <= end; for
-  a term clause freq = count of positions with pos+1 <= end (each
-  accepted span has width 0).
+* SpanNotQuery.java / SpanContainingQuery.java / SpanWithinQuery.java —
+  filter the ordered near's spans by another side's occurrences
+  (`span_not_freq`, `span_containing_freq`, `span_within_freq`,
+  `span_not_span_freq`).
+* SpanPositionRangeQuery.java — accept spans with startPosition >= lo
+  and endPosition <= hi; for a term clause freq = count of positions
+  with lo <= pos and pos+1 <= hi (each accepted span has width 0).
+  SpanFirstQuery.java:30-44 is the lo = 0 case.
 * SpanScorer.java:84-118 — freq += sloppyFreq(width) = 1/(width+1) per
   match, accumulated in float32; the doc scores through the same BM25
   formula with the span weight (idf summed over the clauses' DISTINCT
@@ -390,6 +397,86 @@ def span_not_span_freq(
             continue
         freq = np.float32(freq + np.float32(1.0) / np.float32(width + 1))
     return freq
+
+
+# ---------------------------------------------------------------------------
+# span clause nodes (the grammar is on BooleanSpec.spans): ("near",
+# clauses, slop, ordered), ("not", near, exclude), ("containing", near,
+# terms), ("within", near, terms) and ("range", term, lo, hi)
+
+
+def span_alts(clause) -> tuple[str, ...]:
+    """Normalize a span clause to its alternative set: a bare term is a
+    1-tuple; a tuple is a SpanOr of term spans (union of positions)."""
+    return (clause,) if isinstance(clause, str) else tuple(clause)
+
+
+def _is_terms(side) -> bool:
+    """A not/containing/within side given as terms, not a "near" node."""
+    return all(isinstance(t, str) for t in side)
+
+
+def span_sets(node) -> tuple[tuple[str, ...], ...]:
+    """The alternative sets a doc must hit one term of each to hold a
+    span of the node: the (include / big) near's clauses, or the range
+    node's one term."""
+    if node[0] == "range":
+        return ((node[1],),)
+    near = node if node[0] == "near" else node[1]
+    return tuple(span_alts(c) for c in near[1])
+
+
+def span_terms(node) -> tuple[str, ...]:
+    """Every term of the node, the exclude / little side included (the
+    keys of SpanWeight's term->context map)."""
+    out = tuple(t for alts in span_sets(node) for t in alts)
+    if node[0] in ("not", "containing", "within"):
+        side = node[2]
+        out += tuple(side) if _is_terms(side) else span_terms(side)
+    return out
+
+
+def span_shape_error(node) -> str | None:
+    """Why the walks cannot score the node, or None: the term-side
+    not/containing/within walks are ordered, only 'not' takes a near
+    side, and that exclude near shares the include near's in-order
+    flag."""
+    if node[0] not in ("not", "containing", "within"):
+        return None
+    ordered, side = node[1][3], node[2]
+    if _is_terms(side):
+        return None if ordered else f"an unordered near under {node[0]!r}"
+    if node[0] != "not":
+        return f"a near side under {node[0]!r}"
+    if side[3] != ordered:
+        return "a 'not' whose include and exclude nears differ in order"
+    return None
+
+
+def span_freq(node, plist) -> np.float32:
+    """One doc's span freq for a node (SpanScorer's float32 fold of
+    1/(width+1)). plist(alts) -> the doc's ascending positions of the
+    union of the alternatives; a clause with none gives freq 0."""
+    kind = node[0]
+    if kind == "range":
+        return span_position_range_freq(plist((node[1],)), node[2], node[3])
+    _near, clauses, slop, ordered = node if kind == "near" else node[1]
+    plists = [plist(span_alts(c)) for c in clauses]
+    if not all(plists):
+        return np.float32(0.0)
+    if kind == "near":
+        walk = span_ordered_freq if ordered else span_unordered_freq
+        return walk(plists, slop)
+    side = node[2]
+    if not _is_terms(side):
+        exc = [plist(span_alts(c)) for c in side[1]]
+        return span_not_span_freq(plists, slop, exc, side[2], ordered=ordered)
+    walk = {
+        "not": span_not_freq,
+        "containing": span_containing_freq,
+        "within": span_within_freq,
+    }[kind]
+    return walk(plists, slop, plist(tuple(side)))
 
 
 # ---------------------------------------------------------------------------

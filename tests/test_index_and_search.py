@@ -133,6 +133,31 @@ def test_driver_plan_boundary(built, monkeypatch):
     assert len(_rows(under)) == 10
 
 
+def test_positional_driver_plan_boundary(built, monkeypatch):
+    """Positional clauses verify positions doc by doc in Python, so their
+    driver plan stops at the lower DRIVER_POSITIONAL_MAX_BLOCKS: a sloppy
+    phrase over it keeps the distributed plan even with
+    DRIVER_SCORE_MAX_BLOCKS far above the bound; at it the scan is scored
+    on the driver. Both plans give the same rows."""
+    _, searcher, _ = built
+    spec = E.phrase_spec("parse index", slop=4)
+    weights = searcher.term_weights(list(spec.positional_terms))
+    bound = sum(
+        min(w["df"], -(-w["df"] // BLOCK_SIZE) + searcher._est_ranges())
+        for w in weights.values() if w["df"] > 0
+    )
+    monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", 10 * bound)
+    monkeypatch.setattr(E, "DRIVER_POSITIONAL_MAX_BLOCKS", bound - 1)
+    over = searcher.topk_spec(spec, k=10)
+    assert "FlatMapGroupsInPandas" in _plan(over)
+    monkeypatch.setattr(E, "DRIVER_POSITIONAL_MAX_BLOCKS", bound)
+    under = searcher.topk_spec(spec, k=10)
+    plan = _plan(under)
+    assert "InPandas" not in plan and "Python" not in plan, plan
+    assert _rows(under) == _rows(over)
+    assert _rows(under)
+
+
 def test_driver_plan_matches_distributed_on_restricted_scans(built, monkeypatch):
     """candidates (rescore pushdown) and range_ids (time-limited slices)
     restrict the scan; the driver plan scores them exactly as the

@@ -267,8 +267,8 @@ def test_topk_not_dismax_spans_match_compiled_reference():
                 queries.append((
                     f"SPANNEAR {slop} {1 if ordered else 0} {' '.join(ts)}",
                     lambda ts=ts, slop=slop, ordered=ordered: oracle_topk_spec(
-                        idx, BooleanSpec(span=tuple(ts), span_slop=slop,
-                                         span_ordered=ordered), k=10),
+                        idx, BooleanSpec(spans=(("near", tuple(ts), slop,
+                                                 ordered),)), k=10),
                 ))
             else:
                 t = rng.choice(VOCAB)
@@ -276,7 +276,7 @@ def test_topk_not_dismax_spans_match_compiled_reference():
                 queries.append((
                     f"SPANFIRST {end} {t}",
                     lambda t=t, end=end: oracle_topk_spec(
-                        idx, BooleanSpec(span_first=(t, end)), k=10),
+                        idx, BooleanSpec(spans=(("range", t, 0, end),)), k=10),
                 ))
 
         expected = gt.run_topk(docs, [q for q, _fn in queries])
@@ -961,15 +961,15 @@ def test_syn_blend_const_span_family_match_compiled_reference():
                 slop = rng.randint(0, 4)
                 op = {"spannot": "SPANNOT", "spancontain": "SPANCONTAIN",
                       "spanwithin": "SPANWITHIN"}[kind]
-                field = {"spannot": "span_not", "spancontain": "span_contain",
-                         "spanwithin": "span_within"}[kind]
+                node_kind = {"spannot": "not", "spancontain": "containing",
+                             "spanwithin": "within"}[kind]
                 queries.append((
                     f"{op} {slop} {len(inc)} {' '.join(inc)} {' '.join(exc)}",
-                    lambda inc=inc, exc=exc, slop=slop, field=field: oracle_topk_spec(
+                    lambda inc=inc, exc=exc, slop=slop, nk=node_kind: oracle_topk_spec(
                         idx,
-                        BooleanSpec(span=tuple(inc), span_slop=slop,
-                                    span_ordered=True,
-                                    **{field: tuple(exc)}), k=10),
+                        BooleanSpec(spans=((
+                            nk, ("near", tuple(inc), slop, True), tuple(exc),
+                        ),)), k=10),
                     False,
                 ))
             else:
@@ -2016,7 +2016,7 @@ def test_complex_phrase_parser_matches_compiled_reference():
                 span = tuple(c[0] if len(c) == 1 else c for c in clauses)
                 got = oracle_topk_spec(
                     idx,
-                    BooleanSpec(span=span, span_slop=slop, span_ordered=True),
+                    BooleanSpec(spans=(("near", span, slop, True),)),
                     k=10,
                 )
             _assert_topk_equal(got, exp, (corpus_round, qs))
@@ -2071,10 +2071,10 @@ def test_complex_phrase_negation_matches_compiled_reference():
                 for c, ng in zip(clauses, negs) if not ng
             )
             allc = tuple(c[0] if len(c) == 1 else c for c in clauses)
-            spec = BooleanSpec(
-                span=span, span_slop=slop + n_neg, span_ordered=True,
-                span_not_near=allc, span_not_near_slop=slop,
-            )
+            spec = BooleanSpec(spans=((
+                "not", ("near", span, slop + n_neg, True),
+                ("near", allc, slop, True),
+            ),))
             got = oracle_topk_spec(idx, spec, k=10)
             _assert_topk_equal(got, exp, (corpus_round, qs))
 
@@ -2139,7 +2139,7 @@ def test_surround_parser_matches_compiled_reference():
             span = tuple(c[0] if len(c) == 1 else c for c in clauses)
             got = oracle_topk_spec(
                 idx,
-                BooleanSpec(span=span, span_slop=dist - 1, span_ordered=ordered),
+                BooleanSpec(spans=(("near", span, dist - 1, ordered),)),
                 k=10,
             )
             _assert_topk_equal(got, exp, (corpus_round, qs))
@@ -2199,9 +2199,7 @@ def test_unordered_same_position_repeats_match_compiled_reference():
         for (clauses, slop), exp in zip(cases, expected):
             got = oracle_topk_spec(
                 idx,
-                BooleanSpec(
-                    span=tuple(clauses), span_slop=slop, span_ordered=False
-                ),
+                BooleanSpec(spans=(("near", tuple(clauses), slop, False),)),
                 k=10,
             )
             _assert_topk_equal(got, exp, (corpus_round, clauses, slop))
@@ -2262,15 +2260,13 @@ def test_complex_phrase_unordered_matches_compiled_reference():
                     for c, ng in zip(clauses, negs) if not ng
                 )
                 allc = tuple(c[0] if len(c) == 1 else c for c in clauses)
-                spec = BooleanSpec(
-                    span=span, span_slop=slop + n_neg, span_ordered=False,
-                    span_not_near=allc, span_not_near_slop=slop,
-                )
+                spec = BooleanSpec(spans=((
+                    "not", ("near", span, slop + n_neg, False),
+                    ("near", allc, slop, False),
+                ),))
             else:
                 span = tuple(c[0] if len(c) == 1 else c for c in clauses)
-                spec = BooleanSpec(
-                    span=span, span_slop=slop, span_ordered=False
-                )
+                spec = BooleanSpec(spans=(("near", span, slop, False),))
             got = oracle_topk_spec(idx, spec, k=10)
             _assert_topk_equal(got, exp, (corpus_round, qs))
 

@@ -229,15 +229,19 @@ def test_stored_ivf_probe_is_partition_pruned(spark, tmp_path):
     assert [tuple(r) for r in got.collect()] == want
 
 
-def test_term_automaton_scan_pruned_to_labels(spark):
+def test_term_automaton_scan_pruned_to_labels(spark, monkeypatch):
     """TermAutomatonQuery scans only its labels' posting blocks (term-hash
     partition pruning like every other query), reads the position stream,
-    and never touches the documents corpus."""
+    and never touches the documents corpus (read in the driver under
+    DRIVER_SCORE_MAX_BLOCKS, by a Spark scan above it)."""
     from lucene_solr_spark.ops.index_access import searcher_for
+    from lucene_solr_spark.search import engine as E
 
     s = searcher_for(spark, SF)
-    df = s.topk_term_automaton([(0, "merge", 1), (1, "", 2), (2, "sort", 3)], [3], k=10)
-    plan = _plan(df)
+    auto = ([(0, "merge", 1), (1, "", 2), (2, "sort", 3)], [3])
+    assert "documents" not in _plan(s.topk_term_automaton(*auto, k=10))
+    monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", 0)
+    plan = _plan(s.topk_term_automaton(*auto, k=10))
     assert "postings" in plan and "documents" not in plan
     assert "pos_buf" in plan  # the position stream is read
     read = plan.split("ReadSchema")[-1]

@@ -215,76 +215,117 @@ def built(spark, tmp_root):
     return IndexSearcher(spark, out), oidx
 
 
+def near(clauses, slop, ordered=True):
+    return ("near", tuple(clauses), slop, ordered)
+
+
 SPAN_SPECS = [
-    BooleanSpec(span=("parse", "index"), span_slop=0, span_ordered=True),
-    BooleanSpec(span=("parse", "index"), span_slop=3, span_ordered=True),
-    BooleanSpec(span=("index", "parse"), span_slop=3, span_ordered=False),
-    BooleanSpec(span=("parse", "merge", "token"), span_slop=6, span_ordered=True),
-    BooleanSpec(span=("merge", "token", "parse"), span_slop=6, span_ordered=False),
-    BooleanSpec(span_first=("parse", 8)),
-    BooleanSpec(span=("parse", "index"), span_slop=4, span_ordered=True,
-                span_not=("merge",)),
-    BooleanSpec(span=("parse", "index"), span_slop=4, span_ordered=True,
-                span_not=("zzz_missing",)),
-    BooleanSpec(span=("parse", "index"), span_slop=5, span_ordered=True,
-                span_contain=("merge",)),
-    BooleanSpec(span=("parse", "index"), span_slop=5, span_ordered=True,
-                span_within=("merge",)),
+    BooleanSpec(spans=(near(("parse", "index"), 0),)),
+    BooleanSpec(spans=(near(("parse", "index"), 3),)),
+    BooleanSpec(spans=(near(("index", "parse"), 3, False),)),
+    BooleanSpec(spans=(near(("parse", "merge", "token"), 6),)),
+    BooleanSpec(spans=(near(("merge", "token", "parse"), 6, False),)),
+    BooleanSpec(spans=(("range", "parse", 0, 8),)),  # SpanFirst
+    BooleanSpec(spans=(("not", near(("parse", "index"), 4), ("merge",)),)),
+    BooleanSpec(spans=(("not", near(("parse", "index"), 4), ("zzz_missing",)),)),
+    BooleanSpec(spans=(("containing", near(("parse", "index"), 5), ("merge",)),)),
+    BooleanSpec(spans=(("within", near(("parse", "index"), 5), ("merge",)),)),
     BooleanSpec(phrases=(((
         (("parse", "merge"), 0), (("index", "token"), 1)), 0, "+", 1.0),)),
     BooleanSpec(phrases=(((
         ("parse", 0), (("index", "zzz_missing"), 1)), 0, "+", 1.0),)),
     # SpanOr-of-terms clauses inside SpanNear (ComplexPhraseQueryParser
     # elements; pinned vs the compiled binary in ground-truth round 23)
-    BooleanSpec(span=(("parse", "merge"), "index"), span_slop=1,
-                span_ordered=True),
-    BooleanSpec(span=(("parse", "merge"), ("index", "token")), span_slop=3,
-                span_ordered=False),
-    BooleanSpec(span=(("parse", "zzz_missing"), "index"), span_slop=2,
-                span_ordered=True),
+    BooleanSpec(spans=(near((("parse", "merge"), "index"), 1),)),
+    BooleanSpec(spans=(near((("parse", "merge"), ("index", "token")), 3, False),)),
+    BooleanSpec(spans=(near((("parse", "zzz_missing"), "index"), 2),)),
     # unordered with OVERLAPPING alternative sets / repeated clauses —
     # NearSpansUnordered's same-position repeats machinery (pinned vs
     # the compiled binary in ground-truth round 25)
-    BooleanSpec(span=(("index", "parse"), ("merge", "parse")), span_slop=3,
-                span_ordered=False),
-    BooleanSpec(span=("parse", "parse"), span_slop=2, span_ordered=False),
+    BooleanSpec(spans=(near((("index", "parse"), ("merge", "parse")), 3, False),)),
+    BooleanSpec(spans=(near(("parse", "parse"), 2, False),)),
     # unordered in-phrase negation (CPQP setInOrder(false), GT round 25b)
-    BooleanSpec(span=("parse", "index"), span_slop=4, span_ordered=False,
-                span_not_near=("parse", "merge", "index"),
-                span_not_near_slop=3),
+    BooleanSpec(spans=((
+        "not", near(("parse", "index"), 4, False),
+        near(("parse", "merge", "index"), 3, False),
+    ),)),
+    # SpanPositionRange with lo > 0
+    BooleanSpec(spans=(("range", "parse", 2, 9),)),
+    # two span clauses in one spec: both required
+    BooleanSpec(spans=(near(("parse", "index"), 3), ("range", "merge", 0, 12))),
+    # a span clause with a required, then an optional phrase
+    BooleanSpec(spans=(near(("parse", "index"), 4, False),),
+                phrases=(((("merge", 0), ("token", 1)), 1, "+", 1.0),)),
+    BooleanSpec(spans=(near(("parse", "index"), 4, False),),
+                phrases=(((("merge", 0), ("token", 1)), 2, "", 2.0),)),
+    # a span clause with should terms and minShouldMatch
+    BooleanSpec(spans=(("within", near(("parse", "index"), 6), ("merge",)),),
+                should=("token", "merge", "score"), min_should_match=1),
+    BooleanSpec(spans=(near((("parse", "merge"), "index"), 5, False),),
+                should=("token", "score", "zzz_missing"), min_should_match=2),
 ]
 
 
 @pytest.mark.parametrize("spec", SPAN_SPECS, ids=[str(i) for i in range(len(SPAN_SPECS))])
-def test_span_rank_identity(built, spec):
+def test_span_rank_identity(built, monkeypatch, spec):
+    """Engine == oracle on every plan: the driver plan under the default
+    DRIVER_SCORE_MAX_BLOCKS and the distributed plan with the cap at 0."""
+    from lucene_solr_spark.search import engine as E
+
     searcher, oidx = built
     expected = oracle_topk_spec(oidx, spec, k=10)
-    got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
-    assert len(got) == len(expected), (spec, got, expected)
-    for (gd, gs), (ed, es) in zip(got, expected):
-        assert gd == ed and np.float32(gs) == es, (spec, got, expected)
+    for cap in (E.DRIVER_SCORE_MAX_BLOCKS, 0):
+        monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", cap)
+        got = [(r["doc_id"], r["score"]) for r in searcher.topk_spec(spec, k=10).collect()]
+        assert len(got) == len(expected), (spec, cap, got, expected)
+        for (gd, gs), (ed, es) in zip(got, expected):
+            assert gd == ed and np.float32(gs) == es, (spec, cap, got, expected)
 
 
-@pytest.mark.parametrize("mix", [
-    {"span": ("parse", "index")},
-    {"span_first": ("parse", 8)},
-    {"span_position_range": ("parse", 0, 8)},
-    {"term_automaton": (((0, "parse", 1),), (1,))},
-], ids=["span", "span_first", "span_position_range", "term_automaton"])
-def test_phrase_mixed_with_positional_clause_rejected_before_read(built, monkeypatch, mix):
-    """Phrase clauses do not mix with span, position-range or automaton
-    clauses; topk_spec refuses such a spec before it reads term stats."""
-    from lucene_solr_spark.search.engine import phrase_spec
-
-    searcher, _oidx = built
-
+def _poison_term_weights(monkeypatch, searcher):
     def no_read(_terms):
         raise AssertionError("term stats read for a rejected spec")
 
     monkeypatch.setattr(searcher, "term_weights", no_read)
+
+
+@pytest.mark.parametrize("mix", [
+    {"term_automaton": (((0, "parse", 1),), (1,))},
+], ids=["term_automaton"])
+def test_phrase_mixed_with_positional_clause_rejected_before_read(built, monkeypatch, mix):
+    """A term automaton does not mix with phrase or span clauses (its
+    own control scores it alone); topk_spec refuses such a spec before
+    it reads term stats."""
+    from lucene_solr_spark.search.engine import phrase_spec
+
+    searcher, _oidx = built
+    _poison_term_weights(monkeypatch, searcher)
     spec = BooleanSpec(phrases=phrase_spec("parse index").phrases, **mix)
-    with pytest.raises(ValueError, match="phrase clauses cannot mix"):
+    with pytest.raises(ValueError, match="term automaton does not mix"):
         searcher.topk_spec(spec, k=5)
+
+
+@pytest.mark.parametrize("node", [
+    ("not", near(("parse", "index"), 4, False), ("merge",)),
+    ("containing", near(("parse", "index"), 5, False), ("merge",)),
+    ("within", near(("parse", "index"), 5, False), ("merge",)),
+    ("not", near(("parse", "index"), 4, False), near(("parse", "merge"), 3)),
+    ("within", near(("parse", "index"), 5), near(("merge",), 0)),
+], ids=["not", "containing", "within", "not_near_mixed_order", "within_near_side"])
+def test_unscorable_span_shape_rejected_before_read(built, monkeypatch, node):
+    """The not/containing/within walks against terms are ordered, only
+    'not' takes a near side, and that near shares the include's in-order
+    flag: any other shape is refused when the spec is built, so neither
+    the engine (before any term stats are read) nor the oracle's
+    MemoryIndex path ever scores it as a shape it is not."""
+    from lucene_solr_spark.search.memory import MemoryIndex
+
+    searcher, _oidx = built
+    _poison_term_weights(monkeypatch, searcher)
+    with pytest.raises(ValueError, match="is not supported"):
+        searcher.topk_spec(BooleanSpec(spans=(node,)), k=5)
+    with pytest.raises(ValueError, match="is not supported"):
+        MemoryIndex("parse merge index").score(BooleanSpec(spans=(node,)))
 
 
 def test_complex_phrase_api(built):
@@ -304,8 +345,7 @@ def test_complex_phrase_api(built):
     ]
     want = oracle_topk_spec(
         oidx,
-        BooleanSpec(span=(("merge", "parse"), "index"), span_slop=1,
-                    span_ordered=True),
+        BooleanSpec(spans=(near((("merge", "parse"), "index"), 1),)),
         k=10,
     )
     assert got == [(d, s) for d, s in want] and got
@@ -319,8 +359,7 @@ def test_complex_phrase_api(built):
     ]
     want_w = oracle_topk_spec(
         oidx,
-        BooleanSpec(span=(exp if len(exp) > 1 else exp[0], "index"),
-                    span_slop=2, span_ordered=True),
+        BooleanSpec(spans=(near((exp if len(exp) > 1 else exp[0], "index"), 2),)),
         k=10,
     )
     assert got_w == [(d, s) for d, s in want_w]
@@ -338,8 +377,7 @@ def test_complex_phrase_api(built):
     ]
     want_u = oracle_topk_spec(
         oidx,
-        BooleanSpec(span=("index", ("merge", "parse")), span_slop=2,
-                    span_ordered=False),
+        BooleanSpec(spans=(near(("index", ("merge", "parse")), 2, False),)),
         k=10,
     )
     assert got_u == [(d, s) for d, s in want_u] and got_u
@@ -352,10 +390,10 @@ def test_complex_phrase_api(built):
     ]
     want_un = oracle_topk_spec(
         oidx,
-        BooleanSpec(
-            span=("parse", "index"), span_slop=4, span_ordered=False,
-            span_not_near=("parse", "merge", "index"), span_not_near_slop=3,
-        ),
+        BooleanSpec(spans=((
+            "not", near(("parse", "index"), 4, False),
+            near(("parse", "merge", "index"), 3, False),
+        ),)),
         k=10,
     )
     assert got_un == [(d, s) for d, s in want_un]
@@ -373,8 +411,7 @@ def test_surround_api(built):
     ]
     want = oracle_topk_spec(
         oidx,
-        BooleanSpec(span=(("merge", "parse"), "index"), span_slop=1,
-                    span_ordered=True),
+        BooleanSpec(spans=(near((("merge", "parse"), "index"), 1),)),
         k=10,
     )
     assert got == [(d, s) for d, s in want] and got
@@ -385,7 +422,7 @@ def test_surround_api(built):
     ]
     want_n = oracle_topk_spec(
         oidx,
-        BooleanSpec(span=("index", "parse"), span_slop=2, span_ordered=False),
+        BooleanSpec(spans=(near(("index", "parse"), 2, False),)),
         k=10,
     )
     assert got_n == [(d, s) for d, s in want_n]
@@ -400,8 +437,7 @@ def test_surround_api(built):
     ]
     want_o = oracle_topk_spec(
         oidx,
-        BooleanSpec(span=(("index", "parse"), ("merge", "parse")),
-                    span_slop=3, span_ordered=False),
+        BooleanSpec(spans=(near((("index", "parse"), ("merge", "parse")), 3, False),)),
         k=10,
     )
     assert got_o == [(d, s) for d, s in want_o] and got_o

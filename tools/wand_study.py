@@ -8,13 +8,19 @@ pruning must never change the top-k).
 Usage: python3 tools/wand_study.py [--index /tmp/lss_scale_idx_8]
                                    [--cpus 8] [--queries q1,q2,...]
        python3 tools/wand_study.py --crossover [--cpus 2]
+                                   [--crossover-kinds or,sloppy,span,automaton]
 Prints one JSON line; paste the table into BENCH.md.
 
 --crossover times the driver plan against the distributed plan for
-unpruned top-k OR queries over the N most frequent terms, at several
+unpruned top-k queries over the N most frequent terms, at several
 block bounds, on two make_corpus indexes (24k docs in 128-doc ranges,
 48k docs in 1024-doc ranges), and asserts equal rows on every run: the
-table that sets engine.DRIVER_SCORE_MAX_BLOCKS.
+table that sets engine.DRIVER_SCORE_MAX_BLOCKS. --crossover-kinds picks
+the query shapes (crossover_spec): an OR of the terms (the default),
+and the positional clauses that verify positions per candidate doc — a
+sloppy MultiPhraseQuery, an unordered SpanNear and a term automaton,
+each over two alternative sets that split the terms in half: the table
+that sets engine.DRIVER_POSITIONAL_MAX_BLOCKS.
 
 prune=True always runs the distributed two-wave plan. prune=False runs
 the driver plan when the query's block bound is at most
@@ -95,9 +101,31 @@ def build_skewed_index(spark, n_docs: int, out_dir: str) -> None:
 CROSSOVER_INDEXES = ((24_000, 128), (48_000, 1024))
 
 
+def crossover_spec(kind: str, terms: tuple[str, ...]):
+    """The --crossover query of one kind over `terms`: 'or' is a SHOULD
+    clause per term; the positional kinds match a term of the first half
+    followed (within slop 3, or next for the automaton) by a term of the
+    second half, so their scan and block bound equal the OR query's."""
+    from lucene_solr_spark.search.engine import BooleanSpec
+
+    if kind == "or":
+        return BooleanSpec(should=terms)
+    half = max(1, len(terms) // 2)
+    a, b = terms[:half], terms[half:]
+    if kind == "sloppy":
+        return BooleanSpec(phrases=((((a, 0), (b, 1)), 3, "+", 1.0),))
+    if kind == "span":
+        return BooleanSpec(spans=(("near", (a, b), 3, False),))
+    if kind == "automaton":
+        arcs = tuple((0, t, 1) for t in a) + tuple((1, t, 2) for t in b)
+        return BooleanSpec(term_automaton=(arcs, (2,)))
+    raise ValueError(f"unknown --crossover kind {kind!r}")
+
+
 def crossover(spark, args) -> dict:
     """Driver plan vs distributed plan, median wall time of alternating
-    runs, per (index, query size); every run's rows must be equal."""
+    runs, per (index, query kind, query size); every run's rows must
+    be equal."""
     import statistics
     import tempfile
 
@@ -106,7 +134,7 @@ def crossover(spark, args) -> dict:
     from lucene_solr_spark.corpus import make_corpus
     from lucene_solr_spark.index.builder import BLOCK_SIZE, build_index
     from lucene_solr_spark.search import engine
-    from lucene_solr_spark.search.engine import BooleanSpec, IndexSearcher
+    from lucene_solr_spark.search.engine import IndexSearcher
 
     caps = {"driver": 10**9, "distributed": 0}
     out = []
@@ -122,15 +150,17 @@ def crossover(spark, args) -> dict:
         n_ranges = s._est_ranges()
         by_df = [(r["term"], r["df"]) for r in
                  s._term_stats.orderBy(F.col("df").desc(), F.col("term")).collect()]
-        for n_terms in [int(x) for x in args.crossover_terms.split(",")]:
+        for kind, n_terms in [(kind, int(x)) for kind in args.crossover_kinds.split(",")
+                              for x in args.crossover_terms.split(",")]:
             terms = by_df[:n_terms]
             bound = sum(min(df, -(-df // BLOCK_SIZE) + n_ranges) for _t, df in terms)
-            spec = BooleanSpec(should=tuple(t for t, _df in terms))
+            spec = crossover_spec(kind, tuple(t for t, _df in terms))
             times = {p: [] for p in caps}
             want = None
             for rep in range(args.reps + 1):  # the first round warms both plans
                 for plan, cap in caps.items():
                     engine.DRIVER_SCORE_MAX_BLOCKS = cap
+                    engine.DRIVER_POSITIONAL_MAX_BLOCKS = cap
                     t0 = time.perf_counter()
                     hits = s.topk_spec(spec, k=args.k, prune=False)
                     rows = [(r["doc_id"], r["score"]) for r in hits.collect()]
@@ -138,8 +168,9 @@ def crossover(spark, args) -> dict:
                         times[plan].append(time.perf_counter() - t0)
                     assert plan_of(hits) == plan, (plan, n_terms)
                     want = rows if want is None else want
-                    assert rows == want, (n_docs, n_terms, plan)
-            row = {"docs": n_docs, "ranges": n_ranges, "terms": len(terms),
+                    assert rows == want, (n_docs, kind, n_terms, plan)
+            row = {"docs": n_docs, "ranges": n_ranges, "kind": kind,
+                   "terms": len(terms), "hits": len(want),
                    "block_bound": bound, "identical": True,
                    **{f"{p}_s": round(statistics.median(t), 3) for p, t in times.items()}}
             print(json.dumps(row), file=sys.stderr, flush=True)
@@ -170,6 +201,9 @@ def main() -> None:
                          "instead (see the module docstring)")
     ap.add_argument("--crossover-terms", default="2,8,24,48,96,192,384,768",
                     help="comma list of query sizes (most frequent terms)")
+    ap.add_argument("--crossover-kinds", default="or",
+                    help="comma list of query shapes: or, sloppy, span, "
+                         "automaton (see crossover_spec)")
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
