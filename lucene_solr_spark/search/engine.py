@@ -14,11 +14,11 @@ per-leaf scorer -> TopScoreDocCollector -> TopDocs.merge; SURVEY.md §3.1):
     file snapshot, with no Spark job; a larger one is a Spark scan.
  4. groupBy(range_id): each doc-range partition scores like one Lucene
     segment — decode its blocks in one pass per column (search/postings.py),
-    dense-accumulate per-doc scores in double (BooleanScorer's 2048-doc
-    bulk window, scaled to the range) from numpy arrays, cast to float32,
-    local bounded top-k. A small scan (DRIVER_SCORE_MAX_BLOCKS) is decoded
-    once in the driver process and the same per-range scorer runs on each
-    range's slice of it.
+    then one simpleqp.eval_tree call over the query's clause tree
+    (spec_tree): per-doc scores accumulate in double over the union of the
+    postings' docs, cast to float32, local bounded top-k. A small scan
+    (DRIVER_SCORE_MAX_BLOCKS) is decoded once in the driver process and
+    scored by one eval_tree call over all of it.
  5. global merge: ORDER BY score DESC, doc_id ASC LIMIT k (TopDocs.merge
     tie-break; docIDs are globally dense so partition order == docID order).
 
@@ -51,7 +51,6 @@ import json
 import math
 import os
 from dataclasses import dataclass, field
-from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -69,8 +68,9 @@ from .bm25 import (
     B, K1, SIMILARITIES, avgdl_f32, bm25_scorers, idf_f32, idf_sum_f32, make_term_weight,
     norm_cache,
 )
-from .postings import decode_postings, range_slices
-from .spans import span_alts, span_freq, span_sets, span_shape_error, span_terms
+from .postings import decode_postings
+from .simpleqp import _RangeCtx, eval_tree, tree_pos_terms
+from .spans import span_alts, span_sets, span_shape_error, span_terms
 from .snapshot import BucketFiles, index_filesystem
 
 TOPK_SCHEMA = T.StructType(
@@ -343,6 +343,41 @@ def _member_terms(members) -> tuple[str, ...]:
         else:  # "w"
             out += tuple(t for t, _wv in m[1])
     return out
+
+
+def spec_tree(spec: BooleanSpec) -> tuple:
+    """The spec as one simpleqp.eval_tree node: a top-level bool whose
+    clauses are, in order, the `should` / `must` / `must_not` term
+    leaves, each group as a nested bool of its members (a "c" member is
+    a boosted const leaf, a "w" member a blend leaf), each phrase as a
+    (boosted) phrase leaf, each span node and the term automaton as a
+    required leaf. A dismax spec's `should` clauses form one dismax
+    node, a term's duplicates side by side in first-occurrence order
+    (the order of its float32 sum). The top bool applies the
+    similarity's coord."""
+    if spec.dismax:
+        should = sorted(spec.should, key=spec.should.index)
+        clauses = [("", ("dismax", spec.tiebreak, tuple(("term", t) for t in should)))]
+    else:
+        clauses = [("", ("term", t)) for t in spec.should]
+        clauses += [("+", ("term", t)) for t in spec.must]
+    clauses += [("-", ("term", t)) for t in spec.must_not]
+    for occ, members in spec.groups:
+        nodes = tuple(
+            ("", ("term", m) if isinstance(m, str)
+             else ("boosted", m[1], ("const", m[2])) if m[0] == "c"
+             else ("blend", m[1]))
+            for m in members
+        )
+        clauses.append((occ, ("bool", nodes, 0)))
+    for positions, slop, occ, boost in spec.phrases:
+        node = ("phrase", positions, slop)
+        clauses.append((occ, node if boost == 1 else ("boosted", boost, node)))
+    clauses += [("+", ("span_node", node)) for node in spec.spans]
+    if spec.term_automaton is not None:
+        clauses.append(("+", ("automaton", spec.term_automaton)))
+    return ("bool", tuple(clauses), spec.min_should_match,
+            SIMILARITIES[spec.similarity].coord)
 
 
 def ngram_phrase_rewrite(
@@ -1880,8 +1915,8 @@ class IndexSearcher:
             "docs_buf", "tfs_buf", "norms_buf",
         ]
         score_fn = _make_range_scorer(
-            spec, weights, bm25_scorers(weights, self.avgdl), False,
-            float(self.avgdl), self.doc_count, k, deleted=self.deleted,
+            spec_tree(spec), weights, float(self.avgdl), self.doc_count, k,
+            scorers=bm25_scorers(weights, self.avgdl), deleted=self.deleted,
         )
         return (
             self._apply_range_scorer(blocks, scan_cols, score_fn)
@@ -1984,22 +2019,18 @@ class IndexSearcher:
         block scan is a direct read of the searcher's file snapshot in the
         driver, with no Spark job — only the terms' bucket files, row
         groups pruned on term and, when `ranges` is given, on range_id.
-        The scan is decoded once (decode_postings, no pandas), and each
-        doc range's slice runs the very scorer the distributed plan ships
-        to the Python workers — one in-process shard search, as Lucene
-        scores a shard. The merge keeps the (score DESC, doc_id ASC)
-        order, so the rows equal the distributed plan's bit for bit."""
+        The scan is decoded once (decode_postings, no pandas) and scored
+        by one eval_tree call over all of it, with the scorer the
+        distributed plan ships to the Python workers. Its arrays span the
+        union of the scan's docs: at most BLOCK_SIZE (128) per block, so
+        128 x DRIVER_SCORE_MAX_BLOCKS. Every doc's score depends only on
+        the global stats, so the rows equal the distributed plan's bit
+        for bit."""
         where = ds.field("term").isin(terms)
         if ranges is not None:
             where &= ds.field("range_id").isin(pa.array(ranges, pa.int64()))
         scan = self._postings_files.read(self._buckets_of(terms), scan_cols, where)
-        hits = [
-            score_fn.score(part)
-            for _rid, part in range_slices(score_fn.decode(scan), self._range_size)
-        ]
-        docs = np.concatenate([_NO_HITS[0], *(d for d, _s in hits)])
-        scores = np.concatenate([_NO_HITS[1], *(s for _d, s in hits)])
-        return topk_frame(self.spark, *_top_hits(docs, scores, k))
+        return topk_frame(self.spark, *score_fn.score(score_fn.decode(scan)))
 
     def _topk_sum_tf(self, present: list[str], wv: np.float32, k: int) -> DataFrame:
         """Shared scorer for 'union of term occurrences as one pseudo-term'
@@ -2099,7 +2130,8 @@ class IndexSearcher:
         whose block bound (min(df, ceil(df/BLOCK_SIZE) + ranges) summed
         over the query's terms) is at most DRIVER_SCORE_MAX_BLOCKS is
         scored on the driver: a direct read of the searcher's bucket
-        files and the same per-range scorer, with no Spark job at all.
+        files and one eval_tree call over the whole scan, with no Spark
+        job at all.
         Phrase, span and automaton clauses take it too, up to the lower
         DRIVER_POSITIONAL_MAX_BLOCKS (their per-doc position verify runs
         serially on the driver): the decoded scan carries their position
@@ -2130,9 +2162,15 @@ class IndexSearcher:
                 f"similarity {spec.similarity!r} covers term clauses only; "
                 "positional clauses are BM25-only"
             )
-        if spec.dismax and spec.groups:
+        if spec.dismax and (
+            spec.must or spec.groups or spec.positional_terms
+            or spec.min_should_match > 1
+        ):
             # DisjunctionMax is scored over `should` term clauses only
-            raise ValueError("a dismax spec cannot hold groups")
+            raise ValueError(
+                "a dismax spec holds should and must_not terms only: no "
+                "must, groups, positional clauses or min_should_match > 1"
+            )
         if spec.term_automaton is not None and (spec.phrases or spec.spans):
             # the automaton's own reference (oracle_term_automaton_topk)
             # scores it alone, so no reference scores such a mix
@@ -2195,9 +2233,12 @@ class IndexSearcher:
             weights, self.doc_count, self.sum_ttf, self.avgdl,
             dict(spec.boosts), tuple(spec.should) + tuple(spec.must),
         )
+        # the conjunction's block skip leads on the rarest one-term set
+        lead_terms = sorted({alts[0] for alts in spec.required_sets if len(alts) == 1})
+        lead = min(lead_terms, key=lambda t: weights[t]["df"]) if lead_terms else None
         score_fn = _make_range_scorer(
-            spec, weights, scorers, sim.coord, float(self.avgdl), self.doc_count,
-            k, candidates=cand_arr, deleted=self.deleted,
+            spec_tree(spec), weights, float(self.avgdl), self.doc_count, k,
+            scorers=scorers, lead=lead, candidates=cand_arr, deleted=self.deleted,
         )
         # a term's blocks tile each range it occurs in by BLOCK_SIZE docs,
         # so it has at most ceil(df/BLOCK_SIZE) + n_ranges of them, and
@@ -2236,7 +2277,8 @@ class IndexSearcher:
             prune = False
         if prune and pure_or:
             result = self._wand_pruned(
-                blocks, scan_cols, score_fn, weights, k, first_wave_ranges
+                blocks, scan_cols, score_fn, weights, spec.should, k,
+                first_wave_ranges,
             )
         else:
             result = self._apply_range_scorer(blocks, scan_cols, score_fn)
@@ -2462,7 +2504,7 @@ class IndexSearcher:
 
     def _wand_pruned(
         self, blocks: DataFrame, scan_cols: list[str], score_fn, weights: dict,
-        k: int, first_wave_ranges: int
+        should: tuple, k: int, first_wave_ranges: int
     ) -> DataFrame:
         # Wave 1 must surface >= k COMPETITIVE docs or theta comes out
         # weak and wave 2 prunes nothing (measured at 3M docs: 8 ranges
@@ -2471,9 +2513,12 @@ class IndexSearcher:
         # top-k docs of a skewed term concentrate ~1-2 per range, so
         # scale the wave with k and floor it well above it.
         first_wave_ranges = max(first_wave_ranges, 2 * k)
-        wv_map = F.create_map(
-            *[x for t, w in weights.items() for x in (F.lit(t), F.lit(w["weight_value"]))]
-        )
+        # a duplicate SHOULD clause scores again, so a term's weight
+        # counts once per clause
+        wv_map = F.create_map(*[
+            x for t, w in weights.items()
+            for x in (F.lit(t), F.lit(w["weight_value"] * should.count(t)))
+        ])
         # per-block bound: wv * max_tf/(max_tf + k1*(1-b)) + epsilon (must only over-estimate)
         kb = float(K1) * (1.0 - float(B))
         ub = wv_map[F.col("term")] * F.col("max_tf") / (F.col("max_tf") + F.lit(kb)) + F.lit(1e-5)
@@ -2721,20 +2766,6 @@ def _exact_phrase_pf(per_term, positions, cand: np.ndarray) -> np.ndarray:
     return counts
 
 
-def _span_near_freqs(per_term, node, cand: np.ndarray) -> np.ndarray:
-    """SpanNear / SpanNot / SpanContaining / SpanWithin freq per candidate
-    doc of one span node (BooleanSpec.spans) via the reference walks
-    (search/spans.py span_freq); per-doc sequential like Lucene's own
-    spans."""
-    abs_cache = {
-        t: _abs_positions(per_term, t) for t in set(span_terms(node)) if t in per_term
-    }
-    freqs = np.zeros(cand.size, dtype=np.float32)
-    for ci, c in enumerate(cand):
-        freqs[ci] = span_freq(node, lambda alts: _doc_positions(abs_cache, alts, c))
-    return freqs
-
-
 def _span_posrange_freqs(per_term, node, cand: np.ndarray) -> np.ndarray:
     """SpanPositionRangeQuery freq of a ("range", term, lo, hi) node
     (SpanFirst = lo 0): occurrences with lo <= pos and pos+1 <= hi,
@@ -2792,108 +2823,24 @@ def _cogroup_wrapper(score_fn):
     return cg
 
 
-def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: bool,
-                       avgdl: float, doc_count: int, k: int,
+def _make_range_scorer(tree, weights: dict, avgdl: float, doc_count: int, k: int,
+                       scorers: dict | None = None, lead: str | None = None,
                        candidates: np.ndarray | None = None,
                        deleted: np.ndarray | None = None):
-    """Per-(doc-range) scorer for applyInPandas. One group == one 'segment'.
-    The returned function also carries the two steps it runs on a group,
-    for the driver plan: .decode(scan) -> decoded postings (lead-span
-    block skip applied) and .score(postings of one range) -> (doc_id,
-    score) arrays; only the applyInPandas entry builds a DataFrame.
-    scorers: the similarity's prepared per-term score(freq, norm_byte)
-    for the term clauses; coord: apply ClassicSimilarity's coord.
-    Positional clauses, blended members and phrases score BM25.
+    """The applyInPandas scorer of one query tree: each doc-range group,
+    one 'segment', is decoded and scored by one simpleqp.eval_tree call.
+    The function also carries its two steps for the driver plan, which
+    runs them once on its whole scan: .decode(scan) -> decoded postings
+    (the lead term's block skip applied) and .score(postings) -> the k
+    best (doc_id, score) arrays; only the applyInPandas entry builds a
+    DataFrame. The evaluation's arrays span the union of the postings'
+    docs.
+    scorers: the similarity's prepared per-term score(freq, norm_byte),
+    boosts folded in (None: BM25 at the tree's boosts).
+    lead: the rarest one-term required clause, for the block skip.
     candidates: sorted doc ids to restrict scoring to (rescore pushdown).
     deleted: sorted tombstoned doc ids masked out (liveDocs)."""
-    should_terms = sorted({t for t in spec.should if weights[t]["df"] > 0})
-    should_count = {t: spec.should.count(t) for t in should_terms}
-    must_terms = sorted(set(spec.must))
-    must_count = {t: spec.must.count(t) for t in must_terms}
-    not_terms = sorted({t for t in spec.must_not if weights[t]["df"] > 0})
-    # positional terms that exist in the index (dead alternatives are
-    # skipped at decode; dead required clauses were rejected in topk_spec)
-    pos_terms = sorted({t for t in spec.positional_terms if weights[t]["df"] > 0})
-    # every clause a hit must match, as its alternative set: a range
-    # holding no term of some set has no hits
-    required_sets = spec.required_sets
-    # nested groups: drop dead members per type (a member survives if any
-    # of its terms is live; 'c' members keep partial term sets); '' / '-'
-    # groups with no live member vanish, a '+' one stays so the scorer
-    # returns no rows
-    group_clauses = []
-    for occ, members in spec.groups:
-        live = []
-        for m in members:
-            if isinstance(m, str):
-                if weights[m]["df"] > 0:
-                    live.append(m)
-            elif m[0] == "c":
-                ts = tuple(sorted({t for t in m[2] if weights[t]["df"] > 0}))
-                if ts:
-                    live.append(("c", np.float32(m[1]), ts))
-            else:
-                ws = tuple(
-                    (t, np.float32(wv)) for t, wv in m[1] if weights[t]["df"] > 0
-                )
-                if ws:
-                    live.append(("w", ws))
-        if live or occ == "+":
-            group_clauses.append((occ, tuple(live), _member_terms(live)))
-    n_plus_groups = sum(1 for occ, _ms, _ts in group_clauses if occ == "+")
-    # with no required clause (an optional phrase is a SHOULD clause) at
-    # least one SHOULD clause must match
-    msm = max(spec.min_should_match, 0 if required_sets else 1)
-    dfs = {t: weights[t]["df"] for t in weights}
-    cache = norm_cache(np.float32(avgdl))  # identical to the global 256-float cache
-
-    def weight_value(idfs, boost=1.0) -> np.float32:
-        # BoostQuery -> normalize(norm, boost): weight = (float)(idf*boost),
-        # then weightValue = (float)(weight * (k1+1)) -- boost BEFORE (k1+1)
-        idf_sum = idf_sum_f32(idf_f32(dfs[t], doc_count) for t in idfs)
-        w = np.float32(idf_sum * np.float32(boost))
-        return np.float32(w * (K1 + np.float32(1.0)))
-
-    # every positional clause — each phrase, each span node, the term
-    # automaton — as (alternative sets, pf, arg, weightValue, occur): a
-    # doc is a candidate when it holds one term of every set, and
-    # pf(per_term, arg, cand) verifies positions on the candidates
-    pos_clauses = []
-    for positions, slop, occ, boost in spec.phrases:
-        positions = tuple((span_alts(c), off) for c, off in positions)
-        # PhraseWeight: idfs summed over clause OCCURRENCES — one
-        # TermStatistics per terms[i], so a repeated term contributes its
-        # idf once per repeat ("cc cc" weighs idf(cc) twice; pinned vs the
-        # compiled reference in tests/test_lucene_ground_truth.py); a
-        # MultiPhraseQuery position adds every alternative's idf (df=0
-        # alternatives still contribute idf(0), as TermContext.build does)
-        wv = weight_value([t for alts, _off in positions for t in alts], boost)
-        pf = partial(_sloppy_phrase_pf, slop=slop) if slop > 0 else _exact_phrase_pf
-        pos_clauses.append((tuple(alts for alts, _off in positions), pf, positions, wv, occ))
-    for node in spec.spans:
-        # SpanWeight.buildSimWeight: a term->context MAP, so DISTINCT terms
-        # (SpanOr alternatives all contribute their contexts; SpanNot/
-        # Containing/Within maps include BOTH sides' contexts —
-        # getTermContexts(bigWeight, littleWeight))
-        wv = weight_value(sorted(set(span_terms(node))))
-        pf = _span_posrange_freqs if node[0] == "range" else _span_near_freqs
-        pos_clauses.append((span_sets(node), pf, node, wv, "+"))
-    if spec.term_automaton is not None:
-        # one set of every label: any doc holding ANY automaton term is a
-        # candidate (TermAutomatonScorer's DocIDQueue union);
-        # TermAutomatonWeight gathers every label's stats (TermContext.build
-        # — df=0 labels still contribute idf(0))
-        labels = spec._automaton_labels
-        pos_clauses.append((
-            (labels,), _term_automaton_freqs, spec.term_automaton,
-            weight_value(labels), "+",
-        ))
-    has_opt_pos = any(c[-1] == "" for c in pos_clauses)
-    has_req_pos = any(c[-1] == "+" for c in pos_clauses)
-
-    # the conjunction's block skip leads on the rarest one-term set
-    lead_terms = sorted({alts[0] for alts in required_sets if len(alts) == 1})
-    lead = min(lead_terms, key=lambda t: dfs[t]) if lead_terms else None
+    pos_terms = sorted(tree_pos_terms(tree))
 
     def decode(scan) -> dict:
         """The scan's postings, blocks the lead's span rules out skipped."""
@@ -2901,250 +2848,20 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         return decode_postings(scan, pos_terms=pos_terms, keep=keep)
 
     def score(per_term: dict, deleted_local=None):
-        """One doc range's k best (doc_id, score) arrays, ordered score
-        DESC, doc_id ASC, from its decoded postings."""
-        d_arr = deleted_local if deleted_local is not None else deleted
-        if not per_term or any(
-            not any(t in per_term for t in alts) for alts in required_sets
-        ):
+        """The k best (doc_id, score) arrays of the decoded postings,
+        ordered score DESC, doc_id ASC."""
+        if not per_term:
             return _NO_HITS
-        scoring_present = any(t in per_term for t in should_terms) or any(
-            occ != "-" and any(t in per_term for t in ts)
-            for occ, _ms, ts in group_clauses
-        )
-        # an optional phrase can be the only scoring clause in the range
-        opt_phrase_possible = any(
-            occ == "" and all(any(t in per_term for t in alts) for alts in sets)
-            for sets, _pf, _arg, _wv, occ in pos_clauses
-        )
-        if not (scoring_present or required_sets or opt_phrase_possible):
-            return _NO_HITS
-
-        base = min(int(v[0][0]) for v in per_term.values())
-        top = max(int(v[0][-1]) for v in per_term.values())
-        width = top - base + 1
-        # DisjunctionSumScorer sums clauses in DOUBLE; DisjunctionMaxScorer
-        # keeps a FLOAT32 scoreSum (DisjunctionMaxScorer.java:50-59) --
-        # pinned vs the compiled reference in tests/test_lucene_ground_truth.py
-        acc_dtype = np.float32 if spec.dismax else np.float64
-        # Boolean2ScorerSupplier's scorer TREE (pinned vs the compiled
-        # reference): required clauses double-sum inside ConjunctionScorer
-        # and cast to float32; optional clauses double-sum inside
-        # DisjunctionSumScorer and cast to float32; when both sides exist
-        # ReqOptSumScorer adds the two float32 sub-scores in FLOAT.
-        # acc = the optional side; acc_req = the required side.
-        acc = np.zeros(width, dtype=acc_dtype)
-        acc_req = None if spec.dismax else np.zeros(width, dtype=np.float64)
-        mx = np.zeros(width, dtype=np.float32) if spec.dismax else None
-        should_hits = np.zeros(width, dtype=np.int32)
-        must_hits = np.zeros(width, dtype=np.int32)
-        excluded = np.zeros(width, dtype=bool)
-        # ClassicSimilarity coord (BooleanWeight.coord + DisjunctionSum
-        # Scorer `(float)score * coord[freq]`): overlap counts matching
-        # SUB-SCORERS (duplicate clauses count again), maxOverlap = the
-        # query's scoring clause count; skipped when maxOverlap == 1
-        # (BQ rewrites itself away). BM25/SimilarityBase coord == 1.
-        coord_max = len(spec.should) + len(spec.must)
-        coord_hits = (
-            np.zeros(width, dtype=np.int32) if coord and coord_max > 1 else None
-        )
-
-        # iterate in clause order (spec.should then spec.must, first
-        # occurrence): under the dismax FLOAT32 accumulator the sum is
-        # order-sensitive, and the control oracle / reference accumulate
-        # per clause; for the double sum the order is immaterial
-        clause_pos = {
-            t: i
-            for i, t in enumerate(dict.fromkeys(tuple(spec.should) + tuple(spec.must)))
-        }
-        ordered_items = sorted(
-            per_term.items(), key=lambda kv: clause_pos.get(kv[0], len(clause_pos))
-        )
-        for t, (d, tf, nb, _pos) in ordered_items:
-            idxs = d - base
-            if t in not_terms:
-                excluded[idxs] = True
-                if t not in should_count and t not in must_count:
-                    continue
-            n_clauses = should_count.get(t, 0) + must_count.get(t, 0)
-            if n_clauses > 0:
-                freq = tf.astype(np.float32)
-                s = scorers[t](freq, nb)
-                sd = s.astype(acc_dtype)
-                if mx is not None:
-                    # duplicate clauses add sequentially in float32
-                    for _ in range(n_clauses):
-                        acc[idxs] = (acc[idxs] + sd).astype(acc_dtype)
-                    np.maximum.at(mx, idxs, sd)
-                else:
-                    n_s = should_count.get(t, 0)
-                    n_m = must_count.get(t, 0)
-                    if n_s:
-                        acc[idxs] += sd * n_s
-                    if n_m:
-                        acc_req[idxs] += sd * n_m
-                if coord_hits is not None:
-                    coord_hits[idxs] += n_clauses
-            if t in should_count:
-                should_hits[idxs] += 1
-            if t in must_count:
-                must_hits[idxs] += 1
-
-        # nested groups (BooleanWeight over the inner SHOULD clauses): hit
-        # = any live member matched. Scored terms use the GLOBAL weight,
-        # 'c' members contribute the constant boost when any of their
-        # terms match (MultiTermQueryConstantScoreWrapper's score() ==
-        # boost), 'w' members are blended sub-sums cast f32 at their own
-        # scorer boundary. The group is a nested BooleanQuery sub-scorer:
-        # its double member sum is cast to FLOAT32 before the outer sum
-        # sees it (Scorer.score() returns float; pinned vs the compiled
-        # reference in tests/test_lucene_ground_truth.py)
-        gmust_hits = np.zeros(width, dtype=np.int32) if n_plus_groups else None
-        for occ, ms, _ts in group_clauses:
-            ghit = np.zeros(width, dtype=bool)
-            gsc = np.zeros(width, dtype=np.float64)
-            for m in ms:
-                if isinstance(m, str):
-                    if m not in per_term:
-                        continue
-                    d, tf, nb, _pos = per_term[m]
-                    idxs = d - base
-                    s = scorers[m](tf.astype(np.float32), nb)
-                    gsc[idxs] += s.astype(np.float64)
-                    ghit[idxs] = True
-                elif m[0] == "c":
-                    chit = np.zeros(width, dtype=bool)
-                    for t in m[2]:
-                        if t in per_term:
-                            chit[per_term[t][0] - base] = True
-                    gsc += np.where(chit, np.float64(m[1]), 0.0)
-                    ghit |= chit
-                else:  # "w": blended members, own f32 sub-scorer
-                    whit = np.zeros(width, dtype=bool)
-                    wsc = np.zeros(width, dtype=np.float64)
-                    for t, wv in m[1]:
-                        if t not in per_term:
-                            continue
-                        d, tf, nb, _pos = per_term[t]
-                        idxs = d - base
-                        freq = tf.astype(np.float32)
-                        s = (wv * freq / (freq + cache[nb])).astype(np.float32)
-                        wsc[idxs] += s.astype(np.float64)
-                        whit[idxs] = True
-                    gsc += np.where(
-                        whit, wsc.astype(np.float32).astype(np.float64), 0.0
-                    )
-                    ghit |= whit
-            if occ == "-":
-                excluded |= ghit
-                continue
-            g32 = np.where(ghit, gsc.astype(np.float32).astype(np.float64), 0.0)
-            # dismax specs hold no groups (topk_spec), so acc_req exists
-            if occ == "+":
-                acc_req += g32
-                gmust_hits += ghit
-            else:
-                acc += g32
-                should_hits += ghit
-
-        # hard constraints (MUST / MUST_NOT / required groups); the msm
-        # cut is deferred when an optional phrase can still add its
-        # SHOULD hit
-        mask = ~excluded
-        if must_terms:
-            mask &= must_hits >= len(must_terms)
-        if gmust_hits is not None:
-            mask &= gmust_hits >= n_plus_groups
-        # the msm cut is deferred while optional phrase clauses can
-        # still add their SHOULD hits
-        if msm > 0 and not has_opt_pos:
-            mask &= should_hits >= msm
-
-        if pos_clauses:
-            # per clause: conjunction of its sets' union postings on docs
-            # first (two-phase: cheap approximation), then position verify
-            # (expensive) on the survivors only
-            req_ok = np.ones(width, dtype=bool) if has_req_pos else None
-            for sets, pf_fn, arg, wv, occ in pos_clauses:
-                live = [[t for t in alts if t in per_term] for alts in sets]
-                if not all(live):
-                    if occ == "+":
-                        return _NO_HITS
-                    continue  # optional phrase can't match in this range
-                cand_set = set.intersection(*[
-                    set().union(*(per_term[t][0].tolist() for t in ts))
-                    for ts in live
-                ])
-                cand_mask = np.zeros(width, dtype=bool)
-                if cand_set:
-                    cand_mask[np.fromiter(cand_set, dtype=np.int64) - base] = True
-                # docs an earlier '+' clause rejected are never verified
-                cand_mask &= mask if req_ok is None else mask & req_ok
-                cand = np.flatnonzero(cand_mask) + base
-                if cand.size:
-                    pf = pf_fn(per_term, arg, cand)
-                    keep = pf > 0
-                    cand, pf = cand[keep], pf[keep]
-                if cand.size:
-                    nb_map: dict = {}
-                    for t in sorted({t for ts in live for t in ts}):
-                        d0, _tf0, nb0, _ = per_term[t]
-                        nb_map.update(zip(d0.tolist(), nb0.tolist()))
-                    nbv = np.array([nb_map[int(c)] for c in cand], dtype=np.uint8)
-                    freq = pf.astype(np.float32)
-                    ps = (wv * freq / (freq + cache[nbv])).astype(np.float32)
-                    if occ == "+" and acc_req is not None:
-                        acc_req[cand - base] += ps.astype(np.float64)
-                    else:
-                        acc[cand - base] += ps.astype(np.float64)
-                if occ == "+":
-                    m = np.zeros(width, dtype=bool)
-                    if cand.size:
-                        m[cand - base] = True
-                    req_ok &= m
-                    if not req_ok.any():
-                        return _NO_HITS
-                elif cand.size:
-                    should_hits[cand - base] += 1
-            if req_ok is not None:
-                mask &= req_ok
-            if msm > 0 and has_opt_pos:
-                mask &= should_hits >= msm
-
+        ctx = _RangeCtx(per_term, weights, avgdl, doc_count, scorers)
+        live = np.ones(ctx.n, dtype=bool)
         if candidates is not None:
-            lo = np.searchsorted(candidates, base)
-            hi = np.searchsorted(candidates, base + width)
-            cmask = np.zeros(width, dtype=bool)
-            cmask[candidates[lo:hi] - base] = True
-            mask &= cmask
+            live &= np.isin(ctx.docs, candidates)
+        d_arr = deleted if deleted_local is None else deleted_local
         if d_arr is not None and d_arr.size:
-            lo = np.searchsorted(d_arr, base)
-            hi = np.searchsorted(d_arr, base + width)
-            mask[d_arr[lo:hi] - base] = False
-
-        idx = np.flatnonzero(mask)
-        if idx.size == 0:
-            return _NO_HITS
-        if mx is not None:
-            # scoreMax + (scoreSum - scoreMax) * tie, each op in float32
-            tb = np.float32(spec.tiebreak)
-            sc = (mx[idx] + (acc[idx] - mx[idx]) * tb).astype(np.float32)
-        else:
-            opt32 = acc[idx].astype(np.float32)
-            if acc_req is not None and acc_req.any():
-                # ReqOptSumScorer: float32(req) + float32(opt) in FLOAT;
-                # docs in the mask always satisfy the required side
-                req32 = acc_req[idx].astype(np.float32)
-                sc = np.where(opt32 > 0, req32 + opt32, req32).astype(np.float32)
-            else:
-                sc = opt32
-            if coord_hits is not None:
-                coords = (
-                    np.arange(coord_max + 1, dtype=np.float32)
-                    / np.float32(coord_max)
-                ).astype(np.float32)
-                sc = (sc * coords[coord_hits[idx]]).astype(np.float32)
-        return _top_hits(idx + base, sc, k)
+            live &= ~np.isin(ctx.docs, d_arr)
+        match, sc = eval_tree(tree, ctx, cand=live)
+        idx = np.flatnonzero(match & live)
+        return _top_hits(ctx.docs[idx], sc[idx], k)
 
     def _score_group(key, pdf, deleted_local=None):
         return _hits_frame(*score(decode(pdf), deleted_local))
@@ -3153,7 +2870,6 @@ def _make_range_scorer(spec: BooleanSpec, weights: dict, scorers: dict, coord: b
         return _score_group(key, pdf)
 
     score_range.cogroup = _cogroup_wrapper(_score_group)
-    # the driver plan decodes its whole scan once and scores range slices
     score_range.decode = decode
     score_range.score = score
     return score_range

@@ -470,7 +470,8 @@ def oracle_topk_spec(idx: OracleIndex, spec, k: int = 10) -> list[tuple[int, np.
             cand = set(m)
     if msm > 0:
         def _should_hits(d):
-            h = sum(1 for t in set(should) if d in idx.postings.get(t, {}))
+            # one hit per clause: a duplicate SHOULD term counts again
+            h = sum(1 for t in should if d in idx.postings.get(t, {}))
             h += sum(
                 1 for occ, _ms, ts in groups
                 if occ == "" and any(d in idx.postings.get(t, {}) for t in ts)

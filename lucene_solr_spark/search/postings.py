@@ -79,38 +79,3 @@ def decode_postings(scan, pos_terms=(), pay: bool = False, keep=None) -> dict:
         out[t] = entry
     return out
 
-
-def range_slices(per_term: dict, range_size: int):
-    """Split decoded postings by doc range (range_id = doc // range_size)
-    -> [(range_id, {term: postings in that range})], ascending range_id,
-    each dict holding only the terms with postings in the range. The
-    slices are views, so a range's scorer reads no more than its own
-    docs and its dense accumulators stay at most range_size wide."""
-    if not per_term:
-        return []
-    rids = np.unique(np.concatenate([p[0] // range_size for p in per_term.values()]))
-    cuts = {}
-    for t, p in per_term.items():
-        lo = np.searchsorted(p[0], rids * range_size)
-        hi = np.searchsorted(p[0], (rids + 1) * range_size)
-        pos_at = None
-        if p[3] is not None:
-            pos_at = np.concatenate(([0], np.cumsum(p[1])))
-        cuts[t] = (lo.tolist(), hi.tolist(), pos_at)
-    out = []
-    for i, rid in enumerate(rids.tolist()):
-        part = {}
-        for t, p in per_term.items():
-            lo, hi, pos_at = cuts[t]
-            a, b = lo[i], hi[i]
-            if a == b:
-                continue
-            entry = (p[0][a:b], p[1][a:b], p[2][a:b])
-            if pos_at is None:
-                entry += (None,) * (len(p) - 3)
-            else:
-                q = slice(pos_at[a], pos_at[b])
-                entry += tuple(x[q] for x in p[3:])
-            part[t] = entry
-        out.append((rid, part))
-    return out

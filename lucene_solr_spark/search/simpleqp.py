@@ -44,14 +44,31 @@ branches affect operator state):
   ("prefix", raw) | ("fuzzy", raw, edits) | ("matchall",) |
   ("bool", ((occur, node), ...)) with occur "+" MUST / "" SHOULD /
   "-" MUST_NOT.  resolve_tree() rewrites prefix -> ("const", terms) and
-  fuzzy -> ("blend", ((term, weight_value), ...)).
+  fuzzy -> ("blend", ((term, weight_value), ...)). A phrase position may
+  be a tuple of MultiPhraseQuery alternatives. The engine's BooleanSpec
+  (engine.spec_tree) adds ("span_node", node) leaves (BooleanSpec.spans'
+  node grammar), an ("automaton", (transitions, accepts)) leaf and the
+  bool node's optional (msm, coord) tail.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .bm25 import K1, idf_f32, idf_sum_f32
+from .bm25 import K1, TermWeight, idf_f32, idf_sum_f32
+from .sloppy import sloppy_freq
+from .spans import (
+    gspan_freq,
+    gspan_term_set,
+    span_alts,
+    span_first_freq,
+    span_freq,
+    span_not_freq,
+    span_ordered_freq,
+    span_sets,
+    span_terms,
+    span_unordered_freq,
+)
 
 AND_OPERATOR = 1 << 0
 NOT_OPERATOR = 1 << 1
@@ -376,11 +393,8 @@ def resolve_tree(tree, searcher_like):
             ))
         return ("blend", tuple(members), float(idf))
     if kind == "bool":
-        out = ("bool", tuple((occ, resolve_tree(sub, searcher_like))
-                             for occ, sub in tree[1]))
-        if len(tree) > 2:
-            out = out + (tree[2],)
-        return out
+        return ("bool", tuple((occ, resolve_tree(sub, searcher_like))
+                              for occ, sub in tree[1])) + tuple(tree[2:])
     if kind == "boosted":
         return ("boosted", tree[1], resolve_tree(tree[2], searcher_like))
     if kind == "boosting":
@@ -414,169 +428,160 @@ def resolve_tree(tree, searcher_like):
     return tree
 
 
+#: leaves whose matches need a position walk: the bool node verifies
+#: them last, on the docs its other clauses left (two-phase iteration)
+_POSITIONAL = frozenset(("phrase", "span", "gspan", "span_node", "automaton"))
+
+
+def _subtrees(tree) -> list:
+    """An inner node's child nodes; a leaf has none."""
+    kind = tree[0]
+    if kind == "bool":
+        return [sub for _occ, sub in tree[1]]
+    if kind in ("boosted", "boosting"):
+        return list(tree[2:])
+    if kind == "const_q":
+        return [tree[1]]
+    if kind == "dismax":
+        return list(tree[2])
+    return []
+
+
+def _weight_terms(leaf) -> tuple[str, ...]:
+    """A positional leaf's idf terms, in the order its weight sums them.
+    PhraseWeight: one TermStatistics per clause OCCURRENCE (a repeated
+    term counts again; pinned vs the compiled reference in tests/
+    test_lucene_ground_truth.py) and every MultiPhraseQuery alternative,
+    df=0 ones included (TermContext.build). SpanWeight and the term
+    automaton: the DISTINCT terms of their term->context map, sorted
+    (SpanNot/Containing/Within include both sides)."""
+    kind = leaf[0]
+    if kind == "phrase":
+        return tuple(t for c, _off in leaf[1] for t in span_alts(c))
+    if kind == "span":
+        terms = {t for c in leaf[2] for t in c}
+        if leaf[1] == "not":
+            terms |= {t for c in leaf[4] for t in c}
+    elif kind == "gspan":
+        terms = gspan_term_set(leaf[1])
+    elif kind == "span_node":
+        terms = set(span_terms(leaf[1]))
+    else:  # automaton
+        terms = {lab for _f, lab, _t in leaf[1][0] if lab}
+    return tuple(sorted(terms))
+
+
+def _leaf_sets(leaf) -> list[tuple[str, ...]]:
+    """A positional leaf's approximation: a doc can match only if it
+    holds one term of every set (ConjunctionDISI over the clauses'
+    union postings)."""
+    kind = leaf[0]
+    if kind == "phrase":
+        return [span_alts(c) for c, _off in leaf[1]]
+    if kind == "span" and leaf[1] != "or":
+        return [tuple(c) for c in leaf[2]]
+    if kind == "span_node":
+        return list(span_sets(leaf[1]))
+    # SpanOr, a surround span tree, the term automaton: any of its terms
+    return [_weight_terms(leaf)]
+
+
 def tree_terms(tree) -> set[str]:
     """Every index term the resolved tree touches (for the block scan)."""
     kind = tree[0]
     if kind == "term":
         return {tree[1]}
-    if kind == "phrase":
-        return {t for t, _off in tree[1]}
     if kind == "const":
         return set(tree[1])
     if kind == "blend":
         return {m[0] for m in tree[1]}
-    if kind == "bool":
-        out: set[str] = set()
-        for _occ, sub in tree[1]:
-            out |= tree_terms(sub)
-        return out
-    if kind == "boosted":
-        return tree_terms(tree[2])
-    if kind == "boosting":
-        return tree_terms(tree[2]) | tree_terms(tree[3])
-    if kind == "const_q":
-        return tree_terms(tree[1])
-    if kind == "dismax":
-        out = set()
-        for sub in tree[2]:
-            out |= tree_terms(sub)
-        return out
-    if kind == "span":
-        out = {t for c in tree[2] for t in c}
-        if tree[1] == "not":
-            out |= {t for c in tree[4] for t in c}
-        return out
-    if kind == "gspan":
-        from .spans import gspan_term_set
-
-        return gspan_term_set(tree[1])
-    return set()
-
-
-def tree_phrases(tree) -> list[tuple[tuple[tuple[str, int], ...], int]]:
-    """Every (pairs, slop) phrase leaf (positions needed at decode)."""
-    kind = tree[0]
-    if kind == "phrase":
-        return [(tree[1], tree[2])]
-    if kind == "bool":
-        out = []
-        for _occ, sub in tree[1]:
-            out.extend(tree_phrases(sub))
-        return out
-    if kind == "boosted":
-        return tree_phrases(tree[2])
-    if kind == "boosting":
-        return tree_phrases(tree[2]) + tree_phrases(tree[3])
-    if kind == "const_q":
-        return tree_phrases(tree[1])
-    if kind == "dismax":
-        out = []
-        for sub in tree[2]:
-            out.extend(tree_phrases(sub))
-        return out
-    return []
+    if kind in _POSITIONAL:
+        return set(_weight_terms(tree))
+    out: set[str] = set()
+    for sub in _subtrees(tree):
+        out |= tree_terms(sub)
+    return out
 
 
 def tree_pos_terms(tree) -> set[str]:
-    """Terms whose POSITIONS the evaluator reads (phrase + span leaves)."""
-    kind = tree[0]
-    if kind == "phrase":
-        return {t for t, _off in tree[1]}
-    if kind in ("span", "gspan"):
-        return tree_terms(tree)
-    if kind == "bool":
-        out: set[str] = set()
-        for _occ, sub in tree[1]:
-            out |= tree_pos_terms(sub)
-        return out
-    if kind == "boosted":
-        return tree_pos_terms(tree[2])
-    if kind == "boosting":
-        return tree_pos_terms(tree[2]) | tree_pos_terms(tree[3])
-    if kind == "const_q":
-        return tree_pos_terms(tree[1])
-    if kind == "dismax":
-        out = set()
-        for sub in tree[2]:
-            out |= tree_pos_terms(sub)
-        return out
-    return set()
+    """Terms whose POSITIONS the evaluator reads (positional leaves)."""
+    if tree[0] in _POSITIONAL:
+        return set(_weight_terms(tree))
+    out: set[str] = set()
+    for sub in _subtrees(tree):
+        out |= tree_pos_terms(sub)
+    return out
 
 
 # ---------------------------------------------------------------------------
-# evaluation: the Boolean2ScorerSupplier float tree over dense arrays
+# evaluation: the Boolean2ScorerSupplier float tree
+
+_NONE = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32))
+_NO_POSTINGS = _NONE + (np.empty(0, dtype=np.uint8),)
 
 
-def eval_tree(tree, ctx, boost=np.float32(1.0)):
-    """-> (match bool[n], score float32[n] zeroed where unmatched).
-    ctx protocol: n, nb (uint8[n]), doc_count, cache (f32[256] norm
-    cache), tf(term)->f32[n], df(term)->int,
-    phrase_freq(pairs, slop)->f32[n], span_freq(kind, clauses, slop,
-    extra)->f32[n] (only when span leaves occur).
+def eval_tree(tree, ctx, boost=np.float32(1.0), cand=None):
+    """-> (match bool[n], score float32[n] zeroed where unmatched), over
+    the ctx's n docs. The one Boolean evaluator: the engine's BooleanSpec
+    (engine.spec_tree) and the simpleqp / xmlqp / surround / flexible
+    trees all score through it.
+
+    ctx protocol:
+      n, nb (uint8[n] norm bytes), doc_count, cache (f32[256] BM25 norm
+      cache), df(term) -> int;
+      postings(term) -> (at int64[], freq[], norm_byte uint8[]): the
+      term's docs as ascending positions on the doc axis, O(its
+      postings);
+      freqs(leaf, at) -> the positional leaf's freq on the docs at `at`
+      (only for the positional leaves present);
+      scorers: {term: score(freq, norm_byte)}, the similarity's prepared
+      scorers with boosts folded in (bm25.SIMILARITIES), used by
+      unboosted term leaves; None scores every term leaf as BM25 at its
+      threaded boost.
 
     `boost` is the BoostQuery product threaded down exactly as
     createNormalizedWeight distributes it: each BoostQuery boundary
     multiplies in float32 and leaves fold it into their weight at the
     reference's cast points (BM25Stats.normalize weight = (float)(idf *
     boost), then weightValue = (float)(weight * (k1+1)) — GT round 4;
-    ConstantScoreWeight.normalize queryWeight = queryNorm * boost)."""
-    kind = tree[0]
-    zero = np.float32(0.0)
-    if kind == "term":
-        tf = ctx.tf(tree[1])
-        m = tf > 0
-        idf = idf_f32(ctx.df(tree[1]), ctx.doc_count)
-        wv = np.float32(np.float32(idf * boost) * (K1 + np.float32(1.0)))
-        s = (wv * tf / (tf + ctx.cache[ctx.nb])).astype(np.float32)
-        return m, np.where(m, s, zero)
-    if kind == "phrase":
-        pairs, slop = tree[1], tree[2]
-        pf = ctx.phrase_freq(pairs, slop).astype(np.float32)
-        # PhraseWeight: one idf per clause OCCURRENCE (repeats re-count)
-        idf_sum = idf_sum_f32(
-            idf_f32(ctx.df(t), ctx.doc_count) for t, _off in pairs
-        )
-        wv = np.float32(np.float32(idf_sum * boost) * (K1 + np.float32(1.0)))
-        m = pf > 0
-        s = (wv * pf / (pf + ctx.cache[ctx.nb])).astype(np.float32)
-        return m, np.where(m, s, zero)
-    if kind == "span":
-        # SpanWeight.buildSimWeight: one idf per DISTINCT term in the
-        # term-context map — SpanNot includes BOTH sides' contexts
-        _k, skind, clauses, slop, extra = (
-            tree[0], tree[1], tree[2], tree[3], tree[4]
-        )
-        terms = {t for c in clauses for t in c}
-        if skind == "not":
-            terms |= {t for c in extra for t in c}
-        idf_sum = idf_sum_f32(
-            idf_f32(ctx.df(t), ctx.doc_count) for t in sorted(terms)
-        )
-        wv = np.float32(np.float32(idf_sum * boost) * (K1 + np.float32(1.0)))
-        pf = ctx.span_freq(skind, clauses, slop, extra).astype(np.float32)
-        m = pf > 0
-        s = (wv * pf / (pf + ctx.cache[ctx.nb])).astype(np.float32)
-        return m, np.where(m, s, zero)
-    if kind == "gspan":
-        # generalized span tree (surround parser): SpanWeight idf over
-        # the distinct terms (TreeMap order), freq from the interval
-        # walks (spans.gspan_freq)
-        from .spans import gspan_term_set
+    ConstantScoreWeight.normalize queryWeight = queryNorm * boost).
 
-        terms = sorted(gspan_term_set(tree[1]))
-        idf_sum = idf_sum_f32(
-            idf_f32(ctx.df(t), ctx.doc_count) for t in terms
-        )
-        wv = np.float32(np.float32(idf_sum * boost) * (K1 + np.float32(1.0)))
-        pf = ctx.span_freq("g", tree[1], 0, None).astype(np.float32)
-        m = pf > 0
-        s = (wv * pf / (pf + ctx.cache[ctx.nb])).astype(np.float32)
-        return m, np.where(m, s, zero)
+    `cand` (bool[n] or None) narrows the docs the caller still needs:
+    positional leaves verify positions only there, and a result outside
+    it may be incomplete, so the caller masks it."""
+    at, s = _eval(tree, ctx, np.float32(boost), cand)
+    m = np.zeros(ctx.n, dtype=bool)
+    m[at] = True
+    score = np.zeros(ctx.n, dtype=np.float32)
+    score[at] = s
+    return m, score
+
+
+def _term_scorer(ctx, t: str, boost):
+    """The term leaf's score(freq, norm_byte): the prepared similarity
+    scorer, or BM25 at the threaded boost."""
+    if ctx.scorers is not None and boost == np.float32(1.0):
+        return ctx.scorers[t]
+    idf = idf_f32(ctx.df(t), ctx.doc_count)
+    wv = np.float32(np.float32(idf * boost) * (K1 + np.float32(1.0)))
+    return TermWeight(t, 0, wv, ctx.cache).score
+
+
+def _eval(tree, ctx, boost, cand):
+    """eval_tree on sparse results: -> (at int64[] ascending, score
+    float32[]) of the matching docs."""
+    kind = tree[0]
+    if kind == "term":
+        at, freq, nb = ctx.postings(tree[1])
+        return at, _term_scorer(ctx, tree[1], boost)(freq.astype(np.float32), nb)
+    if kind in _POSITIONAL:
+        return _eval_positional(tree, ctx, boost, cand)
     if kind == "const":
         m = np.zeros(ctx.n, dtype=bool)
         for t in tree[1]:
-            m |= ctx.tf(t) > 0
-        return m, np.where(m, np.float32(boost), zero)
+            m[ctx.postings(t)[0]] = True
+        at = np.flatnonzero(m)
+        return at, np.full(at.size, boost, dtype=np.float32)
     if kind == "blend":
         m = np.zeros(ctx.n, dtype=bool)
         acc = np.zeros(ctx.n, dtype=np.float64)
@@ -591,102 +596,163 @@ def eval_tree(tree, ctx, boost=np.float32(1.0)):
                 wv = np.float32(w * (K1 + np.float32(1.0)))
             else:
                 wv = np.float32(wv0)
-            tf = ctx.tf(t)
-            s = (wv * tf / (tf + ctx.cache[ctx.nb])).astype(np.float32)
-            hit = tf > 0
-            m |= hit
-            acc += np.where(hit, s, zero).astype(np.float64)
-        return m, np.where(m, acc.astype(np.float32), zero)
+            at, freq, nb = ctx.postings(t)
+            freq = freq.astype(np.float32)
+            m[at] = True
+            acc[at] += (wv * freq / (freq + ctx.cache[nb])).astype(np.float32)
+        at = np.flatnonzero(m)
+        return at, acc[at].astype(np.float32)
     if kind == "matchall":
-        return (np.ones(ctx.n, dtype=bool),
-                np.full(ctx.n, np.float32(boost), dtype=np.float32))
+        return (np.arange(ctx.n, dtype=np.int64),
+                np.full(ctx.n, boost, dtype=np.float32))
     if kind == "boosted":
         # BoostQuery: boost multiplies in FLOAT32 at each wrapper
-        return eval_tree(tree[2], ctx, np.float32(boost * np.float32(tree[1])))
+        return _eval(tree[2], ctx, np.float32(boost * np.float32(tree[1])), cand)
     if kind == "const_q":
         # ConstantScoreQuery(q): match = q's match; score = the threaded
         # boost (the wrapped query's own scores are discarded)
-        mm, _ss = eval_tree(tree[1], ctx, np.float32(1.0))
-        return mm, np.where(mm, np.float32(boost), zero)
+        at, _s = _eval(tree[1], ctx, np.float32(1.0), cand)
+        return at, np.full(at.size, boost, dtype=np.float32)
     if kind == "boosting":
         # BoostingQuery (queries/BoostingQuery.java): match's scorer
         # drives matching and scoring; when the CONTEXT query also
         # matches, the score is multiplied by the demotion boost in
         # float32 (FilterScorer.score :117-124). The context weight is
         # created with needsScores=false — its own score is discarded.
-        bq = np.float32(tree[1])
-        m, s = eval_tree(tree[2], ctx, boost)
-        cm, _cs = eval_tree(tree[3], ctx, np.float32(1.0))
-        s = np.where(cm, (s * bq).astype(np.float32), s)
-        return m, np.where(m, s, zero)
+        at, s = _eval(tree[2], ctx, boost, cand)
+        ctx_at, _cs = _eval(tree[3], ctx, np.float32(1.0), cand)
+        demote = np.isin(at, ctx_at)
+        return at, np.where(demote, (s * np.float32(tree[1])).astype(np.float32), s)
     if kind == "dismax":
         # DisjunctionMaxScorer: float32 scoreSum accumulated in clause
         # order; score = max + (sum - max) * tie, float32 ops (GT round 2)
-        tie = np.float32(tree[1])
-        subs = [eval_tree(s, ctx, boost) for s in tree[2]]
         m = np.zeros(ctx.n, dtype=bool)
-        for mm, _ss in subs:
-            m |= mm
         mx = np.zeros(ctx.n, dtype=np.float32)
         tot = np.zeros(ctx.n, dtype=np.float32)
-        for _mm, ss in subs:
-            np.maximum(mx, ss, out=mx)
-            tot = (tot + ss).astype(np.float32)
-        score = (mx + (tot - mx) * tie).astype(np.float32)
-        return m, np.where(m, score, zero)
+        for sub in tree[2]:
+            at, s = _eval(sub, ctx, boost, cand)
+            m[at] = True
+            tot[at] += s
+            mx[at] = np.maximum(mx[at], s)
+        at = np.flatnonzero(m)
+        tie = np.float32(tree[1])
+        return at, (mx[at] + (tot[at] - mx[at]) * tie).astype(np.float32)
     if kind != "bool":
         raise ValueError(f"unresolved node {kind!r} (call resolve_tree first)")
+    return _eval_bool(tree, ctx, boost, cand)
+
+
+def _eval_positional(leaf, ctx, boost, cand):
+    """A phrase, span or automaton leaf: approximate on postings (one
+    term of every set, inside `cand`), verify positions on those docs
+    only, score the freq with the leaf's summed-idf BM25 weight."""
+    ok = np.ones(ctx.n, dtype=bool) if cand is None else cand.copy()
+    for alts in _leaf_sets(leaf):
+        hit = np.zeros(ctx.n, dtype=bool)
+        for t in alts:
+            hit[ctx.postings(t)[0]] = True
+        ok &= hit
+    at = np.flatnonzero(ok)
+    if at.size == 0:
+        return _NONE
+    freq = np.asarray(ctx.freqs(leaf, at)).astype(np.float32)
+    at, freq = at[freq > 0], freq[freq > 0]
+    idf_sum = idf_sum_f32(
+        idf_f32(ctx.df(t), ctx.doc_count) for t in _weight_terms(leaf)
+    )
+    wv = np.float32(np.float32(idf_sum * boost) * (K1 + np.float32(1.0)))
+    return at, (wv * freq / (freq + ctx.cache[ctx.nb[at]])).astype(np.float32)
+
+
+def _eval_bool(tree, ctx, boost, cand):
+    """BooleanQuery: ("bool", ((occur, node), ...), msm, coord) with
+    occur "+" MUST, "" SHOULD, "-" MUST_NOT, "f" FILTER; msm and coord
+    are optional. Required clauses double-sum inside ConjunctionScorer
+    -> float32, optional clauses double-sum inside DisjunctionSumScorer
+    -> float32, and ReqOptSumScorer adds the two float32 sides in FLOAT
+    (pinned vs the compiled reference); prohibited clauses only mask
+    (ReqExclScorer). Duplicate clauses are separate scorers: each scores
+    and counts toward msm. coord (ClassicSimilarity's BooleanWeight.
+    coord): the float32 product by overlap / maxOverlap over the TERM
+    clauses, skipped when maxOverlap <= 1.
+
+    Each child folds into the accumulators as it is evaluated. Children
+    holding a positional leaf run last, on the docs the others left
+    (two-phase iteration): every required clause, no prohibited one, and
+    the msm cut when no optional child is positional."""
+    clauses = tree[1]
     msm = int(tree[2]) if len(tree) > 2 else 0
-    req, opt, proh, filt = [], [], [], []
-    for occ, sub in tree[1]:
-        if occ == "f":
-            # FILTER clause: required for matching, never scores —
-            # evaluate at boost 1 (needsScores false side)
-            filt.append(eval_tree(sub, ctx, np.float32(1.0)))
-            continue
-        mm, ss = eval_tree(sub, ctx, boost)
-        (proh if occ == "-" else req if occ == "+" else opt).append((mm, ss))
-    if msm > len(opt):
+    n = ctx.n
+    occs = [occ for occ, _sub in clauses]
+    n_opt, n_req = occs.count(""), occs.count("+") + occs.count("f")
+    if msm > n_opt:
         # Boolean2ScorerSupplier: more msm than optional clauses -> no hit
-        never = np.zeros(ctx.n, dtype=bool)
-        return never, np.zeros(ctx.n, dtype=np.float32)
-    required_masks = [mm for mm, _ss in req] + [mm for mm, _ss in filt]
-    if required_masks:
-        match = required_masks[0].copy()
-        for mm in required_masks[1:]:
-            match &= mm
-        needed = msm
-    else:
-        match = np.ones(ctx.n, dtype=bool)
-        needed = max(1, msm)
-    if needed > 0:
-        hits = np.zeros(ctx.n, dtype=np.int32)
-        for mm, _ss in opt:
-            hits += mm.astype(np.int32)
-        match &= hits >= needed
-    for mm, _ss in proh:
-        match &= ~mm
-    req32 = opt32 = None
-    if req:
-        a = np.zeros(ctx.n, dtype=np.float64)
-        for _mm, ss in req:
-            a += ss.astype(np.float64)
-        req32 = a.astype(np.float32)
-    if opt:
-        a = np.zeros(ctx.n, dtype=np.float64)
-        for _mm, ss in opt:
-            a += ss.astype(np.float64)
-        opt32 = a.astype(np.float32)
-    if req32 is not None and opt32 is not None:
-        score = (req32 + opt32).astype(np.float32)
-    elif req32 is not None:
-        score = req32
-    elif opt32 is not None:
-        score = opt32
+        return _NONE
+    needed = msm if n_req else max(1, msm)
+    req_hits = np.zeros(n, dtype=np.int32)
+    opt_hits = np.zeros(n, dtype=np.int32)
+    excluded = np.zeros(n, dtype=bool)
+    req_acc = np.zeros(n, dtype=np.float64) if "+" in occs else None
+    opt_acc = np.zeros(n, dtype=np.float64) if n_opt else None
+    coord_max = 0
+    if len(tree) > 3 and tree[3]:
+        coord_max = sum(occ in ("", "+") and sub[0] == "term" for occ, sub in clauses)
+    overlap = np.zeros(n, dtype=np.int32) if coord_max > 1 else None
+
+    def fold(occ, sub, live):
+        at, s = _eval(sub, ctx, np.float32(1.0) if occ == "f" else boost, live)
+        if occ == "-":
+            excluded[at] = True
+            return
+        if occ == "":
+            opt_hits[at] += 1
+            opt_acc[at] += s
+        else:
+            req_hits[at] += 1
+            if occ == "+":
+                req_acc[at] += s
+        if overlap is not None and occ != "f" and sub[0] == "term":
+            overlap[at] += 1
+
+    late = []
+    for occ, sub in clauses:
+        if tree_pos_terms(sub):
+            late.append((occ, sub))
+        else:
+            fold(occ, sub, cand)
+    if late:
+        n_seen = n_req - sum(occ in ("+", "f") for occ, _sub in late)
+        live = ~excluded & (req_hits == n_seen)
+        if cand is not None:
+            live &= cand
+        if needed and all(occ != "" for occ, _sub in late):
+            live &= opt_hits >= needed
+        for occ, sub in late:
+            fold(occ, sub, live)
+            n_seen += occ in ("+", "f")
+            live &= ~excluded & (req_hits == n_seen)
+
+    match = ~excluded
+    if n_req:
+        match &= req_hits == n_req
+    if needed:
+        match &= opt_hits >= needed
+    at = np.flatnonzero(match)
+    if req_acc is not None and opt_acc is not None:
+        s = req_acc[at].astype(np.float32) + opt_acc[at].astype(np.float32)
+    elif req_acc is not None:
+        s = req_acc[at].astype(np.float32)
+    elif opt_acc is not None:
+        s = opt_acc[at].astype(np.float32)
     else:
         # only FILTER/MUST_NOT clauses: matches score 0 (no scoring clause)
-        score = np.zeros(ctx.n, dtype=np.float32)
-    return match, np.where(match, score, zero)
+        s = np.zeros(at.size, dtype=np.float32)
+    if overlap is not None:
+        coords = (
+            np.arange(coord_max + 1, dtype=np.float32) / np.float32(coord_max)
+        ).astype(np.float32)
+        s = (s * coords[overlap[at]]).astype(np.float32)
+    return at, s
 
 
 def matches_empty_doc(tree) -> tuple[bool, float]:
@@ -701,21 +767,13 @@ def matches_empty_doc(tree) -> tuple[bool, float]:
         nb = np.zeros(1, dtype=np.uint8)
         doc_count = 1
         cache = norm_cache(np.float32(1.0))
+        scorers = None
 
-        def tf(self, _t):
-            return np.zeros(1, dtype=np.float32)
+        def postings(self, _t):
+            return _NO_POSTINGS
 
         def df(self, _t):
             return 1
-
-        def wv(self, _t):
-            return np.float32(1.0)
-
-        def phrase_freq(self, _pairs, _slop):
-            return np.zeros(1, dtype=np.float32)
-
-        def span_freq(self, _kind, _clauses, _slop, _extra):
-            return np.zeros(1, dtype=np.float32)
 
     m, s = eval_tree(tree, _EmptyCtx())
     return bool(m[0]), float(s[0])
@@ -748,6 +806,40 @@ def build_ws_oracle_index(docs: list[tuple[int, str]]):
     return idx
 
 
+def _walk_freqs(leaf, docs, plist) -> np.ndarray:
+    """Per-doc span walks (search/spans.py) of a span leaf on `docs`:
+    plist(alts, doc) -> the doc's ascending positions of the union of
+    the alternatives. Leaves: ("span_node", node) (BooleanSpec.spans),
+    ("gspan", snode) (surround) and ("span", kind, clauses, slop, extra)
+    (xmlqp / simpleqp: kinds or, first, not, near_ord, near_unord)."""
+    out = np.zeros(len(docs), dtype=np.float32)
+    for i, d in enumerate(docs.tolist()):
+        if leaf[0] == "span_node":
+            out[i] = span_freq(leaf[1], lambda alts: plist(alts, d))
+            continue
+        if leaf[0] == "gspan":
+            out[i] = gspan_freq(leaf[1], lambda t: plist((t,), d))
+            continue
+        _k, kind, clauses, slop, extra = leaf
+        if kind == "or":
+            # merged term spans: freq = total occurrence count
+            out[i] = sum(len(plist((t,), d)) for c in clauses for t in c)
+            continue
+        plists = [plist(tuple(c), d) for c in clauses]
+        if any(not pl for pl in plists):
+            continue
+        if kind == "first":
+            out[i] = span_first_freq(plists[0], int(extra))
+        elif kind == "not":
+            exc = plist(tuple(t for c in extra for t in c), d)
+            out[i] = span_not_freq(plists, slop, exc)
+        elif kind == "near_ord":
+            out[i] = span_ordered_freq(plists, slop)
+        else:
+            out[i] = span_unordered_freq(plists, slop)
+    return out
+
+
 class _OracleCtx:
     """eval_tree ctx over an OracleIndex, ALL docs as candidates."""
 
@@ -760,95 +852,55 @@ class _OracleCtx:
         self.nb = np.array([idx.norm_bytes[int(d)] for d in docs], dtype=np.uint8)
         self.doc_count = idx.doc_count
         self.cache = norm_cache(idx.avgdl)
+        self.scorers = None
 
-    def tf(self, t: str) -> np.ndarray:
+    def postings(self, t: str):
         post = self.idx.postings.get(t, {})
-        return np.array([post.get(int(d), 0) for d in self.docs], dtype=np.float32)
+        d = np.array(sorted(post), dtype=np.int64)
+        at = np.searchsorted(self.docs, d)
+        ok = at < self.n
+        ok[ok] = self.docs[at[ok]] == d[ok]
+        at = at[ok]
+        tf = np.array([post[int(x)] for x in d[ok]], dtype=np.float32)
+        return at, tf, self.nb[at]
 
     def df(self, t: str) -> int:
         return len(self.idx.postings.get(t, {}))
-
-    def wv(self, t: str) -> np.float32:
-        idf = idf_f32(self.df(t), self.doc_count)
-        return np.float32(idf * (K1 + np.float32(1.0)))
-
-    def phrase_freq(self, pairs, slop: int) -> np.ndarray:
-        out = np.zeros(self.n, dtype=np.float32)
-        pterms = [t for t, _off in pairs]
-        if any(t not in self.idx.positions for t in pterms):
-            return out
-        if slop > 0:
-            from .sloppy import sloppy_freq
-
-            for i, d in enumerate(self.docs):
-                plists = [self.idx.positions[t].get(int(d), []) for t in pterms]
-                if any(not p for p in plists):
-                    continue
-                f = sloppy_freq(plists, [off for _t, off in pairs], slop,
-                                terms=pterms)
-                if f > 0:
-                    out[i] = f
-        else:
-            for i, d in enumerate(self.docs):
-                base_t, base_off = pairs[0]
-                match = [p - base_off
-                         for p in self.idx.positions[base_t].get(int(d), [])]
-                for t, off in pairs[1:]:
-                    pset = {p - off for p in self.idx.positions[t].get(int(d), [])}
-                    match = [p for p in match if p in pset]
-                    if not match:
-                        break
-                if match:
-                    out[i] = len(match)
-        return out
 
     def _plist(self, alts, d: int) -> list[int]:
         return sorted(
             p for t in alts for p in self.idx.positions.get(t, {}).get(int(d), [])
         )
 
-    def span_freq(self, kind: str, clauses, slop: int, extra) -> np.ndarray:
-        """Span leaf freq per doc via the reference walks (search/spans.py)
-        — mirrors oracle_topk_spec's span path clause conventions."""
-        from .spans import (
-            gspan_freq,
-            span_first_freq,
-            span_not_freq,
-            span_ordered_freq,
-            span_unordered_freq,
-        )
+    def _phrase_pf(self, positions, slop: int, d: int):
+        """One doc's phrase freq: a position's occurrences are the union
+        of its alternatives' (a set: stacked alternatives count once);
+        slop > 0 is the Lucene-exact SloppyPhraseScorer (search/
+        sloppy.py)."""
+        sets = [span_alts(c) for c, _off in positions]
+        plists = [self._plist(alts, d) for alts in sets]
+        if any(not p for p in plists):
+            return 0
+        if slop > 0:
+            return sloppy_freq(plists, [off for _c, off in positions], slop,
+                               terms=sets)
+        match = {p - positions[0][1] for p in plists[0]}
+        for pl, (_c, off) in zip(plists[1:], positions[1:]):
+            match &= {p - off for p in pl}
+        return len(match)
 
-        out = np.zeros(self.n, dtype=np.float32)
-        if kind == "g":
-            # generalized span tree (surround): clauses IS the snode
-            for i, d in enumerate(self.docs):
-                out[i] = gspan_freq(
-                    clauses,
-                    lambda t, _d=int(d): self.idx.positions.get(t, {}).get(_d, []),
-                )
-            return out
-        if kind == "or":
-            # merged term spans: freq = total occurrence count
-            for i, d in enumerate(self.docs):
-                out[i] = sum(
-                    len(self.idx.positions.get(t, {}).get(int(d), []))
-                    for c in clauses for t in c
-                )
-            return out
-        for i, d in enumerate(self.docs):
-            plists = [self._plist(c, d) for c in clauses]
-            if any(not pl for pl in plists):
-                continue
-            if kind == "first":
-                out[i] = span_first_freq(plists[0], int(extra))
-            elif kind == "not":
-                exc = self._plist(tuple(t for c in extra for t in c), d)
-                out[i] = span_not_freq(plists, slop, exc)
-            elif kind == "near_ord":
-                out[i] = span_ordered_freq(plists, slop)
-            else:
-                out[i] = span_unordered_freq(plists, slop)
-        return out
+    def freqs(self, leaf, at: np.ndarray) -> np.ndarray:
+        docs = self.docs[at]
+        if leaf[0] == "phrase":
+            return np.array(
+                [self._phrase_pf(leaf[1], leaf[2], d) for d in docs.tolist()],
+                dtype=np.float32,
+            )
+        if leaf[0] == "automaton":
+            raise ValueError(
+                "the term automaton's control is oracle_term_automaton_topk"
+            )
+        return _walk_freqs(leaf, docs, self._plist)
 
 
 class _OracleDict:
@@ -950,160 +1002,69 @@ def _analyzer_with_positions(analyzer_name: str):
 
 
 class _RangeCtx:
-    """eval_tree ctx over one doc-range's decoded postings (per_term from
-    postings.decode_postings; docs = the union of posting docs — a doc with
-    NO query term never reaches here; the complement pass covers it)."""
+    """eval_tree ctx over decoded postings (per_term from postings.
+    decode_postings): a range group's on the distributed plan, the whole
+    scan's on the driver plan. The doc axis is the union of the
+    postings' docs, so a doc with NO query term never reaches here (the
+    complement pass of spark_topk_tree covers it) and the arrays are at
+    most the scan's posting count wide. weights: term -> {df, ...};
+    scorers: the prepared similarity scorers, or None (BM25)."""
 
-    def __init__(self, per_term: dict, docs: np.ndarray, nb: np.ndarray,
-                 weights: dict, avgdl: float, doc_count: int):
+    def __init__(self, per_term: dict, weights: dict, avgdl: float,
+                 doc_count: int, scorers: dict | None = None):
         from .bm25 import norm_cache
 
         self.per_term = per_term
-        self.docs = docs
-        self.n = docs.size
-        self.nb = nb
+        self.docs = np.unique(np.concatenate(
+            [p[0] for p in per_term.values()] or [np.empty(0, dtype=np.int64)]
+        ))
+        self.n = self.docs.size
+        self.at = {t: np.searchsorted(self.docs, p[0]) for t, p in per_term.items()}
+        self.nb = np.zeros(self.n, dtype=np.uint8)
+        for t, p in per_term.items():
+            self.nb[self.at[t]] = p[2]
         self.doc_count = doc_count
         self.cache = norm_cache(np.float32(avgdl))
         self.weights = weights
-        self._tf_cache: dict[str, np.ndarray] = {}
+        self.scorers = scorers
 
-    def tf(self, t: str) -> np.ndarray:
-        arr = self._tf_cache.get(t)
-        if arr is None:
-            arr = np.zeros(self.n, dtype=np.float32)
-            ent = self.per_term.get(t)
-            if ent is not None:
-                d, tfv = ent[0], ent[1]
-                arr[np.searchsorted(self.docs, d)] = tfv.astype(np.float32)
-            self._tf_cache[t] = arr
-        return arr
+    def postings(self, t: str):
+        p = self.per_term.get(t)
+        if p is None:
+            return _NO_POSTINGS
+        return self.at[t], p[1], p[2]
 
     def df(self, t: str) -> int:
         return int(self.weights[t]["df"])
 
-    def wv(self, t: str) -> np.float32:
-        return np.float32(self.weights[t]["weight_value"])
-
-    def phrase_freq(self, pairs, slop: int) -> np.ndarray:
-        from .engine import _exact_phrase_pf, _sloppy_phrase_pf
-
-        if any(t not in self.per_term for t, _off in pairs):
-            return np.zeros(self.n, dtype=np.float32)
-        if slop > 0:
-            pf = _sloppy_phrase_pf(self.per_term, tuple(pairs), self.docs, slop)
-        else:
-            pf = _exact_phrase_pf(self.per_term, tuple(pairs), self.docs)
-        return pf.astype(np.float32)
-
-    def span_freq(self, kind: str, clauses, slop: int, extra) -> np.ndarray:
-        """Span leaf freq over the range's decoded positions — per-doc
-        sequential like Lucene's own spans, via the reference walks."""
-        from .engine import _abs_positions
-        from .spans import (
-            gspan_freq,
-            gspan_term_set,
-            span_first_freq,
-            span_not_freq,
-            span_ordered_freq,
-            span_unordered_freq,
+    def freqs(self, leaf, at: np.ndarray) -> np.ndarray:
+        """The engine's position walks over the decoded positions."""
+        from .engine import (
+            _abs_positions,
+            _doc_positions,
+            _exact_phrase_pf,
+            _sloppy_phrase_pf,
+            _span_posrange_freqs,
+            _term_automaton_freqs,
         )
 
-        out = np.zeros(self.n, dtype=np.float32)
-        if kind == "or":
-            for c in clauses:
-                for t in c:
-                    out += self.tf(t)
-            return out
-        data = {}
-        if kind == "g":
-            term_cols = [tuple(sorted(gspan_term_set(clauses)))]
-        else:
-            aux = list(extra) if kind == "not" else []
-            term_cols = list(clauses) + aux
-        for c in term_cols:
-            for t in c:
-                if t in self.per_term and t not in data:
-                    data[t] = _abs_positions(self.per_term, t)
-
-        def dslice(t: str, d: int) -> list[int]:
-            ent = data.get(t)
-            if ent is None:
-                return []
-            darr, tfv, run_starts, pos_abs = ent
-            j = int(np.searchsorted(darr, d))
-            if j >= darr.size or darr[j] != d:
-                return []
-            s = int(run_starts[j])
-            return pos_abs[s:s + int(tfv[j])].tolist()
-
-        if kind == "g":
-            for i, d in enumerate(self.docs):
-                out[i] = gspan_freq(
-                    clauses, lambda t, _d=int(d): dslice(t, _d)
-                )
-            return out
-
-        for i, d in enumerate(self.docs):
-            plists = [
-                sorted(p for t in c for p in dslice(t, int(d))) for c in clauses
-            ]
-            if any(not pl for pl in plists):
-                continue
-            if kind == "first":
-                out[i] = span_first_freq(plists[0], int(extra))
-            elif kind == "not":
-                exc = sorted(
-                    p for c in extra for t in c for p in dslice(t, int(d))
-                )
-                out[i] = span_not_freq(plists, slop, exc)
-            elif kind == "near_ord":
-                out[i] = span_ordered_freq(plists, slop)
-            else:
-                out[i] = span_unordered_freq(plists, slop)
-        return out
-
-
-def _make_simple_tree_scorer(tree, weights: dict, avgdl: float,
-                             doc_count: int, k: int, deleted=None):
-    """Per-(doc-range) applyInPandas scorer evaluating the resolved
-    SimpleQueryParser tree (the Boolean2ScorerSupplier recursion) over
-    dense arrays; emits this range's k best (doc_id, score)."""
-    pos_terms = tree_pos_terms(tree)
-
-    def _score_impl(key, pdf, deleted_local=None):
-        import pandas as pd
-
-        from .engine import _EMPTY
-        from .postings import decode_postings
-
-        d_arr = deleted_local if deleted_local is not None else deleted
-        per_term = decode_postings(pdf, pos_terms=pos_terms)
-        if not per_term:
-            return _EMPTY
-        docs = np.unique(np.concatenate([v[0] for v in per_term.values()]))
-        nb = np.zeros(docs.size, dtype=np.uint8)
-        for _t, (d, _tf, nbv, _pos) in per_term.items():
-            nb[np.searchsorted(docs, d)] = nbv
-        ctx = _RangeCtx(per_term, docs, nb, weights, avgdl, doc_count)
-        m, s = eval_tree(tree, ctx)
-        if d_arr is not None and len(d_arr):
-            m &= ~np.isin(docs, d_arr)
-        keep = np.nonzero(m)[0]
-        if keep.size == 0:
-            return _EMPTY
-        order = keep[np.lexsort((docs[keep], -s[keep].astype(np.float64)))][:k]
-        return pd.DataFrame({
-            "doc_id": docs[order].astype("int64"),
-            "score": s[order].astype("float32"),
-        })
-
-    def score_range(key, pdf):
-        return _score_impl(key, pdf)
-
-    from .engine import _cogroup_wrapper
-
-    score_range.cogroup = _cogroup_wrapper(_score_impl)
-    return score_range
+        docs = self.docs[at]
+        kind = leaf[0]
+        if kind == "phrase":
+            if leaf[2] > 0:
+                return _sloppy_phrase_pf(self.per_term, leaf[1], docs, leaf[2])
+            return _exact_phrase_pf(self.per_term, leaf[1], docs)
+        if kind == "automaton":
+            return _term_automaton_freqs(self.per_term, leaf[1], docs)
+        if kind == "span_node" and leaf[1][0] == "range":
+            return _span_posrange_freqs(self.per_term, leaf[1], docs)
+        abs_cache = {
+            t: _abs_positions(self.per_term, t)
+            for t in tree_pos_terms(leaf) if t in self.per_term
+        }
+        return _walk_freqs(
+            leaf, docs, lambda alts, d: _doc_positions(abs_cache, alts, d)
+        )
 
 
 def spark_topk_simple(searcher, query: str, k: int = 10,
@@ -1127,7 +1088,7 @@ def spark_topk_tree(searcher, tree, k: int = 10):
     for term-free matches, global merge."""
     from pyspark.sql import functions as F
 
-    from .engine import topk_frame
+    from .engine import _make_range_scorer, topk_frame
 
     if tree is None:
         return topk_frame(searcher.spark)
@@ -1143,7 +1104,7 @@ def spark_topk_tree(searcher, tree, k: int = 10):
             "term", "range_id", "first_doc", "last_doc",
             "docs_buf", "tfs_buf", "norms_buf",
         ] + (["pos_buf"] if needs_pos else [])
-        score_fn = _make_simple_tree_scorer(
+        score_fn = _make_range_scorer(
             tree, weights, float(searcher.avgdl), searcher.doc_count, k,
             deleted=searcher.deleted,
         )

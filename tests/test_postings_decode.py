@@ -1,7 +1,7 @@
 """decode_postings (search/postings.py) against the per-block reference
 decode, delta_decode(vbyte_decode(buf), first_doc), over every block
 header, single-doc blocks, an appended generation, position streams and
-payload-less blocks; and range_slices against per-range filtering."""
+payload-less blocks."""
 
 import numpy as np
 import pandas as pd
@@ -17,7 +17,7 @@ from lucene_solr_spark.index.codec import (
     vbyte_decode,
     vbyte_encode,
 )
-from lucene_solr_spark.search.postings import decode_postings, range_slices
+from lucene_solr_spark.search.postings import decode_postings
 
 RNG = np.random.default_rng(5)
 
@@ -108,22 +108,3 @@ def test_positions_only_for_asked_terms_and_keep_mask():
     assert sorted(decode_postings(pdf, keep=keep)) == ["beta", "gamma"]
     assert decode_postings(pdf.iloc[:0]) == {}
 
-
-def test_range_slices_partition_by_doc_range():
-    pdf = _blocks()
-    whole = decode_postings(pdf, pos_terms={"alpha", "gamma"})
-    parts = range_slices(whole, 256)
-    assert [rid for rid, _ in parts] == sorted({d // 256 for v in whole.values() for d in v[0]})
-    for t, (d, tf, nb, pos) in whole.items():
-        got = [p[t] for _rid, p in parts if t in p]
-        for rid, p in parts:
-            if t in p:
-                assert np.all(p[t][0] // 256 == rid)
-        np.testing.assert_array_equal(np.concatenate([g[0] for g in got]), d)
-        np.testing.assert_array_equal(np.concatenate([g[1] for g in got]), tf)
-        np.testing.assert_array_equal(np.concatenate([g[2] for g in got]), nb)
-        if pos is None:
-            assert all(g[3] is None for g in got)
-        else:
-            np.testing.assert_array_equal(np.concatenate([g[3] for g in got]), pos)
-            assert all(g[3].size == g[1].sum() for g in got)
