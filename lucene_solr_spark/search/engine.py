@@ -15,12 +15,15 @@ per-leaf scorer -> TopScoreDocCollector -> TopDocs.merge; SURVEY.md §3.1):
  4. groupBy(range_id): each doc-range partition scores like one Lucene
     segment — decode its blocks in one pass per column (search/postings.py),
     then one simpleqp.eval_tree call over the query's clause tree
-    (spec_tree): per-doc scores accumulate in double over the union of the
-    postings' docs, cast to float32, local bounded top-k. A small scan
+    (spec_tree, or a parser's resolved tree): per-doc scores accumulate
+    in double over the union of the postings' docs, cast to float32,
+    local bounded top-k. A small scan
     (DRIVER_SCORE_MAX_BLOCKS) is decoded once in the driver process and
     scored by one eval_tree call over all of it.
  5. global merge: ORDER BY score DESC, doc_id ASC LIMIT k (TopDocs.merge
     tie-break; docIDs are globally dense so partition order == docID order).
+ Steps 3-5 are one runner, IndexSearcher._run_tree, for every top-k
+ entry point but the payload family.
 
 Boolean semantics (BooleanWeight.java:375-533; BooleanScorer/ConjunctionDISI/
 ReqExclScorer/MinShouldMatchSumScorer):
@@ -65,11 +68,11 @@ from ..analysis.tokenizer import analyze, analyze_with_positions_as
 from ..index.builder import BLOCK_SCHEMA, BLOCK_SIZE, DEFAULT_TERM_BUCKETS, IndexPaths
 from ..index.codec import decode_doc_blocks
 from .bm25 import (
-    B, K1, SIMILARITIES, avgdl_f32, bm25_scorers, idf_f32, idf_sum_f32, make_term_weight,
+    B, K1, SIMILARITIES, avgdl_f32, idf_f32, idf_sum_f32, make_term_weight,
     norm_cache,
 )
 from .postings import decode_postings
-from .simpleqp import _RangeCtx, eval_tree, tree_pos_terms
+from .simpleqp import _RangeCtx, eval_tree, tree_pos_terms, tree_terms
 from .spans import span_alts, span_sets, span_shape_error, span_terms
 from .snapshot import BucketFiles, index_filesystem
 
@@ -128,7 +131,7 @@ def topk_frame(spark: SparkSession, doc_ids=(), scores=()) -> DataFrame:
 #: (the same boundary DELETES_DRIVER_MAX draws for tombstones)
 FILTER_DRIVER_MAX = 1_000_000
 
-#: driver plan for small top-k scans (IndexSearcher.topk_spec): when the
+#: driver plan for small top-k scans (IndexSearcher._run_tree): when the
 #: query's block bound (sum over terms of min(df, ceil(df/BLOCK_SIZE) +
 #: ranges)) is at most this, the pruned scan is read straight from the
 #: searcher's bucket files, decoded once and scored in the driver process,
@@ -147,7 +150,7 @@ FILTER_DRIVER_MAX = 1_000_000
 #: with more). The cap sits where the driver still wins by 1.6x or more.
 DRIVER_SCORE_MAX_BLOCKS = 65_536
 
-#: the driver plan's cap for a spec with positional clauses (phrase, span,
+#: the driver plan's cap for a tree with positional leaves (phrase, span,
 #: term automaton), never above DRIVER_SCORE_MAX_BLOCKS: their scorer
 #: verifies positions doc by doc in Python, which the driver runs serially
 #: and the distributed plan spreads over task slots, so they cross over
@@ -1277,79 +1280,28 @@ class IndexSearcher:
             return topk_frame(self.spark)
 
         idf1 = idf_f32(1, self.doc_count)
-        # per group: [(variant term, weightValue or const boost)]; an
-        # outer BoostQuery (the XML builder's boost attr) merges into
-        # each variant's BoostQuery at rewrite (BoostQuery.rewrite:96 —
-        # boost * in.boost in float32) before the weight forms
-        group_specs: list[list[tuple[str, np.float32]]] = []
+        # one inner SHOULD bool per group, whose float32-cast double sum
+        # the outer SHOULD bool sums in double; a member scores BM25 at
+        # its own weightValue, or its boost as a constant under
+        # ignore_tf. An outer BoostQuery (the XML builder's boost attr)
+        # merges into each variant's BoostQuery at rewrite
+        # (BoostQuery.rewrite:96 — boost * in.boost in float32) before
+        # the weight forms
+        group_nodes = []
         for _src, members in groups.items():
-            g = []
+            nodes = []
             for term, score in members:
                 eff = (np.float32(score) if boost == 1.0
                        else np.float32(np.float32(boost) * np.float32(score)))
                 if ignore_tf:
-                    g.append((term, eff))
+                    leaf = ("boosted", float(eff), ("const", (term,)))
                 else:
-                    g.append((term, np.float32(
-                        np.float32(idf1 * eff) * (K1 + np.float32(1.0)))))
-            group_specs.append(g)
-        vterms = sorted({t for g in group_specs for t, _w in g})
-        cache = norm_cache(np.float32(float(self.avgdl)))
-        deleted = self.deleted
-        itf = bool(ignore_tf)
-        kk = int(k)
-
-        def _score_impl(key, pdf, deleted_local=None):
-            if pdf.empty:
-                return _EMPTY
-            d_arr = deleted_local if deleted_local is not None else deleted
-            per_term = decode_postings(pdf)
-            base = min(int(v[0][0]) for v in per_term.values())
-            top = max(int(v[0][-1]) for v in per_term.values())
-            width = top - base + 1
-            total = np.zeros(width, dtype=np.float64)
-            matched = np.zeros(width, dtype=bool)
-            for g in group_specs:
-                acc = np.zeros(width, dtype=np.float64)
-                hit = np.zeros(width, dtype=bool)
-                for term, wv in g:
-                    if term not in per_term:
-                        continue
-                    d, tf, nb, _ = per_term[term]
-                    idxs = d - base
-                    if itf:
-                        s = np.full(len(d), np.float32(wv),
-                                    dtype=np.float32)
-                    else:
-                        tff = tf.astype(np.float32)
-                        s = (np.float32(wv) * tff
-                             / (tff + cache[nb])).astype(np.float32)
-                    acc[idxs] += s.astype(np.float64)
-                    hit[idxs] = True
-                # inner BooleanQuery: (float) of the double sum
-                total[hit] += acc[hit].astype(np.float32).astype(np.float64)
-                matched |= hit
-            if d_arr is not None and d_arr.size:
-                lo = np.searchsorted(d_arr, base)
-                hi = np.searchsorted(d_arr, base + width)
-                matched[d_arr[lo:hi] - base] = False
-            idx = np.flatnonzero(matched)
-            if idx.size == 0:
-                return _EMPTY
-            return _hits_frame(*_top_hits(idx + base, total[idx].astype(np.float32), kk))
-
-        def score_range(key, pdf):
-            return _score_impl(key, pdf)
-
-        score_range.cogroup = _cogroup_wrapper(_score_impl)
-        scan_cols = ["term", "range_id", "first_doc", "last_doc",
-                     "docs_buf", "tfs_buf", "norms_buf"]
-        return (
-            self._apply_range_scorer(
-                self._blocks_for(vterms), scan_cols, score_range)
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
+                    wv = np.float32(np.float32(idf1 * eff) * (K1 + np.float32(1.0)))
+                    leaf = ("blend", ((term, float(wv)),))
+                nodes.append(("", leaf))
+            group_nodes.append(("", ("bool", tuple(nodes), 0)))
+        tree = ("bool", tuple(group_nodes), 0)
+        return self._run_tree(tree, self.term_weights(sorted(tree_terms(tree))), k)
 
     def topk_term_automaton(
         self, transitions, accepts, k: int = 10
@@ -1895,34 +1847,14 @@ class IndexSearcher:
         max df across the blended terms (so cross-field/synonym variants
         score on equal idf footing), then the clauses score as
         DisjunctionMax with the rewrite's tiebreaker."""
-        terms = tuple(sorted(set(self._analyze(query))))
+        terms = sorted(set(self._analyze(query)))
         if not terms:
             return topk_frame(self.spark)
-        spec = BooleanSpec(should=terms, dismax=True, tiebreak=tiebreak)
-        weights = self.term_weights(list(terms))
-        present = [t for t in terms if weights[t]["df"] > 0]
-        if not present:
-            return topk_frame(self.spark)
-        max_df = max(weights[t]["df"] for t in terms)
-        blended_wv = float(
-            np.float32(idf_f32(max_df, self.doc_count) * (K1 + np.float32(1.0)))
-        )
-        for t in weights:
-            weights[t]["weight_value"] = blended_wv
-        blocks = self._blocks_for(present)
-        scan_cols = [
-            "term", "range_id", "first_doc", "last_doc",
-            "docs_buf", "tfs_buf", "norms_buf",
-        ]
-        score_fn = _make_range_scorer(
-            spec_tree(spec), weights, float(self.avgdl), self.doc_count, k,
-            scorers=bm25_scorers(weights, self.avgdl), deleted=self.deleted,
-        )
-        return (
-            self._apply_range_scorer(blocks, scan_cols, score_fn)
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
+        weights = self.term_weights(terms)
+        max_df = max(w["df"] for w in weights.values())
+        wv = float(np.float32(idf_f32(max_df, self.doc_count) * (K1 + np.float32(1.0))))
+        tree = ("dismax", tiebreak, tuple(("blend", ((t, wv),)) for t in terms))
+        return self._run_tree(tree, weights, k)
 
     def spellcheck(
         self,
@@ -2013,67 +1945,6 @@ class IndexSearcher:
             score_fn.cogroup, schema=TOPK_SCHEMA
         )
 
-    def _score_on_driver(self, terms: list[str], ranges: list[int] | None,
-                         scan_cols: list, score_fn, k: int) -> DataFrame:
-        """The driver plan for small scans (DRIVER_SCORE_MAX_BLOCKS): the
-        block scan is a direct read of the searcher's file snapshot in the
-        driver, with no Spark job — only the terms' bucket files, row
-        groups pruned on term and, when `ranges` is given, on range_id.
-        The scan is decoded once (decode_postings, no pandas) and scored
-        by one eval_tree call over all of it, with the scorer the
-        distributed plan ships to the Python workers. Its arrays span the
-        union of the scan's docs: at most BLOCK_SIZE (128) per block, so
-        128 x DRIVER_SCORE_MAX_BLOCKS. Every doc's score depends only on
-        the global stats, so the rows equal the distributed plan's bit
-        for bit."""
-        where = ds.field("term").isin(terms)
-        if ranges is not None:
-            where &= ds.field("range_id").isin(pa.array(ranges, pa.int64()))
-        scan = self._postings_files.read(self._buckets_of(terms), scan_cols, where)
-        return topk_frame(self.spark, *score_fn.score(score_fn.decode(scan)))
-
-    def _topk_sum_tf(self, present: list[str], wv: np.float32, k: int) -> DataFrame:
-        """Shared scorer for 'union of term occurrences as one pseudo-term'
-        queries (SynonymQuery, SpanOrQuery of term clauses): tf summed
-        across the terms per doc, one similarity weight."""
-        cache = norm_cache(np.float32(float(self.avgdl)))
-        blocks = self._blocks_for(present)
-        deleted = self.deleted
-
-        def _score_impl(key, pdf, deleted_local=None):
-            if pdf.empty:
-                return _EMPTY
-            d_arr = deleted_local if deleted_local is not None else deleted
-            per_term = decode_postings(pdf)
-            base = min(int(v[0][0]) for v in per_term.values())
-            top = max(int(v[0][-1]) for v in per_term.values())
-            width = top - base + 1
-            tf_acc = np.zeros(width, dtype=np.int64)
-            nb_acc = np.zeros(width, dtype=np.uint8)
-            for d, tf, nb, _ in per_term.values():
-                tf_acc[d - base] += tf
-                nb_acc[d - base] = nb
-            if d_arr is not None and d_arr.size:  # liveDocs mask (stats stay stale)
-                lo = np.searchsorted(d_arr, base)
-                hi = np.searchsorted(d_arr, base + width)
-                tf_acc[d_arr[lo:hi] - base] = 0
-            idx = np.flatnonzero(tf_acc)
-            freq = tf_acc[idx].astype(np.float32)
-            sc = (wv * freq / (freq + cache[nb_acc[idx]])).astype(np.float32)
-            return _hits_frame(*_top_hits(idx + base, sc, k))
-
-        def score_range(key, pdf):
-            return _score_impl(key, pdf)
-
-        score_range.cogroup = _cogroup_wrapper(_score_impl)
-        scan_cols = ["term", "range_id", "first_doc", "last_doc",
-                     "docs_buf", "tfs_buf", "norms_buf"]
-        return (
-            self._apply_range_scorer(blocks, scan_cols, score_range)
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
-
     def topk_synonym(self, query: str, k: int = 10) -> DataFrame:
         """SynonymQuery (search/SynonymQuery.java): all terms score as ONE
         pseudo-term — tf summed across synonyms per doc, one similarity
@@ -2082,12 +1953,9 @@ class IndexSearcher:
         if not terms:
             return topk_frame(self.spark)
         weights = self.term_weights(terms)
-        present = [t for t in terms if weights[t]["df"] > 0]
-        if not present:
-            return topk_frame(self.spark)
-        df_max = max(weights[t]["df"] for t in present)
-        tw = make_term_weight("__syn__", df_max, self.doc_count, self.avgdl)
-        return self._topk_sum_tf(present, np.float32(tw.weight_value), k)
+        df_max = max(w["df"] for w in weights.values())
+        tree = ("syn", tuple(terms), float(idf_f32(df_max, self.doc_count)))
+        return self._run_tree(tree, weights, k)
 
     def topk_span_or(self, terms: list[str], k: int = 10) -> DataFrame:
         """SpanOrQuery over term clauses (spans/SpanOrQuery.java:122-128):
@@ -2099,14 +1967,8 @@ class IndexSearcher:
         if not ts:
             return topk_frame(self.spark)
         weights = self.term_weights(ts)
-        present = [t for t in ts if weights[t]["df"] > 0]
-        if not present:
-            return topk_frame(self.spark)
-        idf_sum = idf_sum_f32(
-            idf_f32(weights[t]["df"], self.doc_count) for t in ts
-        )
-        wv = np.float32(idf_sum * (K1 + np.float32(1.0)))
-        return self._topk_sum_tf(present, wv, k)
+        idf_sum = idf_sum_f32(idf_f32(weights[t]["df"], self.doc_count) for t in ts)
+        return self._run_tree(("syn", tuple(ts), float(idf_sum)), weights, k)
 
     def topk_span_not(
         self, include: list[str], exclude: str, slop: int = 0, k: int = 10
@@ -2124,31 +1986,21 @@ class IndexSearcher:
                   candidates: list[int] | None = None,
                   range_ids: list[int] | None = None) -> DataFrame:
         """-> DataFrame(doc_id long, score float): k best rows ordered
-        score DESC, doc_id ASC (HitQueue/TopDocs.merge tie-break).
-
-        The plan is chosen from term stats before any job runs. A scan
-        whose block bound (min(df, ceil(df/BLOCK_SIZE) + ranges) summed
-        over the query's terms) is at most DRIVER_SCORE_MAX_BLOCKS is
-        scored on the driver: a direct read of the searcher's bucket
-        files and one eval_tree call over the whole scan, with no Spark
-        job at all.
-        Phrase, span and automaton clauses take it too, up to the lower
-        DRIVER_POSITIONAL_MAX_BLOCKS (their per-doc position verify runs
-        serially on the driver): the decoded scan carries their position
-        streams. prune=True and a corpus-scale
-        delete set (deleted_df) keep the distributed plan: the (range_id)
-        shuffle into applyInPandas, which is the only plan that runs at
-        corpus scale. Both plans return the same rows bit for bit.
+        score DESC, doc_id ASC (HitQueue/TopDocs.merge tie-break). The
+        spec is validated, its terms' stats are read, and its tree
+        (spec_tree) is scored by the top-k runner (_run_tree), which
+        chooses the driver or the distributed plan.
 
         prune: None = auto (WAND only when the range count justifies two
         extra driver round trips), True = force the distributed two-wave
-        WAND plan (never the driver plan), False = never.
+        WAND plan (never the driver plan), False = never. Only a pure-OR
+        BM25 spec is pruned; any other spec ignores prune.
 
         candidates: restrict scoring to these doc ids (QueryRescorer.java
-        only ever scores the first-pass candidate set). The block scan is
-        pruned to the candidates' doc ranges and the scorer masks to the
-        exact set — per-doc BM25 is independent of other docs, so scores
-        are identical to an unrestricted run."""
+        only ever scores the first-pass candidate set). range_ids: score
+        only these doc ranges (a TimeLimitingCollector slice). Per-doc
+        BM25 uses global stats, so either restriction scores its docs
+        exactly as an unrestricted run."""
         sim = SIMILARITIES.get(spec.similarity)
         if sim is None:
             raise ValueError(
@@ -2194,21 +2046,66 @@ class IndexSearcher:
             all(weights[t]["df"] == 0 for t in alts) for alts in spec.required_sets
         ):
             return topk_frame(self.spark)
-        # absent SHOULD/NOT terms are dropped (rewrite-to-fixpoint analog)
-        present = [t for t in set(spec.all_terms) if weights[t]["df"] > 0]
-        if not any(t in present for t in spec.scoring_terms):
+        if not any(weights[t]["df"] for t in spec.scoring_terms):
             return topk_frame(self.spark)
+        scorers = sim.prepare(
+            weights, self.doc_count, self.sum_ttf, self.avgdl,
+            dict(spec.boosts), tuple(spec.should) + tuple(spec.must),
+        )
+        # the conjunction's block skip leads on the rarest one-term set
+        lead_terms = sorted({alts[0] for alts in spec.required_sets if len(alts) == 1})
+        lead = min(lead_terms, key=lambda t: weights[t]["df"]) if lead_terms else None
+        pure_or = (
+            not spec.must and not spec.must_not and not spec.positional_terms
+            and not spec.dismax and spec.min_should_match <= 1
+            and not spec.groups and spec.similarity == "bm25"
+        )
+        return self._run_tree(
+            spec_tree(spec), weights, k, scorers=scorers, lead=lead,
+            candidates=candidates, range_ids=range_ids,
+            wand=prune if pure_or else False, first_wave_ranges=first_wave_ranges,
+        )
 
+    def _run_tree(self, tree, weights: dict, k: int, *, scorers: dict | None = None,
+                  lead: str | None = None, candidates: list[int] | None = None,
+                  range_ids: list[int] | None = None, wand: bool | None = False,
+                  first_wave_ranges: int = 32) -> DataFrame:
+        """The top-k runner every top-k entry point but the payload family
+        ends in: score a resolved simpleqp.eval_tree tree over the block
+        scan of its live terms -> DataFrame(doc_id long, score float),
+        the k best rows ordered score DESC, doc_id ASC.
+
+        The plan is chosen from term stats before any job runs. A scan
+        whose block bound (min(df, ceil(df/BLOCK_SIZE) + ranges) summed
+        over the live terms) is at most DRIVER_SCORE_MAX_BLOCKS, or
+        DRIVER_POSITIONAL_MAX_BLOCKS for a tree with positional leaves,
+        is scored on the driver: a direct read of the searcher's bucket
+        files (only the terms' buckets, row groups pruned on term and
+        range_id), decoded once and scored by one eval_tree call over
+        the union of its docs (at most BLOCK_SIZE per block), with no
+        Spark job at all. Forced WAND and a corpus-scale delete set
+        (deleted_df) keep the distributed plan: the (range_id) shuffle
+        into applyInPandas, the only plan that runs at corpus scale.
+        Every doc's score depends only on the global stats, so both
+        plans return the same rows bit for bit.
+
+        weights: term -> {df, weight_value} for every term of the tree.
+        scorers: the similarity's prepared term scorers (None: BM25 at
+        the tree's boosts). lead: the rarest one-term required clause,
+        for the block skip. candidates / range_ids: see topk_spec.
+        wand: the two-wave WAND plan, for a pure-OR bool of term leaves
+        only: None = auto (more than 512 doc ranges), True = forced,
+        False = never."""
+        present = sorted(t for t in tree_terms(tree) if weights[t]["df"] > 0)
+        if not present:
+            return topk_frame(self.spark)
         n_ranges = self._est_ranges()
         # the doc ranges the scan is restricted to (None = all of them)
         scan_ranges = None
         if range_ids is not None:
-            # TimeLimitingCollector slice: score only these doc ranges.
-            # Per-doc scores use GLOBAL stats, so a slice's rows are
-            # bit-identical to the same docs in an unrestricted run.
             scan_ranges = {int(r) for r in range_ids}
             n_ranges = min(n_ranges, len(scan_ranges))
-            prune = False
+            wand = False
         cand_arr = None
         if candidates is not None:
             cand_arr = np.asarray(sorted({int(c) for c in candidates}), dtype=np.int64)
@@ -2217,27 +2114,20 @@ class IndexSearcher:
             cand_ranges = {int(c) // self._range_size for c in cand_arr}
             n_ranges = min(n_ranges, len(cand_ranges))
             scan_ranges = cand_ranges if scan_ranges is None else scan_ranges & cand_ranges
-            prune = False
+            wand = False
             k = max(k, int(cand_arr.size))
         if scan_ranges is not None:
             scan_ranges = sorted(scan_ranges)
-        # column-prune the scorer's scan, on either plan: pos_buf (the
-        # widest column) is only read for positional clauses (phrase, span,
-        # automaton); block metadata the scorer never touches is dropped so
-        # the parquet ReadSchema stays minimal
+        # column-prune the scan on either plan: pos_buf (the widest
+        # column) is only read for positional leaves, and block metadata
+        # the scorer never touches is dropped
+        positional = bool(tree_pos_terms(tree))
         scan_cols = [
             "term", "range_id", "first_doc", "last_doc",
             "docs_buf", "tfs_buf", "norms_buf",
-        ] + (["pos_buf"] if spec.positional_terms else [])
-        scorers = sim.prepare(
-            weights, self.doc_count, self.sum_ttf, self.avgdl,
-            dict(spec.boosts), tuple(spec.should) + tuple(spec.must),
-        )
-        # the conjunction's block skip leads on the rarest one-term set
-        lead_terms = sorted({alts[0] for alts in spec.required_sets if len(alts) == 1})
-        lead = min(lead_terms, key=lambda t: weights[t]["df"]) if lead_terms else None
+        ] + (["pos_buf"] if positional else [])
         score_fn = _make_range_scorer(
-            spec_tree(spec), weights, float(self.avgdl), self.doc_count, k,
+            tree, weights, float(self.avgdl), self.doc_count, k,
             scorers=scorers, lead=lead, candidates=cand_arr, deleted=self.deleted,
         )
         # a term's blocks tile each range it occurs in by BLOCK_SIZE docs,
@@ -2247,42 +2137,39 @@ class IndexSearcher:
         dfs = [int(weights[t]["df"]) for t in present]
         max_blocks = sum(min(df, -(-df // BLOCK_SIZE) + n_ranges) for df in dfs)
         cap = DRIVER_SCORE_MAX_BLOCKS
-        if spec.positional_terms:
+        if positional:
             cap = min(cap, DRIVER_POSITIONAL_MAX_BLOCKS)
-        if (prune is not True and self.deleted_df is None
-                and max_blocks <= cap):
-            return self._score_on_driver(present, scan_ranges, scan_cols, score_fn, k)
+        if wand is not True and self.deleted_df is None and max_blocks <= cap:
+            where = ds.field("term").isin(present)
+            if scan_ranges is not None:
+                where &= ds.field("range_id").isin(pa.array(scan_ranges, pa.int64()))
+            scan = self._postings_files.read(self._buckets_of(present), scan_cols, where)
+            return topk_frame(self.spark, *score_fn.score(score_fn.decode(scan)))
 
         blocks = self._blocks_for(present)
         if scan_ranges is not None:
             blocks = blocks.filter(F.col("range_id").isin(scan_ranges))
-
-        pure_or = (
-            not spec.must and not spec.must_not and not spec.positional_terms
-            and not spec.dismax and spec.min_should_match <= 1
-            and not spec.groups and spec.similarity == "bm25"
-        )
         # WAND's two-wave plan costs two extra driver round trips; it only
         # pays when there are enough doc ranges to prune. Estimate from
         # corpus stats (free) — at 10^12-file scale this is always true.
-        if prune is None:
+        if wand is None:
             # measured on a 3M-doc/366-range corpus: two-wave WAND costs
             # more than it prunes below ~512 ranges (flat bounds); at true
             # 10^12 scale (10^8+ ranges) pruning is mandatory
-            prune = self._est_ranges() > 512
+            wand = n_ranges > 512
         if self.deleted_df is not None:
             # corpus-scale delete sets pause WAND (its two-wave bounds
             # would need per-range tombstone counts); sets that large
             # imply an imminent compact which purges them anyway
-            prune = False
-        if prune and pure_or:
+            wand = False
+        if wand:
+            # a WAND tree is a bool of SHOULD term leaves
+            should = tuple(sub[1] for _occ, sub in tree[1])
             result = self._wand_pruned(
-                blocks, scan_cols, score_fn, weights, spec.should, k,
-                first_wave_ranges,
+                blocks, scan_cols, score_fn, weights, should, k, first_wave_ranges,
             )
         else:
             result = self._apply_range_scorer(blocks, scan_cols, score_fn)
-
         return result.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
     def search(self, query: str, k: int = 10, mode: str = "or", prune: bool | None = None) -> DataFrame:
@@ -2827,10 +2714,12 @@ def _make_range_scorer(tree, weights: dict, avgdl: float, doc_count: int, k: int
                        scorers: dict | None = None, lead: str | None = None,
                        candidates: np.ndarray | None = None,
                        deleted: np.ndarray | None = None):
-    """The applyInPandas scorer of one query tree: each doc-range group,
-    one 'segment', is decoded and scored by one simpleqp.eval_tree call.
-    The function also carries its two steps for the driver plan, which
-    runs them once on its whole scan: .decode(scan) -> decoded postings
+    """The scorer of one query tree, built by the top-k runner
+    (IndexSearcher._run_tree) for either plan. As the applyInPandas
+    function, it decodes each doc-range group, one 'segment', and scores
+    it by one simpleqp.eval_tree call. It also carries its two steps for
+    the driver plan, which runs them once on its whole scan:
+    .decode(scan) -> decoded postings
     (the lead term's block skip applied) and .score(postings) -> the k
     best (doc_id, score) arrays; only the applyInPandas entry builds a
     DataFrame. The evaluation's arrays span the union of the postings'

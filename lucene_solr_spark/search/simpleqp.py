@@ -48,7 +48,9 @@ branches affect operator state):
   be a tuple of MultiPhraseQuery alternatives. The engine's BooleanSpec
   (engine.spec_tree) adds ("span_node", node) leaves (BooleanSpec.spans'
   node grammar), an ("automaton", (transitions, accepts)) leaf and the
-  bool node's optional (msm, coord) tail.
+  bool node's optional (msm, coord) tail; SynonymQuery and SpanOrQuery
+  over terms are a ("syn", (term, ...), idf) leaf: the terms' tf summed
+  per doc, scored as one BM25 term of that idf.
 """
 
 from __future__ import annotations
@@ -491,7 +493,7 @@ def tree_terms(tree) -> set[str]:
     kind = tree[0]
     if kind == "term":
         return {tree[1]}
-    if kind == "const":
+    if kind in ("const", "syn"):
         return set(tree[1])
     if kind == "blend":
         return {m[0] for m in tree[1]}
@@ -522,9 +524,11 @@ _NO_POSTINGS = _NONE + (np.empty(0, dtype=np.uint8),)
 
 def eval_tree(tree, ctx, boost=np.float32(1.0), cand=None):
     """-> (match bool[n], score float32[n] zeroed where unmatched), over
-    the ctx's n docs. The one Boolean evaluator: the engine's BooleanSpec
-    (engine.spec_tree) and the simpleqp / xmlqp / surround / flexible
-    trees all score through it.
+    the ctx's n docs. The one Boolean evaluator: every tree the engine's
+    top-k runner (IndexSearcher._run_tree) scores goes through it — the
+    BooleanSpec's (engine.spec_tree); the simpleqp / xmlqp / surround /
+    flexible / BoostingQuery trees; and the trees topk_synonym,
+    topk_span_or, topk_blended and topk_fuzzy_like_this_ref build.
 
     ctx protocol:
       n, nb (uint8[n] norm bytes), doc_count, cache (f32[256] BM25 norm
@@ -557,14 +561,18 @@ def eval_tree(tree, ctx, boost=np.float32(1.0), cand=None):
     return m, score
 
 
+def _bm25_scorer(ctx, idf, boost):
+    """BM25 score(freq, norm_byte) at `idf` and the threaded boost."""
+    wv = np.float32(np.float32(idf * boost) * (K1 + np.float32(1.0)))
+    return TermWeight("", 0, wv, ctx.cache).score
+
+
 def _term_scorer(ctx, t: str, boost):
     """The term leaf's score(freq, norm_byte): the prepared similarity
     scorer, or BM25 at the threaded boost."""
     if ctx.scorers is not None and boost == np.float32(1.0):
         return ctx.scorers[t]
-    idf = idf_f32(ctx.df(t), ctx.doc_count)
-    wv = np.float32(np.float32(idf * boost) * (K1 + np.float32(1.0)))
-    return TermWeight(t, 0, wv, ctx.cache).score
+    return _bm25_scorer(ctx, idf_f32(ctx.df(t), ctx.doc_count), boost)
 
 
 def _eval(tree, ctx, boost, cand):
@@ -602,6 +610,17 @@ def _eval(tree, ctx, boost, cand):
             acc[at] += (wv * freq / (freq + ctx.cache[nb])).astype(np.float32)
         at = np.flatnonzero(m)
         return at, acc[at].astype(np.float32)
+    if kind == "syn":
+        # SynonymQuery, and SpanOrQuery over terms: one pseudo-term whose
+        # freq is the tf summed over the terms, under one weight
+        m = np.zeros(ctx.n, dtype=bool)
+        tf = np.zeros(ctx.n, dtype=np.float64)
+        for t in tree[1]:
+            at, freq, _nb = ctx.postings(t)
+            m[at] = True
+            tf[at] += freq
+        at = np.flatnonzero(m)
+        return at, _bm25_scorer(ctx, np.float32(tree[2]), boost)(tf[at], ctx.nb[at])
     if kind == "matchall":
         return (np.arange(ctx.n, dtype=np.int64),
                 np.full(ctx.n, boost, dtype=np.float32))
@@ -660,8 +679,7 @@ def _eval_positional(leaf, ctx, boost, cand):
     idf_sum = idf_sum_f32(
         idf_f32(ctx.df(t), ctx.doc_count) for t in _weight_terms(leaf)
     )
-    wv = np.float32(np.float32(idf_sum * boost) * (K1 + np.float32(1.0)))
-    return at, (wv * freq / (freq + ctx.cache[ctx.nb[at]])).astype(np.float32)
+    return at, _bm25_scorer(ctx, idf_sum, boost)(freq, ctx.nb[at])
 
 
 def _eval_bool(tree, ctx, boost, cand):
@@ -1003,8 +1021,9 @@ def _analyzer_with_positions(analyzer_name: str):
 
 class _RangeCtx:
     """eval_tree ctx over decoded postings (per_term from postings.
-    decode_postings): a range group's on the distributed plan, the whole
-    scan's on the driver plan. The doc axis is the union of the
+    decode_postings), built by the top-k runner's scorer (engine.
+    _make_range_scorer): a range group's on the distributed plan, the
+    whole scan's on the driver plan. The doc axis is the union of the
     postings' docs, so a doc with NO query term never reaches here (the
     complement pass of spark_topk_tree covers it) and the arrays are at
     most the scan's posting count wide. weights: term -> {df, ...};
@@ -1084,51 +1103,37 @@ def spark_topk_simple(searcher, query: str, k: int = 10,
 
 def spark_topk_tree(searcher, tree, k: int = 10):
     """Execute any (unresolved) query tree on the engine: resolve against
-    the term dictionary, scan + tree-score per doc range, complement pass
-    for term-free matches, global merge."""
+    the term dictionary, score the docs holding a query term through the
+    top-k runner (IndexSearcher._run_tree, which picks the driver or the
+    distributed plan), complement pass for term-free matches, global
+    merge."""
     from pyspark.sql import functions as F
 
-    from .engine import _make_range_scorer, topk_frame
+    from .engine import topk_frame
 
     if tree is None:
         return topk_frame(searcher.spark)
     tree = resolve_tree(tree, searcher)
-    terms = sorted(tree_terms(tree))
-    weights = searcher.term_weights(terms) if terms else {}
-    present = [t for t in terms if weights[t]["df"] > 0]
+    weights = searcher.term_weights(sorted(tree_terms(tree)))
+    hits = searcher._run_tree(tree, weights, k)
     empty_match, c = matches_empty_doc(tree)
-    parts = []
+    if not (empty_match and c > 0):
+        return hits
+    present = sorted(t for t, w in weights.items() if w["df"] > 0)
+    docs = searcher.spark.read.parquet(searcher.paths.docs).select("doc_id")
     if present:
-        needs_pos = bool(tree_pos_terms(tree))
-        scan_cols = [
-            "term", "range_id", "first_doc", "last_doc",
-            "docs_buf", "tfs_buf", "norms_buf",
-        ] + (["pos_buf"] if needs_pos else [])
-        score_fn = _make_range_scorer(
-            tree, weights, float(searcher.avgdl), searcher.doc_count, k,
-            deleted=searcher.deleted,
+        posted = searcher._posting_doc_ids(present).select("doc_id").distinct()
+        docs = docs.join(posted, "doc_id", "left_anti")
+    if searcher.deleted is not None and len(searcher.deleted):
+        docs = docs.filter(
+            ~F.col("doc_id").isin([int(d) for d in searcher.deleted])
         )
-        parts.append(searcher._apply_range_scorer(
-            searcher._blocks_for(present), scan_cols, score_fn
-        ))
-    if empty_match and c > 0:
-        docs = searcher.spark.read.parquet(searcher.paths.docs).select("doc_id")
-        if present:
-            posted = searcher._posting_doc_ids(present).select("doc_id").distinct()
-            docs = docs.join(posted, "doc_id", "left_anti")
-        if searcher.deleted is not None and len(searcher.deleted):
-            docs = docs.filter(
-                ~F.col("doc_id").isin([int(d) for d in searcher.deleted])
-            )
-        if searcher.deleted_df is not None:
-            docs = docs.join(searcher.deleted_df, "doc_id", "left_anti")
-        parts.append(
-            docs.orderBy("doc_id").limit(k).select(
-                "doc_id",
-                F.lit(float(np.float32(c))).cast("float").alias("score"),
-            )
-        )
-    if not parts:
-        return topk_frame(searcher.spark)
-    out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    return out.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    if searcher.deleted_df is not None:
+        docs = docs.join(searcher.deleted_df, "doc_id", "left_anti")
+    term_free = docs.orderBy("doc_id").limit(k).select(
+        "doc_id", F.lit(float(np.float32(c))).cast("float").alias("score"),
+    )
+    return (
+        hits.unionByName(term_free)
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    )

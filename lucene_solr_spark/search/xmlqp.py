@@ -1,7 +1,9 @@
 """The XML query parser — CoreParser's element set
 (lucene/queryparser/src/java/org/apache/lucene/queryparser/xml/
 CoreParser.java) mapped onto the shared query-tree evaluator
-(search/simpleqp.py's eval_tree / resolve_tree / spark_topk_tree).
+(search/simpleqp.py's eval_tree / resolve_tree / spark_topk_tree), so a
+parsed query is scored by the engine's one top-k runner
+(IndexSearcher._run_tree) and its plan choice.
 
 Element -> node mapping (builders/ cited per element):
 

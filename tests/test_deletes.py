@@ -12,6 +12,7 @@ from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.index.check import verify_index
 from lucene_solr_spark.index.compact import compact_index
 from lucene_solr_spark.index.deletes import delete_docs
+from lucene_solr_spark.search import engine as engine_mod
 from lucene_solr_spark.search.engine import IndexSearcher
 
 N_DOCS = 240
@@ -34,7 +35,7 @@ def _hits(searcher, k=20):
     }
 
 
-def test_deletes_mask_with_stale_stats_then_purge(spark, tmp_root, corpus):
+def test_deletes_mask_with_stale_stats_then_purge(spark, tmp_root, corpus, monkeypatch):
     d = os.path.join(tmp_root, "idx_del")
     build_index(
         spark, spark.createDataFrame(corpus), out_dir=d, content_col="content",
@@ -62,9 +63,15 @@ def test_deletes_mask_with_stale_stats_then_purge(spark, tmp_root, corpus):
         assert [doc for doc, _ in rows] == [
             doc for doc, _ in before[key] if doc not in dead
         ][: len(rows)]
-    # synonym (sum-tf) path masks too
-    syn = [r["doc_id"] for r in s1.topk_synonym("parse index", k=20).collect()]
-    assert not (set(syn) & dead)
+    # synonym (sum-tf) path masks too, the same way on the distributed
+    # plan (DRIVER_SCORE_MAX_BLOCKS = 0) as on the driver plan
+    syn = [(r["doc_id"], r["score"]) for r in s1.topk_synonym("parse index", k=20).collect()]
+    assert syn and not ({doc for doc, _ in syn} & dead)
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "DRIVER_SCORE_MAX_BLOCKS", 0)
+        syn_dist = s1.topk_synonym("parse index", k=20)
+        assert "FlatMapGroupsInPandas" in syn_dist._jdf.queryExecution().toString()
+        assert [(r["doc_id"], r["score"]) for r in syn_dist.collect()] == syn
 
     # ---- merge reclaims the deletes ----
     out = compact_index(spark, d)
@@ -124,8 +131,6 @@ def test_small_delete_set_driver_plan_matches_distributed(spark, tmp_root, corpu
     """A delete set small enough to ride in the scorer closure is masked
     the same way on the driver plan as on the distributed plan (forced
     with DRIVER_SCORE_MAX_BLOCKS = 0)."""
-    from lucene_solr_spark.search import engine as engine_mod
-
     d = os.path.join(tmp_root, "idx_del_plans")
     build_index(
         spark, spark.createDataFrame(corpus), out_dir=d, content_col="content",

@@ -233,9 +233,32 @@ def test_direct_reads_after_increment_and_on_empty_index(spark, tmp_root, monkey
             assert got[""] == got[":distributed"] and got[""], (lo, spec)
 
 
-def test_driver_plan_runs_no_spark_job(built, spark):
-    """A fresh searcher answers a driver-plan query with zero Spark jobs:
-    term stats and the block scan are direct reads of its file snapshot."""
+_XML_OR = (
+    '<BooleanQuery fieldName="text">'
+    + "".join(f'<Clause occurs="should"><TermQuery>{t}</TermQuery></Clause>'
+              for t in ("parse", "index", "merge"))
+    + "</BooleanQuery>"
+)
+
+#: every top-k entry point the runner (_run_tree) serves, on plain terms
+#: only: prefix, fuzzy and surround expansion still scan term_stats on Spark
+ENTRY_POINTS = {
+    "topk": lambda s: s.topk("parse index merge", k=10),
+    "topk_simple": lambda s: s.topk_simple("parse index merge", k=10),
+    "topk_xml": lambda s: s.topk_xml(_XML_OR, k=10),
+    "topk_synonym": lambda s: s.topk_synonym("parse index merge", k=10),
+    "topk_span_or": lambda s: s.topk_span_or(["parse", "index", "merge"], k=10),
+    "topk_blended": lambda s: s.topk_blended("parse index merge", k=10),
+    "topk_flexible": lambda s: s.topk_flexible("parse index merge", k=10),
+    "topk_boosting": lambda s: s.topk_boosting("parse index", "merge", 0.5, k=10),
+}
+
+
+@pytest.mark.parametrize("entry", list(ENTRY_POINTS))
+def test_driver_plan_runs_no_spark_job(built, spark, entry):
+    """A fresh searcher answers a driver-plan query with zero Spark jobs,
+    whichever entry point builds its tree: term stats and the block scan
+    are direct reads of its file snapshot."""
     paths, _, _ = built
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -244,12 +267,27 @@ def test_driver_plan_runs_no_spark_job(built, spark):
         spark.range(3).count()
         assert tracker.getJobIdsForGroup("direct-control")
         s = IndexSearcher(spark, paths.root)
-        sc.setJobGroup("direct-topk", "fresh searcher, driver-plan topk")
-        rows = s.topk("parse index merge", k=10).collect()
+        sc.setJobGroup("direct-topk", f"fresh searcher, driver-plan {entry}")
+        rows = ENTRY_POINTS[entry](s).collect()
         assert list(tracker.getJobIdsForGroup("direct-topk")) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 10
+
+
+@pytest.mark.parametrize("entry", list(ENTRY_POINTS))
+def test_entry_point_rows_equal_on_both_plans(built, monkeypatch, entry):
+    """Each entry point returns the same rows, by repr, on the driver
+    plan and on the distributed plan (DRIVER_SCORE_MAX_BLOCKS = 0)."""
+    _, searcher, _ = built
+    got = {}
+    for s, cap in PLANS:
+        monkeypatch.setattr(E, "DRIVER_SCORE_MAX_BLOCKS", cap)
+        df = ENTRY_POINTS[entry](searcher)
+        assert ("FlatMapGroupsInPandas" in _plan(df)) == (cap == 0), (entry, s)
+        got[s] = [(d, repr(sc)) for d, sc in _rows(df)]
+    assert got[""] == got[":distributed"], entry
+    assert len(got[""]) == 10
 
 
 def test_distributed_plan_query_warns_nothing(built, monkeypatch):

@@ -791,8 +791,9 @@ def test_more_like_this_matches_compiled_reference():
 
 
 def _sum_tf_topk(idx, present, wv, k=10):
-    """Engine `_topk_sum_tf` control: tf summed across the clause terms
-    per doc as ONE pseudo-term, score = wv * f / (f + cache[norm])."""
+    """Control for the engine's ("syn", terms, idf) leaf: tf summed
+    across the clause terms per doc as ONE pseudo-term, score =
+    wv * f / (f + cache[norm])."""
     from lucene_solr_spark.search.bm25 import norm_cache
 
     cache = norm_cache(np.float32(float(idx.avgdl)))
