@@ -591,15 +591,6 @@ class Similarity:
     prepare: Callable[..., dict[str, Scorer]]
 
 
-def bm25_scorers(weights: dict, avgdl: np.float32) -> dict[str, Scorer]:
-    """BM25 scorers over each term's weight_value as it stands."""
-    cache = norm_cache(np.float32(avgdl))
-    return {
-        t: TermWeight(t, w["df"], np.float32(w["weight_value"]), cache).score
-        for t, w in weights.items()
-    }
-
-
 def _prepare_bm25(weights, doc_count, sum_ttf, avgdl, boosts, clauses):
     """BM25Stats.normalize: weight = (float)(idf * boost), then
     BM25DocScorer: weightValue = (float)(weight * (k1+1)) -- boost
@@ -610,7 +601,11 @@ def _prepare_bm25(weights, doc_count, sum_ttf, avgdl, boosts, clauses):
         if t in weights:
             w = np.float32(idf_f32(weights[t]["df"], doc_count) * np.float32(b))
             weights[t]["weight_value"] = float(np.float32(w * (K1 + np.float32(1.0))))
-    return bm25_scorers(weights, avgdl)
+    cache = norm_cache(np.float32(avgdl))
+    return {
+        t: TermWeight(t, w["df"], np.float32(w["weight_value"]), cache).score
+        for t, w in weights.items()
+    }
 
 
 def classic_scores(freq, norm_byte, weight_value, tf=np.sqrt):
