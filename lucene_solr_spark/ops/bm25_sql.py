@@ -205,7 +205,8 @@ def bm25_simple_negation_sql(pos: str, neg: str, k: int = 10) -> str:
     tier); term-free docs tie at 1.0 and rank doc ASC."""
     pos_t = analyze(pos)
     neg_t = analyze(neg)
-    assert len(pos_t) == 1 and len(neg_t) == 1
+    if not (len(pos_t) == 1 and len(neg_t) == 1):
+        raise ValueError("pos and neg must each analyze to one term")
     p, n_ = pos_t[0], neg_t[0]
     return f"""
 WITH tok AS (
@@ -291,7 +292,8 @@ def bm25_numeric_filter_sql(lo, hi, should: str, k: int = 10) -> str:
     pads with filter-only docs in doc order — exactly the engine's
     split-and-mask plan in engine._exec_xml_tree."""
     should_t = analyze(should)
-    assert should_t and lo is not None and hi is not None
+    if not (should_t and lo is not None and hi is not None):
+        raise ValueError("needs a should term and both range bounds")
     uniq = sorted(set(should_t))
     clause_vals = ",".join(f"('{t}',{should_t.count(t)})" for t in uniq)
     terms_in = ",".join(f"'{t}'" for t in uniq)
@@ -353,7 +355,8 @@ def bm25_filter_clause_sql(filter_term: str, should: str, k: int = 10) -> str:
     SHOULD clauses only. Rank-only contract."""
     ft = analyze(filter_term)
     should_t = analyze(should)
-    assert len(ft) == 1 and should_t
+    if not (len(ft) == 1 and should_t):
+        raise ValueError("filter_term must analyze to one term, should to at least one")
     f = ft[0]
     uniq = sorted(set(should_t))
     clause_vals = ",".join(f"('{t}',{should_t.count(t)})" for t in uniq)
@@ -1215,7 +1218,8 @@ def recency_boost_sql(query: str, now_ms: int, base_ms: int, m: float,
     ).replace(
         "\n  JOIN documents d ON d.doc_id = fp.doc_id", ""
     ).replace("AS crank", "AS rrank")
-    assert "final" in custom and "n_chars" not in custom
+    if not ("final" in custom and "n_chars" not in custom):
+        raise RuntimeError("the boost rewrite no longer matches the custom-score SQL")
     return custom
 
 
@@ -1356,7 +1360,8 @@ def bm25_mlt_text_sql(like_text: str, max_q: int = 20, min_tf: int = 1,
     from collections import Counter
 
     counts = Counter(analyze(like_text)[:5000])
-    assert counts
+    if not counts:
+        raise ValueError("like_text analyzes to no terms")
     # Java truncates (int)(clauses * pct) in FLOAT32 — embed the f32
     # value of pct so 10 * 0.3 lands on 3, not 2 (the engine mirrors
     # this in engine._resolve_mlt_text)

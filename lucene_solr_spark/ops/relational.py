@@ -1522,12 +1522,14 @@ def slow_fuzzy_query(spark, sf):
     # fills (no bottom feedback, no linear->automaton switch); make a
     # corpus change that breaks the assumption fail loudly here rather
     # than surface as a parity mystery.
-    assert len(survivors) < 50, (
-        f"slow_fuzzy candidate set grew to {len(survivors)} >= "
-        "maxExpansions=50: PQ bottom feedback would kick in and the "
-        "closed-form DuckDB oracle no longer matches the enum")
+    if len(survivors) >= 50:
+        raise RuntimeError(
+            f"slow_fuzzy candidate set grew to {len(survivors)} >= "
+            "maxExpansions=50: PQ bottom feedback would kick in and the "
+            "closed-form DuckDB oracle no longer matches the enum")
     exp = slow_fuzzy_expand(survivors, "grean", 3.0, 1, 50)
-    assert len(exp) == len(survivors), (exp, survivors)
+    if len(exp) != len(survivors):
+        raise RuntimeError((exp, survivors))
     if not exp:
         return words.select(
             "p_partkey", "w", F.lit(0.0).cast("float").alias("boost")
@@ -1690,7 +1692,8 @@ def export_sorted(spark, sf):
     sliced_df, timed_out, _ = searcher_for(spark, sf).topk_time_limited(
         "fast merge sort", k=10, budget_s=1e9, ranges_per_slice=4
     )
-    assert not timed_out
+    if timed_out:
+        raise RuntimeError("time-sliced top-k timed out under an unbounded budget")
     w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     sliced = (
         sliced_df.withColumn("rank", F.row_number().over(w))
@@ -3247,7 +3250,8 @@ def _geo3d_polygon_within_sql() -> str:
         shape = GeoConvexPolygonMembership(
             [geo_point(la * RADIANS_PER_DEGREE, lo * RADIANS_PER_DEGREE)
              for la, lo in ring])
-        assert shape.convex, "demo rings must be small-cap side"
+        if not shape.convex:
+            raise RuntimeError("demo rings must be small-cap side")
         parts.append(
             "(" + " AND ".join(plane_ok(e) for e in shape.edges) + ")")
     return "(" + " OR ".join(parts) + ")"
@@ -4134,9 +4138,10 @@ def strdist_query(spark, sf):
     words = p.select(
         F.element_at(F.split(F.col("p_name"), " "), 1).alias("w"))
     oov = words.filter(~F.col("w").isin(STRDIST_VOCAB)).limit(1).count()
-    assert oov == 0, (
-        "corpus p_name first-word outside the pinned STRDIST_VOCAB: the "
-        "literal value table no longer covers the dictionary")
+    if oov != 0:
+        raise RuntimeError(
+            "corpus p_name first-word outside the pinned STRDIST_VOCAB: the "
+            "literal value table no longer covers the dictionary")
     keep = {
         w: float(jaro_winkler(STRDIST_TARGET, w))
         for w in STRDIST_VOCAB
@@ -4620,9 +4625,10 @@ def snowball_analyzers(spark, sf):
     ).filter(F.col("w") != "")
     oov = toks.filter(~F.col("w").isin(list(SNOWBALL_DOC_VOCAB))) \
         .limit(1).count()
-    assert oov == 0, (
-        "documents token outside the pinned SNOWBALL_DOC_VOCAB: the "
-        "literal stem table no longer covers the corpus")
+    if oov != 0:
+        raise RuntimeError(
+            "documents token outside the pinned SNOWBALL_DOC_VOCAB: the "
+            "literal stem table no longer covers the corpus")
     m = spark.createDataFrame(
         _snowball_stem_rows(), "lang string, w string, stem string")
     return (

@@ -2,11 +2,13 @@
 the pure-Python control oracle (BaseDistributedSearchTestCase pattern), index
 invariants (CheckIndex analog), and determinism across parallelism."""
 
+import gc
 import os
 import warnings
 
 import numpy as np
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.corpus import make_corpus
@@ -273,6 +275,35 @@ def test_driver_plan_runs_no_spark_job(built, spark, entry):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 10
+
+
+@pytest.mark.parametrize("entry", list(ENTRY_POINTS))
+def test_driver_plan_answer_makes_no_jvm_call(built, spark, monkeypatch, entry):
+    """A warm searcher answers a driver-plan collect() without one py4j
+    command: the hits stay in Python until a Spark operator needs them.
+    py4j's own memory commands ("m\\n", sent when a Python proxy of a JVM
+    object is garbage collected) are not the query's, and gc.collect()
+    first flushes the ones earlier tests left pending."""
+    paths, _, _ = built
+    s = IndexSearcher(spark, paths.root)
+    ENTRY_POINTS[entry](s).collect()
+    gc.collect()
+    sent = []
+    real = ClientServerConnection.send_command
+
+    def counting(conn, command):
+        if not command.startswith("m\n"):
+            sent.append(command.split("\n", 2)[:2])
+        return real(conn, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    hits = ENTRY_POINTS[entry](s)
+    rows = hits.collect()
+    monkeypatch.undo()
+    assert sent == []
+    assert len(rows) == 10
+    # the lazy Spark relation still builds for a Spark operator
+    assert hits.orderBy("doc_id").collect() == sorted(rows, key=lambda r: r["doc_id"])
 
 
 @pytest.mark.parametrize("entry", list(ENTRY_POINTS))
